@@ -74,6 +74,31 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_bytes(sf_dir: str, name: str) -> int | None:
+    """On-disk size of table ``name`` under ``sf_dir``, for zero-job
+    scale probes: the file's size, or for a directory-backed table
+    (partitioned parquet, a Spark write) the sum over its data files
+    (``_``/``.``-prefixed metadata files are skipped, as Spark's
+    reader skips them). None when the size is unknown — a missing or
+    unreadable path, or storage that is not a local filesystem."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+
+    def fail(err: OSError):
+        raise err
+
+    try:
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path, onerror=fail)
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    except OSError:
+        return None
+
+
 def widen(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Round-robin repartition UP to the session parallelism — and
     never DOWN. Local single-file scans often yield fewer input

@@ -72,11 +72,10 @@ class MaterializedDailyRollup:
     """
 
     #: fixed rollup schema — pinned on every read so parquet footer
-    #: inference never runs a job (round-9 floor cut).
-    SCHEMA = (
-        "day date, event_type string, n_events bigint, q_value bigint, "
-        "watermark_epoch bigint, applied_batch bigint"
-    )
+    #: inference never runs a job (round-9 floor cut). Stream progress
+    #: (``watermark_epoch``, ``last_batch_id``) lives in the manifest
+    #: meta, committed in the same claim as the rows.
+    SCHEMA = "day date, event_type string, n_events bigint, q_value bigint"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -114,40 +113,39 @@ class MaterializedDailyRollup:
         row = pagg.agg(
             F.coalesce(F.max("__mx"), F.lit(0)).alias("wm")
         ).collect()[0]
-        wm = int(row["wm"])
-        base = pagg.select(
-            "day", "event_type", "n_events", "q_value",
-            F.lit(wm).alias("watermark_epoch"),
-            F.lit(-1).cast("bigint").alias("applied_batch"),
-        )
-        # The watermark ALSO commits as manifest meta — the
-        # linearization point carries the stream progress, exactly
-        # how real table formats record it (Delta txn action /
-        # Iceberg snapshot summary) — so state reads are zero-job
-        # manifest lookups, not table scans (round-9 floor cut; the
-        # row columns stay as the scan-based fallback for tables
-        # written before this round).
+        # The watermark commits as manifest meta — the linearization
+        # point carries the stream progress, exactly how real table
+        # formats record it (Delta txn action / Iceberg snapshot
+        # summary) — so state reads are zero-job manifest lookups.
         self.table.init(
-            base, meta={"watermark_epoch": wm, "applied_batch": -1}
+            pagg.drop("__mx"), meta={"watermark_epoch": int(row["wm"])}
         )
         # committed to disk; the bootstrap partial is dead
         free_checkpoint(pagg)
 
-    def _state(self, version: int | None = None) -> tuple[int, int]:
-        """(watermark_epoch, applied_batch) of ``version`` (default
-        current) — manifest meta when present (zero Spark jobs),
-        table-scan fallback otherwise."""
-        m = self.table.meta(version)
-        if "watermark_epoch" in m:
-            return int(m["watermark_epoch"]), int(m.get("applied_batch", -1))
-        row = self.table.read(version).agg(
-            F.coalesce(F.max("watermark_epoch"), F.lit(0)).alias("w"),
-            F.coalesce(F.max("applied_batch"), F.lit(-1)).alias("b"),
-        ).collect()[0]
-        return int(row["w"]), int(row["b"])
-
     def watermark_epoch(self) -> int:
-        return self._state()[0]
+        return int(self.table.meta()["watermark_epoch"])
+
+    @staticmethod
+    def _fold(current: DataFrame, delta: DataFrame, cur_wm: int):
+        """Post-state of merging ``delta`` into the rollup snapshot
+        ``current`` whose watermark is ``cur_wm``: returns (post,
+        meta, rows merged). The new watermark is max(current, delta),
+        so a merge never regresses it below events already covered."""
+        stats = delta.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.max(_micros("ts")), F.lit(cur_wm)).alias("wm"),
+        ).collect()[0]
+        post = (
+            current.unionByName(_partial(delta))
+            .groupBy("day", "event_type")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("q_value").alias("q_value"),
+            )
+        )
+        new_wm = max(cur_wm, int(stats["wm"]))
+        return post, {"watermark_epoch": new_wm}, int(stats["n"])
 
     def refresh(self, events: DataFrame) -> int:
         """Merge events newer than the stored watermark into the
@@ -182,50 +180,17 @@ class MaterializedDailyRollup:
 
         merged_count = 0
 
-        def merge_fn(current: DataFrame, base: int):
-            # Everything derives from the pinned BASE snapshot INSIDE
-            # the retry loop: after losing an optimistic race, the
-            # competitor may have merged part (or all) of our slice
-            # and advanced the watermark — re-slicing against the
-            # CURRENT watermark keeps the merge exactly-once, and the
-            # new watermark is max(current, slice) so a retry can
-            # never regress it below events already covered. (The
-            # first cut captured delta and new_wm once, outside the
-            # loop — a retry would have double-counted every fresh
-            # event.) State comes from the base manifest's meta —
-            # committed atomically with that snapshot, so exactly as
-            # race-safe as scanning its rows, for zero jobs.
+        def merge_fn(current: DataFrame, meta: dict):
+            # The slice is re-cut against the pinned BASE watermark
+            # inside the retry loop: after losing an optimistic race,
+            # the competitor may have merged part (or all) of our
+            # slice and advanced the watermark, so re-slicing keeps
+            # the merge exactly-once.
             nonlocal merged_count
-            cur_wm, applied = self._state(base)
+            cur_wm = int(meta["watermark_epoch"])
             mine = fresh.where(_micros("ts") > F.lit(cur_wm))
-            stats = mine.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.max(_micros("ts")), F.lit(cur_wm)).alias("wm"),
-            ).collect()[0]
-            merged_count = int(stats["n"])
-            new_wm = max(cur_wm, int(stats["wm"]))
-            post = (
-                current.select("day", "event_type", "n_events", "q_value")
-                .unionByName(_partial(mine))
-                .groupBy("day", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("q_value").alias("q_value"),
-                )
-                .select(
-                    "day", "event_type", "n_events", "q_value",
-                    F.lit(new_wm).alias("watermark_epoch"),
-                    F.lit(applied).cast("bigint").alias("applied_batch"),
-                )
-            )
-            # BOTH state fields go into the meta: committing only the
-            # watermark would leave a pre-meta table (empty manifest
-            # meta, state in rows) with meta = {watermark_epoch} after
-            # its first refresh — _state() would then take the meta
-            # path and report applied_batch=-1, letting a replayed
-            # foreachBatch micro-batch past the batch_id<=applied
-            # guard and double-counting it.
-            return post, {"watermark_epoch": new_wm, "applied_batch": applied}
+            post, new_meta, merged_count = self._fold(current, mine, cur_wm)
+            return post, new_meta
 
         self.table.merge(merge_fn)
         # The committed version is on disk; the delta snapshot is
@@ -239,45 +204,22 @@ class MaterializedDailyRollup:
         NOT filtered by event time — a late-arriving file whose
         events predate the stored watermark still merges (the
         event-time guard in ``refresh`` would silently drop it; the
-        first streaming driver did exactly that). foreachBatch
-        batch ids are monotonic, and foreachBatch is at-least-once
-        on failure recovery, so: batch_id <= last applied → replay,
-        skip; otherwise merge everything and record the id in the
-        same atomic snapshot commit. Returns rows merged."""
+        first streaming driver did exactly that). foreachBatch is
+        at-least-once on failure recovery, so the batch id commits as
+        ``last_batch_id`` in the same snapshot claim and the table's
+        merge skips a replayed id. Returns rows merged."""
         merged_count = 0
         batch = batch_df.localCheckpoint(eager=True)
 
-        def merge_fn(current: DataFrame, base: int):
+        def merge_fn(current: DataFrame, meta: dict):
             nonlocal merged_count
-            cur_wm, applied = self._state(base)
-            if batch_id <= applied:
-                merged_count = 0
-                return current
-            stats = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.max(_micros("ts")), F.lit(0)).alias("wm"),
-            ).collect()[0]
-            merged_count = int(stats["n"])
-            new_wm = max(cur_wm, int(stats["wm"]))
-            post = (
-                current.select("day", "event_type", "n_events", "q_value")
-                .unionByName(_partial(batch))
-                .groupBy("day", "event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("q_value").alias("q_value"),
-                )
-                .select(
-                    "day", "event_type", "n_events", "q_value",
-                    F.lit(new_wm).alias("watermark_epoch"),
-                    F.lit(batch_id).cast("bigint").alias("applied_batch"),
-                )
+            post, new_meta, merged_count = self._fold(
+                current, batch, int(meta["watermark_epoch"])
             )
-            return post, {
-                "watermark_epoch": new_wm, "applied_batch": batch_id
-            }
+            return post, new_meta
 
-        self.table.merge(merge_fn)
+        if self.table.merge(merge_fn, meta={"last_batch_id": batch_id}) is None:
+            merged_count = 0
         free_checkpoint(batch)
         return merged_count
 

@@ -17,10 +17,12 @@ Reference semantics covered (SURVEY.md §2.7):
   UPDATE expr (D2)    column rewrite + overwrite
 
 Each function is pure (DataFrames in → post-state DataFrame out);
-persistence is `ParquetStateTable`, which commits a post-state via
-parquet write with dynamic partition overwrite — the parquet-only
-stand-in for a Delta/Iceberg MERGE target. On a cluster with a
-transactional table format, swap `commit` for `MERGE INTO`; every
+persistence is `VersionedParquetTable`, the one state table: every
+post-state commits as an immutable snapshot through an atomic
+manifest claim, retried optimistically on conflict, with stream
+progress (``last_batch_id``) committed in the same claim — the
+parquet-only stand-in for a Delta/Iceberg MERGE target. On a cluster
+with a transactional table format, swap it for `MERGE INTO`; every
 plan above it is unchanged.
 """
 
@@ -318,49 +320,39 @@ class VersionedParquetTable:
             os.unlink(tmp)
         return True
 
-    def merge(self, fn, max_retries: int = 10, meta: dict | None = None) -> int:
-        """Optimistic MERGE: ``fn(current_state) -> post_state``,
-        retried against the latest snapshot on conflict. Returns the
-        committed version number. ``meta`` commits atomically in the
-        winning manifest (see try_commit).
+    def merge(
+        self, fn, max_retries: int = 10, meta: dict | None = None
+    ) -> int | None:
+        """Optimistic MERGE: ``fn(current_state, base_meta)`` returns
+        the post-state, or ``(post_state, attempt_meta)`` to commit
+        per-attempt metadata (a watermark recomputed against the
+        retry's snapshot). Each attempt pins the latest version; on
+        conflict the next attempt re-pins and calls ``fn`` again, so
+        ``fn`` always derives from the snapshot it commits over.
+        ``base_meta`` is that snapshot's manifest meta (zero Spark
+        jobs). ``meta`` commits atomically in the winning manifest
+        (see try_commit). Returns the committed version number.
 
-        ``fn`` may take a second positional argument — the pinned
-        base VERSION of the snapshot it received — so state readers
-        can consult ``meta(base)`` (zero Spark jobs) instead of
-        scanning the table; and it may return ``(post_state,
-        attempt_meta)`` to commit per-attempt metadata (a watermark
-        recomputed against the retry's snapshot) atomically with the
-        state. Both extensions are optional; 1-arg/DataFrame-only
-        callers are unchanged."""
-        import inspect
-
-        try:
-            # Only parameters WITHOUT defaults count toward the
-            # base-version opt-in: the common capture idiom
-            # ``fn=lambda df, i=i: ...`` has two parameters but wants
-            # one argument — passing base as the second would silently
-            # clobber the captured value (ADVICE round 9).
-            wants_base = (
-                sum(
-                    1
-                    for p in inspect.signature(fn).parameters.values()
-                    if p.default is p.empty
-                    and p.kind
-                    in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-                )
-                >= 2
-            )
-        except (TypeError, ValueError):
-            wants_base = False
+        Exactly-once micro-batches: when ``meta`` carries
+        ``last_batch_id`` and the pinned base already records that id
+        or a later one, the batch is a replay — nothing commits and
+        the result is None. The check runs against the same pinned
+        base the commit claims over, so a competing writer that
+        commits the batch first makes this attempt's claim fail, and
+        the retry sees the batch as applied."""
+        batch_id = (meta or {}).get("last_batch_id")
         for _ in range(max_retries):
             base = self.current_version()
-            post = fn(self.read(base), base) if wants_base else fn(
-                self.read(base)
-            )
+            base_meta = self.meta(base)
+            if batch_id is not None and batch_id <= base_meta.get(
+                "last_batch_id", -1
+            ):
+                return None
+            post = fn(self.read(base), base_meta)
             attempt_meta = meta
             if isinstance(post, tuple):
                 post, fn_meta = post
-                attempt_meta = {**(meta or {}), **(fn_meta or {})}
+                attempt_meta = {**(meta or {}), **fn_meta}
             if self.try_commit(base, post, meta=attempt_meta):
                 return base + 1
         raise CommitConflict(
@@ -418,7 +410,7 @@ class VersionedParquetTable:
         stay readable until vacuum().
         """
         return self.merge(
-            lambda df: df.repartition(target_files), max_retries
+            lambda df, _meta: df.repartition(target_files), max_retries
         )
 
     def vacuum(self, retention_seconds: float = 3600.0) -> None:
@@ -490,61 +482,6 @@ class VersionedParquetTable:
                 pass
 
 
-class ParquetStateTable:
-    """Minimal transactional-ish state table on plain parquet.
-
-    Writes go to a partitioned directory with dynamic partition
-    overwrite, so a MERGE that only touches some partitions rewrites
-    only those. Stand-in for Delta/Iceberg MERGE on clusters without
-    a table format; the read/merge plans above are format-agnostic.
-    """
-
-    def __init__(self, spark: SparkSession, path: str,
-                 partition_by: str | None = None):
-        self.spark = spark
-        self.path = path
-        self.partition_by = partition_by
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
-
-    def init(self, df: DataFrame) -> None:
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(self.partition_by)
-        w.parquet(self.path)
-
-    def commit(self, post_state: DataFrame) -> None:
-        """Replace table contents with the post-state. With a
-        partition column and dynamic overwrite mode, untouched
-        partitions are preserved without a rewrite."""
-        prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            # Materialize before overwriting the directory being read.
-            rows = post_state.localCheckpoint(eager=True)
-            w = rows.write.mode("overwrite")
-            if self.partition_by:
-                w = w.partitionBy(self.partition_by)
-            w.parquet(self.path)
-            # The committed state is on disk; the snapshot blocks are
-            # dead — release synchronously (round-9 checkpoint-
-            # lifetime discipline; this checkpoint is table-sized).
-            from metadata_wrangler_spark.operators.lineage import (
-                free_checkpoint,
-            )
-
-            free_checkpoint(rows)
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
-
-
 class AuditReject(Exception):
     """A write-audit-publish audit vetoed the staged snapshot."""
 
@@ -570,21 +507,18 @@ def write_audit_publish(
     Spark jobs (count deltas, null scans, FK probes) — never
     driver-side row loops.
     """
-    for _ in range(max_retries):
-        base = table.current_version()
-        current = table.read(base)
+
+    def audited(current: DataFrame, _meta: dict) -> DataFrame:
         post = fn(current)
         for audit in audits:
             if not audit(current, post):
                 raise AuditReject(
                     f"{table.path}: audit {getattr(audit, '__name__', audit)}"
-                    f" rejected the staged snapshot at base v{base}"
+                    " rejected the staged snapshot"
                 )
-        if table.try_commit(base, post):
-            return base + 1
-    raise CommitConflict(
-        f"{table.path}: lost {max_retries} optimistic races"
-    )
+        return post
+
+    return table.merge(audited, max_retries)
 
 
 def audit_row_delta(max_drop_frac: float = 0.5):

@@ -2,8 +2,8 @@
 
 Each plan computes the *post-state* (or the to-write delta) that the
 engine's merge/queue library (operators.merge, operators.queue)
-persists via `ParquetStateTable.commit` (or MERGE on a transactional
-table format). The post-states are pure queries, so the oracle can
+persists as one optimistic `VersionedParquetTable.merge` (or MERGE on
+a transactional table format). The post-states are pure queries, so the oracle can
 hash-check the write semantics end to end.
 """
 

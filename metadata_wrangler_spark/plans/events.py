@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.catalog import load
+from metadata_wrangler_spark.catalog import load, table_bytes
 from metadata_wrangler_spark.plans import register
 from metadata_wrangler_spark.plans.relational import dsum
 
@@ -3024,13 +3024,8 @@ def ev_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.52 s; sf10: cached 3.05 vs uncached 3.41 — rows identical
     # both ways). Zero-job driver-side probe of the source file
     # size; unknown sizes default to cached, the at-scale-safe side.
-    try:
-        import os as _os
-        _small = _os.path.getsize(
-            _os.path.join(sf_dir, "events.parquet")
-        ) < (8 << 20)
-    except OSError:
-        _small = False
+    _bytes = table_bytes(sf_dir, "events")
+    _small = _bytes is not None and _bytes < (8 << 20)
     sel = grouped_select(
         gaps, "gap",
         lambda st: {

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from metadata_wrangler_spark.catalog import load
+from metadata_wrangler_spark.catalog import load, table_bytes
 from metadata_wrangler_spark.operators.lineage import free_checkpoint
 from metadata_wrangler_spark.operators.closure import (
     bounded_shortest_paths,
@@ -419,13 +419,8 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source's file size (sf1, in between, ties: 3.94/4.07/3.88
     # across cache-both / no-cache / ord_e-only). Unknown sizes
     # (remote storage) default to cached — the at-scale-safe side.
-    try:
-        import os as _os
-        _small = _os.path.getsize(
-            _os.path.join(sf_dir, "customer.parquet")
-        ) < (1 << 20)
-    except OSError:
-        _small = False
+    _bytes = table_bytes(sf_dir, "customer")
+    _small = _bytes is not None and _bytes < (1 << 20)
     und = (
         edges.where(F.col("src") != F.col("dst"))
         .select(

@@ -7,11 +7,27 @@ are cron scripts sweeping state tables with Timestamp checkpoints
 `/root/reference/docker/services/simplified_crontab:13-27`). Here
 those become:
 
-  incremental   readStream → windowed aggregation, checkpointed,
-                Trigger.AvailableNow (the Monitor sweep)
-  queue_drain   readStream of work items → foreachBatch applying the
-                operators.queue state machine to a ParquetStateTable
-                (the CoverageRecord drain)
+  _sweep            the one checkpointed Trigger.AvailableNow pass
+                    every module below runs (foreachBatch, parquet or
+                    memory sink)
+  incremental       the events stream reader and its watermark,
+                    windowed/hopping rollups (the Monitor sweep)
+  dedup             state-store dedup, unbounded and
+                    within-watermark (the processed-set guards)
+  sessionize        inactivity-gap sessions via
+                    applyInPandasWithState
+  joins             watermarked stream-stream attribution join
+  view_maintenance  foreachBatch driver of operators.matview
+  cdc_apply         change feed → latest-wins snapshot
+  queue_drain       foreachBatch applying the operators.queue state
+                    machine (the CoverageRecord drain)
+  admission         dedup-gated corpus append
+
+State lives in one table type: every foreachBatch sink except
+admission commits through ``operators.merge.VersionedParquetTable``
+— one atomic manifest claim per micro-batch, and a replayed batch id
+commits nothing. Admission appends to a plain parquet directory on
+purpose: a full-snapshot commit per batch would rewrite the corpus.
 
 Batch/stream equivalence is asserted in tests/test_streaming.py:
 the same aggregation code produces identical rows under

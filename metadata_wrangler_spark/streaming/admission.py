@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.dedup import normalize_text
+from metadata_wrangler_spark.streaming._sweep import available_now
 
 DOCS_SCHEMA = ("doc_id BIGINT, text STRING, lang STRING, "
                "source STRING, n_chars BIGINT")
@@ -69,13 +70,9 @@ def run_admission_stream(
     """One AvailableNow pass over whatever document files exist:
     fingerprint → anti-join vs corpus state → append admitted.
     Returns the post-run state table."""
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(source_dir)
-    q = (
-        stream.writeStream
-        .foreachBatch(lambda b, _id: admit_batch(state_path, b) and None)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    available_now(
+        spark.readStream.schema(DOCS_SCHEMA).parquet(source_dir),
+        checkpoint_dir,
+        foreach_batch=lambda b, _id: admit_batch(state_path, b) and None,
     )
-    q.awaitTermination()
     return spark.read.parquet(state_path)

@@ -26,10 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.operators.merge import (
-    ParquetStateTable,
-    VersionedParquetTable,
-)
+from metadata_wrangler_spark.operators.merge import VersionedParquetTable
+from metadata_wrangler_spark.streaming._sweep import available_now
 
 CHANGES_SCHEMA = "key BIGINT, version BIGINT, op STRING, qv BIGINT"
 
@@ -82,55 +80,30 @@ def empty_state(spark: SparkSession) -> DataFrame:
 def run_cdc_stream(
     spark: SparkSession,
     changes_dir: str,
-    table: ParquetStateTable | VersionedParquetTable,
+    table: VersionedParquetTable,
     checkpoint_dir: str,
 ) -> None:
     """AvailableNow drain of a parquet change feed through
-    foreachBatch into the state table.
+    foreachBatch into the state table, EXACTLY-ONCE in every field
+    including ``n_changes``: each micro-batch is one ``table.merge``
+    with the batch id riding in the manifest's ``meta`` (the Delta
+    ``txn`` pattern), so state + progress linearize in one claim. A
+    replayed batch (crash after the state commit, before the
+    source-offset commit) finds its id in the pinned base's
+    ``last_batch_id`` and commits nothing — also when a competing
+    writer commits it mid-merge — and a crash mid-commit loses
+    nothing (the previous snapshot stays current until the new
+    manifest appears). Interleaved writers that supply no meta
+    (compaction, a second stream) carry ``last_batch_id`` forward:
+    ``try_commit`` merges meta key-wise over the base version's map."""
 
-    With a :class:`VersionedParquetTable` this is EXACTLY-ONCE in
-    every field including ``n_changes``: each micro-batch commits
-    through the table's atomic manifest claim with the batch id
-    riding in the manifest's ``meta`` (the Delta ``txn`` pattern), so
-    state + progress linearize in one step — a replayed batch (crash
-    after the state commit, before the source-offset commit) is
-    detected by ``meta()["last_batch_id"]`` and skipped, and a crash
-    mid-commit loses nothing (the previous snapshot stays current
-    until the new manifest appears). Interleaved writers that don't
-    supply meta (compaction, a second stream) are safe too:
-    ``try_commit`` merges meta key-wise over the base version's map,
-    so ``last_batch_id`` is carried forward, never reset.
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        table.merge(
+            lambda cur, _meta: apply_changes(cur, batch_df),
+            meta={"last_batch_id": batch_id},
+        )
 
-    With a :class:`ParquetStateTable` the commit is a plain-parquet
-    directory overwrite — NOT atomic: a crash mid-commit can lose
-    state, and a replayed batch double-counts ``n_changes`` (the
-    LATEST-WINS fields stay correct either way: re-applying a batch
-    can only re-elect the same champion). At-least-once with
-    idempotent champions, in other words — fine for a serving cache,
-    not for an audit count. Prefer the versioned table when
-    ``n_changes`` matters."""
-    changes = spark.readStream.schema(CHANGES_SCHEMA).parquet(changes_dir)
-
-    if isinstance(table, VersionedParquetTable):
-
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            last = table.meta().get("last_batch_id", -1)
-            if batch_id <= last:
-                return  # replayed batch: state already holds it
-            table.merge(
-                lambda cur: apply_changes(cur, batch_df),
-                meta={"last_batch_id": batch_id},
-            )
-
-    else:
-
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            table.commit(apply_changes(table.read(), batch_df))
-
-    (
-        changes.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    available_now(
+        spark.readStream.schema(CHANGES_SCHEMA).parquet(changes_dir),
+        checkpoint_dir, foreach_batch=handle,
     )

@@ -15,7 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from metadata_wrangler_spark.streaming import incremental
+from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming.incremental import (
+    read_events_stream,
+    watermarked,
+)
 
 
 def deduped_events_stream(
@@ -35,14 +39,8 @@ def deduped_events_stream(
     unbounded state; the bounded-state twin a 100 TB/day ingest
     wants is `deduped_events_stream_within_watermark` below.
     """
-    events = incremental.read_events_stream(spark, source_dir)
-    if dict(events.dtypes).get("ts") == "timestamp_ntz":
-        # Watermarks only accept TIMESTAMP (ltz); sessions pin
-        # spark.sql.session.timeZone=UTC so this cast is value-stable.
-        from pyspark.sql import functions as F
-
-        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events.withWatermark("ts", watermark).dropDuplicates(list(key_cols))
+    events = watermarked(read_events_stream(spark, source_dir), watermark)
+    return events.dropDuplicates(list(key_cols))
 
 
 def run_dedup_stream(
@@ -53,17 +51,10 @@ def run_dedup_stream(
 ) -> DataFrame:
     """One AvailableNow pass; results land in an in-memory table
     (swap for a parquet/Delta sink in production)."""
-    q = (
-        deduped_events_stream(spark, source_dir)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        deduped_events_stream(spark, source_dir), checkpoint_dir,
+        query_name=query_name,
     )
-    q.awaitTermination()
-    return spark.table(query_name)
 
 
 def deduped_events_stream_within_watermark(
@@ -82,13 +73,8 @@ def deduped_events_stream_within_watermark(
     (the common real-world duplicate) still dedup, because matching
     is on ``key_cols`` alone.
     """
-    events = incremental.read_events_stream(spark, source_dir)
-    if dict(events.dtypes).get("ts") == "timestamp_ntz":
-        from pyspark.sql import functions as F
-
-        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return events.withWatermark("ts", watermark) \
-        .dropDuplicatesWithinWatermark(list(key_cols))
+    events = watermarked(read_events_stream(spark, source_dir), watermark)
+    return events.dropDuplicatesWithinWatermark(list(key_cols))
 
 
 def run_dedup_stream_within_watermark(
@@ -98,14 +84,7 @@ def run_dedup_stream_within_watermark(
     query_name: str = "dedup_stream_ww",
 ) -> DataFrame:
     """One AvailableNow pass of the bounded-state dedup."""
-    q = (
-        deduped_events_stream_within_watermark(spark, source_dir)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        deduped_events_stream_within_watermark(spark, source_dir),
+        checkpoint_dir, query_name=query_name,
     )
-    q.awaitTermination()
-    return spark.table(query_name)

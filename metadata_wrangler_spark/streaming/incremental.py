@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.streaming._sweep import available_now
+
 
 def _events_schema(spark: SparkSession, source_dir: str) -> tuple[str, bool]:
     """Detect the physical type of ``ts`` from one batch footer read
@@ -41,18 +43,34 @@ def _events_schema(spark: SparkSession, source_dir: str) -> tuple[str, bool]:
 
 
 def read_events_stream(
-    spark: SparkSession, source_dir: str, **reader_options: str
+    spark: SparkSession,
+    source_dir: str,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
+    """The events parquet directory as a stream, at most
+    ``max_files_per_trigger`` files per micro-batch when set."""
     schema, is_nanos = _events_schema(spark, source_dir)
     reader = spark.readStream.schema(schema)
-    if reader_options:
-        reader = reader.options(**reader_options)
+    if max_files_per_trigger:
+        reader = reader.option(
+            "maxFilesPerTrigger", str(max_files_per_trigger)
+        )
     raw = reader.parquet(source_dir)
     if is_nanos:
         # nanos-as-long → real microsecond timestamp (integer div:
         # nano epochs exceed 2^53, float division would corrupt).
         raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return raw
+
+
+def watermarked(events: DataFrame, delay: str) -> DataFrame:
+    """``events`` with an event-time watermark ``delay`` behind the max
+    ``ts`` seen. Watermarks only accept TIMESTAMP (ltz), so a
+    TIMESTAMP_NTZ ``ts`` is cast first; sessions pin
+    spark.sql.session.timeZone=UTC, so the cast is value-stable."""
+    if dict(events.dtypes).get("ts") == "timestamp_ntz":
+        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events.withWatermark("ts", delay)
 
 
 def windowed_rollup(events: DataFrame) -> DataFrame:
@@ -103,29 +121,11 @@ def run_windowed_stream_append(
     ``max_files_per_trigger`` splits a backlog into multiple batches
     accordingly (and is the knob a backfill run uses to bound batch
     size)."""
-    events = read_events_stream(
-        spark, source_dir,
-        **({"maxFilesPerTrigger": str(max_files_per_trigger)}
-           if max_files_per_trigger else {}),
+    events = read_events_stream(spark, source_dir, max_files_per_trigger)
+    return available_now(
+        windowed_rollup(watermarked(events, watermark)), checkpoint_dir,
+        output_dir=output_dir, schema=ROLLUP_SCHEMA, query_name=query_name,
     )
-    if dict(events.dtypes).get("ts") == "timestamp_ntz":
-        # Watermarks only accept TIMESTAMP (ltz); sessions pin UTC so
-        # the cast is value-stable.
-        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = windowed_rollup(events.withWatermark("ts", watermark))
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # Explicit schema: a sink that has emitted zero rows has no part
-    # files to infer from.
-    return spark.read.schema(ROLLUP_SCHEMA).parquet(output_dir)
 
 
 def run_windowed_stream(
@@ -140,17 +140,10 @@ def run_windowed_stream(
     Results land in an in-memory table (swap for a parquet/Delta
     sink in production)."""
     events = read_events_stream(spark, source_dir)
-    q = (
-        windowed_rollup(events)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        windowed_rollup(events), checkpoint_dir,
+        query_name=query_name, output_mode="complete",
     )
-    q.awaitTermination()
-    return spark.table(query_name)
 
 
 def hopping_rollup(events: DataFrame) -> DataFrame:
@@ -186,14 +179,7 @@ def run_hopping_stream(
     """AvailableNow pass of the hopping rollup (complete-mode memory
     sink — bounded-input testing twin of run_windowed_stream)."""
     events = read_events_stream(spark, source_dir)
-    q = (
-        hopping_rollup(events)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        hopping_rollup(events), checkpoint_dir,
+        query_name=query_name, output_mode="complete",
     )
-    q.awaitTermination()
-    return spark.table(query_name)

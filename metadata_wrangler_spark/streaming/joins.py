@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.streaming.incremental import read_events_stream
+from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming.incremental import (
+    read_events_stream,
+    watermarked,
+)
 
 GAP_MINUTES = 120
 
@@ -74,13 +78,13 @@ def attribution_pairs(
     )
 
 
-def _typed_leg(events: DataFrame, event_type: str) -> DataFrame:
-    leg = events.where(F.col("event_type") == event_type)
-    if dict(leg.dtypes).get("ts") == "timestamp_ntz":
-        # Watermarks only accept TIMESTAMP (ltz); sessions pin UTC so
-        # the cast is value-stable.
-        leg = leg.withColumn("ts", F.col("ts").cast("timestamp"))
-    return leg
+def _typed_leg(
+    events: DataFrame, event_type: str, lateness: str
+) -> DataFrame:
+    """One event type, watermarked on its own event times."""
+    return watermarked(
+        events.where(F.col("event_type") == event_type), lateness
+    )
 
 
 def run_attribution_stream(
@@ -102,24 +106,13 @@ def run_attribution_stream(
     vice versa — the eviction Spark derives from the join's time
     condition. Inner-join matches emit immediately (no
     finalization wait; only outer joins hold results back)."""
-    events = read_events_stream(
-        spark, source_dir,
-        **({"maxFilesPerTrigger": str(max_files_per_trigger)}
-           if max_files_per_trigger else {}),
+    events = read_events_stream(spark, source_dir, max_files_per_trigger)
+    pairs = attribution_pairs(
+        _typed_leg(events, "click", lateness),
+        _typed_leg(events, "purchase", lateness),
+        gap_minutes,
     )
-    clicks = _typed_leg(events, "click").withWatermark("ts", lateness)
-    purchases = _typed_leg(events, "purchase").withWatermark("ts", lateness)
-    pairs = attribution_pairs(clicks, purchases, gap_minutes)
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        pairs, checkpoint_dir, output_dir=output_dir, schema=PAIRS_SCHEMA,
+        query_name=query_name,
     )
-    q.awaitTermination()
-    # Explicit schema: a sink that matched zero pairs has no part
-    # files to infer from.
-    return spark.read.schema(PAIRS_SCHEMA).parquet(output_dir)

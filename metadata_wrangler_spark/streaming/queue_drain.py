@@ -7,9 +7,10 @@ register/succeed/fail `/root/reference/coverage_provider.py:328-354`).
 
 Design: a stream of incoming work items; every micro-batch runs the
 SAME set-oriented queue transitions as the batch path
-(operators.queue) against a ParquetStateTable — register the new
-items, process the eligible set, apply outcomes, commit. State
-consistency comes from the table, exactness from the checkpointed
+(operators.queue) inside one optimistic merge of a
+VersionedParquetTable — register the new items, process the eligible
+set, apply outcomes, commit. A drain racing a registrar serializes
+instead of losing updates; exactness comes from the checkpointed
 source offsets.
 """
 
@@ -21,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators import queue
-from metadata_wrangler_spark.operators.merge import ParquetStateTable
+from metadata_wrangler_spark.operators.merge import VersionedParquetTable
+from metadata_wrangler_spark.streaming._sweep import available_now
 
 ITEMS_SCHEMA = "identifier_id BIGINT"
 
@@ -59,7 +61,7 @@ def _transition(
 
 
 def drain_batch(
-    table,
+    table: VersionedParquetTable,
     items: DataFrame,
     data_source: str,
     operation: str,
@@ -67,26 +69,19 @@ def drain_batch(
     processor: Callable[[DataFrame], DataFrame] = default_processor,
     backoff_seconds: int = 0,
 ) -> None:
-    """One drain step (shared by the streaming foreachBatch and any
-    batch cron). ``table`` is either a ParquetStateTable (read +
-    overwrite commit — single-writer crons) or a
-    VersionedParquetTable (the transition runs inside an optimistic
-    merge, so a drain racing a registrar serializes instead of
-    losing updates)."""
-    def fn(records: DataFrame) -> DataFrame:
+    """One drain step, committed as one optimistic merge (shared by
+    the streaming foreachBatch and any batch cron)."""
+    def fn(records: DataFrame, _meta: dict) -> DataFrame:
         return _transition(records, items, data_source, operation,
                            now, processor, backoff_seconds)
 
-    if hasattr(table, "merge"):
-        table.merge(fn)
-    else:
-        table.commit(fn(table.read()))
+    table.merge(fn)
 
 
 def run_drain_stream(
     spark: SparkSession,
     items_dir: str,
-    table: ParquetStateTable,
+    table: VersionedParquetTable,
     checkpoint_dir: str,
     data_source: str = "oclc",
     operation: str = "classify",
@@ -94,16 +89,12 @@ def run_drain_stream(
     processor: Callable[[DataFrame], DataFrame] = default_processor,
 ) -> None:
     """AvailableNow drain of the items stream through foreachBatch."""
-    items = spark.readStream.schema(ITEMS_SCHEMA).parquet(items_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         drain_batch(table, batch_df, data_source, operation, now,
                     processor)
 
-    q = (
-        items.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    available_now(
+        spark.readStream.schema(ITEMS_SCHEMA).parquet(items_dir),
+        checkpoint_dir, foreach_batch=handle,
     )
-    q.awaitTermination()

@@ -21,6 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming.incremental import (
+    read_events_stream,
+    watermarked,
+)
+
 OUTPUT_SCHEMA = (
     "user_id BIGINT, session_no BIGINT, n_events BIGINT, "
     "session_start_epoch BIGINT, session_end_epoch BIGINT"
@@ -94,14 +100,6 @@ def sessionize_stream(
     checkpoint resumes state and processes only NEW files. The
     default in-memory sink is single-run (Spark's memory sink cannot
     recover a checkpoint)."""
-    from metadata_wrangler_spark.streaming.incremental import (
-        read_events_stream,
-    )
-    events = read_events_stream(spark, source_dir)
-    if dict(events.dtypes).get("ts") == "timestamp_ntz":
-        # Watermarks need TIMESTAMP; the session runs with
-        # spark.sql.session.timeZone=UTC so the cast is value-stable.
-        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     # Enforce the docstring's late-data contract: events later than
     # GAP_SECONDS relative to the stream's max event time are dropped
     # HERE, not merely assumed dropped upstream — without this, an
@@ -109,25 +107,14 @@ def sessionize_stream(
     # start backward over previously emitted sessions.
     # `ts` stays in the projection: the stateful operator only
     # filters late rows when the event-time column itself reaches it.
-    events = events.withWatermark("ts", f"{GAP_SECONDS} seconds").select(
-        "user_id", "ts", F.unix_timestamp("ts").alias("epoch")
-    )
+    events = watermarked(
+        read_events_stream(spark, source_dir), f"{GAP_SECONDS} seconds"
+    ).select("user_id", "ts", F.unix_timestamp("ts").alias("epoch"))
     out = events.groupBy("user_id").applyInPandasWithState(
         _sessionize, OUTPUT_SCHEMA, STATE_SCHEMA,
         "append", GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        out.writeStream.queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    return available_now(
+        out, checkpoint_dir, output_dir=output_dir, schema=OUTPUT_SCHEMA,
+        query_name=query_name,
     )
-    if output_dir is not None:
-        q = writer.format("parquet").option("path", output_dir).start()
-        q.awaitTermination()
-        # Explicit schema: a sink that has emitted zero rows has no
-        # part files to infer from.
-        return spark.read.schema(OUTPUT_SCHEMA).parquet(output_dir)
-    q = writer.format("memory").start()
-    q.awaitTermination()
-    return spark.table(query_name)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from metadata_wrangler_spark.operators.matview import MaterializedDailyRollup
+from metadata_wrangler_spark.streaming._sweep import available_now
 from metadata_wrangler_spark.streaming.incremental import read_events_stream
 
 
@@ -36,21 +37,8 @@ def run_view_maintenance_stream(
     bootstrapped with ``MaterializedDailyRollup.init`` first — an
     empty init is fine). Returns the refreshed view."""
     mv = MaterializedDailyRollup(spark, view_path)
-    events = read_events_stream(
-        spark, source_dir,
-        **({"maxFilesPerTrigger": str(max_files_per_trigger)}
-           if max_files_per_trigger else {}),
+    available_now(
+        read_events_stream(spark, source_dir, max_files_per_trigger),
+        checkpoint_dir, foreach_batch=mv.merge_batch, query_name=query_name,
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        mv.merge_batch(batch_df, batch_id)
-
-    q = (
-        events.writeStream.foreachBatch(handle)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return mv.read()

@@ -17,6 +17,21 @@ sys.path.insert(
 )
 
 
+# Read-only snapshot of the reference repository's test fixtures.
+REFERENCE_FILES = "/root/reference/tests/files"
+
+#: Marks a golden test that parses the reference's own fixture files.
+#: It runs unchanged when the snapshot is present and is skipped,
+#: with this reason in the report, when it is not; the parsers' facts
+#: are also asserted on hand-written documents in tests/test_sources.py
+#: and tests/test_functions.py.
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_FILES),
+    reason=f"REFERENCE SNAPSHOT MISSING: {REFERENCE_FILES} not found; "
+    "golden-fixture test not run",
+)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from metadata_wrangler_spark.session import get_spark

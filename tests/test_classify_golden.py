@@ -11,6 +11,9 @@ from __future__ import annotations
 import os
 
 from metadata_wrangler_spark.sources import xmlsrc
+from tests.conftest import requires_reference
+
+pytestmark = requires_reference
 
 FIXTURES = "/root/reference/tests/files/oclc_classify"
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 from metadata_wrangler_spark.sources import htmlsrc
+from tests.conftest import requires_reference
 
 FIXTURES = "/root/reference/tests/files/content_cafe"
 
@@ -22,6 +23,7 @@ def _scrape(spark, name, missing_phrase=None):
     ).collect()[0]
 
 
+@requires_reference
 def test_summaries_scrape_list(spark):
     row = _scrape(spark, "summaries.html")
     assert row["title"] == "Slightly Irregular"
@@ -30,12 +32,14 @@ def test_summaries_scrape_list(spark):
         '"The fourth novel in the F.A.T. series')
 
 
+@requires_reference
 def test_reviews_scrape_list(spark):
     row = _scrape(spark, "reviews.html")
     assert row["title"] == "Shadow Thieves"
     assert len(row["sections"]) == 6
 
 
+@requires_reference
 def test_excerpt_scrape_one(spark):
     row = _scrape(spark, "excerpt.html")
     assert row["title"] == "Franklin's Christmas Gift"
@@ -43,12 +47,14 @@ def test_excerpt_scrape_one(spark):
     assert row["first_content"]
 
 
+@requires_reference
 def test_author_notes_scrape_one(spark):
     row = _scrape(spark, "author_notes.html")
     assert row["title"] == "Franklin's Christmas Gift"
     assert row["first_content"]
 
 
+@requires_reference
 def test_missing_phrase_short_circuits(spark):
     row = _scrape(
         spark, "summaries.html",

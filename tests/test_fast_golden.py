@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.sources import ntriples
+from tests.conftest import requires_reference
+
+pytestmark = requires_reference
 
 FIXTURES = "/root/reference/tests/files/fast/not-consolidated/FAST"
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.functions import canonical, names, roles, urls
-from tests.conftest import rows
+from tests.conftest import requires_reference, rows
 
 
 def _one(spark, expr, value):
@@ -189,6 +189,7 @@ def test_fingerprint_stable_under_normalization(spark):
     assert by_id[1] == by_id[2]
 
 
+@requires_reference
 def test_binary_prefix_on_reference_cover_fixtures(spark):
     """F14 against the reference's own cover images: both fixtures
     are PNGs (magic-prefix match) and the stand-in detection pattern
@@ -216,6 +217,42 @@ def test_binary_prefix_on_reference_cover_fixtures(spark):
     standin = (base / "tiny-image-cover.png").read_bytes()[:64]
     flagged = {r["id"] for r in df.where(
         has_prefix(F.col("payload"), standin)
+    ).collect()}
+    assert flagged == {2}
+
+
+def test_binary_prefix_on_hand_built_images(spark):
+    """F14 on hand-built payloads: two PNGs (magic-prefix match), a
+    JPEG that must not match, and stand-in detection — the first 64
+    bytes of a KNOWN image flag only payloads that start with them."""
+    import struct
+    import zlib
+
+    from metadata_wrangler_spark.functions.binary import has_prefix
+
+    def png(width: int, height: int, fill: int) -> bytes:
+        def chunk(kind: bytes, body: bytes) -> bytes:
+            return (struct.pack(">I", len(body)) + kind + body
+                    + struct.pack(">I", zlib.crc32(kind + body)))
+        rows = b"".join(b"\0" + bytes([fill]) * width for _ in range(height))
+        return (b"\x89PNG\r\n\x1a\n"
+                + chunk(b"IHDR", struct.pack(">IIBBBBB", width, height,
+                                             8, 0, 0, 0, 0))
+                + chunk(b"IDAT", zlib.compress(rows))
+                + chunk(b"IEND", b""))
+
+    cover, tiny = png(32, 48, 200), png(1, 1, 0)
+    df = spark.createDataFrame(
+        [(1, cover), (2, tiny), (3, b"\xff\xd8\xff\xe0" + b"0" * 32)],
+        "id int, payload binary",
+    )
+    out = {r["id"]: r["is_png"] for r in df.select(
+        "id", has_prefix(F.col("payload"), b"\x89PNG\r\n\x1a\n")
+        .alias("is_png")
+    ).collect()}
+    assert out == {1: True, 2: True, 3: False}
+    flagged = {r["id"] for r in df.where(
+        has_prefix(F.col("payload"), tiny[:64])
     ).collect()}
     assert flagged == {2}
 

@@ -12,6 +12,9 @@ from __future__ import annotations
 import os
 
 from metadata_wrangler_spark.sources import jsonld
+from tests.conftest import requires_reference
+
+pytestmark = requires_reference
 
 FIXTURES = "/root/reference/tests/files/oclc"
 

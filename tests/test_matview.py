@@ -84,49 +84,65 @@ def test_init_on_empty_slice_then_refresh(spark, tmp_path):
     assert got == exp
 
 
-def test_refresh_on_pre_meta_table_keeps_applied_batch(spark, tmp_path):
-    """Exactly-once across the meta upgrade: a table written BEFORE
-    manifest-meta state (empty meta, state in rows) that has already
-    applied micro-batch 7 must still reject a replay of batch 7 after
-    a refresh(). The round-9 refresh committed only
-    {watermark_epoch}, so the first refresh on such a table flipped
-    _state() onto the meta path with applied_batch=-1 and the replay
-    double-counted (ADVICE round 9)."""
+_EVENTS = (
+    "event_id long, ts timestamp, user_id long, "
+    "event_type string, value double"
+)
+
+
+def test_refresh_keeps_last_batch_id(spark, tmp_path):
+    """Exactly-once across refresh: after merge_batch 7, a refresh
+    commits only its watermark and the manifest carries
+    ``last_batch_id`` forward, so a replay of batch 7 merges 0 rows."""
     from datetime import datetime
 
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double"
-    )
     base = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1, 12, 0, 0), 1, "click", 1.0)], schema
+        [(1, datetime(2024, 1, 1, 12, 0, 0), 1, "click", 1.0)], _EVENTS
     )
     batch7 = spark.createDataFrame(
-        [(2, datetime(2024, 1, 2, 12, 0, 0), 1, "click", 2.0)], schema
+        [(2, datetime(2024, 1, 2, 12, 0, 0), 1, "click", 2.0)], _EVENTS
+    )
+    fresh = spark.createDataFrame(
+        [(3, datetime(2024, 1, 3, 12, 0, 0), 1, "click", 4.0)], _EVENTS
     )
     mv = MaterializedDailyRollup(spark, str(tmp_path / "mv"))
     mv.init(base)
     assert mv.merge_batch(batch7, batch_id=7) == 1
-
-    # Strip the manifest meta to simulate a pre-round-9 table whose
-    # state lives only in the rows (the scan-based fallback path).
-    rows = mv.table.read()
-    pre_meta = MaterializedDailyRollup(spark, str(tmp_path / "mv2"))
-    pre_meta.table.init(rows)  # no meta kwarg: empty manifest meta
-    assert pre_meta.table.meta() == {}
-    assert pre_meta._state() == mv._state()  # row-scan fallback works
-
-    # A refresh with new data commits meta; BOTH fields must survive.
-    fresh = spark.createDataFrame(
-        [(3, datetime(2024, 1, 3, 12, 0, 0), 1, "click", 4.0)], schema
-    )
-    assert pre_meta.refresh(base.unionByName(batch7).unionByName(fresh)) == 1
-    assert pre_meta._state()[1] == 7  # applied_batch not reset to -1
+    assert mv.refresh(base.unionByName(batch7).unionByName(fresh)) == 1
+    assert mv.table.meta()["last_batch_id"] == 7
 
     # The replayed micro-batch is skipped, not double-counted.
-    assert pre_meta.merge_batch(batch7, batch_id=7) == 0
-    total = pre_meta.read().agg(F.sum("n_events").alias("n")).collect()[0]
+    assert mv.merge_batch(batch7, batch_id=7) == 0
+    total = mv.read().agg(F.sum("n_events").alias("n")).collect()[0]
     assert total["n"] == 3
+
+
+def test_merge_batch_replay_race_applies_batch_once(spark, tmp_path):
+    """A competing writer merges batch 3 after this writer pinned its
+    base but before its commit claim: the claim fails, the retry
+    finds batch 3 applied, and the batch counts once."""
+    from datetime import datetime
+
+    batch3 = spark.createDataFrame(
+        [(2, datetime(2024, 1, 2, 12, 0, 0), 1, "click", 2.0)], _EVENTS
+    )
+    path = str(tmp_path / "mv")
+    mv = MaterializedDailyRollup(spark, path)
+    mv.init(batch3.where(F.lit(False)))
+    competitor = MaterializedDailyRollup(spark, path)
+    claim = mv.table.try_commit
+    raced = []
+
+    def racing_claim(base_version, post_state, meta=None):
+        if not raced:
+            raced.append(base_version)
+            assert competitor.merge_batch(batch3, batch_id=3) == 1
+        return claim(base_version, post_state, meta=meta)
+
+    mv.table.try_commit = racing_claim
+    assert mv.merge_batch(batch3, batch_id=3) == 0
+    assert raced == [0] and mv.table.current_version() == 1
+    assert [r["n_events"] for r in mv.read().collect()] == [1]
 
 
 def test_streaming_view_maintenance_equals_full_recompute(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Merge-policy tests: null-never-overwrites, get_one_or_create,
 entity merge + FK repoint, delete/update post-states, and the
-ParquetStateTable commit round-trip."""
+VersionedParquetTable commit protocol."""
 
 from __future__ import annotations
 
@@ -94,16 +94,17 @@ def test_delete_and_update_where(spark):
     assert got == {1: "pub-new", 2: "pub-b", 3: "pub-c"}
 
 
-def test_parquet_state_table_commit_roundtrip(spark, tmp_path):
+def test_versioned_table_policy_merge_roundtrip(spark, tmp_path):
     path = str(tmp_path / "editions")
-    table = merge.ParquetStateTable(spark, path)
+    table = merge.VersionedParquetTable(spark, path)
     table.init(_editions(spark))
     staged = spark.createDataFrame(
         [(2, "Recovered Title", "pub-x")],
         "key bigint, title string, publisher string",
     )
-    post = merge.policy_merge(table.read(), staged, ["key"], ["title"])
-    table.commit(post)
+    table.merge(
+        lambda cur, _meta: merge.policy_merge(cur, staged, ["key"], ["title"])
+    )
     got = {r["key"]: r["title"] for r in table.read().collect()}
     assert got == {1: "Title One", 2: "Recovered Title", 3: "Title Three"}
 
@@ -126,10 +127,10 @@ def test_versioned_table_interleaved_merges_serialize(spark, tmp_path):
         "key bigint, title string, publisher string",
     )
 
-    def merge_a(cur):
+    def merge_a(cur, _meta=None):
         return merge.policy_merge(cur, staged_a, ["key"], ["title"])
 
-    def merge_b(cur):
+    def merge_b(cur, _meta=None):
         return merge.policy_merge(cur, staged_b, ["key"], ["title"])
 
     # Interleave by hand: both writers read version 0 and compute.
@@ -159,13 +160,13 @@ def test_versioned_table_queue_transition_merge(spark, tmp_path):
         "id bigint, status string",
     ))
 
-    def complete_batch(cur):
+    def complete_batch(cur, _meta):
         return merge.update_where(
             cur, F.col("id").isin([1, 2]),
             {"status": F.lit("success")},
         )
 
-    def register_new(cur):
+    def register_new(cur, _meta):
         return merge.get_one_or_create(
             cur,
             cur.sparkSession.createDataFrame(
@@ -217,7 +218,7 @@ def test_versioned_table_crashed_writer_leaves_no_partial_manifest(
     assert not os.path.isdir(orphan_data)
     assert not os.path.exists(orphan_tmp)
     # And the next commit proceeds normally onto version 1.
-    assert t.merge(lambda cur: cur) == 1
+    assert t.merge(lambda cur, _meta: cur) == 1
 
 
 def test_versioned_table_vacuum_retires_old_versions_cleanly(
@@ -228,7 +229,7 @@ def test_versioned_table_vacuum_retires_old_versions_cleanly(
     # pointing at vanished parquet.
     t = merge.VersionedParquetTable(spark, str(tmp_path / "t"))
     t.init(_editions(spark))
-    t.merge(lambda cur: cur.where(F.col("key") != 3))
+    t.merge(lambda cur, _meta: cur.where(F.col("key") != 3))
     assert t.current_version() == 1
 
     t.vacuum()
@@ -254,7 +255,7 @@ def test_compaction_preserves_content_and_reduces_files(spark, tmp_path):
     t.init(spark.range(0, 100).select(F.col("id"), (F.col("id") % 7).alias("k")))
     # accrete small files: several merges, each written many-partition
     for i in range(3):
-        t.merge(lambda df, i=i: df.unionByName(
+        t.merge(lambda df, _meta, i=i: df.unionByName(
             df.limit(10).select((F.col("id") + 1000 * (i + 1)).alias("id"), "k")
         ).repartition(16))
     before_version = t.current_version()
@@ -284,7 +285,7 @@ def test_changes_feed_tracks_logical_diffs_only(spark, tmp_path):
     t = VersionedParquetTable(spark, str(tmp_path / "tbl"))
     t.init(spark.range(0, 10).select(F.col("id"), F.lit("a").alias("s")))
     # v1: delete ids >= 8, update id 0 -> 'b', insert id 100
-    def fn(df):
+    def fn(df, _meta):
         kept = df.where((F.col("id") < 8) & (F.col("id") != 0))
         upd = df.where(F.col("id") == 0).select("id", F.lit("b").alias("s"))
         new = spark.createDataFrame([(100, "a")], "id long, s string")
@@ -435,12 +436,10 @@ def test_write_audit_publish_reaudits_after_rebase(spark, tmp_path):
 
 
 def test_merge_defaulted_capture_lambda_keeps_its_value(spark, tmp_path):
-    """The base-version opt-in must count only parameters WITHOUT
-    defaults: ``lambda df, i=i: ...`` is a value capture, not a
-    2-arg merge function — passing base as the second argument would
-    silently clobber the captured value (ADVICE round 9). Here the
-    captured values deliberately DIFFER from the base versions they
-    would be clobbered with."""
+    """``merge`` calls ``fn(current, base_meta)`` positionally and
+    nothing else: a value captured through a defaulted third parameter
+    (``lambda df, meta, tag=tag: ...``) is never clobbered. Here the
+    captured values deliberately DIFFER from the base versions."""
     from pyspark.sql import functions as F
 
     from metadata_wrangler_spark.operators.merge import VersionedParquetTable
@@ -449,16 +448,54 @@ def test_merge_defaulted_capture_lambda_keeps_its_value(spark, tmp_path):
     t.init(spark.range(0, 1).select(F.lit(-1).alias("tag")))
     # base versions will be 0,1,2 — captured tags are 100,200,300
     for tag in (100, 200, 300):
-        t.merge(lambda df, tag=tag: df.unionByName(
+        t.merge(lambda df, _meta, tag=tag: df.unionByName(
             spark.range(0, 1).select(F.lit(tag).alias("tag"))
-        ))
+        ), meta={"tag": tag})
     got = sorted(r["tag"] for r in t.read().collect())
     assert got == [-1, 100, 200, 300]
 
-    # the explicit 2-arg (no-default) form still receives base
+    # fn receives the pinned base's manifest meta
     seen = []
-    def fn(df, base):
-        seen.append(base)
+    def fn(df, meta):
+        seen.append(meta)
         return df
     t.merge(fn)
-    assert seen == [t.current_version() - 1]
+    assert seen == [{"tag": 300}]
+
+
+def test_merge_wrong_arity_fn_raises(spark, tmp_path):
+    """One merge contract: an ``fn`` that cannot take
+    ``(current, base_meta)`` fails loudly and commits nothing — no
+    signature sniffing silently picks a calling convention."""
+    import pytest
+
+    from metadata_wrangler_spark.operators.merge import VersionedParquetTable
+
+    t = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    t.init(_editions(spark))
+    with pytest.raises(TypeError):
+        t.merge(lambda cur: cur)
+    with pytest.raises(TypeError):
+        t.merge(lambda cur, meta, extra: cur)
+    assert t.current_version() == 0
+
+
+def test_merge_skips_replayed_batch_id(spark, tmp_path):
+    """A ``last_batch_id`` at or below the pinned base's commits
+    nothing (merge returns None and never calls fn); a newer id
+    commits and records itself."""
+    from metadata_wrangler_spark.operators.merge import VersionedParquetTable
+
+    t = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    t.init(_editions(spark), meta={"last_batch_id": 4})
+    calls = []
+
+    def fn(cur, _meta):
+        calls.append(1)
+        return cur
+
+    assert t.merge(fn, meta={"last_batch_id": 3}) is None
+    assert t.merge(fn, meta={"last_batch_id": 4}) is None
+    assert calls == [] and t.current_version() == 0
+    assert t.merge(fn, meta={"last_batch_id": 5}) == 1
+    assert t.meta() == {"last_batch_id": 5}

@@ -8,6 +8,9 @@ Fixture: /root/reference/tests/files/overdrive/overdrive_metadata.json
 from __future__ import annotations
 
 from metadata_wrangler_spark.sources import overdrive
+from tests.conftest import requires_reference
+
+pytestmark = requires_reference
 
 FIXTURE = "/root/reference/tests/files/overdrive/overdrive_metadata.json"
 

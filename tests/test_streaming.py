@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import queue
-from metadata_wrangler_spark.operators.merge import ParquetStateTable
+from metadata_wrangler_spark.operators.merge import VersionedParquetTable
 from metadata_wrangler_spark.streaming import incremental, queue_drain
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -69,14 +69,16 @@ def test_queue_drain_stream_equals_batch(spark, tmp_path):
     items.write.parquet(items_dir)
 
     # streaming drain
-    stream_table = ParquetStateTable(spark, str(tmp_path / "stream_state"))
+    stream_table = VersionedParquetTable(
+        spark, str(tmp_path / "stream_state")
+    )
     stream_table.init(initial)
     queue_drain.run_drain_stream(
         spark, items_dir, stream_table, str(tmp_path / "cp"),
     )
 
     # batch drain of the same items against the same initial state
-    batch_table = ParquetStateTable(spark, str(tmp_path / "batch_state"))
+    batch_table = VersionedParquetTable(spark, str(tmp_path / "batch_state"))
     batch_table.init(initial)
     queue_drain.drain_batch(
         batch_table, items, "oclc", "classify", "2024-01-15 00:00:00"
@@ -193,13 +195,8 @@ def test_windowed_append_finalizes_windows_behind_watermark(spark, tmp_path):
 
 
 def test_queue_drain_through_versioned_table_commits_per_batch(spark, tmp_path):
-    # The same drain, but committed through the optimistic ACID
-    # table: every micro-batch lands as one atomic version, and the
-    # final state matches the single-writer overwrite path.
-    from metadata_wrangler_spark.operators.merge import (
-        VersionedParquetTable,
-    )
-
+    # Every micro-batch lands as one atomic version, and the final
+    # state matches one batch drain of the same items.
     initial = spark.createDataFrame(
         [(2, "oclc", "classify", queue.TRANSIENT,
           "2024-01-01 00:00:00", "boom")],
@@ -218,7 +215,7 @@ def test_queue_drain_through_versioned_table_commits_per_batch(spark, tmp_path):
     )
     assert vt.current_version() >= 1  # init + >=1 drain commit
 
-    plain = ParquetStateTable(spark, str(tmp_path / "plain_state"))
+    plain = VersionedParquetTable(spark, str(tmp_path / "plain_state"))
     plain.init(initial)
     queue_drain.drain_batch(
         plain, items, "oclc", "classify", "2024-01-15 00:00:00"
@@ -256,7 +253,7 @@ def test_native_session_window_streams_with_watermark(spark, tmp_path):
     _write("f3", 9, [0])
 
     events = incremental.read_events_stream(
-        spark, str(src), maxFilesPerTrigger="1"
+        spark, str(src), max_files_per_trigger=1
     )
     if dict(events.dtypes).get("ts") == "timestamp_ntz":
         events = events.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -380,14 +377,10 @@ def test_stream_stream_join_evicts_state_behind_watermark(spark, tmp_path):
         os.utime(dest, (1700000000 + 100 * i,) * 2)
 
     events = incremental.read_events_stream(
-        spark, str(src), maxFilesPerTrigger="1"
+        spark, str(src), max_files_per_trigger=1
     )
-    clicks = joins._typed_leg(events, "click").withWatermark(
-        "ts", "10 minutes"
-    )
-    purchases = joins._typed_leg(events, "purchase").withWatermark(
-        "ts", "10 minutes"
-    )
+    clicks = joins._typed_leg(events, "click", "10 minutes")
+    purchases = joins._typed_leg(events, "purchase", "10 minutes")
     q = (
         joins.attribution_pairs(clicks, purchases)
         .writeStream.format("parquet")
@@ -481,7 +474,7 @@ def test_cdc_apply_stream_equals_batch(spark, tmp_path):
             str(src / f"b{i}.parquet")
         )
 
-    table = ParquetStateTable(spark, str(tmp_path / "cdc_state"))
+    table = VersionedParquetTable(spark, str(tmp_path / "cdc_state"))
     table.init(cdc_apply.empty_state(spark))
     cdc_apply.run_cdc_stream(
         spark, str(src) + "/*", table, str(tmp_path / "cdc_cp")
@@ -510,14 +503,10 @@ def test_cdc_apply_stream_equals_batch(spark, tmp_path):
 
 
 def test_cdc_apply_versioned_table_replay_exactly_once(spark, tmp_path):
-    """The VersionedParquetTable CDC sink commits the applied batch
-    id atomically with the state (manifest meta), so a REPLAYED
-    micro-batch — crash after the state commit, before the source
-    offset commit — is skipped and n_changes stays exact. The plain
-    ParquetStateTable sink double-counts the same replay."""
-    from metadata_wrangler_spark.operators.merge import (
-        VersionedParquetTable,
-    )
+    """The CDC sink commits the applied batch id atomically with the
+    state (manifest meta), so a REPLAYED micro-batch — crash after
+    the state commit, before the source offset commit — commits
+    nothing and n_changes stays exact."""
     from metadata_wrangler_spark.streaming import cdc_apply
 
     feed = [(k, v, "U", 100 + k) for v, k in enumerate(
@@ -529,13 +518,9 @@ def test_cdc_apply_versioned_table_replay_exactly_once(spark, tmp_path):
     vt.init(cdc_apply.empty_state(spark))
 
     def apply_once(batch_id: int) -> None:
-        # the same handler body run_cdc_stream installs for a
-        # VersionedParquetTable
-        last = vt.meta().get("last_batch_id", -1)
-        if batch_id <= last:
-            return
+        # the same handler body run_cdc_stream installs
         vt.merge(
-            lambda cur: cdc_apply.apply_changes(cur, batch),
+            lambda cur, _meta: cdc_apply.apply_changes(cur, batch),
             meta={"last_batch_id": batch_id},
         )
 
@@ -547,11 +532,47 @@ def test_cdc_apply_versioned_table_replay_exactly_once(spark, tmp_path):
     assert got == {0: 3, 1: 2, 2: 1}  # exact, not doubled
     assert vt.meta() == {"last_batch_id": 0}
 
-    # contrast: the plain overwrite table double-counts the replay
-    # (latest-wins fields stay correct; only the count drifts)
-    pt = ParquetStateTable(spark, str(tmp_path / "cdc_p"))
-    pt.init(cdc_apply.empty_state(spark))
-    pt.commit(cdc_apply.apply_changes(pt.read(), batch))
-    pt.commit(cdc_apply.apply_changes(pt.read(), batch))
-    doubled = {r["key"]: r["n_changes"] for r in pt.read().collect()}
-    assert doubled == {0: 6, 1: 4, 2: 2}
+
+def test_cdc_apply_replay_race_applies_batch_once(spark, tmp_path):
+    """A competing writer commits micro-batch 0 after the sink has
+    checked for a replay but before its commit claim. The claim
+    fails, the retry re-pins the competitor's version, finds batch 0
+    applied and commits nothing: every key ends at n_changes 1, not
+    2. (A replay check made once, before the merge, applies the
+    batch twice.)"""
+    from metadata_wrangler_spark.streaming import cdc_apply
+
+    src = tmp_path / "changes"
+    src.mkdir()
+    spark.createDataFrame(
+        [(1, 1, "U", 100), (2, 2, "U", 200)], cdc_apply.CHANGES_SCHEMA
+    ).coalesce(1).write.parquet(str(src / "b0.parquet"))
+    path = str(tmp_path / "cdc_state")
+    table = VersionedParquetTable(spark, path)
+    table.init(cdc_apply.empty_state(spark))
+
+    competitor = VersionedParquetTable(spark, path)
+    claim = table.try_commit
+    raced = []
+
+    def racing_claim(base_version, post_state, meta=None):
+        if not raced:
+            raced.append(base_version)
+            feed = spark.read.schema(cdc_apply.CHANGES_SCHEMA).parquet(
+                str(src / "b0.parquet")
+            )
+            assert competitor.merge(
+                lambda cur, _meta: cdc_apply.apply_changes(cur, feed),
+                meta={"last_batch_id": 0},
+            ) == base_version + 1
+        return claim(base_version, post_state, meta=meta)
+
+    table.try_commit = racing_claim
+    cdc_apply.run_cdc_stream(
+        spark, str(src) + "/*", table, str(tmp_path / "cp")
+    )
+    assert raced == [0]
+    assert table.current_version() == 1  # the competitor's commit only
+    got = {r["key"]: r["n_changes"] for r in table.read().collect()}
+    assert got == {1: 1, 2: 1}
+    assert table.meta() == {"last_batch_id": 0}

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 from metadata_wrangler_spark.sources import viafsrc
+from tests.conftest import requires_reference
 
 FIXTURES = "/root/reference/tests/files/viaf"
 
@@ -20,6 +21,7 @@ def _clusters(spark, name):
     return viafsrc.parse_viaf_clusters(df)
 
 
+@requires_reference
 def test_will_eisner_wikipedia_name(spark):
     rows = _clusters(spark, "will_eisner.xml").collect()
     assert len(rows) == 1
@@ -27,11 +29,13 @@ def test_will_eisner_wikipedia_name(spark):
     assert rows[0]["wikipedia_name"] == "Will_Eisner"
 
 
+@requires_reference
 def test_mark_twain_wikipedia_name(spark):
     rows = _clusters(spark, "mark_twain.xml").collect()
     assert rows[0]["wikipedia_name"] == "Mark_Twain"
 
 
+@requires_reference
 def test_mark_twain_without_wikipedia(spark):
     rows = _clusters(spark, "mark_twain_no_wikipedia.xml").collect()
     assert rows[0]["wikipedia_name"] is None
@@ -48,6 +52,7 @@ def test_wikidata_id_is_not_a_wikipedia_name(spark):
     assert rows[0]["wikipedia_name"] is None
 
 
+@requires_reference
 def test_mindy_kaling_sort_name_vote(spark):
     clusters = _clusters(spark, "mindy_kaling.xml")
     rows = clusters.collect()
@@ -57,6 +62,7 @@ def test_mindy_kaling_sort_name_vote(spark):
     assert "Kaling, Mindy" in top.values()
 
 
+@requires_reference
 def test_multi_cluster_response(spark):
     rows = _clusters(spark, "john_jewel_all_viaf.xml").collect()
     assert len(rows) > 1
