@@ -7,4 +7,5 @@ pagination   keyset pagination (scale-safe offset replacement)
 dedup        exact / n-gram-Jaccard / MinHash-LSH / SimHash dedup
 similarity   embedding cosine top-k (brute force + LSH-bucketed)
 textstats    language-ID, quality scoring, token counts, fingerprints
+arrow_stage  the one JVM→Python boundary: every Arrow-batched pandas stage
 """

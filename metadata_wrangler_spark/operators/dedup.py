@@ -29,8 +29,19 @@ arithmetic is bit-identical to the SQL spelling it replaced
 
 from __future__ import annotations
 
+import re
+from hashlib import blake2b, md5
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
+
+# Java \s (ASCII-only), matching normalize_text; only ' ' runs can
+# remain after the collapse, so a trailing strip(' ') == Spark's trim.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 # ---------------------------------------------------------------------------
 # shared hashing helpers (expression-level, codegen-friendly)
@@ -135,47 +146,37 @@ def _shingle_tables(
     # bigint+id row): scorers whose only use of ``sizes`` is the
     # per-pair denominator read it off the pair expansion instead of
     # re-deriving the document pipeline through two join-backs.
-    def fold(batches):
-        import re
-        from hashlib import blake2b
-
-        import numpy as np
-        import pandas as pd
-
-        # Java \s (ASCII-only), matching normalize_text; only ' '
-        # runs can remain after the collapse, so strip(' ') == trim
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        for pdf in batches:
-            ids: list = []
-            ns: list = []
-            hps: list = []
-            for did, text in zip(pdf["id"], pdf["t"]):
-                if text is None:
-                    continue
-                t = ws.sub(" ", text.lower()).strip(" ")
-                w = t.split(" ")
-                if len(w) < n:
-                    continue
-                shs = {"_".join(w[i:i + n]) for i in range(len(w) - n + 1)}
-                k = len(shs)
-                ids.extend([did] * k)
-                ns.extend([k] * k)
-                hps.extend(
-                    int.from_bytes(
-                        blake2b(s.encode(), digest_size=8).digest(),
-                        "big", signed=True,
-                    )
-                    for s in shs
+    def shingle_rows(pdf):
+        ids: list = []
+        ns: list = []
+        hps: list = []
+        for did, text in zip(pdf["id"], pdf["t"]):
+            if text is None:
+                continue
+            w = _JAVA_WS.sub(" ", text.lower()).strip(" ").split(" ")
+            if len(w) < n:
+                continue
+            shs = {"_".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+            k = len(shs)
+            ids.extend([did] * k)
+            ns.extend([k] * k)
+            hps.extend(
+                int.from_bytes(
+                    blake2b(s.encode(), digest_size=8).digest(),
+                    "big", signed=True,
                 )
-            yield pd.DataFrame({
-                "id": np.asarray(ids, dtype=np.int64),
-                "n_sh": np.asarray(ns, dtype=np.int64),
-                "hp": np.asarray(hps, dtype=np.int64),
-            })
+                for s in shs
+            )
+        return {
+            "id": np.asarray(ids, dtype=np.int64),
+            "n_sh": np.asarray(ns, dtype=np.int64),
+            "hp": np.asarray(hps, dtype=np.int64),
+        }
 
-    sh = docs.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("t")
-    ).mapInPandas(fold, schema="id long, n_sh long, hp long")
+    sh = arrow_stage(
+        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")),
+        "dd_shingle_rows", "id long, n_sh long, hp long", shingle_rows,
+    )
     if cache:
         sh = sh.cache()
     return sh, sizes
@@ -266,13 +267,14 @@ def token_jaccard_blocked(
     lever is sub-blocking keys and re-aggregating the pair partials
     — the plan shape, one narrow exchange plus a local fold, is
     unchanged.
+
+    ``key_col`` must be unique: a key seen twice by one task (always
+    so for a key repeated within a block) raises ``ValueError``
+    rather than scoring a self-pair off one merged token set.
     """
     schema = "key_a long, key_b long, jaccard double"
 
     def fold(batches):
-        import numpy as np
-        import pandas as pd
-
         pks, blks, txts = [], [], []
         for pdf in batches:
             pks.append(pdf["k"].to_numpy(dtype=np.int64))
@@ -291,7 +293,16 @@ def token_jaccard_blocked(
         txt = pd.concat(txts, ignore_index=True)
         # local index assigned in ascending key order, so idx order
         # == key order and the upper triangle alone gives a < b
-        upk, inv = np.unique(pk, return_inverse=True)
+        upk, inv, cnt = np.unique(
+            pk, return_inverse=True, return_counts=True
+        )
+        # scale: semantic-multiplicity — a key seen twice is a duplicate
+        dup = upk[cnt > 1]
+        if len(dup):
+            raise ValueError(
+                f"token_jaccard_blocked: key {int(dup[0])} repeats; "
+                f"{key_col!r} must be unique"
+            )
         sizes = np.zeros(len(upk), dtype=np.int64)
         toks_flat: list = []
         bcodes_flat: list = []
@@ -359,14 +370,13 @@ def token_jaccard_blocked(
             "jaccard": jac[keep],
         })
 
-    return (
+    return arrow_stage(
         df.select(
             F.col(key_col).alias("k"),
             F.col(block_col).alias("b"),
             F.col(text_col).alias("t"),
-        )
-        .repartition("b")
-        .mapInPandas(fold, schema=schema)
+        ).repartition("b"),
+        "dd_token_jaccard_blocks", schema, fold, fold=True,
     )
 
 
@@ -609,49 +619,37 @@ def minhash_signatures(
         f"mh_{k} long" for k in range(num_hashes)
     )
 
-    def fold(batches):
-        import hashlib
-        import re
-
-        import numpy as np
-        import pandas as pd
-
-        # Java \s (ASCII-only), matching normalize_text exactly; the
-        # trailing strip removes only ' ' runs, which is all that can
-        # remain after the collapse (Spark trim strips spaces only).
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids: list = []
-            starts: list = []
-            hps: list = []
-            pos = 0
-            for did, text in zip(pdf["id"], pdf["text"]):
-                if text is None:
-                    continue
-                t = ws.sub(" ", text.lower()).strip(" ")
-                w = t.split(" ")
-                if len(w) < n:
-                    continue
-                shs = {"_".join(w[i:i + n]) for i in range(len(w) - n + 1)}
-                ids.append(did)
-                starts.append(pos)
-                for s in shs:
-                    hps.append(int(md5(s.encode()).hexdigest()[:15], 16) % p)
-                pos += len(shs)
-            if not ids:
+    def signatures(pdf):
+        ids: list = []
+        starts: list = []
+        hps: list = []
+        pos = 0
+        for did, text in zip(pdf["id"], pdf["text"]):
+            if text is None:
                 continue
-            hp = np.array(hps, dtype=np.int64)
-            st = np.array(starts, dtype=np.int64)
-            out = {"id": np.array(ids, dtype=np.int64)}
-            for k, (a, b) in enumerate(params):
-                # a, hp < p < 2^31 ⇒ a·hp + b < 2^62: exact in int64
-                out[f"mh_{k}"] = np.minimum.reduceat((a * hp + b) % p, st)
-            yield pd.DataFrame(out)
+            w = _JAVA_WS.sub(" ", text.lower()).strip(" ").split(" ")
+            if len(w) < n:
+                continue
+            shs = {"_".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+            ids.append(did)
+            starts.append(pos)
+            for s in shs:
+                hps.append(int(md5(s.encode()).hexdigest()[:15], 16) % p)
+            pos += len(shs)
+        if not ids:
+            return None
+        hp = np.array(hps, dtype=np.int64)
+        st = np.array(starts, dtype=np.int64)
+        out = {"id": np.array(ids, dtype=np.int64)}
+        for k, (a, b) in enumerate(params):
+            # a, hp < p < 2^31 ⇒ a·hp + b < 2^62: exact in int64
+            out[f"mh_{k}"] = np.minimum.reduceat((a * hp + b) % p, st)
+        return out
 
-    return docs.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    ).mapInPandas(fold, schema=schema)
+    return arrow_stage(
+        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
+        "dd_minhash_signatures", schema, signatures,
+    )
 
 
 def minhash_signatures_sql(
@@ -896,8 +894,6 @@ def contamination_counts(
     C++ once per process instead of unpickling millions of Python
     strings — and is cached per worker process, not per batch.
     """
-    import numpy as np
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -923,7 +919,7 @@ def contamination_counts(
         normalize_text(F.col(text_col)).alias("nt"),
     )
 
-    def gen(batches):
+    def probe(batches):
         ev = _EVAL_ARR_CACHE.get(key)
         if ev is None:
             ev = pa.ipc.open_stream(
@@ -933,8 +929,6 @@ def contamination_counts(
                 _EVAL_ARR_CACHE.pop(next(iter(_EVAL_ARR_CACHE)))
             _EVAL_ARR_CACHE[key] = ev
         for pdf in batches:
-            if not len(pdf):
-                continue
             arr = pa.array(pdf["nt"], type=pa.string())
             toks = pc.split_pattern(arr, " ")
             offs = toks.offsets.to_numpy(zero_copy_only=False)
@@ -969,6 +963,8 @@ def contamination_counts(
                 "n_hits": hits[keep],
             })
 
-    return nt.mapInPandas(
-        gen, schema="doc_id long, n_windows long, n_hits long"
+    # fold mode: the eval set loads once per task, before its batches
+    return arrow_stage(
+        nt, "dd_contamination_probe",
+        "doc_id long, n_windows long, n_hits long", probe, fold=True,
     )

@@ -6,7 +6,7 @@ signatures) is real and tested; the codec step is stubbed because
 this container ships no image/audio libraries. Each worker follows
 the same pattern:
 
-    binary column → mapInPandas (Arrow batches) → typed rows
+    binary column → arrow_stage (Arrow batches) → typed rows
 
 and takes a ``decode`` callable so a real deployment drops in
 Pillow/ffmpeg without touching the plan. The deterministic fake
@@ -22,12 +22,12 @@ the GPU/CPU decode concurrency knob.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 
 
 def _fake_pixels(payload: bytes, w: int, h: int) -> list[int]:
@@ -75,31 +75,29 @@ def image_features(
     """decode → feature-extract: dimensions, mean luminance, and an
     md5 of the (stub-)resized thumbnail."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in IMAGE_FEATURES_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = decode(bytes(payload))
-                px = img["pixels"]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(img["width"])
-                rows["height"].append(img["height"])
-                rows["mean_luma"].append(sum(px) / len(px))
-                # thumbnail fingerprint over the SERIALIZED pixel
-                # vector (portable to any engine/oracle)
-                rows["thumb_8x6_md5"].append(
-                    hashlib.md5(
-                        ",".join(str(p) for p in px).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(rows)
+    def decode_image(pdf):
+        rows = {k.name: [] for k in IMAGE_FEATURES_SCHEMA.fields}
+        for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            img = decode(bytes(payload))
+            px = img["pixels"]
+            rows["doc_id"].append(int(doc_id))
+            rows["width"].append(img["width"])
+            rows["height"].append(img["height"])
+            rows["mean_luma"].append(sum(px) / len(px))
+            # thumbnail fingerprint over the SERIALIZED pixel
+            # vector (portable to any engine/oracle)
+            rows["thumb_8x6_md5"].append(
+                hashlib.md5(
+                    ",".join(str(p) for p in px).encode()
+                ).hexdigest()
+            )
+        return rows
 
     # NULL payloads (no media delivered) are excluded, the same
     # way SQL aggregates skip NULLs — never a worker crash.
-    return df.select(id_col, payload_col).where(
-        F.col(payload_col).isNotNull()
-    ).mapInPandas(
-        work, schema=IMAGE_FEATURES_SCHEMA
+    return arrow_stage(
+        df.select(id_col, payload_col), "mm_decode_image",
+        IMAGE_FEATURES_SCHEMA, decode_image, not_null=payload_col,
     )
 
 
@@ -123,25 +121,23 @@ def sample_frames(
     frame loop with an ffmpeg/pyav iterator — the schema, the
     every-nth policy, and the row explosion stay identical."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_no": [], "frame_md5": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                for frame_no in range(0, n_frames, every_nth):
-                    h = hashlib.md5(
-                        bytes(payload) + b"#" + str(frame_no).encode()
-                    ).hexdigest()
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_no"].append(frame_no)
-                    rows["frame_md5"].append(h)
-            yield pd.DataFrame(rows)
+    def sample(pdf):
+        rows = {"doc_id": [], "frame_no": [], "frame_md5": []}
+        for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for frame_no in range(0, n_frames, every_nth):
+                h = hashlib.md5(
+                    bytes(payload) + b"#" + str(frame_no).encode()
+                ).hexdigest()
+                rows["doc_id"].append(int(doc_id))
+                rows["frame_no"].append(frame_no)
+                rows["frame_md5"].append(h)
+        return rows
 
     # NULL payloads (no media delivered) are excluded, the same
     # way SQL aggregates skip NULLs — never a worker crash.
-    return df.select(id_col, payload_col).where(
-        F.col(payload_col).isNotNull()
-    ).mapInPandas(
-        work, schema=FRAME_SAMPLE_SCHEMA
+    return arrow_stage(
+        df.select(id_col, payload_col), "mm_sample_frames",
+        FRAME_SAMPLE_SCHEMA, sample, not_null=payload_col,
     )
 
 
@@ -181,31 +177,29 @@ def audio_window_features(
     """
     decode = decode or (lambda p: _fake_pcm(p, n_samples))
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in AUDIO_WINDOW_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                samples = decode(bytes(payload))
-                for w_no, start in enumerate(
-                    range(0, len(samples) - window + 1, hop)
-                ):
-                    win = samples[start:start + window]
-                    rows["doc_id"].append(int(doc_id))
-                    rows["window_no"].append(w_no)
-                    rows["sum_abs"].append(sum(abs(x) for x in win))
-                    rows["peak"].append(max(abs(x) for x in win))
-                    rows["energy"].append(sum(x * x for x in win))
-                    rows["window_md5"].append(
-                        hashlib.md5(
-                            ",".join(str(x) for x in win).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
+    def frame_windows(pdf):
+        rows = {k.name: [] for k in AUDIO_WINDOW_SCHEMA.fields}
+        for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            samples = decode(bytes(payload))
+            for w_no, start in enumerate(
+                range(0, len(samples) - window + 1, hop)
+            ):
+                win = samples[start:start + window]
+                rows["doc_id"].append(int(doc_id))
+                rows["window_no"].append(w_no)
+                rows["sum_abs"].append(sum(abs(x) for x in win))
+                rows["peak"].append(max(abs(x) for x in win))
+                rows["energy"].append(sum(x * x for x in win))
+                rows["window_md5"].append(
+                    hashlib.md5(
+                        ",".join(str(x) for x in win).encode()
+                    ).hexdigest()
+                )
+        return rows
 
     # NULL payloads (no media delivered) are excluded, the same
     # way SQL aggregates skip NULLs — never a worker crash.
-    return df.select(id_col, payload_col).where(
-        F.col(payload_col).isNotNull()
-    ).mapInPandas(
-        work, schema=AUDIO_WINDOW_SCHEMA
+    return arrow_stage(
+        df.select(id_col, payload_col), "mm_audio_windows",
+        AUDIO_WINDOW_SCHEMA, frame_windows, not_null=payload_col,
     )

@@ -50,6 +50,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
+
 _B = "__gos_bucket"
 
 
@@ -279,8 +281,6 @@ def grouped_rank_value_sums(
         # arrive partition-local and (group, v)-sorted.
         acc: dict[tuple, list] = {}
         for pdf in it:
-            if pdf.empty:
-                continue
             bid = int(pdf["__grs_b"].iloc[0])
             if gcols:
                 grouped = pdf.groupby(gcols, sort=False, dropna=False)
@@ -326,7 +326,9 @@ def grouped_rank_value_sums(
         cols = ["__grs_b", *gcols, "n", "sx", "srx"]
         yield pd.DataFrame(rows, columns=cols)
 
-    partials = b.mapInPandas(_fold, out_schema).toArrow().to_pylist()
+    partials = arrow_stage(
+        b, "prefix_rank_value_partials", out_schema, _fold, fold=True
+    ).toArrow().to_pylist()
     by_key: dict[tuple, list] = {}
     for r in partials:
         key = tuple(r[g] for g in gcols)

@@ -25,10 +25,20 @@ oracle's list_sum/list_transform).
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
+
+# (query_id, corpus_id, cosine) rows a scorer emits, before / after
+# the global per-query rank window.
+_SCORED = "query_id long, corpus_id long, cosine double"
+_TOPK = _SCORED + ", rank int"
 
 
 def _dot_plane_sql(vec_col: str, plane: list[float]) -> str:
@@ -91,6 +101,96 @@ def norm(a: Column) -> Column:
     )
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global per-query top-k over (query_id, corpus_id, cosine) rows:
+    cosine desc, ties on corpus id asc."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "corpus_id", "cosine", "rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# numpy twins of the expression chains, for the Arrow scorers. Each
+# keeps the JVM/oracle operation order exactly — dot products and
+# norms accumulate over the vector DIMENSION (the left fold of
+# ``dot``/``norm``/``_dot_plane_sql``, and the oracle's list_sum), and
+# rounding is ``round6``'s chain — so every kernel is bit-identical
+# to the expression spelling.
+# ---------------------------------------------------------------------------
+
+
+def _stack(vectors) -> np.ndarray:
+    """(rows, dim) float64 matrix from an Arrow ``array<float>`` column."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _query_arrays(rows) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, float64 matrix) from collected (id, vector) rows."""
+    return (
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([list(r[1]) for r in rows], dtype=np.float64),
+    )
+
+
+def _dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(a), len(b)) dot products of every row pair, folded over
+    the dimension in order."""
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for i in range(a.shape[1]):
+        acc += a[:, i][:, None] * b[:, i][None, :]
+    return acc
+
+
+def _norms(m: np.ndarray) -> np.ndarray:
+    """Row L2 norms — ``norm()``'s fold."""
+    acc = np.zeros(m.shape[0])
+    for i in range(m.shape[1]):
+        acc += m[:, i] * m[:, i]
+    return np.sqrt(acc)
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """``round6`` in numpy."""
+    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+
+
+def _cosines(a: np.ndarray, b: np.ndarray, b_norms: np.ndarray) -> np.ndarray:
+    """Rounded cosine of every (row of a, row of b) pair; a zero norm
+    gives NaN, which ``_emit_topk`` never emits."""
+    return _round6(_dots(a, b) / (_norms(a)[:, None] * b_norms[None, :]))
+
+
+def _plane_codes(m: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """int64 sign-pattern bucket per row, bit i = (row·planes[i] >= 0)
+    — ``_bucket_sql``."""
+    bits = (_dots(m, planes) >= 0.0).astype(np.int64)
+    return (bits << np.arange(planes.shape[0], dtype=np.int64)).sum(axis=1)
+
+
+def _cells(m: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """Argmax-centroid cell per row, first max wins — ``ivf_assign``."""
+    return np.argmax(_dots(m, centroids), axis=1)
+
+
+def _emit_topk(out: dict, q_ids, c_ids, score, k: int, col: str = "cosine"):
+    """Append each query column's k best finite scores (score desc,
+    corpus id asc) to ``out``'s lists and return it. Any global
+    top-k member is in its batch's top-k, so the rank window
+    downstream reads |queries| x k x batches rows."""
+    kk = min(k, len(c_ids))
+    for j in range(score.shape[1]):
+        s = score[:, j]
+        order = np.lexsort((c_ids, -s))[:kk]
+        keep = order[np.isfinite(s[order])]
+        out["query_id"].extend([q_ids[j]] * len(keep))
+        out["corpus_id"].extend(c_ids[keep])
+        out[col].extend(s[keep])
+    return out
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -130,12 +230,7 @@ def cosine_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id"))
         .select("query_id", "corpus_id", sim_r.alias("cosine"))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def hyperplane_buckets(
@@ -182,7 +277,7 @@ def lsh_cosine_topk(
     economics — see ``FUSED_PAIR_BUDGET``): within the pair budget,
     candidate generation needs no join — the probed-bucket →
     query-list map is computed driver-side from the bounded query
-    matrix, and one ``mapInPandas`` corpus pass computes each
+    matrix, and one Arrow-stage corpus pass computes each
     batch's bucket codes (the same left-fold sign chain as
     ``_bucket_sql``) and scores each bucket block against its
     probing queries in numpy; the per-candidate-pair interpreted
@@ -193,9 +288,6 @@ def lsh_cosine_topk(
     Tiers are row-identical; zero-norm (NaN-cosine) rows drop in
     BOTH tiers (ADVICE round-9 rule).
     """
-    import numpy as np
-    import pandas as pd
-
     if probe_hamming > 2:
         raise ValueError(
             "probe_hamming > 2 is not implemented (probe count grows "
@@ -213,23 +305,16 @@ def lsh_cosine_topk(
             for i in range(n_bits)
             for j in range(i + 1, n_bits)
         ]
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
 
-    qdf = (
-        corpus.where(query_pred(F.col(id_col)))
-        if query_pred is not None
-        else queries
-    )
-    qdf = qdf.where(F.col(vec_col).isNotNull())
     # Bounded query matrix — the broadcast side, with the contract
     # ENFORCED: the collect is capped (limit pushdown, never an
     # unbounded driver fetch) and an over-cap query set routes to
     # the join tier, which never ships the matrix.
-    qrows, over_cap = _collect_query_matrix(qdf, id_col, vec_col)
+    qrows, over_cap = _collect_query_matrix(
+        corpus, queries, query_pred, id_col, vec_col
+    )
     if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
+        return corpus.sparkSession.createDataFrame([], _TOPK)
     if over_cap:
         import warnings
 
@@ -240,98 +325,28 @@ def lsh_cosine_topk(
             stacklevel=2,
         )
     else:
-        q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        nq, dim = qm.shape
-
-        # ---- tier probe (FUSED_PAIR_BUDGET economics) ----
-        n_corpus = corpus_count_hint
-        if n_corpus is None:
-            cap = max(fused_pair_budget // nq, 1)
-            n_corpus = corpus.select(id_col).limit(cap + 1).count()
-        over_cap = n_corpus * nq > fused_pair_budget
+        q_ids, qm = _query_arrays(qrows)
+        over_cap = not _fused_fits(
+            corpus, id_col, len(q_ids), corpus_count_hint, fused_pair_budget
+        )
     if not over_cap:
-        plane_arrs = [np.asarray(p, dtype=np.float64) for p in planes]
-        # query bucket codes + norms: the same left-fold chains as
-        # _bucket_sql / norm(), driver-side.
-        code_q = np.zeros(nq, dtype=np.int64)
-        for bit, p in enumerate(plane_arrs):
-            acc = np.zeros(nq)
-            for i in range(dim):
-                acc += qm[:, i] * p[i]
-            code_q |= (acc >= 0.0).astype(np.int64) << bit
-        qn = np.zeros(nq)
-        for i in range(dim):
-            qn += qm[:, i] * qm[:, i]
-        qn = np.sqrt(qn)
+        P = np.asarray(planes, dtype=np.float64)
+        code_q = _plane_codes(qm, P)
         # probed-bucket → query-index lists. Distinct masks give a
         # query distinct probe codes, and a corpus row holds ONE
         # code, so every (query, corpus) pair arises at most once —
         # identical to the exploded-probe equi-join's semantics.
         qidx_by_code: dict = {}
         for m in masks:
-            for qx in range(nq):
+            for qx in range(len(q_ids)):
                 qidx_by_code.setdefault(int(code_q[qx]) ^ m, []).append(qx)
         qidx_by_code = {
             c: np.asarray(v, dtype=np.int64)
             for c, v in qidx_by_code.items()
         }
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                nb = len(c_ids)
-                code_c = np.zeros(nb, dtype=np.int64)
-                for bit, p in enumerate(plane_arrs):
-                    acc = np.zeros(nb)
-                    for i in range(dim):
-                        acc += cm[:, i] * p[i]
-                    code_c |= (acc >= 0.0).astype(np.int64) << bit
-                cn = np.zeros(nb)
-                for i in range(dim):
-                    cn += cm[:, i] * cm[:, i]
-                cn = np.sqrt(cn)
-                out = {"query_id": [], "corpus_id": [], "cosine": []}
-                for code in np.unique(code_c):
-                    qi = qidx_by_code.get(int(code))
-                    if qi is None:
-                        continue
-                    ci = np.flatnonzero(code_c == code)
-                    sub = cm[ci]
-                    acc = np.zeros((len(ci), len(qi)))
-                    for i in range(dim):
-                        acc += sub[:, i][:, None] * qm[qi, i][None, :]
-                    cos = acc / (cn[ci][:, None] * qn[qi][None, :])
-                    cos = (np.sign(cos)
-                           * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
-                    cos[c_ids[ci][:, None] == q_ids[qi][None, :]] = -np.inf
-                    sub_ids = c_ids[ci]
-                    kk = min(k, len(ci))
-                    for j in range(len(qi)):
-                        col = cos[:, j]
-                        order = np.lexsort((sub_ids, -col))[:kk]
-                        keep = order[np.isfinite(col[order])]
-                        out["query_id"].extend([q_ids[qi[j]]] * len(keep))
-                        out["corpus_id"].extend(sub_ids[keep])
-                        out["cosine"].extend(col[keep])
-                yield pd.DataFrame(out)
-
-        scored = (
-            corpus.where(F.col(vec_col).isNotNull())
-            .select(id_col, vec_col)
-            .mapInPandas(
-                fused, schema="query_id long, corpus_id long, cosine double"
-            )
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine", "rank")
+        return _block_scan(
+            corpus, "sim_lsh_bucket_scan", id_col, vec_col, q_ids, qm, k,
+            partial(_plane_codes, planes=P), qidx_by_code,
         )
 
     # ---- bucket-join tier ----
@@ -371,11 +386,7 @@ def lsh_cosine_topk(
         # round-9 rule: the tier probe never changes results).
         .where(~F.isnan(F.col("cosine")))
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_assign(
@@ -443,23 +454,80 @@ FUSED_PAIR_BUDGET = 1_000_000_000
 ANN_QUERY_CAP = 131_072
 
 
-def _collect_query_matrix(qdf, id_col: str, vec_col: str):
-    """Bounded driver collect of the ANN query side: returns
-    ``(rows, over_cap)`` where ``rows`` holds at most
-    ``ANN_QUERY_CAP`` rows (and ``over_cap`` means the real query
-    set is larger — the caller must route to a driver-free tier or
-    raise)."""
-    rows = qdf.select(id_col, vec_col).limit(ANN_QUERY_CAP + 1).collect()
+def _collect_query_matrix(corpus, queries, query_pred, id_col, vec_col):
+    """Bounded driver collect of the ANN query side — the corpus rows
+    matching ``query_pred`` when given, else ``queries``; NULL
+    vectors never enter the matrix. Returns ``(rows, over_cap)``
+    where ``rows`` holds at most ``ANN_QUERY_CAP`` rows (and
+    ``over_cap`` means the real query set is larger — the caller
+    must route to a driver-free tier or raise)."""
+    qdf = (
+        corpus.where(query_pred(F.col(id_col)))
+        if query_pred is not None
+        else queries
+    )
+    rows = qdf.where(F.col(vec_col).isNotNull()).select(id_col, vec_col).limit(ANN_QUERY_CAP + 1).collect()
     if len(rows) > ANN_QUERY_CAP:
         return rows[:ANN_QUERY_CAP], True
     return rows, False
 
 
+def _fused_fits(corpus, id_col: str, nq: int, corpus_count_hint, budget) -> bool:
+    """Tier probe (FUSED_PAIR_BUDGET economics): do |Q|·|C| pairs fit
+    the fused budget? Uses ``corpus_count_hint`` (catalog stats) when
+    given; otherwise an id-only early-stopping count that reads at
+    most budget/|Q| + 1 rows of one column, never the vectors."""
+    n_corpus = corpus_count_hint
+    if n_corpus is None:
+        cap = max(budget // nq, 1)
+        n_corpus = corpus.select(id_col).limit(cap + 1).count()
+    return n_corpus * nq <= budget
+
+
+def _block_scan(
+    corpus, name, id_col, vec_col, q_ids, qm, k, block_of, queries_of
+) -> DataFrame:
+    """Fused ANN scan tier shared by LSH and IVF: one Arrow pass over
+    the corpus keys each batch's rows to blocks (``block_of(matrix)``
+    — bucket codes or cells, the same fold as the join tier's key),
+    scores every block only against the queries probing it
+    (``queries_of[key]`` → query indices), drops self-matches and
+    emits per-query batch top-k; the global rank window follows. The
+    per-candidate-pair interpreted HOF dot of the join tier becomes
+    numpy multiply-adds and the corpus vector never leaves its scan
+    task."""
+    qn = _norms(qm)
+
+    def scan(pdf):
+        cm = _stack(pdf[vec_col])
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        key = block_of(cm)
+        out = {"query_id": [], "corpus_id": [], "cosine": []}
+        for b in np.unique(key):
+            qi = queries_of.get(int(b))
+            if qi is None:
+                continue
+            ci = np.flatnonzero(key == b)
+            cos = _cosines(cm[ci], qm[qi], qn[qi])
+            cos[c_ids[ci][:, None] == q_ids[qi][None, :]] = -np.inf
+            _emit_topk(out, q_ids[qi], c_ids[ci], cos, k)
+        return out
+
+    return _rank_topk(
+        arrow_stage(
+            corpus.select(id_col, vec_col), name, _SCORED, scan,
+            not_null=vec_col,
+        ),
+        k,
+    )
+
+
 def ivf_partial_moments(
+    df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-):
-    """Arrow kernel fusing the Lloyd-step map side: per batch, score
+) -> DataFrame:
+    """Arrow stage fusing the Lloyd-step map side: per batch, score
     every vector against each centroid (accumulating over the vector
     DIMENSION — the same left-associated IEEE chain as
     ``_dot_plane_sql``'s fold, so the argmax cell is bit-identical
@@ -474,12 +542,9 @@ def ivf_partial_moments(
     sums — and the means derived from them — are bit-identical to
     the expression spelling at any partitioning.
 
-    Returns (generator, schema) for ``mapInPandas`` over a
-    ``vec_col``-only projection with NULL vectors already filtered.
+    Returns the (cell, pos, cnt, qsum) partial rows of ``df``'s
+    non-NULL ``vec_col`` vectors.
     """
-    import numpy as np
-    import pandas as pd
-
     C = np.asarray(centroids, dtype=np.float64)  # (k, dim)
     k, dim = C.shape
 
@@ -487,17 +552,8 @@ def ivf_partial_moments(
         counts = np.zeros(k, dtype=np.int64)
         sums = np.zeros((k, dim), dtype=np.int64)
         for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            n = E.shape[0]
-            scores = np.zeros((n, k))
-            for d in range(dim):
-                scores += E[:, d:d + 1] * C[:, d]
-            cell = np.argmax(scores, axis=1)  # first max wins, like
-            # array_position(scores, array_max(scores))
+            E = _stack(pdf[vec_col])
+            cell = _cells(E, C)
             q = np.floor(E * 10000.0 + 0.5).astype(np.int64)
             np.add.at(sums, cell, q)
             counts += np.bincount(cell, minlength=k)
@@ -512,7 +568,11 @@ def ivf_partial_moments(
                 }
             )
 
-    return moments, "cell int, pos int, cnt long, qsum long"
+    return arrow_stage(
+        df.select(vec_col), "sim_ivf_partial_moments",
+        "cell int, pos int, cnt long, qsum long", moments,
+        not_null=vec_col, fold=True,
+    )
 
 
 def ivf_cosine_topk(
@@ -537,7 +597,7 @@ def ivf_cosine_topk(
     * **Fused cell-scan tier** (|Q|·|C| within budget): the probed
       cells of every (bounded, driver-collected) query are a
       function of the CELL alone, so candidate generation needs no
-      join at all — one ``mapInPandas`` over the corpus assigns each
+      join at all — one Arrow stage over the corpus assigns each
       batch's cells (the same left-fold argmax as ``ivf_assign``),
       scores each cell block against the queries probing that cell,
       and emits per-query batch top-k. The per-candidate-pair
@@ -555,26 +615,16 @@ def ivf_cosine_topk(
     dropped in BOTH tiers so the probe never changes results on
     degenerate input (the ADVICE round-9 rule).
     """
-    import numpy as np
-    import pandas as pd
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
     n_cells = len(centroids)
-
-    if query_pred is not None:
-        qdf = corpus.where(query_pred(F.col(id_col)))
-    else:
-        qdf = queries
-    qdf = qdf.where(F.col(vec_col).isNotNull())
 
     # Bounded query matrix — the broadcast side, with the contract
     # ENFORCED exactly as in lsh_cosine_topk: capped collect, loud
     # join-tier fallback past ANN_QUERY_CAP.
-    qrows, over_cap = _collect_query_matrix(qdf, id_col, vec_col)
+    qrows, over_cap = _collect_query_matrix(
+        corpus, queries, query_pred, id_col, vec_col
+    )
     if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
+        return corpus.sparkSession.createDataFrame([], _TOPK)
     if over_cap:
         import warnings
 
@@ -585,88 +635,23 @@ def ivf_cosine_topk(
             stacklevel=2,
         )
     else:
-        q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        nq, dim = qm.shape
-
-        # ---- tier probe (FUSED_PAIR_BUDGET economics) ----
-        n_corpus = corpus_count_hint
-        if n_corpus is None:
-            cap = max(fused_pair_budget // nq, 1)
-            n_corpus = corpus.select(id_col).limit(cap + 1).count()
-        over_cap = n_corpus * nq > fused_pair_budget
+        q_ids, qm = _query_arrays(qrows)
+        over_cap = not _fused_fits(
+            corpus, id_col, len(q_ids), corpus_count_hint, fused_pair_budget
+        )
     if not over_cap:
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
-        # query-side centroid scores + norms: the same left-fold
-        # chains as _dot_plane_sql / norm(), driver-side.
-        qs_mat = np.zeros((nq, n_cells))
-        for d in range(dim):
-            qs_mat += qm[:, d:d + 1] * C[:, d]
-        qn = np.zeros(nq)
-        for d in range(dim):
-            qn += qm[:, d] * qm[:, d]
-        qn = np.sqrt(qn)
         # probe cells: ORDER BY score DESC, cell ASC — a stable
         # ascending argsort of -score keeps cell order on ties.
-        probes = np.argsort(-qs_mat, axis=1, kind="stable")[:, :nprobe]
-        qidx_by_cell = [
-            np.flatnonzero((probes == c).any(axis=1))
-            for c in range(n_cells)
-        ]
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                nb = len(c_ids)
-                s = np.zeros((nb, n_cells))
-                for d in range(dim):
-                    s += cm[:, d:d + 1] * C[:, d]
-                cell = np.argmax(s, axis=1)  # first max wins
-                cn = np.zeros(nb)
-                for d in range(dim):
-                    cn += cm[:, d] * cm[:, d]
-                cn = np.sqrt(cn)
-                out = {"query_id": [], "corpus_id": [], "cosine": []}
-                for c in np.unique(cell):
-                    qi = qidx_by_cell[c]
-                    if not len(qi):
-                        continue
-                    ci = np.flatnonzero(cell == c)
-                    sub = cm[ci]
-                    acc = np.zeros((len(ci), len(qi)))
-                    for d in range(dim):
-                        acc += sub[:, d][:, None] * qm[qi, d][None, :]
-                    cos = acc / (cn[ci][:, None] * qn[qi][None, :])
-                    cos = (np.sign(cos)
-                           * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
-                    cos[c_ids[ci][:, None] == q_ids[qi][None, :]] = -np.inf
-                    sub_ids = c_ids[ci]
-                    kk = min(k, len(ci))
-                    for j in range(len(qi)):
-                        col = cos[:, j]
-                        order = np.lexsort((sub_ids, -col))[:kk]
-                        keep = order[np.isfinite(col[order])]
-                        out["query_id"].extend([q_ids[qi[j]]] * len(keep))
-                        out["corpus_id"].extend(sub_ids[keep])
-                        out["cosine"].extend(col[keep])
-                yield pd.DataFrame(out)
-
-        scored = (
-            corpus.where(F.col(vec_col).isNotNull())
-            .select(id_col, vec_col)
-            .mapInPandas(
-                fused, schema="query_id long, corpus_id long, cosine double"
-            )
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine", "rank")
+        probes = np.argsort(-_dots(qm, C), axis=1, kind="stable")[:, :nprobe]
+        qidx_by_cell = {}
+        for c in range(n_cells):
+            qi = np.flatnonzero((probes == c).any(axis=1))
+            if len(qi):
+                qidx_by_cell[c] = qi
+        return _block_scan(
+            corpus, "sim_ivf_cell_scan", id_col, vec_col, q_ids, qm, k,
+            partial(_cells, centroids=C), qidx_by_cell,
         )
 
     # ---- cell-join tier ----
@@ -722,63 +707,45 @@ def ivf_cosine_topk(
         # round-9 rule: the tier probe never changes results).
         .where(~F.isnan(F.col("cosine")))
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def multitable_bucket_pass(
+    df: DataFrame,
     tables: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_id: str = "vec_id",
-):
-    """Arrow kernel computing every table's sign-pattern bucket for
-    each vector in one pass — module-level so the bit-parity test
-    exercises the PRODUCTION kernel, not a copy. Each plane dot
-    accumulates over the vector DIMENSION (the same left-associated
-    IEEE chain as _dot_plane_sql's fold), so the sign pattern — and
-    therefore every bucket — is bit-identical to the expression
-    spelling and the DuckDB oracle. Returns (generator, schema) for
-    mapInPandas."""
-    import numpy as np
-    import pandas as pd
+) -> DataFrame:
+    """(``out_id``, table_no, bucket) rows for every non-NULL vector of
+    ``df`` and every table, from ONE Arrow pass: the vectors cross
+    into Python once and only id-sized rows come back (the expression
+    spelling costs L×b interpreted folds per vector: 3.9 s for 8×3
+    planes over 20k vectors at sf1, vs vectorized microseconds).
+    Each plane dot accumulates over the vector DIMENSION (the same
+    left-associated IEEE chain as _dot_plane_sql's fold), so the
+    sign pattern — and therefore every bucket — is bit-identical to
+    the expression spelling and the DuckDB oracle."""
+    mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
+    n_tables = len(mats)
 
-    plane_mats = [
-        [np.asarray(p, dtype=np.float64) for p in planes]
-        for planes in tables
-    ]
-    n_tables = len(tables)
+    def buckets(pdf):
+        cm = _stack(pdf[vec_col])
+        return {
+            out_id: np.tile(pdf[id_col].to_numpy(dtype=np.int64), n_tables),
+            "table_no": np.repeat(
+                np.arange(n_tables, dtype=np.int32), len(cm)
+            ),
+            "bucket": np.concatenate(
+                [_plane_codes(cm, P) for P in mats]
+            ).astype(np.int32),
+        }
 
-    def buckets(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            n, dim = cm.shape
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            out_ids = np.tile(ids, n_tables)
-            out_tables = np.repeat(np.arange(n_tables, dtype=np.int32), n)
-            codes = np.empty(n_tables * n, dtype=np.int32)
-            for t, planes in enumerate(plane_mats):
-                code = np.zeros(n, dtype=np.int32)
-                for bit, p in enumerate(planes):
-                    acc = np.zeros(n)
-                    for i in range(dim):
-                        acc += cm[:, i] * p[i]
-                    code |= (acc >= 0.0).astype(np.int32) << bit
-                codes[t * n:(t + 1) * n] = code
-            yield pd.DataFrame(
-                {out_id: out_ids, "table_no": out_tables, "bucket": codes}
-            )
-
-    return buckets, f"{out_id} long, table_no int, bucket int"
-
-
+    return arrow_stage(
+        df, "sim_multitable_buckets",
+        f"{out_id} long, table_no int, bucket int", buckets,
+        not_null=vec_col,
+    )
 
 
 def lsh_cosine_topk_multitable(
@@ -801,7 +768,7 @@ def lsh_cosine_topk_multitable(
     economics applied to ANN; see ``FUSED_PAIR_BUDGET``):
 
     * **Fused collision-scan tier** (|Q|·|C| within budget): one
-      ``mapInPandas`` over the corpus computes each batch's bucket
+      Arrow stage over the corpus computes each batch's bucket
       codes AND its cosine matrix against the broadcast query set,
       masks non-colliding pairs, and emits per-query batch top-k.
       No candidate shuffle, no pair materialization — the collision
@@ -823,25 +790,16 @@ def lsh_cosine_topk_multitable(
     accumulation as ``dot()``'s fold, so cosines stay bit-identical
     to the expression spelling and the oracle.
     """
-    import numpy as np
-    import pandas as pd
-
-    if query_pred is not None:
-        qdf = corpus.where(query_pred(F.col(id_col)))
-    else:
-        qdf = queries
-    # the driver-side query matrix must hold only real vectors
-    qdf = qdf.where(F.col(vec_col).isNotNull())
-
     # Bounded query matrix — the broadcast side by contract. It is
     # collected ANYWAY for the scoring kernel, so the query-side
-    # bucket rows are computed here on the driver with the SAME
-    # Arrow kernel (multitable_bucket_pass — identical fold order,
-    # identical buckets) instead of a second Spark branch; the old
-    # spelling cached the corpus bucket table just so the query
-    # slice could reuse it, paying a cache materialization plus an
-    # extra broadcast-build job every run.
-    qrows, over_cap = _collect_query_matrix(qdf, id_col, vec_col)
+    # bucket codes are computed here on the driver with the SAME
+    # fold (_plane_codes — identical buckets) instead of a second
+    # Spark branch; the old spelling cached the corpus bucket table
+    # just so the query slice could reuse it, paying a cache
+    # materialization plus an extra broadcast-build job every run.
+    qrows, over_cap = _collect_query_matrix(
+        corpus, queries, query_pred, id_col, vec_col
+    )
     if over_cap:
         # BOTH tiers of this operator score against the driver-held
         # query matrix, so there is no driver-free fallback: fail
@@ -856,128 +814,50 @@ def lsh_cosine_topk_multitable(
         )
     if not qrows:
         # empty query set: a valid empty result, not a crash
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    qgen, _ = multitable_bucket_pass(
-        tables, id_col=id_col, vec_col=vec_col, out_id="query_id"
-    )
-    qb_pdf = pd.concat(
-        list(
-            qgen(
-                [
-                    pd.DataFrame(
-                        {
-                            id_col: [r[0] for r in qrows],
-                            vec_col: [list(r[1]) for r in qrows],
-                        }
-                    )
-                ]
-            )
-        )
-    )
+        return corpus.sparkSession.createDataFrame([], _TOPK)
+    q_ids, qm = _query_arrays(qrows)
+    nq = len(q_ids)
+    qn = _norms(qm)
+    mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
+    qcodes = np.stack([_plane_codes(qm, P) for P in mats], axis=1)  # (nq, L)
 
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    nq, dim = qm.shape
-    qn = np.zeros(nq)
-    for i in range(dim):  # sequential, matches norm()'s fold order
-        qn += qm[:, i] * qm[:, i]
-    qn = np.sqrt(qn)
-    n_tables = len(tables)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
+    if _fused_fits(corpus, id_col, nq, corpus_count_hint, fused_pair_budget):
+        # Fused collision-scan tier.
+        def fused(pdf):
+            cm = _stack(pdf[vec_col])
+            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            # one table at a time, so the collide mask never
+            # materializes an (nb, nq, L) temp
+            collide = np.zeros((len(cm), nq), dtype=bool)
+            for t, P in enumerate(mats):
+                collide |= _plane_codes(cm, P)[:, None] == qcodes[None, :, t]
+            cos = _cosines(cm, qm, qn)
+            cos[~collide] = -np.inf
+            cos[c_ids[:, None] == q_ids[None, :]] = -np.inf
+            out = {"query_id": [], "corpus_id": [], "cosine": []}
+            return _emit_topk(out, q_ids, c_ids, cos, k)
 
-    # ---- tier probe (see FUSED_PAIR_BUDGET for the economics) ----
-    n_corpus = corpus_count_hint
-    if n_corpus is None:
-        cap = max(fused_pair_budget // nq, 1)
-        # id-only early-stopping count: reads at most cap+1 rows of
-        # one column, never the vectors.
-        n_corpus = corpus.select(id_col).limit(cap + 1).count()
-    if n_corpus * nq <= fused_pair_budget:
-        # Fused collision-scan tier. Query codes come out of the
-        # kernel table-major for a single input batch
-        # (ids tiled per table), so a reshape recovers (nq, L) in
-        # qrows order.
-        qcodes = qb_pdf["bucket"].to_numpy(np.int32).reshape(n_tables, nq).T
-        plane_mats = [
-            [np.asarray(p, dtype=np.float64) for p in planes]
-            for planes in tables
-        ]
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                nb = len(c_ids)
-                # Corpus bucket codes: the SAME dimension-ordered
-                # fold as multitable_bucket_pass, one table at a
-                # time so the collide mask never materializes an
-                # (nb, nq, L) temp.
-                collide = np.zeros((nb, nq), dtype=bool)
-                for t, planes in enumerate(plane_mats):
-                    code = np.zeros(nb, dtype=np.int32)
-                    for bit, p in enumerate(planes):
-                        acc = np.zeros(nb)
-                        for i in range(dim):
-                            acc += cm[:, i] * p[i]
-                        code |= (acc >= 0.0).astype(np.int32) << bit
-                    collide |= code[:, None] == qcodes[None, :, t]
-                acc = np.zeros((nb, nq))
-                cn = np.zeros(nb)
-                for i in range(dim):
-                    ci = cm[:, i]
-                    acc += ci[:, None] * qm[None, :, i]
-                    cn += ci * ci
-                cos = acc / (np.sqrt(cn)[:, None] * qn[None, :])
-                # decimal(18,6) half-up rounding, as the JVM/oracle
-                cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-                cos[~collide] = -np.inf
-                cos[c_ids[:, None] == q_ids[None, :]] = -np.inf
-                kk = min(k, nb)
-                out = {"query_id": [], "corpus_id": [], "cosine": []}
-                for j in range(nq):
-                    col = cos[:, j]
-                    order = np.lexsort((c_ids, -col))[:kk]
-                    keep = order[np.isfinite(col[order])]
-                    out["query_id"].extend([q_ids[j]] * len(keep))
-                    out["corpus_id"].extend(c_ids[keep])
-                    out["cosine"].extend(col[keep])
-                yield pd.DataFrame(out)
-
-        scored = corpus.where(F.col(vec_col).isNotNull()).mapInPandas(
-            fused, schema="query_id long, corpus_id long, cosine double"
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine", "rank")
+        return _rank_topk(
+            arrow_stage(
+                corpus, "sim_multitable_collision_scan", _SCORED, fused,
+                not_null=vec_col,
+            ),
+            k,
         )
 
     # ---- bucket-join tier ----
-    def bucketed(df: DataFrame, out_id: str) -> DataFrame:
-        # One Arrow pass over one scan (multitable_bucket_pass): the
-        # vectors cross into Python once and only id-sized
-        # (id, table_no, bucket) rows come back — nothing
-        # vector-sized returns to the JVM. (The expression spelling
-        # costs L×b interpreted folds per vector: 3.9 s for 8×3
-        # planes over 20k vectors at sf1, vs vectorized
-        # microseconds.)
-        gen, schema = multitable_bucket_pass(
-            tables, id_col=id_col, vec_col=vec_col, out_id=out_id
-        )
-        # NULL vectors never cross the Arrow boundary
-        return df.where(F.col(vec_col).isNotNull()).mapInPandas(
-            gen, schema=schema
-        )
-
-    cb = bucketed(corpus, "corpus_id")
+    cb = multitable_bucket_pass(corpus, tables, id_col, vec_col, "corpus_id")
     qb = corpus.sparkSession.createDataFrame(
-        qb_pdf, schema="query_id long, table_no int, bucket int"
+        pd.DataFrame(
+            {
+                "query_id": np.tile(q_ids, len(mats)),
+                "table_no": np.repeat(
+                    np.arange(len(mats), dtype=np.int32), nq
+                ),
+                "bucket": qcodes.T.reshape(-1).astype(np.int32),
+            }
+        ),
+        schema="query_id long, table_no int, bucket int",
     )
     # collect_set fuses pair-dedup into the per-corpus grouping:
     # one shuffle on corpus_id with map-side partial sets, instead
@@ -1004,57 +884,41 @@ def lsh_cosine_topk_multitable(
     q_sorter = np.argsort(q_ids)
     q_sorted = q_ids[q_sorter]
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
-            cn = np.zeros(len(pdf))
-            for i in range(dim):
-                cn += cm[:, i] * cm[:, i]
-            cn = np.sqrt(cn)
-            counts = pdf["qids"].map(len).to_numpy(dtype=np.int64)
-            if not counts.sum():
-                continue
-            c_idx = np.repeat(np.arange(len(pdf)), counts)
-            all_q = np.concatenate(
-                [np.asarray(lst, dtype=np.int64) for lst in pdf["qids"]]
-            )
-            q_idx = q_sorter[np.searchsorted(q_sorted, all_q)]
-            acc = np.zeros(len(c_idx))
-            for i in range(dim):
-                acc += qm[q_idx, i] * cm[c_idx, i]
-            cos = acc / (qn[q_idx] * cn[c_idx])
-            # decimal(18,6) half-up rounding, same as the JVM/oracle
-            cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-            # Zero-norm vectors (0/0 → NaN cosine) are dropped in
-            # BOTH tiers: the fused tier's isfinite keep-mask already
-            # excludes them, and without this mask Spark's descending
-            # sort would rank the NaN rows above every real cosine —
-            # the tier probe must only pick an implementation, never
-            # a result (ADVICE round 9).
-            fin = np.isfinite(cos)
-            if not fin.all():
-                cos, q_idx, c_idx = cos[fin], q_idx[fin], c_idx[fin]
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[q_idx],
-                    "corpus_id": pdf["corpus_id"].to_numpy(
-                        dtype=np.int64
-                    )[c_idx],
-                    "cosine": cos,
-                }
-            )
+    def score(pdf):
+        counts = pdf["qids"].map(len).to_numpy(dtype=np.int64)
+        if not counts.sum():
+            return None
+        cm = _stack(pdf["cvec"])
+        cn = _norms(cm)
+        c_idx = np.repeat(np.arange(len(pdf)), counts)
+        all_q = np.concatenate(
+            [np.asarray(lst, dtype=np.int64) for lst in pdf["qids"]]
+        )
+        q_idx = q_sorter[np.searchsorted(q_sorted, all_q)]
+        # the dot fold per candidate pair, gathered one dimension at
+        # a time (never an (n_pairs, dim) temp)
+        acc = np.zeros(len(c_idx))
+        for i in range(qm.shape[1]):
+            acc += qm[q_idx, i] * cm[c_idx, i]
+        cos = _round6(acc / (qn[q_idx] * cn[c_idx]))
+        # Zero-norm vectors (0/0 → NaN cosine) are dropped in
+        # BOTH tiers: the fused tier's isfinite keep-mask already
+        # excludes them, and without this mask Spark's descending
+        # sort would rank the NaN rows above every real cosine —
+        # the tier probe must only pick an implementation, never
+        # a result (ADVICE round 9).
+        fin = np.isfinite(cos)
+        if not fin.all():
+            cos, q_idx, c_idx = cos[fin], q_idx[fin], c_idx[fin]
+        return {
+            "query_id": q_ids[q_idx],
+            "corpus_id": pdf["corpus_id"].to_numpy(dtype=np.int64)[c_idx],
+            "cosine": cos,
+        }
 
-    scored = withvec.mapInPandas(
-        score, schema="query_id long, corpus_id long, cosine double"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
+    return _rank_topk(
+        arrow_stage(withvec, "sim_multitable_candidate_score", _SCORED, score),
+        k,
     )
 
 
@@ -1071,8 +935,8 @@ def cosine_topk_arrow(
     rounded cosine broken by corpus id) at a fraction of the constant:
     the query set — bounded by contract, it is the broadcast side —
     is collected to a numpy matrix, and each corpus Arrow batch is
-    scored with 64 vectorized fused multiply-add passes in
-    ``mapInPandas``. Crucially the accumulation loops over the vector
+    scored with 64 vectorized fused multiply-add passes in an Arrow
+    stage. Crucially the accumulation loops over the vector
     DIMENSION, so every (query, corpus) dot product is the same
     left-associated IEEE addition chain as the higher-order-function
     fold and the oracle's list_sum — bit-identical values, ~50× less
@@ -1087,67 +951,31 @@ def cosine_topk_arrow(
     VERIFICATION tier — the LSH/IVF tiers are the 100 TB candidate
     generators — but its constant no longer drowns the comparison.
     """
-    import numpy as np
-    import pandas as pd
-
     # NULL vectors are excluded JVM-side (both sides) before any
     # matrix is built or crosses the Arrow boundary.
-    queries = queries.where(F.col(vec_col).isNotNull())
-    corpus = corpus.where(F.col(vec_col).isNotNull())
-    qrows = queries.select(id_col, vec_col).collect()
+    qrows = (
+        queries.where(F.col(vec_col).isNotNull())
+        .select(id_col, vec_col).collect()
+    )
     if not qrows:
         # empty query set: a valid empty result, not a crash
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    nq, dim = qm.shape
-    qn = np.zeros(nq)
-    for i in range(dim):  # sequential, matches norm()'s fold order
-        qn += qm[:, i] * qm[:, i]
-    qn = np.sqrt(qn)
+        return corpus.sparkSession.createDataFrame([], _TOPK)
+    q_ids, qm = _query_arrays(qrows)
+    qn = _norms(qm)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            nb = len(c_ids)
-            acc = np.zeros((nb, nq))
-            cn = np.zeros(nb)
-            for i in range(dim):
-                ci = cm[:, i]
-                acc += ci[:, None] * qm[None, :, i]
-                cn += ci * ci
-            cos = acc / (np.sqrt(cn)[:, None] * qn[None, :])
-            # decimal(18,6) half-up rounding, same as the JVM/oracle
-            cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-            # exclude self-matches
-            cos[c_ids[:, None] == q_ids[None, :]] = -np.inf
-            kk = min(k, nb)
-            out = {"query_id": [], "corpus_id": [], "cosine": []}
-            for j in range(nq):
-                col = cos[:, j]
-                # top-k by (cosine desc, corpus_id asc)
-                order = np.lexsort((c_ids, -col))[:kk]
-                keep = order[np.isfinite(col[order])]
-                out["query_id"].extend([q_ids[j]] * len(keep))
-                out["corpus_id"].extend(c_ids[keep])
-                out["cosine"].extend(col[keep])
-            yield pd.DataFrame(out)
+    def score(pdf):
+        cm = _stack(pdf[vec_col])
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        cos = _cosines(cm, qm, qn)
+        cos[c_ids[:, None] == q_ids[None, :]] = -np.inf  # self-matches
+        out = {"query_id": [], "corpus_id": [], "cosine": []}
+        return _emit_topk(out, q_ids, c_ids, cos, k)
 
-    scored = corpus.mapInPandas(
-        score, schema="query_id long, corpus_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
+    return _rank_topk(
+        arrow_stage(
+            corpus, "sim_cosine_topk_scan", _SCORED, score, not_null=vec_col
+        ),
+        k,
     )
 
 
@@ -1160,8 +988,8 @@ def cosine_pairs_arrow(
 ) -> DataFrame:
     """Within-bucket exact-cosine near-duplicate pairs,
     Arrow-vectorized: one shuffle on the LSH bucket key, then each
-    bucket's pairwise score matrix is computed in numpy inside
-    ``applyInPandas`` — accumulating over the vector DIMENSION so
+    bucket's pairwise score matrix is computed in numpy inside a
+    keyed Arrow stage — accumulating over the vector DIMENSION so
     every pair's dot product is the same left-associated IEEE chain
     as the expression fold / the oracle's list_sum (bit-identical),
     with ~50× less per-pair overhead than the interpreted HOF.
@@ -1170,39 +998,24 @@ def cosine_pairs_arrow(
     cosine >= threshold. Per-bucket cost is occupancy² — the
     LSH design bounds occupancy; at 100 TB use more bucket bits /
     tables (sim_lsh_multitable_topk) exactly as for top-k."""
-    import numpy as np
-    import pandas as pd
 
-    out_schema = "id_a long, id_b long, cosine double"
-    bucketed = bucketed.where(F.col(vec_col).isNotNull())
-
-    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs(pdf):
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        nb = len(ids)
-        if nb < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-            )
-        cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        dim = cm.shape[1]
-        acc = np.zeros((nb, nb))
-        cn = np.zeros(nb)
-        for i in range(dim):
-            ci = cm[:, i]
-            acc += ci[:, None] * ci[None, :]
-            cn += ci * ci
-        rn = np.sqrt(cn)
-        cos = acc / (rn[:, None] * rn[None, :])
-        cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-        ia, ib = np.triu_indices(nb, k=1)  # ids sorted → id_a < id_b
+        if len(ids) < 2:
+            return None
+        cm = _stack(pdf[vec_col])
+        cos = _cosines(cm, cm, _norms(cm))
+        ia, ib = np.triu_indices(len(ids), k=1)  # ids sorted → id_a < id_b
         c = cos[ia, ib]
         keep = c >= threshold
-        return pd.DataFrame(
-            {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cosine": c[keep]}
-        )
+        return {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cosine": c[keep]}
 
-    return bucketed.groupBy(bucket_col).applyInPandas(pairs, out_schema)
+    return arrow_stage(
+        bucketed, "sim_bucket_cosine_pairs",
+        "id_a long, id_b long, cosine double", pairs,
+        not_null=vec_col, by=bucket_col,
+    )
 
 
 def ivf_train(
@@ -1298,30 +1111,18 @@ def rp_project_arrow(
     list_sum — bit-identical outputs, ~25× less interpreter
     overhead than evaluating len(planes) HOF folds per row.
     """
-    import numpy as np
-    import pandas as pd
+    P = np.asarray(planes, dtype=np.float64)  # n_planes × dim
 
-    R = np.array(planes, dtype=np.float64).T  # dim × n_planes
-    df = df.where(F.col(vec_col).isNotNull())
+    def project(pdf):
+        return {
+            id_col: pdf[id_col].to_numpy(),
+            out_col: list(_dots(_stack(pdf[vec_col]), P)),
+        }
 
-    def project(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            acc = np.zeros((cm.shape[0], R.shape[1]))
-            for i in range(R.shape[0]):  # sequential: fold order
-                acc += cm[:, i:i + 1] * R[i:i + 1, :]
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                out_col: list(acc),
-            })
-
-    out_schema = f"{id_col} long, {out_col} array<double>"
-    return df.select(id_col, vec_col).mapInPandas(
-        project, schema=out_schema
+    return arrow_stage(
+        df.select(id_col, vec_col), "sim_rp_project",
+        f"{id_col} long, {out_col} array<double>", project,
+        not_null=vec_col,
     )
 
 
@@ -1357,54 +1158,32 @@ def int8_dot_topk_arrow(
     apply the global rank window and exact-cosine rerank, shared
     with the join tier so both tiers are row-identical.
     """
-    import numpy as np
-    import pandas as pd
-
     # NULL vectors are excluded on both sides, the same rule as every
     # similarity entry point (cosine_topk_arrow's convention)
     qrows = queries.where(
         F.col(vec_col).isNotNull()
     ).select(id_col, vec_col).collect()
-    spark = corpus.sparkSession
     out_schema = "query_id long, corpus_id long, qdot long"
     if not qrows:
-        return spark.createDataFrame([], out_schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    q_ids, qm = _query_arrays(qrows)
     qq = np.floor((qm * 127.0) / scale + 0.5)  # already-exact ints
-    nq = len(q_ids)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cq = np.floor((cm * 127.0) / scale + 0.5)
-            dot_f = cq @ qq.T  # (nb, nq); exact integer-valued f64
-            qdot = dot_f.astype(np.int64)
-            big = np.iinfo(np.int64).min
-            qdot[c_ids[:, None] == q_ids[None, :]] = big  # self
-            kk = min(k, len(c_ids))
-            out = {"query_id": [], "corpus_id": [], "qdot": []}
-            for j in range(nq):
-                col = qdot[:, j]
-                # descending sort key in float64 (exact: |qdot| < 2^21,
-                # and the int64.min sentinel is a power of two) — the
-                # int64 negation of the sentinel would overflow and
-                # sort the self row FIRST, spending a top-k slot
-                order = np.lexsort((c_ids, -col.astype(np.float64)))[:kk]
-                keep = order[col[order] != big]
-                out["query_id"].extend([q_ids[j]] * len(keep))
-                out["corpus_id"].extend(c_ids[keep])
-                out["qdot"].extend(col[keep])
-            yield pd.DataFrame(out)
+    def score(pdf):
+        cm = _stack(pdf[vec_col])
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        # (nb, nq) exact integer-valued float64; -inf marks self rows
+        qdot = np.floor((cm * 127.0) / scale + 0.5) @ qq.T
+        qdot[c_ids[:, None] == q_ids[None, :]] = -np.inf
+        out = {"query_id": [], "corpus_id": [], "qdot": []}
+        _emit_topk(out, q_ids, c_ids, qdot, k, col="qdot")
+        out["qdot"] = np.asarray(out["qdot"], dtype=np.int64)
+        return out
 
-    return corpus.where(F.col(vec_col).isNotNull()).select(
-        id_col, vec_col
-    ).mapInPandas(score, schema=out_schema)
+    return arrow_stage(
+        corpus.select(id_col, vec_col), "sim_int8_dot_topk", out_schema,
+        score, not_null=vec_col,
+    )
 
 
 def pq_adc_topk_arrow(
@@ -1445,18 +1224,14 @@ def pq_adc_topk_arrow(
     apply the global rank window and exact-cosine rerank shared with
     the join tier.
     """
-    import numpy as np
-    import pandas as pd
 
-    spark = corpus.sparkSession
     out_schema = "query_id long, corpus_id long, adist long"
     qrows = queries.where(
         F.col(vec_col).isNotNull()
     ).select(id_col, vec_col).collect()
     if not qrows or not centroids:
-        return spark.createDataFrame([], out_schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    q_ids, qm = _query_arrays(qrows)
     nq = len(q_ids)
     kc = len(centroids)
     cents = np.array([list(v) for _, v in centroids], dtype=np.float64)
@@ -1499,49 +1274,39 @@ def pq_adc_topk_arrow(
     )
     big = np.iinfo(dtype).max
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            nb = len(c_ids)
-            codes = [
-                np.argmin(sub_dists(cm, m), axis=1)
-                for m in range(m_sub)
-            ]
-            adist = np.zeros((nb, nq), dtype=dtype)
-            for p in range(len(pair_luts)):
-                adist += pair_luts[p][codes[2 * p] * kc + codes[2 * p + 1]]
-            if tail_lut is not None:
-                adist += tail_lut[codes[-1]]
-            adist[c_ids[:, None] == q_ids[None, :]] = big  # self
-            kk = min(k, nb)
-            out = {"query_id": [], "corpus_id": [], "adist": []}
-            for j in range(nq):
-                row = adist[:, j]
-                # threshold top-k: partition gives the kth value;
-                # every row at-or-below it is a tie candidate, so the
-                # (adist, corpus_id) order is exact under ties
-                kth = min(kk - 1, nb - 1)
-                part = np.argpartition(row, kth)
-                thr = row[part[kth]]
-                sel = np.flatnonzero(row <= thr)
-                order = sel[np.lexsort((c_ids[sel], row[sel]))][:kk]
-                keep = order[row[order] != big]
-                out["query_id"].extend([q_ids[j]] * len(keep))
-                out["corpus_id"].extend(c_ids[keep])
-                out["adist"].extend(np.asarray(row[keep], dtype=np.int64))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out["query_id"], np.int64),
-                    "corpus_id": np.asarray(out["corpus_id"], np.int64),
-                    "adist": np.asarray(out["adist"], np.int64),
-                }
-            )
+    def score(pdf):
+        cm = _stack(pdf[vec_col])
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        nb = len(c_ids)
+        codes = [
+            np.argmin(sub_dists(cm, m), axis=1)
+            for m in range(m_sub)
+        ]
+        adist = np.zeros((nb, nq), dtype=dtype)
+        for p in range(len(pair_luts)):
+            adist += pair_luts[p][codes[2 * p] * kc + codes[2 * p + 1]]
+        if tail_lut is not None:
+            adist += tail_lut[codes[-1]]
+        adist[c_ids[:, None] == q_ids[None, :]] = big  # self
+        kk = min(k, nb)
+        out = {"query_id": [], "corpus_id": [], "adist": []}
+        for j in range(nq):
+            row = adist[:, j]
+            # threshold top-k: partition gives the kth value;
+            # every row at-or-below it is a tie candidate, so the
+            # (adist, corpus_id) order is exact under ties
+            kth = min(kk - 1, nb - 1)
+            part = np.argpartition(row, kth)
+            thr = row[part[kth]]
+            sel = np.flatnonzero(row <= thr)
+            order = sel[np.lexsort((c_ids[sel], row[sel]))][:kk]
+            keep = order[row[order] != big]
+            out["query_id"].extend([q_ids[j]] * len(keep))
+            out["corpus_id"].extend(c_ids[keep])
+            out["adist"].extend(np.asarray(row[keep], dtype=np.int64))
+        return {c: np.asarray(v, np.int64) for c, v in out.items()}
 
-    return corpus.where(F.col(vec_col).isNotNull()).select(
-        id_col, vec_col
-    ).mapInPandas(score, schema=out_schema)
+    return arrow_stage(
+        corpus.select(id_col, vec_col), "sim_pq_adc_topk", out_schema,
+        score, not_null=vec_col,
+    )

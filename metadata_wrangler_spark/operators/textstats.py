@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 from metadata_wrangler_spark.operators.dedup import normalize_text
 
 # Tiny per-language marker vocabularies for the n-gram/stopword
@@ -330,11 +331,9 @@ def bpe_pair_partials(
 
     nt = docs.select(normalize_text(F.col(text_col)).alias("nt"))
 
-    def gen(batches):
+    def fold(batches):
         counts: dict = {}
         for pdf in batches:
-            if not len(pdf):
-                continue
             arr = pa.array(pdf["nt"], type=pa.string())
             toks = pc.split_pattern(arr, " ")
             cur = toks.flatten()  # null docs contribute no tokens
@@ -364,4 +363,6 @@ def bpe_pair_partials(
                 {"pair": list(counts), "n": list(counts.values())}
             )
 
-    return nt.mapInPandas(gen, schema="pair string, n long")
+    return arrow_stage(
+        nt, "txt_bpe_pair_partials", "pair string, n long", fold, fold=True
+    )

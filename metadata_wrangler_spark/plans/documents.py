@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from metadata_wrangler_spark.catalog import load, widen
 from metadata_wrangler_spark.operators import dedup, textstats
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 from metadata_wrangler_spark.plans import register
 
 # --- shared SQL fragments (DuckDB dialect) ---------------------------------
@@ -773,8 +774,8 @@ _MM_SCHEMA = T.StructType([
 ])
 
 
-def _extract_features(batches):
-    """mapInPandas worker: Arrow batches in, feature rows out.
+def _extract_features(pdf):
+    """Arrow-stage kernel: one batch of payloads in, feature rows out.
 
     The decode step for real image/audio payloads is stubbed (the
     container ships no codec libs — see SURVEY.md); the deterministic
@@ -782,16 +783,15 @@ def _extract_features(batches):
     column → Arrow batch → pandas → typed rows) is exercised and
     oracle-checkable.
     """
-    for pdf in batches:
-        payload = pdf["payload"]
-        md5s = payload.map(lambda b: hashlib.md5(b).hexdigest())
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "n_bytes": payload.map(len).astype("int64"),
-            "content_md5": md5s,
-            # stand-in for decoded-image mean brightness
-            "fake_brightness": md5s.map(lambda h: int(h[:15], 16) % 256),
-        })
+    payload = pdf["payload"]
+    md5s = payload.map(lambda b: hashlib.md5(b).hexdigest())
+    return pd.DataFrame({
+        "doc_id": pdf["doc_id"],
+        "n_bytes": payload.map(len).astype("int64"),
+        "content_md5": md5s,
+        # stand-in for decoded-image mean brightness
+        "fake_brightness": md5s.map(lambda h: int(h[:15], 16) % 256),
+    })
 
 
 @register(
@@ -807,7 +807,7 @@ def _extract_features(batches):
 )
 def mm_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal column plumbing: text → BINARY payload column →
-    Arrow-batched `mapInPandas` feature extraction (decode stubbed,
+    Arrow-batched `arrow_stage` feature extraction (decode stubbed,
     schema/partitioning/batch shape real).
 
     This is the pattern for image/audio/video columns at scale:
@@ -820,8 +820,9 @@ def mm_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # NULL payloads (no media) are excluded like every multimodal
     # operator does — never a worker crash.
-    return binary.where(F.col("payload").isNotNull()).mapInPandas(
-        _extract_features, schema=_MM_SCHEMA
+    return arrow_stage(
+        binary, "mm_binary_payload_features", _MM_SCHEMA, _extract_features,
+        not_null="payload",
     )
 
 

@@ -591,12 +591,7 @@ def sim_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     same IEEE chain everywhere.
     """
     emb = load(spark, sf_dir, "embeddings")
-    gen, schema = similarity.ivf_partial_moments(_CENTROIDS)
-    partial = (
-        emb.where(F.col("embedding").isNotNull())
-        .select("embedding")
-        .mapInPandas(gen, schema)
-    )
+    partial = similarity.ivf_partial_moments(emb, _CENTROIDS)
     return (
         partial.groupBy("cell", "pos")
         .agg(

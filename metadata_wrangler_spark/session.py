@@ -66,6 +66,13 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark's lower()/upper() fall back to the locale-sensitive
+        # String.toLowerCase/toUpperCase, and in local mode tasks run
+        # in the driver JVM: pin its locale so JVM case folding
+        # matches the Python kernels' locale-free str.lower on every
+        # host (a tr_TR default folds "I" to dotless "ı").
+        .config("spark.driver.extraJavaOptions",
+                "-Duser.language=en -Duser.country=US")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

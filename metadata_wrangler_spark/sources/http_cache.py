@@ -10,7 +10,7 @@ Reference: `/root/reference/viaf.py:829-841,845-853` (Representation
 
 Spark design: requests LEFT JOIN cache on url; rows with a fresh
 cache hit short-circuit; the miss/stale partition goes through a
-`mapInPandas` fetcher (Arrow-batched — one connection pool per
+fetcher `arrow_stage` (Arrow-batched — one connection pool per
 partition, never per row). The union is the post-state a cache
 MERGE would persist. At 100 TB of requests this is one join keyed
 on url + a fetch stage sized by `repartition` (the reference's
@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 
 FETCH_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -100,8 +102,6 @@ def cached_get(
 
         def miss_batches() -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                if not len(pdf):
-                    continue
                 m = split_hits(pdf)
                 if len(m):
                     yield m[["url"]]
@@ -128,12 +128,12 @@ def cached_get(
         # second fetcher invocation would break the at-most-once
         # seam contract.
         for pdf in batches:
-            if len(pdf):
-                split_hits(pdf)
+            split_hits(pdf)
         # partitions whose tail batches were all cache hits
         if pending_hits:
             yield pd.concat(pending_hits, ignore_index=True)
 
-    return joined.mapInPandas(
-        resolve, schema="url string, content string, source string"
+    return arrow_stage(
+        joined, "src_http_cache_resolve",
+        "url string, content string, source string", resolve, fold=True,
     )

@@ -130,10 +130,14 @@ def extract_contributors(df: DataFrame, json_col: str = "jsonld") -> DataFrame:
     n = F.col("_node")
     display = _best_name(F.try_variant_get(n, "$.name", "variant"))
     family = _best_name(F.try_variant_get(n, "$.familyName", "variant"))
+    # A list-valued date reads its first element. The array probe
+    # goes first: the string probe returns an array's JSON text (the
+    # shadowing _name_candidates documents for objects). get() is
+    # NULL past the end, so an empty list is a missing date.
     year = lambda fld: F.regexp_extract(  # noqa: E731
         F.coalesce(
+            F.get(F.try_variant_get(n, fld, "array<string>"), 0),
             F.try_variant_get(n, fld, "string"),
-            F.try_variant_get(n, fld, "array<string>")[0],
         ),
         "^([0-9]{4})", 1,
     )

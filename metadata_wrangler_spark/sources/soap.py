@@ -6,7 +6,7 @@ Reference: `/root/reference/content_cafe.py:351-394` (zeep SOAP
 demand numbers), consumed by the monthly-bucket aggregation at
 `:384-394`.
 
-Spark design: identifiers flow through `mapInPandas` with a
+Spark design: identifiers flow through an `arrow_stage` with a
 pluggable transport — one SOAP client per PARTITION, batch of
 identifiers per call, many rows out per identifier (UDTF shape).
 The in-container default transport is a deterministic fake; a real
@@ -20,6 +20,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 
 DEMAND_SCHEMA = T.StructType([
     T.StructField("identifier_id", T.LongType()),
@@ -52,6 +54,7 @@ def demand_history(
     """(identifier_id) in → (identifier_id, month_no, demand) out —
     the batched SOAP fan-out. Partition count controls RPC
     concurrency (the reference's batch-size knob)."""
-    return identifiers.select("identifier_id").mapInPandas(
-        transport, schema=DEMAND_SCHEMA
+    return arrow_stage(
+        identifiers.select("identifier_id"), "src_soap_demand",
+        DEMAND_SCHEMA, transport, fold=True,
     )

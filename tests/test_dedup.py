@@ -240,6 +240,13 @@ def test_stop_shingle_pruning_drops_boilerplate_only_pairs(spark):
     assert pruned[(1, 3)] == 1.0
 
 
+# Non-ASCII case folding: dotted/dotless i, final sigma, ß and a
+# titlecase digraph. The kernels fold with Python's str.lower, the
+# SQL spellings with Spark's lower() under the pinned en_US JVM
+# locale (session.py); the equivalence tests below pin that they agree.
+_CASE_FOLD = "İSTANBUL ıi I ΣΑΣ Straße ǅ"
+
+
 def test_minhash_kernel_matches_sql_spelling(spark):
     """The Arrow signature fold must be bit-identical to the SQL
     spelling the oracle mirrors — including whitespace/empty/NULL
@@ -256,6 +263,7 @@ def test_minhash_kernel_matches_sql_spelling(spark):
         (7, "tab\tand\nnewline separated words here"),
         (8, "naïve café déjà vu encore une fois"),   # multibyte
         (9, "a b c d e f g h i j k l m n o p q r s t"),
+        (10, _CASE_FOLD),
     ]
     for nparts in (1, 3, 7):
         docs = spark.createDataFrame(
@@ -283,6 +291,8 @@ def test_token_jaccard_blocked_matches_join_spelling(spark):
         (7, "B1", "red red red green"),       # dup tokens -> {red, green}
         (8, "B1", "cyan"),                    # lonely token
         (9, "B2", "red green blue"),          # pairs with 4 only
+        (10, "B3", _CASE_FOLD),
+        (11, "B3", "istanbul ıi i σας strasse ǆ"),
     ]
     for nparts in (1, 3, 8):
         df = spark.createDataFrame(
@@ -321,6 +331,18 @@ def test_token_jaccard_blocked_matches_join_spelling(spark):
     assert (1, 3) in got and got[(1, 2)] == 1.0 and (1, 4) not in got
 
 
+def test_token_jaccard_blocked_rejects_duplicate_keys(spark):
+    """Keys must be unique: a key repeated within a block used to
+    share one merged token set and score a (k, k) self-pair; it now
+    fails loudly, naming the key."""
+    df = spark.createDataFrame(
+        [(1, "B1", "red green"), (1, "B1", "red blue"), (2, "B1", "red")],
+        "k bigint, blk string, txt string",
+    )
+    with pytest.raises(Exception, match="key 1 repeats"):
+        dedup.token_jaccard_blocked(df, "k", "blk", "txt", 0.0).collect()
+
+
 def test_shingle_table_kernel_matches_jvm_spelling(spark):
     """The Arrow shingle pass must reproduce the JVM spelling's
     (id, n_sh) rows and 64-bit equality classes: same doc set (NULL/
@@ -336,6 +358,7 @@ def test_shingle_table_kernel_matches_jvm_spelling(spark):
         (6, "tab\tand\nnewline separated words go here"),
         (7, "naïve café déjà vu encore une fois oui"),
         (8, "the quick brown fox jumps over the lazy cat"),
+        (9, _CASE_FOLD),
     ]
     for nparts in (1, 4):
         docs = spark.createDataFrame(

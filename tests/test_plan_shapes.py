@@ -1,8 +1,8 @@
 """Physical-plan shape assertions — the scale contract, checked
 mechanically: filters reach the parquet scan, dimension joins
 broadcast, aggregates have a map-side partial phase, anti/semi joins
-stay joins, and no plan smuggles in a cartesian product or a
-row-at-a-time Python eval outside the declared mapInPandas stages.
+stay joins, and no plan smuggles in a cartesian product or any
+Python node that operators/arrow_stage.py did not build.
 """
 
 from __future__ import annotations
@@ -14,61 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-# plans whose ONLY Python is the declared Arrow-batched mapInPandas
-ARROW_STAGES = {
-    "mm_binary_features", "mm_image_features", "mm_frame_sample",
-    "mm_audio_windows",
-    "s_cached_fetch", "s_soap_demand", "pipe_provider_end_to_end",
-    # Arrow-vectorized exact-cosine scorers (numpy accumulation over
-    # the vector dimension, bit-identical to the expression fold —
-    # operators/similarity.py cosine_topk_arrow / cosine_pairs_arrow)
-    "sim_cosine_topk", "dd_embedding_cosine", "dd_semantic_prune",
-    # Arrow-vectorized candidate-pair scorer (score_pairs_arrow)
-    "sim_lsh_multitable_topk",
-    # Arrow-vectorized random projection + projected-space scorer
-    # (rp_project_arrow / cosine_topk_arrow, fold-order-identical)
-    "sim_rp_topk",
-    # recall harness: ground truth comes from the same Arrow exact
-    # scorer the retrieval tiers are audited against
-    "sim_recall_eval",
-    # per-bucket pairwise Arrow scorer (cosine_pairs_arrow)
-    "sim_knn_graph",
-    # fused Lloyd-step kernel: assign + per-(cell,pos) int64 partial
-    # aggregates in one Arrow pass (ivf_partial_moments, round 10)
-    "sim_ivf_train_step",
-    # fused IVF cell-scan tier: assign + per-cell block scoring in
-    # one Arrow pass under the pair budget (round 10)
-    "sim_ivf_topk",
-    # fused single-table LSH bucket-scan tier, same economics
-    # (round 10); pipe_semantic_search's candidate stage is the
-    # same operator
-    "sim_lsh_topk", "sim_lsh_probe_topk", "pipe_semantic_search",
-    # fused contamination window-probe kernel (round 10): window
-    # build + eval-set probe in one Arrow pass, join tier kept
-    "txt_contamination_frac",
-    # fused bigram-pair count kernel (round 11): per-task bounded
-    # partial counters replace the two-explode pair stream
-    # (operators/textstats.py bpe_pair_partials)
-    "txt_bpe_merge_step",
-    # per-document MinHash signature fold (round 11): shuffle-free
-    # Arrow kernel, bit-identical to the SQL spelling
-    # (operators/dedup.py minhash_signatures); every consumer of
-    # minhash_lsh_pairs / minhash_signatures carries the stage
-    "dd_minhash_lsh", "dd_minhash_clusters", "dd_cluster_keep",
-    "dd_est_vs_exact", "pipe_corpus_curation",
-    # block-local token-set jaccard kernel (round 11): one exchange
-    # of (key, block, text) rows, pair expansion + |A∩B| counting +
-    # threshold local per block (operators/dedup.py
-    # token_jaccard_blocked)
-    "f_title_token_jaccard",
-    # shingle-table Arrow pass (round 11): normalize → distinct
-    # shingles → 64-bit hash per doc inside the scan partition
-    # (operators/dedup.py _shingle_tables); all ngram-tier scorers
-    # carry the stage
-    "dd_ngram_jaccard", "dd_ngram_containment", "dd_ngram_jaccard_pruned",
-}
-
 
 def explain_str(df) -> str:
     buf = io.StringIO()
@@ -132,13 +77,57 @@ def test_no_cartesian_products_anywhere(spark, queries):
         assert "CartesianProduct" not in plan, name
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_no_python_eval_outside_declared_arrow_stages(spark, queries):
+    """Every Python node in every plan is a registered Arrow stage:
+    its function name is in arrow_stage.STAGES, and no plan has a
+    row-at-a-time or pandas UDF eval at all."""
+    from metadata_wrangler_spark.operators.arrow_stage import (
+        python_plan_violations,
+    )
+
+    bad = {}
     for name, fn in queries.items():
-        plan = explain_str(fn(spark, SF))
-        if name in ARROW_STAGES:
-            continue
-        assert "EvalPython" not in plan, name
-        assert "MapInPandas" not in plan, name
+        hits = python_plan_violations(_executed_plan(fn(spark, SF)))
+        if hits:
+            bad[name] = hits
+    assert not bad, bad
+
+
+def test_python_stage_audit_flags_unregistered_stages(spark):
+    """The audit's negative case: a raw mapInPandas that bypasses the
+    primitive, and a row-at-a-time UDF, are flagged; the same kernel
+    built through arrow_stage is not."""
+    from metadata_wrangler_spark.operators.arrow_stage import (
+        arrow_stage,
+        python_plan_violations,
+    )
+
+    def passthrough(batches):
+        yield from batches
+
+    raw = spark.range(3).mapInPandas(passthrough, "id long")
+    assert python_plan_violations(_executed_plan(raw)) == [
+        "MapInPandas passthrough"
+    ]
+    grouped = spark.range(3).groupBy("id").applyInPandas(
+        lambda pdf: pdf, "id long"
+    )
+    assert python_plan_violations(_executed_plan(grouped)) == [
+        "FlatMapGroupsInPandas <lambda>"
+    ]
+    row_udf = spark.range(3).select(F.udf(lambda x: x, "long")("id"))
+    assert [
+        h.split()[0] for h in python_plan_violations(_executed_plan(row_udf))
+    ] == ["BatchEvalPython"]
+    staged = arrow_stage(
+        spark.range(3), "plan_audit_probe_stage", "id long", passthrough,
+        fold=True,
+    )
+    assert python_plan_violations(_executed_plan(staged)) == []
 
 
 def test_decontaminate_broadcasts_eval_side(spark, queries):

@@ -230,8 +230,7 @@ def test_multitable_arrow_buckets_match_expression_spelling(spark):
         F.explode(F.expr(f"array({entries})")).alias("tb"),
     ).select("vec_id", "tb.table_no", "tb.bucket")
 
-    gen, schema = sim.multitable_bucket_pass(_TABLES)
-    arrow = emb.mapInPandas(gen, schema=schema)
+    arrow = sim.multitable_bucket_pass(emb, _TABLES)
     sgot = sorted(tuple(r) for r in arrow.collect())
     sexp = sorted(tuple(r) for r in expr.collect())
     assert sgot == sexp
@@ -311,12 +310,11 @@ def test_ivf_partial_moments_match_posexplode_spelling(spark):
             ).alias("qsum"),
         )
     )
-    gen, schema = sim.ivf_partial_moments(_CENTROIDS)
     kernel = (
-        emb.where(F.col("embedding").isNotNull())
-        .select("embedding")
-        .repartition(7)  # partials fold across an odd partitioning
-        .mapInPandas(gen, schema)
+        sim.ivf_partial_moments(
+            emb.repartition(7),  # partials fold across an odd partitioning
+            _CENTROIDS,
+        )
         .groupBy("cell", "pos")
         .agg(F.sum("cnt").alias("cnt"), F.sum("qsum").alias("qsum"))
     )

@@ -314,6 +314,23 @@ def test_jsonld_contributor_name_vote(spark):
     assert p2["birth_year"] is None
 
 
+def test_jsonld_contributor_list_valued_dates(spark):
+    """A list-valued birthDate/deathDate reads its first element; an
+    empty list is a missing date."""
+    doc = """{"@graph": [
+      {"@id": "person/3", "@type": "schema:Person", "name": "Mary Shelley",
+       "birthDate": ["1797-08-30", "1797"], "deathDate": ["1851"]},
+      {"@id": "person/4", "@type": "schema:Person", "name": "Ann Radcliffe",
+       "birthDate": [], "deathDate": "1823-02-07"}
+    ]}"""
+    df = spark.createDataFrame([("lists", doc)], "doc string, jsonld string")
+    got = {
+        r["node_id"]: (r["birth_year"], r["death_year"])
+        for r in jsonld.extract_contributors(df).collect()
+    }
+    assert got == {"person/3": ("1797", "1851"), "person/4": (None, "1823")}
+
+
 OPDS_MESSAGES_FEED = (
     '<feed xmlns="http://www.w3.org/2005/Atom" '
     'xmlns:simplified="http://librarysimplified.org/terms/" '

@@ -16,8 +16,11 @@ Prints one row per query with the scale-relevant plan properties:
          which the tree printer never produces, so it could not
          fire; round 5 found 3 real offenders under it and fixed
          them with operators/prefix.py.)
-  PYEVAL row-at-a-time Python eval (BatchEvalPython) outside the
-         declared Arrow stages
+  PYEVAL a Python node that operators/arrow_stage.py did not build:
+         any UDF eval, or a MapInPandas / FlatMapGroupsInPandas whose
+         function is not in arrow_stage.STAGES
+         (arrow_stage.python_plan_violations — the same check as
+         tests/test_plan_shapes.py)
   NOPUSH scan with a Filter parent but empty PushedFilters
 
 Usage:  python tools/plan_audit.py [sf_dir] [query ...]
@@ -30,11 +33,6 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-ARROW_OK = {
-    "mm_binary_features", "mm_image_features", "mm_frame_sample",
-    "s_cached_fetch", "s_soap_demand", "pipe_provider_end_to_end",
-}
 
 # Queries whose single-partition window input is bounded BY CONTRACT
 # (documented in the plan's docstring), not by a limit the planner
@@ -99,6 +97,9 @@ def single_partition_windows(plan_str: str) -> list[str]:
 
 
 def main() -> int:
+    from metadata_wrangler_spark.operators.arrow_stage import (
+        python_plan_violations,
+    )
     from metadata_wrangler_spark.session import get_spark
 
     args = sys.argv[1:]
@@ -125,7 +126,7 @@ def main() -> int:
         if name not in SINGLE_PARTITION_BOUNDED and \
                 single_partition_windows(plan):
             flags.append("1PART")
-        if ("BatchEvalPython" in plan) and name not in ARROW_OK:
+        if python_plan_violations(plan):
             flags.append("PYEVAL")
         status = ",".join(flags) if flags else "ok"
         if flags:
