@@ -21,8 +21,8 @@ Spark design — adaptive two-tier:
     and the optimizer chokes long before 100 TB.
   * **Local tier**: iterative jobs cost ~0.3-0.5 s each in scheduling
     alone, so when the raw edge set is small enough to hold on the
-    driver (``local_solve_max_edges``, default 4x10^6 edges ≈ 64 MB
-    — see the constant's rationale) the closure is solved in-process
+    driver (``LOCAL_SOLVE_MAX_EDGES``, read at call time — see the
+    constant's rationale) the closure is solved in-process
     on the already-materialized edges — the same trick every
     production graph system uses (a recursive-CTE engine IS the
     local tier). Both tiers produce identical rows; tests assert
@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 from metadata_wrangler_spark.operators.lineage import free_checkpoint
 
 # Above this many RAW (pre-dedup) edges the driver-local tier is
@@ -57,7 +58,8 @@ from metadata_wrangler_spark.operators.lineage import free_checkpoint
 # 3x10^6-edge graph sat just past the old 10^6 budget and paid 7 s
 # distributed for a 2 s local problem). At 100 TB edge tables are
 # billions of rows and the probe early-stops into the distributed
-# path after reading at most this many rows.
+# path after reading at most this many rows (driver_fetch logs the
+# count it saw).
 LOCAL_SOLVE_MAX_EDGES = 4_000_000
 
 
@@ -69,7 +71,6 @@ def equivalent_ids(
     src: str = "src",
     dst: str = "dst",
     strength: str = "strength",
-    local_solve_max_edges: int = LOCAL_SOLVE_MAX_EDGES,
 ) -> DataFrame:
     """All nodes reachable from ``seeds`` in ≤ ``levels`` hops using
     edges with ``strength`` > ``threshold``.
@@ -87,8 +88,8 @@ def equivalent_ids(
         F.col(dst).cast("bigint").alias("_dst"),
     )
     # Tier probe BEFORE any shuffle: a bare scan + CollectLimit
-    # early-stops as soon as the budget is exceeded, and Arrow
-    # (toPandas) moves the rows ~2x faster than row-pickling collect.
+    # early-stops as soon as the budget is exceeded, and the Arrow
+    # fetch moves the rows ~2x faster than row-pickling collect.
     # The budget therefore bounds RAW filtered edges, not deduped
     # ones — a graph whose duplicates push it over the line takes the
     # distributed tier, which is merely conservative. The small case
@@ -96,8 +97,9 @@ def equivalent_ids(
     # (pandas dedups in-process); measured at 3x-scaled bench data
     # the old spelling paid 3.3 s of dedup+checkpoint plus a 3.0 s
     # row-collect before any BFS work.
-    probe = filtered.limit(local_solve_max_edges + 1).toPandas()
-    if len(probe) <= local_solve_max_edges:
+    probe = fetch_at_most(filtered, LOCAL_SOLVE_MAX_EDGES, "closure_ids_edges")
+    if probe is not None:
+        probe = probe.to_pandas()
         return _equivalent_ids_local(spark, probe, seeds, seed_col, levels)
     # Distributed tier: materialize the deduped edge set ONCE. Every
     # level joins against it; without the checkpoint each level
@@ -233,7 +235,6 @@ def connected_components(
     dst: str = "dst",
     max_iterations: int = 50,
     pointer_jump_after: int = 10,
-    local_solve_max_edges: int = LOCAL_SOLVE_MAX_EDGES,
 ) -> DataFrame:
     """Connected components by min-id label propagation (the Work
     consolidation variant of the closure: every identifier cluster
@@ -255,7 +256,7 @@ def connected_components(
     which halves the remaining label distance per round and converges
     in O(log diameter) additional rounds. Shallow graphs never pay
     for the self-join; deep graphs finish ~10 + log2(diameter)
-    rounds instead of diameter. Small graphs (``local_solve_max_edges``)
+    rounds instead of diameter. Small graphs (``LOCAL_SOLVE_MAX_EDGES``)
     are solved driver-local by union-find on the materialized edge
     set — identical rows, none of the per-round scheduling cost.
     """
@@ -272,9 +273,9 @@ def connected_components(
     # twice as large, consistently with equivalent_ids' raw-edge
     # semantics). The distributed tier symmetrizes below, where it
     # pays the dedup+checkpoint it needs anyway.
-    probe = directed.limit(local_solve_max_edges + 1).toPandas()
-    if len(probe) <= local_solve_max_edges:
-        return _connected_components_local(spark, probe)
+    probe = fetch_at_most(directed, LOCAL_SOLVE_MAX_EDGES, "closure_cc_edges")
+    if probe is not None:
+        return _connected_components_local(spark, probe.to_pandas())
     sym_raw = directed.unionByName(
         directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -475,7 +476,6 @@ def bounded_shortest_paths(
     nodes: DataFrame,
     sources: DataFrame,
     hops: int = 6,
-    local_solve_max_edges: int = LOCAL_SOLVE_MAX_EDGES,
     edge_count_hint: int | None = None,
 ) -> DataFrame:
     """Min packed-code walk of ≤ ``hops`` edges from ``sources`` —
@@ -523,10 +523,8 @@ def bounded_shortest_paths(
     node_col, src_col = nodes.columns[0], sources.columns[0]
     tbl = None
     if edge_count_hint is None:
-        tbl = edges.limit(local_solve_max_edges + 1).toArrow()
-        if tbl.num_rows > local_solve_max_edges:
-            tbl = None
-    elif edge_count_hint <= local_solve_max_edges:
+        tbl = fetch_at_most(edges, LOCAL_SOLVE_MAX_EDGES, "closure_sp_edges")
+    elif edge_count_hint <= LOCAL_SOLVE_MAX_EDGES:
         tbl = edges.toArrow()
     if tbl is not None:
         import numpy as np

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators.driver_fetch import count_at_most
+
 
 def get_one_or_create(
     current: DataFrame, incoming: DataFrame, key_cols: list[str]
@@ -544,7 +546,7 @@ def audit_no_nulls(cols: tuple[str, ...]):
         for c in cols:
             p = F.col(c).isNull()
             pred = p if pred is None else (pred | p)
-        return post.where(pred).limit(1).count() == 0
+        return count_at_most(post.where(pred), 0, "merge_audit_nulls") == 0
 
     check.__name__ = f"audit_no_nulls{cols}"
     return check

@@ -51,6 +51,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
+from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 
 _B = "__gos_bucket"
 
@@ -153,11 +154,11 @@ def global_order_stats(
     # w_percent_rank_cume 1.01→1.17). Aggregate-only consumers that
     # never need per-row ranks should use grouped_rank_value_sums
     # below instead of this operator.
-    trows = totals.limit(_DRIVER_TOTALS_MAX + 1).collect()
-    if len(trows) <= _DRIVER_TOTALS_MAX:
+    ttbl = fetch_at_most(totals, _DRIVER_TOTALS_MAX, "prefix_order_totals")
+    if ttbl is not None:
         offsets = _driver_offsets(
-            df.sparkSession, totals.schema, trows, gcols, cum_cols,
-            total_col,
+            df.sparkSession, totals.schema, ttbl.to_pylist(), gcols,
+            cum_cols, total_col,
         )
     else:
         offsets = _triangular_offsets(totals, gcols, cum_cols, total_col)
@@ -187,6 +188,7 @@ def global_order_stats(
 # the distributed triangular join. 64k rows on the driver is a few MB;
 # with npart≈shuffle.partitions this admits ~2k groups at P=32 —
 # far past "low-cardinality", the grouped mode's documented domain.
+# It also caps grouped_rank_value_sums' partials (raising past it).
 _DRIVER_TOTALS_MAX = 65536
 
 #: per-chunk row bound inside the rank-moment kernel: with values
@@ -225,7 +227,8 @@ def grouped_rank_value_sums(
     2^33 take a pure-Python exact path). The ≤ npart × |groups|
     partial rows come back through Arrow and compose on the driver —
     bounded metadata, never data-sized (same contract class as
-    grouped_select's histograms). Compare global_order_stats, which
+    grouped_select's histograms, capped at ``_DRIVER_TOTALS_MAX`` rows
+    with a ``ValueError`` past it). Compare global_order_stats, which
     this replaces for aggregate-only consumers: that operator pays a
     second (hash) exchange for its window, a localCheckpoint
     materialization, and a broadcast join-back the aggregate then
@@ -326,11 +329,18 @@ def grouped_rank_value_sums(
         cols = ["__grs_b", *gcols, "n", "sx", "srx"]
         yield pd.DataFrame(rows, columns=cols)
 
-    partials = arrow_stage(
-        b, "prefix_rank_value_partials", out_schema, _fold, fold=True
-    ).toArrow().to_pylist()
+    name = "prefix_rank_value_partials"
+    partials = fetch_at_most(
+        arrow_stage(b, name, out_schema, _fold, fold=True),
+        _DRIVER_TOTALS_MAX, name,
+    )
+    if partials is None:
+        raise ValueError(
+            f"grouped_rank_value_sums: more than _DRIVER_TOTALS_MAX="
+            f"{_DRIVER_TOTALS_MAX} (bucket, group) partial rows"
+        )
     by_key: dict[tuple, list] = {}
-    for r in partials:
+    for r in partials.to_pylist():
         key = tuple(r[g] for g in gcols)
         by_key.setdefault(key, []).append(
             (r["__grs_b"], r["n"], int(r["sx"]), int(r["srx"]))

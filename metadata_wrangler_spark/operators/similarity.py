@@ -25,6 +25,7 @@ oracle's list_sum/list_transform).
 
 from __future__ import annotations
 
+import warnings
 from functools import partial
 
 import numpy as np
@@ -34,6 +35,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
+from metadata_wrangler_spark.operators.driver_fetch import (
+    count_at_most, fetch_at_most,
+)
 
 # (query_id, corpus_id, cosine) rows a scorer emits, before / after
 # the global per-query rank window.
@@ -125,14 +129,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 def _stack(vectors) -> np.ndarray:
     """(rows, dim) float64 matrix from an Arrow ``array<float>`` column."""
     return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
-
-
-def _query_arrays(rows) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, float64 matrix) from collected (id, vector) rows."""
-    return (
-        np.array([r[0] for r in rows], dtype=np.int64),
-        np.array([list(r[1]) for r in rows], dtype=np.float64),
-    )
 
 
 def _dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -260,8 +256,6 @@ def lsh_cosine_topk(
     vec_col: str = "embedding",
     probe_hamming: int = 0,
     query_pred=None,
-    corpus_count_hint: int | None = None,
-    fused_pair_budget: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share the hyperplane
     bucket, exact cosine re-ranks within the bucket.
@@ -293,8 +287,6 @@ def lsh_cosine_topk(
             "probe_hamming > 2 is not implemented (probe count grows "
             f"as C(bits, d); got {probe_hamming})"
         )
-    if fused_pair_budget is None:
-        fused_pair_budget = FUSED_PAIR_BUDGET
     n_bits = len(planes)
     masks = [0]
     if probe_hamming > 0:
@@ -306,30 +298,16 @@ def lsh_cosine_topk(
             for j in range(i + 1, n_bits)
         ]
 
-    # Bounded query matrix — the broadcast side, with the contract
-    # ENFORCED: the collect is capped (limit pushdown, never an
-    # unbounded driver fetch) and an over-cap query set routes to
-    # the join tier, which never ships the matrix.
-    qrows, over_cap = _collect_query_matrix(
-        corpus, queries, query_pred, id_col, vec_col
+    # Bounded query matrix — the broadcast side; an over-cap query
+    # set routes to the join tier, which never ships the matrix.
+    q = _query_matrix(
+        "lsh_cosine_topk", corpus, queries, query_pred, id_col, vec_col,
+        fallback="bucket-join",
     )
-    if not qrows:
+    if q is not None and not len(q[0]):
         return corpus.sparkSession.createDataFrame([], _TOPK)
-    if over_cap:
-        import warnings
-
-        warnings.warn(
-            f"lsh_cosine_topk: query set exceeds ANN_QUERY_CAP="
-            f"{ANN_QUERY_CAP}; falling back to the bucket-join tier "
-            "(the fused tier requires a driver-bounded query matrix)",
-            stacklevel=2,
-        )
-    else:
-        q_ids, qm = _query_arrays(qrows)
-        over_cap = not _fused_fits(
-            corpus, id_col, len(q_ids), corpus_count_hint, fused_pair_budget
-        )
-    if not over_cap:
+    if q is not None and _fused_fits(corpus, id_col, len(q[0])):
+        q_ids, qm = q
         P = np.asarray(planes, dtype=np.float64)
         code_q = _plane_codes(qm, P)
         # probed-bucket → query-index lists. Distinct masks give a
@@ -444,44 +422,55 @@ FUSED_PAIR_BUDGET = 1_000_000_000
 # broadcast-sized set — becomes an ENFORCED bound instead of an
 # assumption). 2^17 rows x 64 dims x 8 B = 64 MB of float64 on the
 # driver and in each task's closure — the outer edge of §3's
-# "broadcast the small side" economics. The collect itself is issued
-# through limit(cap + 1), so an over-contract query set costs one
-# bounded fetch, never an unbounded driver materialization: the
-# single-table LSH/IVF operators then fall back LOUDLY to their join
-# tier (which never ships the matrix), and the multitable operator —
-# whose both tiers score against the driver matrix — raises with the
-# contract spelled out rather than risking a driver OOM.
+# "broadcast the small side" economics. An over-contract query set
+# costs one bounded fetch (``_query_matrix``), never an unbounded
+# driver materialization; operators with a driver-free join tier then
+# fall back LOUDLY to it, the others raise.
 ANN_QUERY_CAP = 131_072
 
 
-def _collect_query_matrix(corpus, queries, query_pred, id_col, vec_col):
-    """Bounded driver collect of the ANN query side — the corpus rows
-    matching ``query_pred`` when given, else ``queries``; NULL
-    vectors never enter the matrix. Returns ``(rows, over_cap)``
-    where ``rows`` holds at most ``ANN_QUERY_CAP`` rows (and
-    ``over_cap`` means the real query set is larger — the caller
-    must route to a driver-free tier or raise)."""
+def _query_matrix(
+    op, corpus, queries, query_pred, id_col, vec_col, fallback=None
+):
+    """Bounded driver fetch of ``op``'s ANN query side — the corpus
+    rows matching ``query_pred`` when given, else ``queries``; NULL
+    vectors never enter. Returns (ids, float64 matrix); float32
+    components widen exactly, as they do from collected rows. Past
+    ``ANN_QUERY_CAP`` rows it warns and returns None when ``op`` has
+    a driver-free ``fallback`` tier, and raises when it has none."""
     qdf = (
         corpus.where(query_pred(F.col(id_col)))
         if query_pred is not None
         else queries
     )
-    rows = qdf.where(F.col(vec_col).isNotNull()).select(id_col, vec_col).limit(ANN_QUERY_CAP + 1).collect()
-    if len(rows) > ANN_QUERY_CAP:
-        return rows[:ANN_QUERY_CAP], True
-    return rows, False
+    qdf = qdf.where(F.col(vec_col).isNotNull()).select(id_col, vec_col)
+    tbl = fetch_at_most(qdf, ANN_QUERY_CAP, f"{op}_query_matrix")
+    if tbl is None:
+        msg = f"{op}: query set exceeds ANN_QUERY_CAP={ANN_QUERY_CAP}; "
+        if fallback is None:
+            raise ValueError(
+                msg + "it has no driver-free tier — slice the query "
+                "batch, or use lsh_cosine_topk's bucket-join tier"
+            )
+        warnings.warn(
+            msg + f"falling back to the {fallback} tier (the fused "
+            "tier requires a driver-bounded query matrix)",
+            stacklevel=3,
+        )
+        return None
+    ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
+    flat = tbl.column(1).combine_chunks().flatten()
+    qm = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    return ids, qm.reshape(len(ids), len(qm) // max(len(ids), 1))
 
 
-def _fused_fits(corpus, id_col: str, nq: int, corpus_count_hint, budget) -> bool:
+def _fused_fits(corpus, id_col: str, nq: int) -> bool:
     """Tier probe (FUSED_PAIR_BUDGET economics): do |Q|·|C| pairs fit
-    the fused budget? Uses ``corpus_count_hint`` (catalog stats) when
-    given; otherwise an id-only early-stopping count that reads at
+    the fused budget? An id-only early-stopping count that reads at
     most budget/|Q| + 1 rows of one column, never the vectors."""
-    n_corpus = corpus_count_hint
-    if n_corpus is None:
-        cap = max(budget // nq, 1)
-        n_corpus = corpus.select(id_col).limit(cap + 1).count()
-    return n_corpus * nq <= budget
+    cap = max(FUSED_PAIR_BUDGET // nq, 1)
+    n_corpus = count_at_most(corpus.select(id_col), cap, "sim_fused_tier")
+    return n_corpus * nq <= FUSED_PAIR_BUDGET
 
 
 def _block_scan(
@@ -584,8 +573,6 @@ def ivf_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_pred=None,
-    corpus_count_hint: int | None = None,
-    fused_pair_budget: int = FUSED_PAIR_BUDGET,
 ) -> DataFrame:
     """IVF approximate cosine top-k: corpus vectors live in their
     argmax-centroid cell; each query probes its ``nprobe`` best
@@ -617,29 +604,15 @@ def ivf_cosine_topk(
     """
     n_cells = len(centroids)
 
-    # Bounded query matrix — the broadcast side, with the contract
-    # ENFORCED exactly as in lsh_cosine_topk: capped collect, loud
-    # join-tier fallback past ANN_QUERY_CAP.
-    qrows, over_cap = _collect_query_matrix(
-        corpus, queries, query_pred, id_col, vec_col
+    # Bounded query matrix, as in lsh_cosine_topk.
+    q = _query_matrix(
+        "ivf_cosine_topk", corpus, queries, query_pred, id_col, vec_col,
+        fallback="cell-join",
     )
-    if not qrows:
+    if q is not None and not len(q[0]):
         return corpus.sparkSession.createDataFrame([], _TOPK)
-    if over_cap:
-        import warnings
-
-        warnings.warn(
-            f"ivf_cosine_topk: query set exceeds ANN_QUERY_CAP="
-            f"{ANN_QUERY_CAP}; falling back to the cell-join tier "
-            "(the fused tier requires a driver-bounded query matrix)",
-            stacklevel=2,
-        )
-    else:
-        q_ids, qm = _query_arrays(qrows)
-        over_cap = not _fused_fits(
-            corpus, id_col, len(q_ids), corpus_count_hint, fused_pair_budget
-        )
-    if not over_cap:
+    if q is not None and _fused_fits(corpus, id_col, len(q[0])):
+        q_ids, qm = q
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
         # probe cells: ORDER BY score DESC, cell ASC — a stable
         # ascending argsort of -score keeps cell order on ties.
@@ -756,8 +729,6 @@ def lsh_cosine_topk_multitable(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_pred=None,
-    corpus_count_hint: int | None = None,
-    fused_pair_budget: int = FUSED_PAIR_BUDGET,
 ) -> DataFrame:
     """Multi-table LSH: L independent hyperplane tables; a candidate
     pair needs to collide in ANY table. The standard recall lever
@@ -782,9 +753,9 @@ def lsh_cosine_topk_multitable(
       once as parquet bucketed by (table_no, bucket) and candidate
       generation is storage-pruned.
 
-    The tier probe uses ``corpus_count_hint`` (catalog stats) when
-    given; otherwise an id-only early-stopping count bounded by
-    budget/|Q|. Scoring never ships vectors per pair in either tier:
+    The tier probe is an id-only early-stopping count bounded by
+    budget/|Q|; ``FUSED_PAIR_BUDGET`` and ``ANN_QUERY_CAP`` are read
+    at call time. Scoring never ships vectors per pair in either tier:
     the corpus vector crosses the Arrow boundary ONCE and the
     bounded query matrix is broadcast — the same dimension-ordered
     accumulation as ``dot()``'s fold, so cosines stay bit-identical
@@ -797,31 +768,19 @@ def lsh_cosine_topk_multitable(
     # Spark branch; the old spelling cached the corpus bucket table
     # just so the query slice could reuse it, paying a cache
     # materialization plus an extra broadcast-build job every run.
-    qrows, over_cap = _collect_query_matrix(
-        corpus, queries, query_pred, id_col, vec_col
+    q_ids, qm = _query_matrix(
+        "lsh_cosine_topk_multitable", corpus, queries, query_pred,
+        id_col, vec_col,
     )
-    if over_cap:
-        # BOTH tiers of this operator score against the driver-held
-        # query matrix, so there is no driver-free fallback: fail
-        # loudly (bounded fetch above — the driver never held more
-        # than cap+1 rows) instead of building an unbounded matrix.
-        raise ValueError(
-            "lsh_cosine_topk_multitable: query set exceeds "
-            f"ANN_QUERY_CAP={ANN_QUERY_CAP} rows; the multitable "
-            "operator requires a broadcast-bounded query side — "
-            "slice the query batch, or use lsh_cosine_topk whose "
-            "bucket-join tier scales with an unbounded query table"
-        )
-    if not qrows:
+    if not len(q_ids):
         # empty query set: a valid empty result, not a crash
         return corpus.sparkSession.createDataFrame([], _TOPK)
-    q_ids, qm = _query_arrays(qrows)
     nq = len(q_ids)
     qn = _norms(qm)
     mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
     qcodes = np.stack([_plane_codes(qm, P) for P in mats], axis=1)  # (nq, L)
 
-    if _fused_fits(corpus, id_col, nq, corpus_count_hint, fused_pair_budget):
+    if _fused_fits(corpus, id_col, nq):
         # Fused collision-scan tier.
         def fused(pdf):
             cm = _stack(pdf[vec_col])
@@ -953,14 +912,12 @@ def cosine_topk_arrow(
     """
     # NULL vectors are excluded JVM-side (both sides) before any
     # matrix is built or crosses the Arrow boundary.
-    qrows = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col).collect()
+    q_ids, qm = _query_matrix(
+        "cosine_topk_arrow", corpus, queries, None, id_col, vec_col
     )
-    if not qrows:
+    if not len(q_ids):
         # empty query set: a valid empty result, not a crash
         return corpus.sparkSession.createDataFrame([], _TOPK)
-    q_ids, qm = _query_arrays(qrows)
     qn = _norms(qm)
 
     def score(pdf):
@@ -1160,13 +1117,12 @@ def int8_dot_topk_arrow(
     """
     # NULL vectors are excluded on both sides, the same rule as every
     # similarity entry point (cosine_topk_arrow's convention)
-    qrows = queries.where(
-        F.col(vec_col).isNotNull()
-    ).select(id_col, vec_col).collect()
+    q_ids, qm = _query_matrix(
+        "int8_dot_topk_arrow", corpus, queries, None, id_col, vec_col
+    )
     out_schema = "query_id long, corpus_id long, qdot long"
-    if not qrows:
+    if not len(q_ids):
         return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids, qm = _query_arrays(qrows)
     qq = np.floor((qm * 127.0) / scale + 0.5)  # already-exact ints
 
     def score(pdf):
@@ -1226,12 +1182,11 @@ def pq_adc_topk_arrow(
     """
 
     out_schema = "query_id long, corpus_id long, adist long"
-    qrows = queries.where(
-        F.col(vec_col).isNotNull()
-    ).select(id_col, vec_col).collect()
-    if not qrows or not centroids:
+    q_ids, qm = _query_matrix(
+        "pq_adc_topk_arrow", corpus, queries, None, id_col, vec_col
+    )
+    if not len(q_ids) or not centroids:
         return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids, qm = _query_arrays(qrows)
     nq = len(q_ids)
     kc = len(centroids)
     cents = np.array([list(v) for _, v in centroids], dtype=np.float64)

@@ -1217,7 +1217,8 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-bucketed prefix operator over that bounded table — no
     global single-partition window even in the worst case.
     """
-    from metadata_wrangler_spark.operators.prefix import global_order_stats
+    from metadata_wrangler_spark.operators import prefix
+    from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 
     edges = build_edges(spark, sf_dir)
     und = (
@@ -1243,9 +1244,9 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cumulative share is a driver cumsum (one job); the
     # sqrt(2m)-degrees pathological case falls back to the
     # distributed prefix operator.
-    rows = hist.limit(65537).collect()
-    if len(rows) <= 65536:
-        rows.sort(key=lambda r: r["degree"])
+    tbl = fetch_at_most(hist, prefix._DRIVER_TOTALS_MAX, "graph_degree_hist")
+    if tbl is not None:
+        rows = sorted(tbl.to_pylist(), key=lambda r: r["degree"])
         total = sum(r["n_nodes"] for r in rows)
         out, run = [], 0
         for r in rows:
@@ -1256,7 +1257,7 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             out, "degree bigint, n_nodes bigint, cum_nodes_ppm bigint"
         )
-    cum = global_order_stats(
+    cum = prefix.global_order_stats(
         hist, [F.asc("degree")], cum_cols=["n_nodes"], rank_col=None,
         total_col="__nb",
     )

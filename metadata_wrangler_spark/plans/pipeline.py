@@ -673,7 +673,6 @@ def pipe_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_SEARCH_POOL,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
     ).join(
         emb.select(
             F.col("vec_id").alias("corpus_id"),

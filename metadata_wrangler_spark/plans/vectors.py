@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import similarity
+from metadata_wrangler_spark.operators.driver_fetch import count_at_most
 from metadata_wrangler_spark.plans import register
 
 # Query set: a deterministic slice of the corpus.
@@ -48,8 +49,8 @@ def _past_pair_budget(emb) -> bool:
     sf0.1, the extended-series floor class)."""
     n_kernel = int((101 * _ANN_EXPR_PAIR_BUDGET) ** 0.5)  # ~31.8k
     n_kernel = min(n_kernel, 2**31 - 1)  # limit() takes a Java int
-    probed = emb.select("vec_id").limit(n_kernel).count()
-    return probed >= n_kernel
+    ids = emb.select("vec_id")
+    return count_at_most(ids, n_kernel - 1, "sim_expr_tier") >= n_kernel
 
 # DuckDB spelling of the deterministic sequential-fold dot product /
 # norm used by operators.similarity (both engines fold doubles left
@@ -171,7 +172,6 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_K,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
     )
 
 
@@ -231,7 +231,6 @@ def sim_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_K, probe_hamming=1,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
     )
 
 
@@ -308,11 +307,8 @@ def sim_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (The query side deliberately does NOT reuse the corpus branch:
     # it would inherit this repartition and serialize behind it.)
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    # Vector count is a parquet-metadata lookup (~0.2 s warm at
-    # sf10) — the tier probe's stats input, same pattern as
-    # g_shortest_path's edge_count_hint.
     return similarity.lsh_cosine_topk_multitable(
-        corpus, queries, _TABLES, k=_K, corpus_count_hint=emb.count()
+        corpus, queries, _TABLES, k=_K
     )
 
 
@@ -389,12 +385,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    # Vector count is a parquet-metadata lookup — the tier probe's
-    # stats input, same pattern as sim_lsh_multitable_topk's hint.
     return similarity.ivf_cosine_topk(
         corpus, None, _CENTROIDS, k=_K, nprobe=_NPROBE,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
     )
 
 
@@ -1450,7 +1443,6 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_K, query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
     ).select("query_id", "corpus_id", F.col("rank").alias("a_rank"))
     return (
         exact.join(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators import closure
 from metadata_wrangler_spark.operators.closure import (
     connected_components,
     equivalent_ids,
@@ -74,7 +75,9 @@ def test_connected_components_cycle_and_chain(spark):
     assert rows(out) == [(5, 5), (6, 5), (7, 5), (8, 5)]
 
 
-def test_connected_components_long_path_converges_logarithmically(spark):
+def test_connected_components_long_path_converges_logarithmically(
+    spark, monkeypatch
+):
     # Adversarial diameter: a 4096-node chain. Plain min-label
     # propagation moves the label one hop per round, so a 30-round
     # cap could never converge (it would need ~4095 rounds). With
@@ -83,15 +86,14 @@ def test_connected_components_long_path_converges_logarithmically(spark):
     # proves the O(log diameter) path is active.
     n = 4096
     e = _edges(spark, [(i, i + 1, 1.0) for i in range(n - 1)])
-    out = connected_components(
-        e, max_iterations=30, pointer_jump_after=5, local_solve_max_edges=0
-    )
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
+    out = connected_components(e, max_iterations=30, pointer_jump_after=5)
     got = rows(out)
     assert len(got) == n
     assert all(component == 0 for _, component in got)
 
 
-def test_local_and_distributed_tiers_agree(spark):
+def test_local_and_distributed_tiers_agree(spark, monkeypatch):
     # The adaptive small-graph tier (driver-local BFS / union-find)
     # must be row-identical to the distributed loop on the same input.
     e = _edges(
@@ -101,13 +103,12 @@ def test_local_and_distributed_tiers_agree(spark):
     )
     seeds = _seeds(spark, [1, 9])
     local_eq = equivalent_ids(e, seeds, levels=4, threshold=0.3)
-    dist_eq = equivalent_ids(
-        e, seeds, levels=4, threshold=0.3, local_solve_max_edges=0
-    )
+    local_cc = connected_components(e)
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
+    dist_eq = equivalent_ids(e, seeds, levels=4, threshold=0.3)
     assert rows(local_eq) == rows(dist_eq)
 
-    local_cc = connected_components(e)
-    dist_cc = connected_components(e, local_solve_max_edges=0)
+    dist_cc = connected_components(e)
     assert rows(local_cc) == rows(dist_cc)
 
 
@@ -205,7 +206,7 @@ def _wedges(spark, triples):
     return spark.createDataFrame(triples, "u bigint, v bigint, code bigint")
 
 
-def test_shortest_path_tiers_agree(spark):
+def test_shortest_path_tiers_agree(spark, monkeypatch):
     """bounded_shortest_paths: the numpy Bellman-Ford local tier and
     the min-plus doubling distributed tier must be row-identical —
     including the zero-walk source row, cycles that cannot undercut
@@ -230,9 +231,9 @@ def test_shortest_path_tiers_agree(spark):
     for srcs in ([1], [1, 9], [12]):
         sources = spark.createDataFrame([(s,) for s in srcs], "node bigint")
         local = bounded_shortest_paths(e, nodes, sources, hops=6)
-        dist = bounded_shortest_paths(
-            e, nodes, sources, hops=6, local_solve_max_edges=0
-        )
+        with monkeypatch.context() as m:
+            m.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
+            dist = bounded_shortest_paths(e, nodes, sources, hops=6)
         assert rows(local) == rows(dist), srcs
     # hop bound honored in both tiers: node 8 needs 7 edges
     got = {
@@ -242,16 +243,17 @@ def test_shortest_path_tiers_agree(spark):
         ).collect()
     }
     assert 10 not in got and 8 in got
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
     got_d = {
         r["node"]
         for r in bounded_shortest_paths(
-            e, nodes, _seeds(spark, [1]), hops=6, local_solve_max_edges=0
+            e, nodes, _seeds(spark, [1]), hops=6
         ).collect()
     }
     assert got == got_d
 
 
-def test_shortest_path_tiers_agree_on_random_graphs(spark):
+def test_shortest_path_tiers_agree_on_random_graphs(spark, monkeypatch):
     """Seeded random graphs through BOTH tiers — cycles, parallel
     edges with different codes, unreachable islands, multi-source:
     the local numpy core and the distributed doubling must stay
@@ -284,7 +286,7 @@ def test_shortest_path_tiers_agree_on_random_graphs(spark):
         )
         hops = rng.choice([2, 4, 6])
         local = bounded_shortest_paths(e, nodes, sources, hops=hops)
-        dist = bounded_shortest_paths(
-            e, nodes, sources, hops=hops, local_solve_max_edges=0
-        )
+        with monkeypatch.context() as m:
+            m.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
+            dist = bounded_shortest_paths(e, nodes, sources, hops=hops)
         assert rows(local) == rows(dist), (trial, srcs, hops)

@@ -304,7 +304,7 @@ def test_decay_halflife_is_single_pass(spark, queries):
     assert len(keys) == 1 and next(iter(keys)).startswith("user_id")
 
 
-def test_shortest_path_doubling_shape(spark):
+def test_shortest_path_doubling_shape(spark, monkeypatch):
     """The DISTRIBUTED tier of bounded_shortest_paths (min-plus
     doubling — the past-budget path; round 9 routes small graphs
     through the numpy local tier, so force the distributed tier
@@ -313,6 +313,7 @@ def test_shortest_path_doubling_shape(spark):
     per-composition min must have a map-side partial phase, and the
     plan must not exceed the 3 hash exchanges of the documented
     design (one per min aggregate)."""
+    from metadata_wrangler_spark.operators import closure
     from metadata_wrangler_spark.operators.closure import (
         bounded_shortest_paths,
     )
@@ -331,10 +332,9 @@ def test_shortest_path_doubling_shape(spark):
         F.col("c_custkey").alias("node")
     )
     sources = nodes.where(F.col("node") == 1)
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
     plan = explain_str(
-        bounded_shortest_paths(
-            one_hop, nodes, sources, hops=6, local_solve_max_edges=0
-        )
+        bounded_shortest_paths(one_hop, nodes, sources, hops=6)
     )
     assert plan.count("BroadcastHashJoin") >= 2  # two extensions
     assert "CartesianProduct" not in plan

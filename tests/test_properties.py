@@ -331,7 +331,7 @@ def test_global_order_stats_property(spark):
     run()
 
 
-def test_global_order_stats_property_random_groups(spark):
+def test_global_order_stats_property_random_groups(spark, monkeypatch):
     """Randomized grouped prefix-stat parity: for arbitrary
     (group, value) data — duplicate values, NULL group keys, single-
     row groups — both offset tiers of global_order_stats reproduce
@@ -370,9 +370,8 @@ def test_global_order_stats_property_random_groups(spark):
             ).collect()
         }
         for tier_max in (prefix._DRIVER_TOTALS_MAX, 1):
-            orig = prefix._DRIVER_TOTALS_MAX
-            prefix._DRIVER_TOTALS_MAX = tier_max
-            try:
+            with monkeypatch.context() as m:
+                m.setattr(prefix, "_DRIVER_TOTALS_MAX", tier_max)
                 got = {
                     r["id"]: (r["rn"], r["cum_v"])
                     for r in prefix.global_order_stats(
@@ -380,8 +379,6 @@ def test_global_order_stats_property_random_groups(spark):
                         group_cols=["g"], cum_cols=["v"], npart=5,
                     ).collect()
                 }
-            finally:
-                prefix._DRIVER_TOTALS_MAX = orig
             assert got == want
 
     run()

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators import skew
-from tests.test_plan_shapes import explain_str
+from tests.test_plan_shapes import SF, explain_str
 
 
 def _skewed(spark):
@@ -286,6 +286,41 @@ def test_grouped_rank_value_sums_ungrouped_big_values_empty(spark):
     assert grouped_rank_value_sums(empty, "v", npart=4) == []
 
 
+def test_grouped_rank_value_sums_rejects_over_cap_partials(
+    spark, monkeypatch
+):
+    """The (bucket, group) partials compose on the driver, so their
+    fetch is capped at _DRIVER_TOTALS_MAX: past it the operator must
+    raise, naming the cap, instead of collecting without bound."""
+    from metadata_wrangler_spark.operators import prefix
+
+    df = spark.range(0, 60).select(
+        (F.col("id") % 3).cast("string").alias("g"), F.col("id").alias("v")
+    )
+    monkeypatch.setattr(prefix, "_DRIVER_TOTALS_MAX", 1)  # 3 groups > 1
+    with pytest.raises(ValueError, match="_DRIVER_TOTALS_MAX=1"):
+        prefix.grouped_rank_value_sums(df, "v", group_cols=["g"], npart=4)
+
+
+def test_degree_distribution_distributed_tier_matches_driver_tier(
+    spark, monkeypatch
+):
+    """g_degree_distribution finishes on the driver when the degree
+    histogram fits _DRIVER_TOTALS_MAX and on global_order_stats past
+    it; forcing the bound to 1 runs the distributed tier, which must
+    return the driver tier's rows."""
+    from metadata_wrangler_spark.operators import prefix
+    from metadata_wrangler_spark.plans import QUERIES, load_all_plans
+
+    load_all_plans()
+    query = QUERIES["g_degree_distribution"]
+    driver = sorted(tuple(r) for r in query(spark, SF).collect())
+    monkeypatch.setattr(prefix, "_DRIVER_TOTALS_MAX", 1)
+    distributed = sorted(tuple(r) for r in query(spark, SF).collect())
+    assert len(driver) > 1
+    assert distributed == driver
+
+
 def test_global_order_stats_plan_has_no_single_partition_window(spark):
     """The operator's own plan must pass the audit it exists to
     satisfy: every window partitioned, offsets via broadcast join."""
@@ -385,7 +420,9 @@ def test_global_order_stats_grouped_null_keys_match_flat_window(spark):
     assert got == want
 
 
-def test_global_order_stats_distributed_tier_matches_driver_tier(spark):
+def test_global_order_stats_distributed_tier_matches_driver_tier(
+    spark, monkeypatch
+):
     """The triangular-join offsets tier (taken when the totals table
     exceeds the driver bound) must produce the same output as the
     driver-side cumsum tier that small runs take — including NULL
@@ -407,17 +444,13 @@ def test_global_order_stats_distributed_tier_matches_driver_tier(spark):
             df, [F.asc("v"), F.asc("id")], **kw
         ).collect()
     }
-    orig = prefix._DRIVER_TOTALS_MAX
-    prefix._DRIVER_TOTALS_MAX = 1  # totals has 5×4=20 rows > 1
-    try:
-        big = {
-            r["id"]: (r["rn"], r["cum_v"], r["n_total"])
-            for r in prefix.global_order_stats(
-                df, [F.asc("v"), F.asc("id")], **kw
-            ).collect()
-        }
-    finally:
-        prefix._DRIVER_TOTALS_MAX = orig
+    monkeypatch.setattr(prefix, "_DRIVER_TOTALS_MAX", 1)  # 5×4=20 rows > 1
+    big = {
+        r["id"]: (r["rn"], r["cum_v"], r["n_total"])
+        for r in prefix.global_order_stats(
+            df, [F.asc("v"), F.asc("id")], **kw
+        ).collect()
+    }
     assert len(small) == 600
     assert small == big
 
@@ -717,7 +750,9 @@ def _cached_partitions(spark) -> int:
     )
 
 
-def test_iterative_operators_release_checkpoints_synchronously(spark):
+def test_iterative_operators_release_checkpoints_synchronously(
+    spark, monkeypatch
+):
     """Round-9 checkpoint-lifetime bound (SCALE.md round-8 finding
     1): an iterative query's dead localCheckpoint rounds must be
     released by the operator itself, not left for the asynchronous
@@ -727,6 +762,7 @@ def test_iterative_operators_release_checkpoints_synchronously(spark):
     query, at most its small final-result checkpoint may stay pinned
     (a handful of |V|-row partitions), never the edge-table rounds
     (32+ partitions each)."""
+    from metadata_wrangler_spark.operators import closure
     from metadata_wrangler_spark.operators.closure import (
         connected_components,
         equivalent_ids,
@@ -751,16 +787,15 @@ def test_iterative_operators_release_checkpoints_synchronously(spark):
     from metadata_wrangler_spark.plans.graph import build_edges
 
     edges = build_edges(spark, sf)
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
     before = _cached_partitions(spark)
-    connected_components(edges, local_solve_max_edges=0).count()
+    connected_components(edges).count()
     delta = _cached_partitions(spark) - before
     assert delta <= 40, f"connected_components pinned {delta} partitions"
 
     seeds = edges.select(F.col("src").alias("node")).limit(3)
     before = _cached_partitions(spark)
-    equivalent_ids(
-        edges, seeds, levels=4, threshold=0.0, local_solve_max_edges=0
-    ).count()
+    equivalent_ids(edges, seeds, levels=4, threshold=0.0).count()
     delta = _cached_partitions(spark) - before
     # equivalent_ids' frontier checkpoints ARE the result data and
     # stay pinned until consumed; the edge materialization must not.

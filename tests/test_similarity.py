@@ -236,7 +236,7 @@ def test_multitable_arrow_buckets_match_expression_spelling(spark):
     assert sgot == sexp
 
 @pytest.mark.parametrize("probe_hamming", [0, 1, 2])
-def test_lsh_topk_tiers_row_identical(spark, probe_hamming):
+def test_lsh_topk_tiers_row_identical(spark, monkeypatch, probe_hamming):
     """The single-table LSH tier probe must only pick an
     implementation, never a result: the fused bucket-scan kernel
     (budget default) and the bucket-join tier (budget forced to 0)
@@ -252,16 +252,17 @@ def test_lsh_topk_tiers_row_identical(spark, probe_hamming):
         emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
         query_pred=pred,
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     join = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
-        query_pred=pred, fused_pair_budget=0,
+        query_pred=pred,
     )
     assert sorted(map(tuple, fused.collect())) == sorted(
         map(tuple, join.collect())
     )
 
 
-def test_ivf_topk_tiers_row_identical(spark):
+def test_ivf_topk_tiers_row_identical(spark, monkeypatch):
     """The IVF tier probe must only pick an implementation, never a
     result: the fused cell-scan kernel (budget default) and the
     cell-join tier (budget forced to 0) return identical rows —
@@ -275,9 +276,9 @@ def test_ivf_topk_tiers_row_identical(spark):
     fused = similarity.ivf_cosine_topk(
         emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     join = similarity.ivf_cosine_topk(
-        emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred,
-        fused_pair_budget=0,
+        emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
     )
     assert sorted(map(tuple, fused.collect())) == sorted(
         map(tuple, join.collect())
@@ -364,7 +365,7 @@ def test_knn_graph_edges_subset_of_bucket_pairs(spark, sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001"])
-def test_multitable_tiers_row_identical(spark, sf_dir):
+def test_multitable_tiers_row_identical(spark, monkeypatch, sf_dir):
     """The fused collision-scan tier and the bucket-join tier of
     lsh_cosine_topk_multitable must produce IDENTICAL rows — same
     candidate semantics (collide in ANY table), same fold order,
@@ -378,8 +379,9 @@ def test_multitable_tiers_row_identical(spark, sf_dir):
     fused = similarity.lsh_cosine_topk_multitable(
         emb, queries, _TABLES, k=5
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     joined = similarity.lsh_cosine_topk_multitable(
-        emb, queries, _TABLES, k=5, fused_pair_budget=0
+        emb, queries, _TABLES, k=5
     )
     rows_f = sorted(tuple(r) for r in fused.collect())
     rows_j = sorted(tuple(r) for r in joined.collect())
@@ -387,7 +389,9 @@ def test_multitable_tiers_row_identical(spark, sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001"])
-def test_multitable_tiers_row_identical_with_zero_norm_vectors(spark, sf_dir):
+def test_multitable_tiers_row_identical_with_zero_norm_vectors(
+    spark, monkeypatch, sf_dir
+):
     """Degenerate inputs: zero-norm vectors produce 0/0 = NaN
     cosines. Both tiers must DROP those pairs — round 9's bucket-join
     tier emitted them and Spark's descending sort ranked NaN above
@@ -410,8 +414,9 @@ def test_multitable_tiers_row_identical_with_zero_norm_vectors(spark, sf_dir):
     fused = similarity.lsh_cosine_topk_multitable(
         corpus, queries, _TABLES, k=5
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     joined = similarity.lsh_cosine_topk_multitable(
-        corpus, queries, _TABLES, k=5, fused_pair_budget=0
+        corpus, queries, _TABLES, k=5
     )
     rows_f = sorted(tuple(r) for r in fused.collect())
     rows_j = sorted(tuple(r) for r in joined.collect())
@@ -430,8 +435,8 @@ def test_ann_query_cap_lsh_and_ivf_fall_back_to_join_tier(
     must route the single-table LSH and IVF operators to their join
     tier — loudly, and with identical rows (the cap is a tier pick,
     never a result change). The driver-side fetch itself is bounded
-    by limit(cap + 1), so this also pins that the fallback path
-    builds its query side from the DataFrame, not the collect."""
+    at cap + 1 rows, so this also pins that the fallback path
+    builds its query side from the DataFrame, not the fetch."""
     corpus = _vecs(
         spark,
         [(i, [1.0 + 0.01 * i, 0.5 - 0.02 * i]) for i in range(8)],
@@ -463,18 +468,28 @@ def test_ann_query_cap_lsh_and_ivf_fall_back_to_join_tier(
     assert sorted(map(tuple, capped_ivf.collect())) == base_ivf
 
 
-def test_ann_query_cap_multitable_raises(spark, monkeypatch):
-    """The multitable operator scores against the driver matrix in
-    BOTH tiers, so an over-cap query set must raise with the
+@pytest.mark.parametrize(
+    "op, args",
+    [
+        ("lsh_cosine_topk_multitable", ([[[1.0, -1.0]], [[0.5, 0.5]]],)),
+        ("cosine_topk_arrow", ()),
+        ("int8_dot_topk_arrow", (1.0,)),
+        ("pq_adc_topk_arrow", ([(0, [1.0]), (1, [0.5])], 2, 1)),
+    ],
+    ids=["multitable", "cosine_arrow", "int8_arrow", "pq_arrow"],
+)
+def test_ann_query_cap_raises_without_driver_free_tier(
+    spark, monkeypatch, op, args
+):
+    """Multitable LSH scores against the driver matrix in BOTH tiers,
+    and the Arrow scorers (exact cosine, int8, PQ) have only the
+    driver-matrix tier, so an over-cap query set must raise with the
     contract spelled out instead of building an unbounded matrix."""
     corpus = _vecs(
         spark,
         [(i, [1.0 + 0.01 * i, 0.5 - 0.02 * i]) for i in range(8)],
     )
     queries = corpus.where(F.col("vec_id") < 3)
-    tables = [[[1.0, -1.0]], [[0.5, 0.5]]]
     monkeypatch.setattr(similarity, "ANN_QUERY_CAP", 1)
     with pytest.raises(ValueError, match="ANN_QUERY_CAP"):
-        similarity.lsh_cosine_topk_multitable(
-            corpus, queries, tables, k=3
-        )
+        getattr(similarity, op)(corpus, queries, *args, k=3)
