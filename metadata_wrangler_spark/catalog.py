@@ -21,11 +21,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale.
-DIMENSIONS = ("region", "nation")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # session → {(sf_dir, table) → DataFrame}. A DataFrame is just a
 # plan; reusing one avoids re-paying the parquet footer/schema read
@@ -59,18 +54,31 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     if name == "events":
-        # events.parquet may store TIMESTAMP(NANOS), which the Spark
-        # parquet reader rejects natively. The conf is runtime-settable
-        # and must be applied here (not only in the session factory)
-        # because callers may pass in their own SparkSession.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) read via nanosAsLong: convert to a real
-        # microsecond timestamp (integer division — nanos exceed 2^53,
-        # so float division would corrupt them).
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        df = _read_events(spark, sf_dir)
+    else:
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     per_session[key] = df
+    return df
+
+
+def _read_events(
+    spark: SparkSession, sf_dir: str, after_raw_ts: int | None = None
+) -> DataFrame:
+    """events.parquet with ``ts`` as a timestamp. The file may store
+    TIMESTAMP(NANOS), which the Spark parquet reader rejects
+    natively; the conf is runtime-settable and must be applied here
+    (not only in the session factory) because callers may pass in
+    their own SparkSession. Read via nanosAsLong, ``ts`` is converted
+    to a real microsecond timestamp (integer division — nanos exceed
+    2^53, so float division would corrupt them). ``after_raw_ts``
+    keeps raw nanos above it, filtered BEFORE the conversion so the
+    scan gets a pushable predicate."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    if dict(df.dtypes).get("ts") == "bigint":
+        if after_raw_ts is not None:
+            df = df.where(F.col("ts") > F.lit(after_raw_ts))
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 
 
@@ -140,24 +148,7 @@ def events_since(
         datetime.strptime(watermark, "%Y-%m-%d %H:%M:%S")
         .replace(tzinfo=timezone.utc).timestamp() * 1_000_000
     ) - 86_400 * 1_000_000
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.where(F.col("ts") > F.lit(band_micros * 1000))
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    raw = _read_events(spark, sf_dir, after_raw_ts=band_micros * 1000)
     return raw.where(
         F.col("ts") > F.lit(watermark).cast("timestamp")
     )
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (mirrors the DuckDB oracle
-    environment, where the same names are pre-registered views)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

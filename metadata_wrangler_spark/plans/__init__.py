@@ -188,32 +188,30 @@ def ordered_queries() -> dict[str, QueryFn]:
 
 
 def release_session_caches(spark) -> None:
-    """Drop every sf-scoped persisted intermediate and nudge the
-    JVM so the ContextCleaner reclaims unreachable localCheckpoint
-    blocks.
+    """Drop every persisted intermediate and nudge the JVM so the
+    ContextCleaner reclaims unreachable localCheckpoint blocks.
 
-    Cross-query cache reuse (the shingle baskets shared by the
-    basket-analytics family, the per-source shingle projection
-    shared by the overlap pair) is a deliberate WORKLOAD property —
-    bench.py's concurrent batch keeps it. But a PER-QUERY
-    measurement harness must release it between queries, or one
-    query's pinned storage distorts every successor: measured at
-    the 100x ladder, a_iqr_outliers read 30.7 s inside the ladder
-    session vs 3.1 s standalone — the tfidf/basket frames persisted
-    by earlier queries had squeezed execution memory into spilling.
-    tools/bench_vs_oracle.py calls this between queries; long-lived
-    production sessions running heterogeneous queries should do the
-    same at workload boundaries.
+    This is the only release point. Plans persist shared
+    intermediates (the basket-analytics frames of
+    g_bipartite_project/a_assoc_rules, dd_source_overlap's shingle
+    baskets, the pairwise scorers' tables) and never unpersist them;
+    Spark's CacheManager matches a rebuilt plan to the persisted one,
+    so cross-query reuse needs no memo of our own. That reuse is a
+    deliberate WORKLOAD property — bench.py's concurrent batch keeps
+    it. But a PER-QUERY measurement harness must release it between
+    queries, or one query's pinned storage distorts every successor:
+    measured at the 100x ladder, a_iqr_outliers read 30.7 s inside
+    the ladder session vs 3.1 s standalone — the tfidf/basket frames
+    persisted by earlier queries had squeezed execution memory into
+    spilling. tools/bench_vs_oracle.py calls this between queries;
+    long-lived production sessions running heterogeneous queries (or
+    switching scale factors) should do the same at workload
+    boundaries.
 
     The JVM-GC nudge is a classic-session extra: under Spark Connect
     there is no ``sparkContext``/``_jvm`` bridge, so the nudge is
-    skipped and the cache/catalog clearing above still runs (the
-    server's own GC reclaims checkpoint blocks on its schedule)."""
-    from metadata_wrangler_spark.plans.documents import clear_overlap_cache
-    from metadata_wrangler_spark.plans.graph import clear_basket_cache
-
-    clear_overlap_cache()
-    clear_basket_cache()
+    skipped and the cache clearing above still runs (the server's
+    own GC reclaims checkpoint blocks on its schedule)."""
     spark.catalog.clearCache()
     # Unreachable localCheckpoint RDDs (iterative plans truncate
     # lineage each round) are reclaimed by the ContextCleaner only

@@ -2594,40 +2594,11 @@ def txt_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-source overlap matrix (corpus curation)
 # ---------------------------------------------------------------------------
 
-#: (applicationId, sf_dir) -> persisted per-shingle source-basket
-#: frame. Vocab-sized (one row per distinct shingle; payload bounded
-#: by |sources|), so MEMORY_AND_DISK persistence is safe at any SF.
-#: Same eviction contract as plans/graph.py::_BASKET_CACHE: one
-#: sf_dir's frame lives per application; switching scales evicts.
-_OVERLAP_CACHE: dict = {}
-
-
-def clear_overlap_cache() -> None:
-    """Unpersist and drop the memoized overlap baskets. Bench/test
-    harnesses iterating sf ladders call this between scales."""
-    for df in _OVERLAP_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-    _OVERLAP_CACHE.clear()
-
-
 def _overlap_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _OVERLAP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    stale = [k for k in _OVERLAP_CACHE if k[0] == key[0] and k[1] != sf_dir]
-    for k in stale:
-        try:
-            _OVERLAP_CACHE.pop(k).unpersist()
-        except Exception:
-            pass
     docs = widen(spark, load(spark, sf_dir, "documents"))
-    baskets = (
+    return (
         dedup.with_words(
             docs.select(F.col("source").alias("id_src"), "text"),
             "id_src", "text",
@@ -2638,8 +2609,6 @@ def _overlap_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("source")).alias("s"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _OVERLAP_CACHE[key] = baskets
-    return baskets
 
 
 @register(
@@ -2688,8 +2657,9 @@ def dd_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|) and is PERSISTED, so the two downstream consumers —
     pair counts and per-source totals (now derived by exploding the
     baskets, not by re-reading the corpus) — share the single corpus
-    scan at any SF. Eviction mirrors plans/graph.py's basket cache:
-    entering a new sf_dir unpersists the old scale's frame.
+    scan at any SF. Spark's CacheManager serves the persisted
+    baskets to a rebuilt plan, like every other persisted
+    intermediate; release_session_caches frees them.
     Never all-pairs on documents. At 100 TB the shingle set drops
     to a per-source KMV sketch (a_kmv_set_ops shows the plumbing)
     for an estimated matrix at a fraction of the shuffle.

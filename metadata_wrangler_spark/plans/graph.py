@@ -943,50 +943,21 @@ def g_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bipartite projection: co-fulfillment supplier graph with lift
 # ---------------------------------------------------------------------------
 
-#: (applicationId, sf_dir) -> (basket, undirected pair counts,
-#: per-supplier counts, 1-row order count) — all persisted.
-#: g_bipartite_project and a_assoc_rules scan/dedup the SAME
-#: (l_orderkey, l_suppkey) projection, shuffle it on the same key,
-#: share the same pair-count numerator (confidence and lift differ
-#: only in denominators), AND both broadcast the same two
-#: denominators — in a bench batch or dashboard refresh that runs
-#: both, memoizing the four intermediates halves the heavy work.
-#: Every frame is counter-sized (distinct basket lines; distinct
-#: co-occurring pairs; one row per supplier; one scalar), so
-#: MEMORY_AND_DISK persistence is safe at any SF.
-_BASKET_CACHE: dict = {}
-
-
-def clear_basket_cache() -> None:
-    """Unpersist and drop every memoized basket frame. Bench/test
-    harnesses iterating sf ladders call this between scales."""
-    for frames in _BASKET_CACHE.values():
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
-    _BASKET_CACHE.clear()
-
-
+# g_bipartite_project and a_assoc_rules scan/dedup the SAME
+# (l_orderkey, l_suppkey) projection, shuffle it on the same key,
+# share the same pair-count numerator (confidence and lift differ
+# only in denominators), AND both broadcast the same two
+# denominators. _basket_and_pairs persists the four intermediates
+# (basket, undirected pair counts, per-supplier counts, 1-row order
+# count); Spark's CacheManager matches the rebuilt plans to the
+# persisted ones, so a batch or dashboard refresh that runs both
+# queries does the heavy work once. release_session_caches frees
+# them. Every frame is counter-sized (distinct basket lines;
+# distinct co-occurring pairs; one row per supplier; one scalar), so
+# MEMORY_AND_DISK persistence is safe at any SF.
 def _basket_and_pairs(spark: SparkSession, sf_dir: str):
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BASKET_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # One sf_dir's frames live per application: entering a new scale
-    # (bench ladders iterate sf0.001 -> sf1) evicts the old scale's
-    # persisted frames instead of accumulating MEMORY_AND_DISK
-    # storage for the life of the session (round-7 advice).
-    stale = [k for k in _BASKET_CACHE if k[0] == key[0] and k[1] != sf_dir]
-    for k in stale:
-        for df in _BASKET_CACHE.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
     li = load(spark, sf_dir, "lineitem")
     # Partitioning: one explicit exchange on l_orderkey up front.
     # HashPartitioning(l_orderkey) satisfies the clustered
@@ -1026,8 +997,7 @@ def _basket_and_pairs(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BASKET_CACHE[key] = (os_, pairs, sc, n)
-    return _BASKET_CACHE[key]
+    return os_, pairs, sc, n
 
 
 _LIFT_MIN_PPM = 1_100_000  # keep pairs with lift >= 1.1x independence
@@ -1072,8 +1042,9 @@ def g_bipartite_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarly bounded), one hash-aggregate per pair, then two
     per-node joins and a broadcast 1-row scalar for N. No all-pairs
     stage anywhere; skew guard at scale is the usual hot-basket cap.
-    The basket and pair-count intermediates are memoized
-    (_basket_and_pairs) and shared with a_assoc_rules.
+    The basket and pair-count intermediates are persisted
+    (_basket_and_pairs) and shared with a_assoc_rules through
+    Spark's CacheManager.
     """
     _os, pairs, sc, n = _basket_and_pairs(spark, sf_dir)
     out = (
@@ -1135,8 +1106,9 @@ def a_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift one.
 
     Scale shape: identical to the projection — and it literally
-    SHARES the projection's intermediates: the memoized basket and
-    the undirected pair counts from _basket_and_pairs (the directed
+    SHARES the projection's intermediates: the persisted basket and
+    the undirected pair counts from _basket_and_pairs, which Spark's
+    CacheManager serves to both queries (the directed
     w(a,b) for a ≠ b equals the unordered pair's weight, so the
     directed table is the undirected one unioned with its swap — a
     map-side mirror, no second self-join). Broadcast antecedent

@@ -344,7 +344,8 @@ def test_shortest_path_doubling_shape(spark, monkeypatch):
 def test_basket_memo_is_reused_and_cached(spark):
     """g_bipartite_project and a_assoc_rules must read the SAME
     persisted basket/pair intermediates (InMemoryTableScan in both
-    plans; cache objects identical across the two calls)."""
+    plans; a rebuild of the intermediates resolves to the same cached
+    data through Spark's CacheManager)."""
     from metadata_wrangler_spark.plans import graph as G
 
     d1 = G.g_bipartite_project(spark, SF)
@@ -352,11 +353,13 @@ def test_basket_memo_is_reused_and_cached(spark):
     p1, p2 = explain_str(d1), explain_str(d2)
     assert "InMemoryTableScan" in p1
     assert "InMemoryTableScan" in p2
-    key = (spark.sparkContext.applicationId, SF)
-    assert key in G._BASKET_CACHE
-    os_a, pairs_a, sc_a, n_a = G._basket_and_pairs(spark, SF)
-    os_b, pairs_b, sc_b, n_b = G._basket_and_pairs(spark, SF)
-    assert os_a is os_b and pairs_a is pairs_b  # memo hit, not rebuild
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for a, b in zip(G._basket_and_pairs(spark, SF),
+                    G._basket_and_pairs(spark, SF)):
+        hit_a = cache.lookupCachedData(a._jdf)
+        hit_b = cache.lookupCachedData(b._jdf)
+        assert hit_a.isDefined() and hit_b.isDefined()
+        assert hit_a.get().equals(hit_b.get())  # one cache entry
 
 
 def test_idf_rarity_has_no_pair_dedup_exchange(spark, queries):

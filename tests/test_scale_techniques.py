@@ -711,10 +711,14 @@ def test_asof_states_edge_cases(spark):
     assert {"back_state", "fwd_state"} <= set(empty.columns)
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_release_session_caches_drops_all_persisted_frames(spark):
     """Per-query measurement hygiene: after release_session_caches,
-    no sf-scoped persisted frame (basket analytics, overlap
-    baskets) survives and a fresh persist still works — the helper
+    no persisted frame of the basket analytics or the overlap
+    baskets survives and a fresh persist still works — the helper
     tools/bench_vs_oracle.py calls between queries so one query's
     pinned storage cannot distort a successor's wall."""
     from metadata_wrangler_spark.plans import (
@@ -725,22 +729,50 @@ def test_release_session_caches_drops_all_persisted_frames(spark):
     from metadata_wrangler_spark.plans import graph as graph_mod
 
     load_all_plans()
-    sf = "/root/testdata/sf0.001"
-    # Populate both named caches via their public query entry points.
-    graph_mod.g_bipartite_project(spark, sf).limit(1).collect()
-    docs_mod.dd_source_overlap(spark, sf).limit(1).collect()
-    # Both caches must be populated independently, else the clear
-    # assertions below pass vacuously for whichever cache the
-    # populate step stopped filling (round-8 advice).
-    assert graph_mod._BASKET_CACHE
-    assert docs_mod._OVERLAP_CACHE
+    # Start from a released session (an earlier test may have cached
+    # the same frames), and require each query to persist storage of
+    # its own, else the release assertions below pass vacuously for
+    # whichever query stopped persisting (round-8 advice).
+    release_session_caches(spark)
+    base = _persistent_rdd_ids(spark)
+    graph_mod.g_bipartite_project(spark, SF).collect()
+    basket = _persistent_rdd_ids(spark) - base
+    assert basket
+    docs_mod.dd_source_overlap(spark, SF).collect()
+    overlap = _persistent_rdd_ids(spark) - base - basket
+    assert overlap
 
     release_session_caches(spark)
-    assert not graph_mod._BASKET_CACHE
-    assert not docs_mod._OVERLAP_CACHE
+    left = _persistent_rdd_ids(spark)
+    assert not left & (basket | overlap)
+    # <= base, not == base: the ContextCleaner can reclaim another
+    # test's blocks meanwhile (see test_free_checkpoint_contract).
+    assert len(left) <= len(base)
     # Idempotent on an empty session, and queries still run after.
     release_session_caches(spark)
-    assert graph_mod.g_bipartite_project(spark, sf).count() > 0
+    assert graph_mod.g_bipartite_project(spark, SF).count() > 0
+
+
+def test_basket_intermediates_shared_across_queries(spark):
+    """Spark's CacheManager, not a memo of our own, shares the basket
+    intermediates: re-running g_bipartite_project and then running
+    a_assoc_rules persists nothing new, and a_assoc_rules reads the
+    persisted frames."""
+    from metadata_wrangler_spark.plans import release_session_caches
+    from metadata_wrangler_spark.plans import graph as graph_mod
+
+    release_session_caches(spark)
+    first = graph_mod.g_bipartite_project(spark, SF).collect()
+    persisted = _persistent_rdd_ids(spark)
+    assert graph_mod.g_bipartite_project(spark, SF).collect() == first
+    assert _persistent_rdd_ids(spark) <= persisted
+    rules = graph_mod.a_assoc_rules(spark, SF)
+    assert rules.collect()
+    assert _persistent_rdd_ids(spark) <= persisted
+    assert "InMemoryTableScan" in (
+        rules._jdf.queryExecution().executedPlan().toString()
+    )
+    release_session_caches(spark)
 
 
 def _cached_partitions(spark) -> int:

@@ -14,25 +14,19 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb
 
+from check_oracle import select_queries
+
 from metadata_wrangler_spark.catalog import TABLES
+from metadata_wrangler_spark.plans import ORACLES, release_session_caches
 from metadata_wrangler_spark.session import get_spark
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
-    names = [a for a in args if not os.path.isdir(a)]
-
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    if names:
-        qs = {k: v for k, v in qs.items() if k in names}
-
+    sf_dir, qs = select_queries(sys.argv[1:], "/root/testdata/sf0.1")
     spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
@@ -45,13 +39,11 @@ def main() -> None:
     # Warm the session (JVM, Python workers, parquet footers).
     next(iter(qs.values()))(spark, sf_dir).limit(1).collect()
 
-    from metadata_wrangler_spark.plans import release_session_caches
-
     rows = []
     for name, fn in qs.items():
-        # Per-query attribution: release sf-scoped persisted frames
-        # and let the ContextCleaner reclaim checkpoint blocks BEFORE
-        # each query, so an earlier query's pinned storage can't
+        # Per-query attribution: release persisted frames and let
+        # the ContextCleaner reclaim checkpoint blocks BEFORE each
+        # query, so an earlier query's pinned storage can't
         # squeeze this one into spilling (measured 30.7 s in-session
         # vs 3.1 s standalone for a_iqr_outliers at the 100x ladder
         # before this). Cross-query reuse stays a workload property
@@ -67,7 +59,7 @@ def main() -> None:
             # mostly this measurement artifact, not the plan)
             n = len(fn(spark, sf_dir).toPandas())
             best_s = min(best_s, time.monotonic() - t0)
-        sql = oracles.get(name)
+        sql = ORACLES.get(name)
         best_d = float("inf")
         if sql:
             for _ in range(2):

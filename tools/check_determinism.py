@@ -21,22 +21,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from metadata_wrangler_spark.session import get_spark
-from tools.check_oracle import value_hash
+from tools.check_oracle import select_queries, value_hash
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = (
-        args[0] if args and os.path.isdir(args[0])
-        else "/root/testdata/sf0.001"
-    )
-    names = [a for a in args if not os.path.isdir(a)]
-
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    if names:
-        qs = {n: qs[n] for n in names}
+    sf_dir, qs = select_queries(sys.argv[1:], "/root/testdata/sf0.001")
     spark = get_spark("determinism")
     base = spark.conf.get("spark.sql.shuffle.partitions")
     failing = []

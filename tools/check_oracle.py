@@ -7,6 +7,10 @@ Usage:  python tools/check_oracle.py [sf_dir] [query ...]
         python tools/check_oracle.py [sf_dir] --window
             check ONLY the first 50 ordered queries — exactly the
             slice the driver's per-round correctness gate verifies
+
+The check loop (``sweep``) is shared with the empty/NULL/tiny
+ladders, and the query selection (``select_queries``) also with
+bench_vs_oracle.py, plan_audit.py and check_determinism.py.
 """
 
 from __future__ import annotations
@@ -65,16 +69,31 @@ def oracle_fetch(rel):
     return cols, rows
 
 
-def value_hash(cols: list[str], rows: list[tuple]) -> str:
+def _lines(cols: list[str], rows: list[tuple]) -> list[str]:
+    """Rows as normalized lines, columns in name order, sorted."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
+    return sorted(
         "\x1f".join(_normalize_cell(r[i]) for i in order) for r in rows
     )
+
+
+def value_hash(cols: list[str], rows: list[tuple]) -> str:
     h = hashlib.sha256()
-    for line in lines:
+    for line in _lines(cols, rows):
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
+
+
+def _diff_sample(scols, srows, ocols, orows, k: int = 3) -> str:
+    """Up to ``k`` rows only Spark returned and ``k`` only DuckDB
+    returned, one indented line each, to debug a hash mismatch."""
+    s, o = set(_lines(scols, srows)), set(_lines(ocols, orows))
+    return "".join(
+        f"\n        {side}-only: {line.replace(chr(0x1f), ' | ')}"
+        for side, only in (("spark", s - o), ("duck", o - s))
+        for line in sorted(only)[:k]
+    )
 
 
 def oracle_connection(sf_dir: str):
@@ -92,8 +111,9 @@ def oracle_connection(sf_dir: str):
 def check_one(spark, con, fn, sql: str | None, sf_dir: str) -> list[str]:
     """Run one named plan on Spark and its oracle on DuckDB; return
     the list of mismatches (empty = green). This is the exact
-    comparison the driver's correctness gate applies — shared by the
-    CLI below and tests/test_all_oracles.py."""
+    comparison the driver's correctness gate applies — shared by
+    ``sweep`` and the oracle tests. A hash mismatch carries a sample
+    of the differing rows."""
     sdf = fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     scols = [c.lower() for c in sdf.columns]
@@ -109,87 +129,83 @@ def check_one(spark, con, fn, sql: str | None, sf_dir: str) -> list[str]:
         sh = value_hash(scols, srows)
         oh = value_hash(ocols, orows)
         if sh != oh:
-            problems.append(f"hash spark={sh} duck={oh}")
+            problems.append(f"hash spark={sh} duck={oh}"
+                            + _diff_sample(scols, srows, ocols, orows))
     return problems
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    window = "--window" in args
-    args = [a for a in args if a != "--window"]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+def select_queries(args: list[str], default_sf: str,
+                   window: bool = False) -> tuple[str, dict]:
+    """The oracle tools' command line: an optional leading sf dir
+    (else ``default_sf``), then query names (none = all). Returns the
+    sf dir and the selected queries in ordered_queries() order;
+    ``window`` keeps only the driver's leading VERIFICATION_WINDOW.
 
-    import __spark_entry__ as entrymod
-    from metadata_wrangler_spark.plans import VERIFICATION_WINDOW
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    Raises SystemExit before any Spark session starts when a name is
+    unknown (a mistyped sf dir lands here too) or nothing is
+    selected: a typo must not sweep zero queries and report green."""
+    from metadata_wrangler_spark.plans import (
+        VERIFICATION_WINDOW,
+        load_all_plans,
+        ordered_queries,
+    )
+
+    sf_dir = default_sf
+    if args and os.path.isdir(args[0]):
+        sf_dir, args = args[0], args[1:]
+    load_all_plans()
+    qs = ordered_queries()
+    unknown = sorted(set(args) - set(qs))
+    if unknown:
+        raise SystemExit(f"unknown queries (or bad sf dir): {unknown}")
     if window:
-        queries = dict(list(queries.items())[:VERIFICATION_WINDOW])
+        qs = dict(list(qs.items())[:VERIFICATION_WINDOW])
+    if args:
+        qs = {k: v for k, v in qs.items() if k in args}
+    if not qs:
+        raise SystemExit("no queries selected -- nothing to verify")
+    return sf_dir, qs
 
-    spark = get_spark("check_oracle")
+
+def sweep(qs: dict, sf_dir: str, where: str = "") -> int:
+    """Run ``check_one`` for every selected query against the tables
+    under ``sf_dir``, print one OK/FAIL line per query and a summary
+    (``all green<where>``), and return the exit code."""
+    from metadata_wrangler_spark.plans import ORACLES
+
+    spark = get_spark()
     con = oracle_connection(sf_dir)
-
     failures = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
+    for name, fn in qs.items():
+        t0 = time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
-            failures.append(name)
-            continue
-        spark_secs = time.time() - t0
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) "
-                  f"[{spark_secs:.1f}s]")
-            continue
-        try:
-            ocols, orows = oracle_fetch(con.sql(oracles[name]))
-        except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
-            failures.append(name)
-            continue
-        scols_l = [c.lower() for c in scols]
-        problems = []
-        if sorted(scols_l) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols_l)} duck={sorted(ocols)}")
-        if len(srows) != len(orows):
-            problems.append(f"rows spark={len(srows)} duck={len(orows)}")
-        if not problems:
-            sh = value_hash(scols_l, [tuple(r) for r in srows])
-            oh = value_hash(ocols, orows)
-            if sh != oh:
-                problems.append(f"hash spark={sh} duck={oh}")
-                # show a few differing lines to debug
-                sset = {tuple(_normalize_cell(v) for v in r) for r in
-                        (tuple(x[i] for i in sorted(range(len(scols_l)),
-                         key=lambda j: scols_l[j])) for x in
-                         (tuple(r) for r in srows))}
-                oset = {tuple(_normalize_cell(v) for v in r) for r in
-                        (tuple(x[i] for i in sorted(range(len(ocols)),
-                         key=lambda j: ocols[j])) for x in
-                         (tuple(r) for r in orows))}
-                for d in list(sset - oset)[:3]:
-                    print(f"        spark-only: {d}")
-                for d in list(oset - sset)[:3]:
-                    print(f"        duck-only:  {d}")
+            problems = check_one(spark, con, fn, ORACLES.get(name), sf_dir)
+        except Exception as e:  # noqa: BLE001 - inventory, don't stop
+            problems = [f"{type(e).__name__}: {str(e)[:160]}"]
+        dt = time.monotonic() - t0
         if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
             failures.append(name)
+            print(f"FAIL  {name} [{dt:.1f}s]: {'; '.join(problems)}",
+                  flush=True)
         else:
-            print(f"OK    {name}: {len(srows)} rows [{spark_secs:.1f}s]")
-
+            print(f"OK    {name} [{dt:.1f}s]", flush=True)
     print()
     if failures:
-        print(f"{len(failures)} failing: {failures}")
+        print(f"{len(failures)} / {len(qs)} queries diverge{where}:")
+        for name in failures:
+            print(f"  {name}")
         return 1
-    print("all green")
+    print(f"all green{where}")
     return 0
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    sf_dir, qs = select_queries(
+        [a for a in args if a != "--window"], "/root/testdata/sf0.01",
+        window="--window" in args,
+    )
+    return sweep(qs, sf_dir)
 
 
 if __name__ == "__main__":

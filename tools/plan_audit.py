@@ -101,16 +101,9 @@ def main() -> int:
         python_plan_violations,
     )
     from metadata_wrangler_spark.session import get_spark
+    from tools.check_oracle import select_queries
 
-    args = sys.argv[1:]
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.001"
-    names = [a for a in args if not os.path.isdir(a)]
-
-    import __spark_entry__ as entry
-    qs = entry.queries()
-    if names:
-        qs = {k: v for k, v in qs.items() if k in names}
-
+    sf_dir, qs = select_queries(sys.argv[1:], "/root/testdata/sf0.001")
     spark = get_spark("plan_audit")
     flagged = 0
     for name, fn in sorted(qs.items()):

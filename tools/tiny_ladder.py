@@ -34,14 +34,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb
 
-from check_oracle import check_one, oracle_connection
+from check_oracle import select_queries, sweep
 
 _CUST_MAX = 3
 _DOC_MAX = 2
@@ -90,54 +89,10 @@ def build_mirror(src: str, dst: str) -> None:
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    src = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.001"
-    names = [a for a in args if not os.path.isdir(a)]
+    src, qs = select_queries(sys.argv[1:], "/root/testdata/sf0.001")
     dst = "/tmp/spark_graft_tiny_ladder"
     build_mirror(src, dst)
-
-    from metadata_wrangler_spark.plans import ORACLES, load_all_plans, ordered_queries
-    from metadata_wrangler_spark.session import get_spark
-
-    load_all_plans()
-    qs = ordered_queries()
-    if names:
-        # A mistyped src directory falls through os.path.isdir into
-        # `names`, and an unknown query name would silently filter
-        # qs to {} -- the ladder would then loop over nothing and
-        # exit 0 "all green". Fail loudly instead (round-8 advice).
-        unknown = sorted(set(names) - set(qs))
-        if unknown:
-            raise SystemExit(f"unknown queries (or bad src dir): {unknown}")
-        qs = {k: v for k, v in qs.items() if k in names}
-    if not qs:
-        raise SystemExit("no queries selected -- nothing to verify")
-    spark = get_spark()
-    con = oracle_connection(dst)
-    failures: dict[str, list[str]] = {}
-
-    for name, fn in qs.items():
-        t0 = time.monotonic()
-        try:
-            problems = check_one(spark, con, fn, ORACLES.get(name), dst)
-        except Exception as e:  # noqa: BLE001 - inventory, don't stop
-            problems = [f"{type(e).__name__}: {str(e)[:160]}"]
-        dt = time.monotonic() - t0
-        if problems:
-            failures[name] = problems
-            print(f"FAIL  {name}: {'; '.join(problems)} [{dt:.1f}s]",
-                  flush=True)
-        else:
-            print(f"OK    {name} [{dt:.1f}s]", flush=True)
-    print()
-    if failures:
-        print(f"{len(failures)} / {len(qs)} queries diverge on the "
-              f"tiny ladder:")
-        for name in failures:
-            print(f"  {name}")
-        return 1
-    print("all green on the tiny ladder")
-    return 0
+    return sweep(qs, dst, " on the tiny ladder")
 
 
 if __name__ == "__main__":
