@@ -951,10 +951,12 @@ def g_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (basket, undirected pair counts, per-supplier counts, 1-row order
 # count); Spark's CacheManager matches the rebuilt plans to the
 # persisted ones, so a batch or dashboard refresh that runs both
-# queries does the heavy work once. release_session_caches frees
-# them. Every frame is counter-sized (distinct basket lines;
-# distinct co-occurring pairs; one row per supplier; one scalar), so
-# MEMORY_AND_DISK persistence is safe at any SF.
+# queries does the heavy work once; release_session_caches frees
+# the frames. Each call still rebuilds and analyses the four plans
+# on the driver (about 35 ms at sf0.1, uncontended). Every frame is
+# counter-sized (distinct basket lines; distinct co-occurring pairs;
+# one row per supplier; one scalar), so MEMORY_AND_DISK persistence
+# is safe at any SF.
 def _basket_and_pairs(spark: SparkSession, sf_dir: str):
     from pyspark import StorageLevel
 

@@ -75,3 +75,23 @@ def test_hash_mismatch_carries_differing_rows(spark):
     assert [s.strip() for s in sample] == [
         "spark-only: 2 | y", "duck-only: 3 | z"
     ]
+
+
+def test_sweep_marks_queries_without_an_oracle(spark, monkeypatch, capsys):
+    import check_oracle
+
+    from metadata_wrangler_spark import plans
+
+    def fn(spark, _sf):
+        return spark.createDataFrame([(1,)], "a long")
+
+    monkeypatch.setattr(check_oracle, "get_spark", lambda: spark)
+    monkeypatch.setattr(plans, "ORACLES", {"checked": "SELECT 1 AS a"})
+    assert check_oracle.sweep({"checked": fn, "bare": fn}, SF) == 0
+    out = capsys.readouterr().out.splitlines()
+    assert [ln.split(" [")[0] for ln in out if ln.startswith("OK")] == [
+        "OK    checked", "OK    bare"
+    ]
+    assert out[0].endswith("s]") and out[1].endswith("s] (no oracle)")
+    assert out[-2:] == ["1 / 2 queries have no oracle (run, not compared)",
+                        "all green"]

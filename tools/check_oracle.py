@@ -170,16 +170,19 @@ def select_queries(args: list[str], default_sf: str,
 def sweep(qs: dict, sf_dir: str, where: str = "") -> int:
     """Run ``check_one`` for every selected query against the tables
     under ``sf_dir``, print one OK/FAIL line per query and a summary
-    (``all green<where>``), and return the exit code."""
+    (``all green<where>``), and return the exit code. The bracketed
+    time covers both engines. A query without an oracle is only run,
+    so its OK line says ``(no oracle)`` and the summary counts them."""
     from metadata_wrangler_spark.plans import ORACLES
 
     spark = get_spark()
     con = oracle_connection(sf_dir)
-    failures = []
+    failures, unchecked = [], []
     for name, fn in qs.items():
+        sql = ORACLES.get(name)
         t0 = time.monotonic()
         try:
-            problems = check_one(spark, con, fn, ORACLES.get(name), sf_dir)
+            problems = check_one(spark, con, fn, sql, sf_dir)
         except Exception as e:  # noqa: BLE001 - inventory, don't stop
             problems = [f"{type(e).__name__}: {str(e)[:160]}"]
         dt = time.monotonic() - t0
@@ -188,8 +191,14 @@ def sweep(qs: dict, sf_dir: str, where: str = "") -> int:
             print(f"FAIL  {name} [{dt:.1f}s]: {'; '.join(problems)}",
                   flush=True)
         else:
-            print(f"OK    {name} [{dt:.1f}s]", flush=True)
+            if sql is None:
+                unchecked.append(name)
+            note = " (no oracle)" if sql is None else ""
+            print(f"OK    {name} [{dt:.1f}s]{note}", flush=True)
     print()
+    if unchecked:
+        print(f"{len(unchecked)} / {len(qs)} queries have no oracle "
+              f"(run, not compared)")
     if failures:
         print(f"{len(failures)} / {len(qs)} queries diverge{where}:")
         for name in failures:
