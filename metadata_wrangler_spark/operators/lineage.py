@@ -22,6 +22,14 @@ a round's checkpoint only once the NEXT round (or the final result)
 is itself materialized and no returned plan references the freed
 frame — each call site states which action established that.
 
+A lazy checkpoint is not lazy under AQE: ``localCheckpoint(eager=
+False)`` builds its RDD when called, and the adaptive plan runs every
+upstream shuffle stage to do so — one job per shuffle stage while the
+plan is being built (a two-shuffle aggregate over sf0.01 orders: 2
+jobs at the call with AQE on, 0 with it off; a broadcast exchange
+fires its job either way). A checkpoint therefore moves jobs into
+plan build; a plan that reads its input once needs none.
+
 Classic-session only (the ``_jdf`` bridge): under Spark Connect the
 helper degrades to a no-op and lifetime falls back to the server's
 ContextCleaner, which is correct, merely lazier.

@@ -24,7 +24,7 @@ foreachBatch (streaming.queue_drain).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 KEY = ["identifier_id", "data_source", "operation"]
@@ -57,15 +57,20 @@ def register(records: DataFrame, items: DataFrame,
     return records.unionByName(fresh)
 
 
-def eligible(records: DataFrame, now, backoff_seconds: int = 0) -> DataFrame:
-    """Rows a provider may claim: 'registered', plus transient
-    failures whose backoff has elapsed (the retry predicate)."""
+def eligible_when(now, backoff_seconds: int = 0) -> Column:
+    """The claim predicate on a queue row: 'registered', or a
+    transient failure whose backoff has elapsed (the retry rule)."""
     now_ts = F.lit(now).cast("timestamp")
     retry_ok = (F.col("status") == TRANSIENT) & (
         F.unix_timestamp(now_ts) - F.unix_timestamp("ts")
         > F.lit(backoff_seconds)
     )
-    return records.where((F.col("status") == REGISTERED) | retry_ok)
+    return (F.col("status") == REGISTERED) | retry_ok
+
+
+def eligible(records: DataFrame, now, backoff_seconds: int = 0) -> DataFrame:
+    """Rows a provider may claim (``eligible_when``)."""
+    return records.where(eligible_when(now, backoff_seconds))
 
 
 def apply_outcomes(records: DataFrame, outcomes: DataFrame) -> DataFrame:

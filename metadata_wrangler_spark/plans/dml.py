@@ -144,6 +144,33 @@ def d_policy_merge_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _latest_order_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The D7 queue state read from orders: each customer's latest
+    order (by o_orderdate, then o_orderkey) as (identifier_id,
+    status, ts). A rank WINDOW, not max(struct(...)): Spark's
+    WindowGroupLimit pushes the rn = 1 limit below the exchange,
+    shuffling ~|customers| candidate rows instead of |orders|; the
+    max(struct) spelling measured slower at sf10 (8.88 s, SCALE.md)."""
+    status = (
+        F.when(F.col("o_orderstatus") == "O", queue.REGISTERED)
+        .when(F.col("o_orderstatus") == "F", queue.SUCCESS)
+        .otherwise(queue.TRANSIENT)
+    )
+    w = W.partitionBy("o_custkey").orderBy(
+        F.desc("o_orderdate"), F.desc("o_orderkey")
+    )
+    return (
+        load(spark, sf_dir, "orders").select(
+            F.col("o_custkey").alias("identifier_id"),
+            status.alias("status"),
+            F.col("o_orderdate").alias("ts"),
+            F.row_number().over(w).alias("rn"),
+        )
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 @register(
     "d_status_transitions",
     oracle="""
@@ -176,24 +203,7 @@ def d_status_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     `controller.py:1013-1017` (force re-register). The write-side
     MERGE lives in operators.queue.
     """
-    o = load(spark, sf_dir, "orders")
-    status = (
-        F.when(F.col("o_orderstatus") == "O", "registered")
-        .when(F.col("o_orderstatus") == "F", "success")
-        .otherwise("transient failure")
-    )
-    w = W.partitionBy("o_custkey").orderBy(
-        F.desc("o_orderdate"), F.desc("o_orderkey")
-    )
-    latest = (
-        o.select(
-            F.col("o_custkey").alias("identifier_id"),
-            status.alias("status"),
-            F.col("o_orderdate").alias("ts"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") == 1)
-    )
+    latest = _latest_order_state(spark, sf_dir)
     return latest.groupBy("status").agg(
         F.count(F.lit(1)).alias("n_identifiers"),
         F.count(
@@ -416,70 +426,37 @@ def d_queue_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     `content_cafe.py:85-105` + `oclc/linked_data.py:1026-1033`
     (success / transient / persistent transitions),
     `docker/services/simplified_crontab:13-27` (the cron drain this
-    replaces). Engine: operators.queue (register / eligible /
-    apply_outcomes / census) — every transition is a join or union,
-    so a drain step scales with executors and runs unchanged inside
-    foreachBatch (streaming.queue_drain).
+    replaces). Engine: operators.queue — ``queue.eligible_when`` is
+    the claim rule ``queue.eligible`` (streaming.queue_drain) uses.
 
-    Scale shape (round-10 rewrite, sf10 measurements in SCALE.md):
-    the registered state is computed ONCE behind a lazy
-    localCheckpoint — without it the lifecycle DAG references it
-    four times (union self-reference + outcomes deriving from the
-    same state it merges into) and the orders window subtree ran
-    4x: 5.52 s -> 4.58 s at sf10. The top-1-per-customer stays the
-    rank WINDOW, not max(struct(...)): Spark's WindowGroupLimit
-    pushes the rn=1 limit below the exchange, shuffling ~|customers|
-    candidate rows instead of |orders| — the max(struct) spelling
-    measured SLOWER (8.88 s; string status rides the comparator).
-    The outcome merge is hinted shuffle_hash (outcomes build side):
-    both join inputs read the same checkpoint, so sort-merge paid
-    two full sorts for one pass of hash probes (4.58 -> 4.38 s).
-    The checkpoint is freed synchronously after the census (3 rows)
-    materializes — the closure-family lifetime discipline.
+    One lazy pass, no job while the plan is built: the customers
+    still to register are ``customer LEFT ANTI JOIN orders`` (every
+    o_custkey has a latest-order record). KEY is unique in the
+    registered state — one rn = 1 row per o_custkey, plus c_custkeys
+    (customer's primary key) no order names, with data_source and
+    operation constant — so ``apply_outcomes``' left join with
+    outcomes derived from the same state matches each row at most
+    once, and the post-state is the CASE projection below.
     """
-    from metadata_wrangler_spark.operators.lineage import free_checkpoint
+    c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
-    status = (
-        F.when(F.col("o_orderstatus") == "O", queue.REGISTERED)
-        .when(F.col("o_orderstatus") == "F", queue.SUCCESS)
-        .otherwise(queue.TRANSIENT)
+    missing = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
+        F.col("c_custkey").alias("identifier_id"),
+        F.lit(queue.REGISTERED).alias("status"),
+        F.lit("1999-01-01").cast("timestamp").alias("ts"),
     )
-    w = W.partitionBy("o_custkey").orderBy(
-        F.desc("o_orderdate"), F.desc("o_orderkey")
-    )
-    initial = (
-        o.select(
-            F.col("o_custkey").alias("identifier_id"),
-            F.lit("oclc").alias("data_source"),
-            F.lit("classify").alias("operation"),
-            status.alias("status"),
-            F.col("o_orderdate").alias("ts"),
-            F.lit(None).cast("string").alias("exception"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-    items = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("identifier_id")
-    )
-    registered = queue.register(
-        initial, items, "oclc", "classify", ts="1999-01-01"
-    ).localCheckpoint(eager=False)
-    todo = queue.eligible(registered, "1998-01-01", backoff_seconds=0)
-    outcomes = todo.select(
-        *queue.KEY,
+    outcome = (
         F.when(F.col("identifier_id") % 7 == 0, queue.SUCCESS)
         .when(F.col("identifier_id") % 7 == 1, queue.PERSISTENT)
-        .otherwise(queue.TRANSIENT).alias("new_status"),
-    ).hint("shuffle_hash")
-    final = queue.apply_outcomes(registered, outcomes)
-    census = final.groupBy("status").agg(
+        .otherwise(queue.TRANSIENT)
+    )
+    final = F.when(queue.eligible_when("1998-01-01"), outcome).otherwise(
+        F.col("status")
+    )
+    registered = _latest_order_state(spark, sf_dir).unionByName(missing)
+    return registered.groupBy(final.alias("status")).agg(
         F.count(F.lit(1)).alias("n_records")
-    ).localCheckpoint(eager=True)
-    # the 3-row census is materialized; the state checkpoint is dead
-    free_checkpoint(registered)
-    return census
+    )
 
 
 _SCD2_EPOCH = "2024-01-01 00:00:00"

@@ -1,8 +1,9 @@
 """Command-line contract of the per-query tools: the query selection
 shared by tools/check_oracle.py, the empty/NULL/tiny ladders,
-tools/bench_vs_oracle.py, tools/plan_audit.py and
-tools/check_determinism.py rejects a bad selection before any Spark
-session starts, so a typo cannot sweep zero queries and exit 0."""
+tools/bench_vs_oracle.py, tools/plan_audit.py,
+tools/check_determinism.py and tools/explain_dump.py rejects a bad
+selection before any Spark session starts, so a typo cannot sweep
+zero queries and exit 0."""
 
 from __future__ import annotations
 
@@ -27,20 +28,24 @@ def _no_spark(*_a, **_k):
 @pytest.mark.parametrize(
     "tool",
     ["check_oracle", "empty_ladder", "null_ladder", "tiny_ladder",
-     "bench_vs_oracle", "plan_audit", "check_determinism"],
+     "bench_vs_oracle", "plan_audit", "check_determinism", "explain_dump"],
 )
-def test_unknown_query_name_exits_before_spark(tool, monkeypatch):
+def test_unknown_query_name_exits_before_spark(tool, monkeypatch, tmp_path):
     from metadata_wrangler_spark import session
 
     mod = importlib.import_module(tool)
     for owner in (session, mod, importlib.import_module("check_oracle")):
         monkeypatch.setattr(owner, "get_spark", _no_spark, raising=False)
+    # explain_dump takes its <outdir> <tag> before the selection
+    outdir = tmp_path / "out"
+    prefix = [str(outdir), "tag"] if tool == "explain_dump" else []
     monkeypatch.setattr(
-        sys, "argv", [f"{tool}.py", SF, "g_bipartite_projectt"]
+        sys, "argv", [f"{tool}.py", *prefix, SF, "g_bipartite_projectt"]
     )
     with pytest.raises(SystemExit) as exc:
         mod.main()
     assert "g_bipartite_projectt" in str(exc.value.code)
+    assert not outdir.exists()
 
 
 def test_selection_keeps_order_window_and_default_dir():

@@ -430,3 +430,53 @@ def test_ngram_novelty_has_no_join_back(spark, queries):
     # shingle key appears once (the first-occurrence aggregate),
     # id for the counter aggregates/join — nothing else
     assert keys <= {"s", "id"}, keys
+
+
+def test_queue_lifecycle_builds_lazily_without_checkpoint(spark, queries):
+    """d_queue_lifecycle is one lazy plan: building it fires no job
+    (under AQE even localCheckpoint(eager=False) runs its upstream
+    shuffle stages when called) and no checkpoint scan is left in the
+    executed plan."""
+    # A table's first catalog.load infers its parquet schema with a
+    # job; the loaded frame is cached, so a first build warms it.
+    queries["d_queue_lifecycle"](spark, SF)
+    sc = spark.sparkContext
+    group = "test-d_queue_lifecycle-build"
+    sc.setJobGroup(group, "d_queue_lifecycle build")
+    try:
+        df = queries["d_queue_lifecycle"](spark, SF)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert "ExistingRDD" not in _executed_plan(df)
+
+
+def test_column_building_sends_no_call_site(spark, monkeypatch):
+    """session.py pins spark.python.sql.dataFrameDebugging.enabled off,
+    so building a Column sends no PySparkCurrentOrigin set/clear."""
+    import py4j.clientserver
+
+    sent = []
+    real = py4j.clientserver.ClientServerConnection.send_command
+
+    def spy(self, command):
+        sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", spy
+    )
+    (F.col("a") + F.lit(1)).alias("b")
+    assert sent
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]
+
+
+def test_call_site_pin_keeps_ansi_errors_loud(spark):
+    """The debugging pin drops only the Python call site from error
+    context: an ANSI check still raises with its error class."""
+    from pyspark.errors import ArithmeticException
+
+    with pytest.raises(ArithmeticException) as exc:
+        spark.range(1).select(F.lit(1) / F.lit(0)).collect()
+    assert exc.value.getCondition() == "DIVIDE_BY_ZERO"

@@ -1,11 +1,13 @@
 """Dump `.explain("formatted")` for named queries to files.
 
 Writes <outdir>/<query>_<tag>.txt for each named query (or every
-registered query with --all). The judge reads these against
-OPTIMIZATION_r10.md's plan claims; capturing them through one tool
-keeps the format identical before/after.
+registered query with --all). Plan claims (OPTIMIZATION_r10.md) are
+read against these; capturing them through one tool keeps the format
+identical before/after. After the <outdir> <tag> prefix the arguments
+are the oracle tools' selection (``check_oracle.select_queries``): an
+unknown name exits before Spark starts and nothing is written.
 
-Usage:  python tools/explain_dump.py <outdir> <tag> [sf_dir] <query ...>
+Usage:  python tools/explain_dump.py <outdir> <tag> [sf_dir] (--all | <query ...>)
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from metadata_wrangler_spark.session import get_spark
+from tools.check_oracle import select_queries
 
 
 def main() -> int:
@@ -24,22 +27,13 @@ def main() -> int:
         print(__doc__)
         return 2
     outdir, tag = args[0], args[1]
-    rest = args[2:]
-    sf_dir = rest[0] if os.path.isdir(rest[0]) else "/root/testdata/sf0.1"
-    names = [a for a in rest if not os.path.isdir(a)]
-
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    if names == ["--all"]:
-        names = list(qs)
+    sf_dir, qs = select_queries(
+        [a for a in args[2:] if a != "--all"], "/root/testdata/sf0.1"
+    )
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark()
-    for name in names:
-        if name not in qs:
-            print(f"unknown query: {name}", file=sys.stderr)
-            return 1
-        df = qs[name](spark, sf_dir)
+    for name, fn in qs.items():
+        df = fn(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
