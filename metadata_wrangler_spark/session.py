@@ -9,13 +9,61 @@ Arrow enabled for the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import logging
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+# The directory holding the engine package: Python workers need it on
+# their path to import the worker daemon module and the engine's kernels.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
+
+# An AF_UNIX socket path holds at most 107 bytes (sun_path is 108 with
+# its NUL). PySpark names each socket "<dir>/.<uuid4>.sock", 43 bytes
+# after the directory; mkdtemp names the directory "mws-sock-" and 8
+# random characters.
+_SUN_PATH_MAX = 107
+_SOCKET_DIR_PREFIX = "mws-sock-"
+_SOCKET_PATH_BYTES = 1 + len(_SOCKET_DIR_PREFIX) + 8 + 43
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def default_driver_memory() -> str:
+    """``min(16g, half of physical RAM)``: a local[N] session runs all
+    its tasks in the driver JVM, and a heap larger than the host gets
+    the process OOM-killed instead of spilling."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, ram // 2 // 2**20)}m"
+
+
+@functools.cache
+def _unix_socket_dir(bases: tuple[str, ...]) -> str | None:
+    """A private (0700) directory for the JVM↔Python-worker sockets in
+    the first of ``bases`` where a socket path fits in an AF_UNIX
+    address, removed at exit; ``None`` if there is no such base."""
+    for base in bases:
+        if len(os.fsencode(base)) + _SOCKET_PATH_BYTES > _SUN_PATH_MAX:
+            continue
+        try:
+            path = tempfile.mkdtemp(prefix=_SOCKET_DIR_PREFIX, dir=base)
+        except OSError:
+            continue
+        atexit.register(shutil.rmtree, path, True)
+        return path
+    _log.warning("no directory among %s is short and writable enough for"
+                 " an AF_UNIX socket: Python workers talk to the JVM over"
+                 " TCP", list(bases))
+    return None
 
 
 def get_spark(app_name: str = "metadata_wrangler_spark",
@@ -73,7 +121,8 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
         # host (a tr_TR default folds "I" to dotless "ı").
         .config("spark.driver.extraJavaOptions",
                 "-Duser.language=en -Duser.country=US")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Default openCost (4 MiB) makes a 6 MiB single-file table a
@@ -92,7 +141,32 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
         # calls at sf0.01. Errors lose only the Python call site;
         # error classes and ANSI failures are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers import the installed PySpark instead of
+        # Spark's pyspark.zip: the daemon module drops the archives
+        # from the worker's import path, because PySpark re-reads every
+        # zip's central directory at the start of each task (~0.15 s a
+        # task; see _worker_daemon). The package's parent directory on
+        # the workers' PYTHONPATH lets them import that module and the
+        # engine from any working directory. A directory path is valid
+        # there because get_spark always builds local[N]: the workers
+        # run on this host and see this filesystem.
+        .config("spark.python.daemon.module",
+                "metadata_wrangler_spark._worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
+    # Rows cross the JVM↔Python-worker boundary over a Unix socket
+    # instead of loopback TCP, which waited ~40 ms for a task's first
+    # batch. The socket directory is pinned short: Spark's default
+    # (java.io.tmpdir) under a long temp dir overflows the AF_UNIX
+    # path limit and every Python stage fails. /tmp stands in for a
+    # temp dir that is too long; with neither, workers keep TCP.
+    sock_dir = _unix_socket_dir((tempfile.gettempdir(), "/tmp"))
+    if sock_dir is not None:
+        builder = (
+            builder
+            .config("spark.python.unix.domain.socket.enabled", "true")
+            .config("spark.python.unix.domain.socket.dir", sock_dir)
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

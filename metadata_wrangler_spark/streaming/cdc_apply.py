@@ -7,7 +7,8 @@ batches, and the state table converges to the same latest-wins
 snapshot the batch operator computes over the union of all batches —
 because the merge is an associative, commutative fold (per key, keep
 the champion by version; sum the change counts), batch boundaries
-cannot change the result.
+cannot change the result. A raw change is already a one-change state
+row, so state and batch fold in the same single aggregate.
 
 Tombstones are RETAINED in state (key, last op = 'D') rather than
 deleted: a later micro-batch carrying an OLDER change for the key
@@ -32,25 +33,23 @@ from metadata_wrangler_spark.streaming._sweep import available_now
 CHANGES_SCHEMA = "key BIGINT, version BIGINT, op STRING, qv BIGINT"
 
 
-def compact(changes: DataFrame) -> DataFrame:
-    """Latest-wins compaction of a change set: one hash aggregate,
-    ``max_by`` keyed on the (unique) version — partial-aggregable,
-    so each partition keeps only its champion before the shuffle."""
-    return changes.groupBy("key").agg(
-        F.count(F.lit(1)).alias("n_changes"),
-        F.max("version").alias("last_version"),
-        F.max_by("op", "version").alias("last_op"),
-        F.max_by("qv", "version").alias("last_qv"),
-    )
-
-
 def apply_changes(state: DataFrame, batch: DataFrame) -> DataFrame:
-    """Merge one compacted micro-batch into the compacted state —
-    the same aggregate shape again, over state ∪ batch, with change
-    counts summed. Associative + commutative in the batch partition,
-    so any arrival order converges to the full-feed compaction."""
-    both = state.unionByName(compact(batch))
-    return both.groupBy("key").agg(
+    """Fold one raw micro-batch into the compacted state: each change
+    enters as a singleton state row (one change, its own version, op
+    and value) and state ∪ changes goes through one latest-wins hash
+    aggregate — ``max_by`` keyed on the (unique) version, change
+    counts summed. Partial-aggregable, so each partition keeps only
+    its champion per key before the one shuffle; associative and
+    commutative in the batch partition, so any arrival order converges
+    to the full-feed compaction."""
+    changes = batch.select(
+        "key",
+        F.lit(1).cast("bigint").alias("n_changes"),
+        F.col("version").alias("last_version"),
+        F.col("op").alias("last_op"),
+        F.col("qv").alias("last_qv"),
+    )
+    return state.unionByName(changes).groupBy("key").agg(
         F.sum("n_changes").alias("n_changes"),
         F.max("last_version").alias("last_version"),
         F.max_by("last_op", "last_version").alias("last_op"),
