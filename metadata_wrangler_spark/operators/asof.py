@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from metadata_wrangler_spark.operators.prefix import range_buckets
+
 _B = "__asof_bucket"
 
 
@@ -77,19 +79,10 @@ def asof_states(
     Output = input columns + the two state columns. Row order is
     not preserved (this is a distributed annotate, not a sort).
     """
-    if npart is None:
-        npart = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     ocols = list(order_cols)
-    sort_exprs = [F.asc(key_col)] + [F.asc(c) for c in ocols]
-    # Same load-bearing pin as prefix.py: the bucketed frame feeds
-    # the windowed side AND the offsets aggregate; without it each
-    # consumer may re-sample range boundaries and disagree on ids.
-    b = (
-        df.repartitionByRange(npart, *sort_exprs)
-        .withColumn(_B, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    b = range_buckets(
+        df, [F.asc(key_col)] + [F.asc(c) for c in ocols], npart, _B,
+        "asof_states buckets",
     )
     # struct fields get positional aliases so payload may reuse an
     # order column (e.g. "nearest click epoch" orders by ep AND

@@ -16,9 +16,8 @@ Spark design — adaptive two-tier:
     propagation with pointer-jump acceleration (components). The
     visited set is accumulated and each new frontier is anti-joined
     against it, so a node is expanded exactly once (min-level
-    semantics, cycle-safe). ``localCheckpoint`` truncates the lineage
-    each level — without it the iterative plan grows exponentially
-    and the optimizer chokes long before 100 TB.
+    semantics, cycle-safe). Each level is one ``lineage.fixpoint``
+    round.
   * **Local tier**: iterative jobs cost ~0.3-0.5 s each in scheduling
     alone, so when the raw edge set is small enough to hold on the
     driver (``LOCAL_SOLVE_MAX_EDGES``, read at call time — see the
@@ -29,9 +28,8 @@ Spark design — adaptive two-tier:
     the equivalence.
 
 Scale notes:
-  * The frontier is usually far smaller than the edge table; the edge
-    table is the big side. The filtered edge set is materialized ONCE
-    (checkpoint) and every per-level join reuses it.
+  * The frontier is usually far smaller than the edge table, which is
+    materialized once and reused by every level.
   * Closure level count is bounded (default 6, per the reference), so
     the total work is ≤ levels × one join — no fixpoint risk.
   * For whole-graph consolidation (Work clustering) use
@@ -41,11 +39,17 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
-from metadata_wrangler_spark.operators.lineage import free_checkpoint
+from metadata_wrangler_spark.operators.lineage import (
+    fixpoint,
+    materialize,
+    row_count,
+)
 
 # Above this many RAW (pre-dedup) edges the driver-local tier is
 # skipped and the distributed loop runs. The budget is set by the
@@ -61,6 +65,11 @@ from metadata_wrangler_spark.operators.lineage import free_checkpoint
 # path after reading at most this many rows (driver_fetch logs the
 # count it saw).
 LOCAL_SOLVE_MAX_EDGES = 4_000_000
+
+# connected_components' round cap, and the round after which it turns
+# on pointer jumping (see its docstring).
+COMPONENTS_MAX_ROUNDS = 50
+POINTER_JUMP_AFTER = 10
 
 
 def equivalent_ids(
@@ -99,53 +108,50 @@ def equivalent_ids(
     # row-collect before any BFS work.
     probe = fetch_at_most(filtered, LOCAL_SOLVE_MAX_EDGES, "closure_ids_edges")
     if probe is not None:
-        probe = probe.to_pandas()
-        return _equivalent_ids_local(spark, probe, seeds, seed_col, levels)
+        # Driver-local tier: the numpy CSR walk of bfs_levels_pdf (a
+        # per-edge Python dict build measured ~1 s/M edges).
+        out = bfs_levels_pdf(probe.to_pandas(), _seed_values(seeds), levels)
+        return spark.createDataFrame(out, "node bigint, level int")
     # Distributed tier: materialize the deduped edge set ONCE. Every
-    # level joins against it; without the checkpoint each level
-    # re-runs the upstream scan + filter + dedup (at 100 TB:
-    # levels × full-table reads instead of one).
-    usable = filtered.dropDuplicates().localCheckpoint(eager=True)
+    # level joins against it; without the pin each level re-runs the
+    # upstream scan + filter + dedup (at 100 TB: levels × full-table
+    # reads instead of one).
+    with materialize(filtered.dropDuplicates(), "closure_ids edges") as (
+        usable, _
+    ):
 
-    frontier = seeds.select(
-        F.col(seed_col).cast("bigint").alias("node"), F.lit(0).alias("level")
-    ).dropDuplicates(["node"]).localCheckpoint(eager=True)
-    # The visited set is a lazy union of already-checkpointed
-    # frontiers — one materialization per level total (the frontier
-    # checkpoint), instead of separately checkpointing the union.
-    frontiers = [frontier]
-    visited = frontier
+        def expand(lvl, frontiers):
+            # The visited set is a lazy union of the pinned frontiers —
+            # one materialization per level (the frontier's), instead
+            # of separately pinning the union.
+            frontier = frontiers[-1]
+            return (
+                frontier.join(usable, frontier.node == usable._src)
+                .select(F.col("_dst").alias("node"))
+                .dropDuplicates()
+                .join(_union(frontiers).select("node"), "node", "left_anti")
+                .withColumn("level", F.lit(lvl))
+            )
 
-    for lvl in range(1, levels + 1):
-        nxt = (
-            frontier.join(usable, frontier.node == usable._src)
-            .select(F.col("_dst").alias("node"))
-            .dropDuplicates()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("level", F.lit(lvl))
+        # Each level's row count both materializes its frontier and
+        # is the emptiness probe; the frontiers are the result data.
+        frontiers = fixpoint(
+            "closure_ids",
+            seeds.select(
+                F.col(seed_col).cast("bigint").alias("node"),
+                F.lit(0).alias("level"),
+            ).dropDuplicates(["node"]),
+            expand,
+            cap=levels,
+            probe=row_count,
+            stop=lambda n, _: n == 0,
+            keep=True,
         )
-        # Lazy checkpoint + count: the count job materializes the
-        # checkpoint (truncating lineage so iteration plans never
-        # nest) AND serves as the emptiness probe — one job per level
-        # instead of an eager-checkpoint job plus an isEmpty job.
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        frontiers.append(nxt)
-        visited = frontiers[0]
-        for f in frontiers[1:]:
-            visited = visited.unionByName(f)
-        frontier = nxt
+    return _union(frontiers)
 
-    # Checkpoint-lifetime bound (round-8 SCALE.md finding 1): the
-    # loop is over, every frontier checkpoint the returned union
-    # reads is materialized (each level's count job), and nothing
-    # downstream references the edge materialization — release its
-    # blocks NOW instead of leaving them for the asynchronous
-    # ContextCleaner to squeeze the next query's execution memory.
-    # The frontier blocks ARE the result data and stay pinned.
-    free_checkpoint(usable)
-    return visited
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def bfs_levels_pdf(edge_pdf, seed_vals, levels: int):
@@ -213,28 +219,20 @@ def bfs_levels_pdf(edge_pdf, seed_vals, levels: int):
     )
 
 
-def _equivalent_ids_local(
-    spark, edge_pdf, seeds: DataFrame, seed_col: str, levels: int
-) -> DataFrame:
-    """Driver-local BFS over the Arrow-collected edge frame —
-    row-identical to the distributed loop, but vectorized end to end
-    (the per-edge Python dict build measured ~1 s/M edges; the CSR
-    walk in bfs_levels_pdf is numpy throughout)."""
-    seed_vals = [
+def _seed_values(seeds: DataFrame) -> list[int]:
+    """The distinct non-NULL ids in ``seeds``' first column."""
+    col = seeds.columns[0]
+    return [
         int(r[0])
-        for r in seeds.select(seed_col).dropDuplicates().collect()
+        for r in seeds.select(col).dropDuplicates().collect()
         if r[0] is not None
     ]
-    out = bfs_levels_pdf(edge_pdf, seed_vals, levels)
-    return spark.createDataFrame(out, "node bigint, level int")
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
-    pointer_jump_after: int = 10,
 ) -> DataFrame:
     """Connected components by min-id label propagation (the Work
     consolidation variant of the closure: every identifier cluster
@@ -244,14 +242,14 @@ def connected_components(
 
     Large-graph variant of the same loop as ``equivalent_ids`` — runs
     to fixpoint instead of a level bound; each round is one join +
-    one aggregate, with lineage checkpointing. Plain propagation
-    converges in O(diameter) rounds (the min label travels one hop
-    per round), which is optimal for the shallow clusters real
-    identifier graphs produce — a pointer-jump acceleration measured
-    12 -> 7 rounds on an 11-diameter test graph but its extra label
-    self-join cost more than the saved rounds. It is NOT optimal for
+    one aggregate. Plain propagation converges in O(diameter) rounds
+    (the min label travels one hop per round), which is optimal for
+    the shallow clusters real identifier graphs produce — a
+    pointer-jump acceleration measured 12 -> 7 rounds on an
+    11-diameter test graph but its extra label self-join cost more
+    than the saved rounds. It is NOT optimal for
     adversarial long-path graphs (a 10^4-node chain would need 10^4
-    rounds), so after ``pointer_jump_after`` rounds the loop turns on
+    rounds), so after ``POINTER_JUMP_AFTER`` rounds the loop turns on
     pointer jumping — each node also adopts the label of its label —
     which halves the remaining label distance per round and converges
     in O(log diameter) additional rounds. Shallow graphs never pay
@@ -259,6 +257,8 @@ def connected_components(
     rounds instead of diameter. Small graphs (``LOCAL_SOLVE_MAX_EDGES``)
     are solved driver-local by union-find on the materialized edge
     set — identical rows, none of the per-round scheduling cost.
+    Labels that still change after ``COMPONENTS_MAX_ROUNDS`` rounds
+    raise instead of returning a non-fixpoint.
     """
     spark = edges.sparkSession
     directed = edges.select(
@@ -275,75 +275,62 @@ def connected_components(
     # pays the dedup+checkpoint it needs anyway.
     probe = fetch_at_most(directed, LOCAL_SOLVE_MAX_EDGES, "closure_cc_edges")
     if probe is not None:
-        return _connected_components_local(spark, probe.to_pandas())
+        return spark.createDataFrame(
+            min_label_components_pdf(probe.to_pandas()),
+            "node bigint, component bigint",
+        )
     sym_raw = directed.unionByName(
         directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     # Materialize the symmetrized edge set ONCE — every propagation
-    # round joins against it; without the checkpoint each round
-    # re-runs the upstream scan + union + dedup from the source.
-    sym = sym_raw.dropDuplicates().localCheckpoint(eager=True)
+    # round joins against it; without the pin each round re-runs the
+    # upstream scan + union + dedup from the source.
+    with materialize(sym_raw.dropDuplicates(), "closure_cc edges") as (
+        sym, _
+    ):
 
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .dropDuplicates()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    # Labels only ever decrease, so the label SUM is a strictly
-    # decreasing convergence measure: equal sums ⇔ no label changed.
-    # One cheap single-stage aggregate on the already-materialized
-    # labels per round, instead of a join-based change probe.
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
+        def propagate(rnd, rounds):
+            # Every node adopts the min label among itself and its
+            # neighbours' labels.
+            labels = rounds[-1]
+            neighbour_labels = (
+                sym.join(labels, sym.b == labels.node)
+                .select(F.col("a").alias("node"), "component")
+            )
+            candidates = labels.unionByName(neighbour_labels)
+            if rnd > POINTER_JUMP_AFTER:
+                # Pointer jump: adopt the label OF your label. Labels
+                # only point within the component, so this is sound;
+                # distance to the min label halves per round →
+                # O(log diameter).
+                parents = labels.select(
+                    F.col("node").alias("component"),
+                    F.col("component").alias("_jump"),
+                )
+                jumped = (
+                    labels.join(parents, "component")
+                    .select("node", F.col("_jump").alias("component"))
+                )
+                candidates = candidates.unionByName(jumped)
+            return candidates.groupBy("node").agg(
+                F.min("component").alias("component")
+            )
 
-    for rnd in range(max_iterations):
-        # Every node adopts the min label among itself and its
-        # neighbours' labels.
-        neighbour_labels = (
-            sym.join(labels, sym.b == labels.node)
-            .select(F.col("a").alias("node"), "component")
+        # Labels only ever decrease, so the label SUM is a strictly
+        # decreasing convergence measure: equal sums ⇔ no label
+        # changed. The probe is one single-stage aggregate that also
+        # materializes the round — no separate change-detection join.
+        return fixpoint(
+            "closure_cc",
+            sym.select(F.col("a").alias("node"))
+            .dropDuplicates()
+            .withColumn("component", F.col("node")),
+            propagate,
+            cap=COMPONENTS_MAX_ROUNDS,
+            probe=lambda lab: lab.agg(F.sum("component")).collect()[0][0],
+            stop=lambda total, prev: total == prev,
+            converge=True,
         )
-        candidates = labels.unionByName(neighbour_labels)
-        if rnd >= pointer_jump_after:
-            # Pointer jump: adopt the label OF your label. Labels only
-            # point within the component, so this is sound; distance
-            # to the min label halves per round → O(log diameter).
-            parents = labels.select(
-                F.col("node").alias("component"),
-                F.col("component").alias("_jump"),
-            )
-            jumped = (
-                labels.join(parents, "component")
-                .select("node", F.col("_jump").alias("component"))
-            )
-            candidates = candidates.unionByName(jumped)
-        # Lazy checkpoint: the SUM probe below scans every partition,
-        # so it both materializes this round's labels (truncating
-        # lineage) and measures convergence — one job per round
-        # instead of a checkpoint job plus a probe job.
-        prev_labels = labels
-        labels = (
-            candidates
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("component")).collect()[0][0]
-        # The SUM probe just materialized this round's checkpoint;
-        # the previous round's blocks are now dead (the new labels
-        # were computed FROM them, nothing will re-read them) —
-        # release synchronously so a long fixpoint run holds at most
-        # two rounds of label blocks instead of all of them
-        # (round-8 SCALE.md finding 1: ContextCleaner reclaim is
-        # asynchronous and lets dead rounds squeeze live memory).
-        free_checkpoint(prev_labels)
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # Same bound at exit: the returned labels are materialized; the
-    # symmetrized edge blocks are dead.
-    free_checkpoint(sym)
-    return labels
 
 
 def _min_plus_arrays(u, v, w, source_vals, hops: int):
@@ -527,31 +514,7 @@ def bounded_shortest_paths(
     elif edge_count_hint <= LOCAL_SOLVE_MAX_EDGES:
         tbl = edges.toArrow()
     if tbl is not None:
-        import numpy as np
-        import pandas as pd
-
-        seed_vals = [
-            int(r[0])
-            for r in sources.select(src_col).dropDuplicates().collect()
-            if r[0] is not None
-        ]
-        pdf_cols = {}
-        for col in ("u", "v", "code"):
-            arr = tbl[col].to_numpy(zero_copy_only=False)
-            pdf_cols[col] = arr
-        mask = ~(
-            pd.isna(pdf_cols["u"])
-            | pd.isna(pdf_cols["v"])
-            | pd.isna(pdf_cols["code"])
-        )
-        nodes_out, codes_out = _min_plus_arrays(
-            pdf_cols["u"][mask].astype(np.int64, copy=False),
-            pdf_cols["v"][mask].astype(np.int64, copy=False),
-            pdf_cols["code"][mask].astype(np.int64, copy=False),
-            seed_vals,
-            hops,
-        )
-        out = pd.DataFrame({"node": nodes_out, "code": codes_out})
+        out = bounded_min_plus_pdf(tbl.to_pandas(), _seed_values(sources), hops)
         return spark.createDataFrame(out, "node bigint, code bigint")
 
     # Distributed tier: min-plus doubling (see g_shortest_path's
@@ -650,9 +613,3 @@ def min_label_components_pdf(edge_pdf):
         label = cur
     return pd.DataFrame({"node": uniq.astype(np.int64), "component": label})
 
-
-def _connected_components_local(spark, edge_pdf) -> DataFrame:
-    """Driver-local tier: Arrow-collected symmetrized edges through
-    the numpy core, back through Arrow."""
-    out = min_label_components_pdf(edge_pdf)
-    return spark.createDataFrame(out, "node bigint, component bigint")

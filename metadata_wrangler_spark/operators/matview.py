@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.operators.lineage import free_checkpoint
+from metadata_wrangler_spark.operators.lineage import materialize
 from metadata_wrangler_spark.operators.merge import VersionedParquetTable
 
 def _micros(col: str):
@@ -33,9 +33,10 @@ def _micros(col: str):
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 
-def _partial(events: DataFrame) -> DataFrame:
+def _partial(events: DataFrame, *extra) -> DataFrame:
     """Partial (additive) aggregate of an event slice: counts and the
-    1e-4-quantized value sum as BIGINT — exact, mergeable units."""
+    1e-4-quantized value sum as BIGINT — exact, mergeable units —
+    plus any ``extra`` aggregates."""
     return events.groupBy(
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
         "event_type",
@@ -44,6 +45,7 @@ def _partial(events: DataFrame) -> DataFrame:
         F.sum(
             F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint")
         ).alias("q_value"),
+        *extra,
     )
 
 
@@ -91,37 +93,24 @@ class MaterializedDailyRollup:
         # The watermark folds into the SAME aggregate that builds the
         # bootstrap rollup (max over per-group maxes == global max),
         # so the bootstrap slice is scanned ONCE: the grouped partial
-        # materializes as a rollup-sized checkpoint, the watermark is
-        # a tiny collect over it, and the committed rows read the
-        # same checkpoint (round 11; the first cut ran a separate
-        # full-slice max(ts) job before the aggregate).
-        pagg = (
-            events.groupBy(
-                F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-                "event_type",
+        # is pinned at rollup size, the watermark is the probe that
+        # fills the pin, and the committed rows read the same pin
+        # (round 11; the first cut ran a separate full-slice max(ts)
+        # job before the aggregate).
+        with materialize(
+            _partial(events, F.max(_micros("ts")).alias("__mx")),
+            "matview init",
+            probe=lambda f: f.agg(F.coalesce(F.max("__mx"), F.lit(0)))
+            .collect()[0][0],
+        ) as (pagg, wm):
+            # The watermark commits as manifest meta — the
+            # linearization point carries the stream progress, exactly
+            # how real table formats record it (Delta txn action /
+            # Iceberg snapshot summary) — so state reads are zero-job
+            # manifest lookups.
+            self.table.init(
+                pagg.drop("__mx"), meta={"watermark_epoch": int(wm)}
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(
-                    F.floor(F.col("value") * 10000 + F.lit(0.5))
-                    .cast("bigint")
-                ).alias("q_value"),
-                F.max(_micros("ts")).alias("__mx"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = pagg.agg(
-            F.coalesce(F.max("__mx"), F.lit(0)).alias("wm")
-        ).collect()[0]
-        # The watermark commits as manifest meta — the linearization
-        # point carries the stream progress, exactly how real table
-        # formats record it (Delta txn action / Iceberg snapshot
-        # summary) — so state reads are zero-job manifest lookups.
-        self.table.init(
-            pagg.drop("__mx"), meta={"watermark_epoch": int(row["wm"])}
-        )
-        # committed to disk; the bootstrap partial is dead
-        free_checkpoint(pagg)
 
     def watermark_epoch(self) -> int:
         return int(self.table.meta()["watermark_epoch"])
@@ -151,52 +140,47 @@ class MaterializedDailyRollup:
         """Merge events newer than the stored watermark into the
         rollup. Returns the number of fresh events consumed.
 
-        The fresh slice is materialized ONCE (localCheckpoint) before
-        anything is measured or merged: the count, the new watermark,
-        and the committed delta must come from the same snapshot of
-        the source — re-reading a live directory between those jobs
+        The fresh slice is materialized ONCE before anything is
+        measured or merged: the count, the new watermark, and the
+        committed delta must come from the same snapshot of the
+        source — re-reading a live directory between those jobs
         could fold late-arriving files into the delta without
         covering them with the stored watermark, double-counting them
-        on the next refresh. The checkpoint is bounded by the delta,
-        never the table.
+        on the next refresh. The pin is bounded by the delta, never
+        the table.
 
         Job shape (round-9 floor cut — this query's wall was pure
-        per-job scheduling tax at every SF): the slice is a LAZY
-        checkpoint whose count() both materializes it and serves as
-        the emptiness probe (closure-style — the old eager
-        checkpoint + take(1) was two jobs), and the delta snapshot's
-        blocks are released synchronously once the version commits.
+        per-job scheduling tax at every SF): the row count that fills
+        the slice's pin is also the emptiness probe (the old eager
+        checkpoint + take(1) was two jobs), and the pin is freed once
+        the version commits or the merge raises.
         Driver-side state reads stay tiny literal-collects — a
         broadcast-1-row-aggregate fusion was tried and REVERTED:
         each broadcast build is its own job and costs more than the
         sub-0.1 s collect it replaces on a |days×types|-row table."""
         wm = self.watermark_epoch()
-        fresh = events.where(_micros("ts") > F.lit(wm)).localCheckpoint(
-            eager=False
-        )
-        if fresh.count() == 0:
-            free_checkpoint(fresh)
-            return 0
-
         merged_count = 0
+        with materialize(
+            events.where(_micros("ts") > F.lit(wm)), "matview refresh slice"
+        ) as (fresh, n):
+            if n == 0:
+                return 0
 
-        def merge_fn(current: DataFrame, meta: dict):
-            # The slice is re-cut against the pinned BASE watermark
-            # inside the retry loop: after losing an optimistic race,
-            # the competitor may have merged part (or all) of our
-            # slice and advanced the watermark, so re-slicing keeps
-            # the merge exactly-once.
-            nonlocal merged_count
-            cur_wm = int(meta["watermark_epoch"])
-            mine = fresh.where(_micros("ts") > F.lit(cur_wm))
-            post, new_meta, merged_count = self._fold(current, mine, cur_wm)
-            return post, new_meta
+            def merge_fn(current: DataFrame, meta: dict):
+                # The slice is re-cut against the pinned BASE watermark
+                # inside the retry loop: after losing an optimistic
+                # race, the competitor may have merged part (or all)
+                # of our slice and advanced the watermark, so
+                # re-slicing keeps the merge exactly-once.
+                nonlocal merged_count
+                cur_wm = int(meta["watermark_epoch"])
+                mine = fresh.where(_micros("ts") > F.lit(cur_wm))
+                post, new_meta, merged_count = self._fold(
+                    current, mine, cur_wm
+                )
+                return post, new_meta
 
-        self.table.merge(merge_fn)
-        # The committed version is on disk; the delta snapshot is
-        # dead — release its blocks synchronously (round-9
-        # checkpoint-lifetime discipline).
-        free_checkpoint(fresh)
+            self.table.merge(merge_fn)
         return merged_count
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> int:
@@ -209,18 +193,18 @@ class MaterializedDailyRollup:
         ``last_batch_id`` in the same snapshot claim and the table's
         merge skips a replayed id. Returns rows merged."""
         merged_count = 0
-        batch = batch_df.localCheckpoint(eager=True)
+        with materialize(batch_df, f"matview batch {batch_id}") as (batch, _):
 
-        def merge_fn(current: DataFrame, meta: dict):
-            nonlocal merged_count
-            post, new_meta, merged_count = self._fold(
-                current, batch, int(meta["watermark_epoch"])
-            )
-            return post, new_meta
+            def merge_fn(current: DataFrame, meta: dict):
+                nonlocal merged_count
+                post, new_meta, merged_count = self._fold(
+                    current, batch, int(meta["watermark_epoch"])
+                )
+                return post, new_meta
 
-        if self.table.merge(merge_fn, meta={"last_batch_id": batch_id}) is None:
-            merged_count = 0
-        free_checkpoint(batch)
+            meta = {"last_batch_id": batch_id}
+            if self.table.merge(merge_fn, meta=meta) is None:
+                merged_count = 0
         return merged_count
 
     def read(self) -> DataFrame:

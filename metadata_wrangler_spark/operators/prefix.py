@@ -52,8 +52,37 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
+from metadata_wrangler_spark.operators.lineage import checkpoint
 
 _B = "__gos_bucket"
+
+
+def range_buckets(
+    df: DataFrame, sort_exprs, npart: int | None, bucket_col: str, name: str
+) -> DataFrame:
+    """``df`` range-partitioned on ``sort_exprs`` into ``npart``
+    buckets (default: the shuffle partitions), the bucket id in
+    ``bucket_col``, behind a named pin.
+
+    The pin is LOAD-BEARING: the bucketed frame feeds two consumers
+    (the windowed side and the offsets aggregate, which rides a
+    broadcast build and therefore plans as a separate subtree).
+    Without it each consumer can re-execute the range exchange with
+    its OWN sampled boundaries — bucket ids then disagree between the
+    sides and offsets are added to the wrong rows (observed: per-group
+    row counts flapping run to run in a_weighted_median before the
+    pin existed). One materialization of the projected input, same
+    storage class as a shuffle write."""
+    if npart is None:
+        npart = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+    return checkpoint(
+        df.repartitionByRange(npart, *sort_exprs).withColumn(
+            bucket_col, F.spark_partition_id()
+        ),
+        name,
+    )
 
 
 def global_order_stats(
@@ -99,26 +128,10 @@ def global_order_stats(
     group total" skip the separate COUNT/SUM aggregate and its
     broadcast join.
     """
-    if npart is None:
-        npart = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     gcols = list(group_cols)
-    sort_exprs = [F.asc(g) for g in gcols] + list(order)
-    # localCheckpoint is LOAD-BEARING: the bucketed frame feeds two
-    # consumers (the windowed side and the offsets aggregate, which
-    # rides a broadcast build and therefore plans as a separate
-    # subtree). Without pinning, each consumer can re-execute the
-    # range exchange with its OWN sampled boundaries — bucket ids
-    # then disagree between the sides and offsets are added to the
-    # wrong rows (observed: per-group row counts flapping run to
-    # run in a_weighted_median before this line existed). One
-    # materialization of the projected input, same storage class as
-    # a shuffle write.
-    b = (
-        df.repartitionByRange(npart, *sort_exprs)
-        .withColumn(_B, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    b = range_buckets(
+        df, [F.asc(g) for g in gcols] + list(order), npart, _B,
+        "global_order_stats buckets",
     )
     w = W.partitionBy(_B, *gcols).orderBy(*order)
     wcum = w.rowsBetween(W.unboundedPreceding, W.currentRow)

@@ -38,6 +38,7 @@ from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
 from metadata_wrangler_spark.operators.driver_fetch import (
     count_at_most, fetch_at_most,
 )
+from metadata_wrangler_spark.session import empty_frame
 
 # (query_id, corpus_id, cosine) rows a scorer emits, before / after
 # the global per-query rank window.
@@ -305,7 +306,7 @@ def lsh_cosine_topk(
         fallback="bucket-join",
     )
     if q is not None and not len(q[0]):
-        return corpus.sparkSession.createDataFrame([], _TOPK)
+        return empty_frame(corpus.sparkSession, _TOPK)
     if q is not None and _fused_fits(corpus, id_col, len(q[0])):
         q_ids, qm = q
         P = np.asarray(planes, dtype=np.float64)
@@ -610,7 +611,7 @@ def ivf_cosine_topk(
         fallback="cell-join",
     )
     if q is not None and not len(q[0]):
-        return corpus.sparkSession.createDataFrame([], _TOPK)
+        return empty_frame(corpus.sparkSession, _TOPK)
     if q is not None and _fused_fits(corpus, id_col, len(q[0])):
         q_ids, qm = q
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
@@ -774,7 +775,7 @@ def lsh_cosine_topk_multitable(
     )
     if not len(q_ids):
         # empty query set: a valid empty result, not a crash
-        return corpus.sparkSession.createDataFrame([], _TOPK)
+        return empty_frame(corpus.sparkSession, _TOPK)
     nq = len(q_ids)
     qn = _norms(qm)
     mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
@@ -917,7 +918,7 @@ def cosine_topk_arrow(
     )
     if not len(q_ids):
         # empty query set: a valid empty result, not a crash
-        return corpus.sparkSession.createDataFrame([], _TOPK)
+        return empty_frame(corpus.sparkSession, _TOPK)
     qn = _norms(qm)
 
     def score(pdf):
@@ -1122,7 +1123,7 @@ def int8_dot_topk_arrow(
     )
     out_schema = "query_id long, corpus_id long, qdot long"
     if not len(q_ids):
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return empty_frame(corpus.sparkSession, out_schema)
     qq = np.floor((qm * 127.0) / scale + 0.5)  # already-exact ints
 
     def score(pdf):
@@ -1186,7 +1187,7 @@ def pq_adc_topk_arrow(
         "pq_adc_topk_arrow", corpus, queries, None, id_col, vec_col
     )
     if not len(q_ids) or not centroids:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return empty_frame(corpus.sparkSession, out_schema)
     nq = len(q_ids)
     kc = len(centroids)
     cents = np.array([list(v) for _, v in centroids], dtype=np.float64)

@@ -213,10 +213,7 @@ def release_session_caches(spark) -> None:
     skipped and the cache clearing above still runs (the server's
     own GC reclaims checkpoint blocks on its schedule)."""
     spark.catalog.clearCache()
-    # Unreachable localCheckpoint RDDs (iterative plans truncate
-    # lineage each round) are reclaimed by the ContextCleaner only
-    # after a driver JVM GC notices they are unreferenced. Private
-    # bridge, classic sessions only — degrade gracefully elsewhere.
+    # Unreachable pins wait for a driver JVM GC (operators/lineage.py).
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:  # Spark Connect / no JVM bridge

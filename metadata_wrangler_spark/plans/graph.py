@@ -16,11 +16,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from metadata_wrangler_spark.catalog import load, table_bytes
-from metadata_wrangler_spark.operators.lineage import free_checkpoint
 from metadata_wrangler_spark.operators.closure import (
     bounded_shortest_paths,
     connected_components,
     equivalent_ids,
+)
+from metadata_wrangler_spark.operators.lineage import (
+    checkpoint,
+    fixpoint,
+    materialize,
 )
 from metadata_wrangler_spark.plans import register
 
@@ -62,6 +66,23 @@ def build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (0.5 + (k % 29) / 100.0).alias("strength"),
     )
     return e1.unionByName(e2)
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Self-loop-free edges as (a, b) = (least, greatest) endpoint."""
+    return edges.where(F.col("src") != F.col("dst")).select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, d): each node's degree over (a, b) undirected edges."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .unionAll(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
 
 
 @register(
@@ -289,14 +310,19 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rank/2 and no dangling-mass redistribution is needed (a
     production variant adds the dangling sum as a broadcast scalar).
     """
-    edges = build_edges(spark, sf_dir).select("src", "dst").repartition(
-        "src"
-    ).localCheckpoint(eager=False)
+    edges = checkpoint(
+        build_edges(spark, sf_dir).select("src", "dst").repartition("src"),
+        "g_pagerank edges",
+    )
     c = load(spark, sf_dir, "customer")
     cnt = c.agg(F.count(F.lit(1)).alias("_n"))
-    nodes = c.crossJoin(F.broadcast(cnt)).select(
-        F.col("c_custkey").alias("node"), F.col("_n").cast("double").alias("n")
-    ).localCheckpoint(eager=False)
+    nodes = checkpoint(
+        c.crossJoin(F.broadcast(cnt)).select(
+            F.col("c_custkey").alias("node"),
+            F.col("_n").cast("double").alias("n"),
+        ),
+        "g_pagerank nodes",
+    )
     q = float(_PR_Q)
 
     def quant(col):
@@ -329,18 +355,11 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank"),
             )
         )
-    # Round 11: return the LAZY plan. The old spelling materialized
-    # the |V|-row result into an eager localCheckpoint just so the
-    # input checkpoints could be freed synchronously — a full extra
-    # result-sized pass (write blocks, then re-read them for the
-    # caller's action) on every invocation. Unlike the closure-family
-    # fixpoints (whose per-ROUND checkpoints go stale and MUST be
-    # freed as the loop advances), this plan's two input checkpoints
-    # stay live exactly as long as the returned plan is reachable —
-    # freeing them under it would break re-reads — so lifetime falls
-    # to the ContextCleaner / release_session_caches, the documented
-    # reclaim path for returned plans. sf10 interleaved A/B, rows
-    # identical: 6.00 -> 5.44 s median (oracle 5.2 s).
+    # Round 11: return the LAZY plan. Its two input pins stay live as
+    # long as the returned plan is reachable, so they are not freed
+    # here; materializing the |V|-row result just to free them cost a
+    # full result-sized pass per call (sf10 interleaved A/B, rows
+    # identical: 6.00 -> 5.44 s median, oracle 5.2 s).
     return ranks.select("node", "rank")
 
 
@@ -421,22 +440,10 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (remote storage) default to cached — the at-scale-safe side.
     _bytes = table_bytes(sf_dir, "customer")
     _small = _bytes is not None and _bytes < (1 << 20)
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = _undirected(edges).distinct()
     if not _small:
         und = und.cache()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(und)
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
     a_first = F.struct("da", "a") < F.struct("db", "b")
@@ -692,56 +699,43 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("src") * (7 + 2 * F.col("j")) + 3 + 5 * F.col("j"))
              % F.col("_n")).alias("dst"),
         )
-        .where(F.col("src") != F.col("dst"))
     )
-    und = directed.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+    und = _undirected(directed).distinct()
     # Same lineage discipline as operators/closure.py: materialize
-    # the edge set once (eager — every round reuses it), and cut
-    # each round's plan with a lazy checkpoint so the iteration
-    # never nests (without this the 5-round plan re-executes the
-    # explode+distinct ~11x and compounds: measured 288 s -> ~2 s
-    # at sf0.01).
-    sym = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("other"))
-        .unionByName(
-            und.select(F.col("b").alias("node"), F.col("a").alias("other"))
-        )
-        .localCheckpoint(eager=True)
+    # the edge set once (every round reuses it), and pin each round's
+    # plan so the iteration never nests (without this the 5-round
+    # plan re-executes the explode+distinct ~11x and compounds:
+    # measured 288 s -> ~2 s at sf0.01).
+    sym_plan = und.select(
+        F.col("a").alias("node"), F.col("b").alias("other")
+    ).unionByName(
+        und.select(F.col("b").alias("node"), F.col("a").alias("other"))
     )
-    nodes = sym.select("node").distinct()
-    rounds = []
-    for _ in range(4):
-        nodes = (
-            sym.join(nodes, "node", "left_semi")
-            .join(
-                nodes.withColumnRenamed("node", "other"), "other", "left_semi"
+    with materialize(sym_plan, "g_kcore edges") as (sym, _):
+
+        def degrees(nodes, name="deg"):
+            return (
+                sym.join(nodes, "node", "left_semi")
+                .join(
+                    nodes.withColumnRenamed("node", "other"), "other",
+                    "left_semi",
+                )
+                .groupBy("node")
+                .agg(F.count(F.lit(1)).alias(name))
             )
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+
+        # The final core (|V| rows — the same work the caller's first
+        # action would run, done once) is materialized so the peel
+        # rounds can be freed.
+        return fixpoint(
+            "g_kcore peel",
+            sym.select("node").distinct(),
+            lambda _r, rounds: degrees(rounds[-1])
             .where(F.col("deg") >= 3)
-            .select("node")
-            .localCheckpoint(eager=False)
+            .select("node"),
+            cap=4,
+            finish=lambda nodes: degrees(nodes, "core_deg"),
         )
-        rounds.append(nodes)
-    out = (
-        sym.join(nodes, "node", "left_semi")
-        .join(nodes.withColumnRenamed("node", "other"), "other", "left_semi")
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_deg"))
-        # Checkpoint-lifetime bound (round-8 SCALE.md finding 1):
-        # materializing the final core (|V| rows — the same work the
-        # caller's first action would run, done once) lets every
-        # per-round survivor checkpoint AND the symmetrized edge
-        # blocks be released synchronously below instead of
-        # lingering for the asynchronous ContextCleaner.
-        .localCheckpoint(eager=True)
-    )
-    for r in rounds:
-        free_checkpoint(r)
-    free_checkpoint(sym)
-    return out
 
 
 # --- Label propagation (community detection) -------------------------------
@@ -794,7 +788,7 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per round (round-8 rewrite, 5.5 -> 3.3 s at sf1;
     the remainder is per-stage scheduling floor, see SCALE.md's
     decomposition): the symmetrized edge table is repartitioned by
-    dst ONCE and localCheckpoint'ed eagerly, so no round re-shuffles
+    dst ONCE and materialized, so no round re-shuffles
     or re-sorts the edge side — the per-round join is hinted
     SHUFFLE_HASH (labels, the small changing side, builds the hash
     table; the default sort-merge re-SORTED the full edge table
@@ -815,44 +809,35 @@ def g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured slower than the window sort at every SF.)
     """
     edges = build_edges(spark, sf_dir).select("src", "dst")
-    ue = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition("dst")
-        .localCheckpoint(eager=True)
-    )
+    ue_plan = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).repartition("dst")
     c = load(spark, sf_dir, "customer")
     labels = c.select(
         F.col("c_custkey").alias("node"), F.col("c_custkey").alias("label")
     )
-    for _ in range(_LP_ITERS):
-        neigh = (
-            ue.join(
-                labels.select(F.col("node").alias("dst"), "label")
-                .hint("shuffle_hash"),
-                "dst",
+    with materialize(ue_plan, "g_label_propagation edges") as (ue, _):
+        for _ in range(_LP_ITERS):
+            neigh = (
+                ue.join(
+                    labels.select(F.col("node").alias("dst"), "label")
+                    .hint("shuffle_hash"),
+                    "dst",
+                )
+                .repartition("src")
+                .groupBy("src", "label")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-            .repartition("src")
-            .groupBy("src", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = W.partitionBy("src").orderBy(F.desc("c"), F.asc("label"))
-        labels = (
-            neigh.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(F.col("src").alias("node"), "label")
-        )
-    # Checkpoint-lifetime bound (round-8 SCALE.md finding 1): the
-    # symmetrized-edge checkpoint is 2|E| rows and would otherwise
-    # linger until an eventual JVM GC lets the ContextCleaner
-    # reclaim it — measured squeezing the NEXT query into spilling
-    # at sf10 (24 s in-ladder vs 10.2 s isolated). Materialize the
-    # final labels (|V| rows — the same 4-round computation the
-    # caller's action would run, done once, nothing re-executed),
-    # then release the edge blocks synchronously.
-    labels = labels.localCheckpoint(eager=True)
-    free_checkpoint(ue)
+            w = W.partitionBy("src").orderBy(F.desc("c"), F.asc("label"))
+            labels = (
+                neigh.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select(F.col("src").alias("node"), "label")
+            )
+        # The final labels (|V| rows — the same 4-round computation
+        # the caller's action would run, done once) are materialized
+        # so the 2|E|-row edge pin can be freed.
+        labels, _ = materialize(labels, "g_label_propagation labels")
     return labels
 
 
@@ -1195,20 +1180,8 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 
     edges = build_edges(spark, sf_dir)
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und = _undirected(edges).distinct()
+    deg = _degrees(und)
     hist = deg.groupBy(F.col("d").alias("degree")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
@@ -1317,21 +1290,9 @@ def g_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old spelling paid a (a,b) exchange for the dedup plus another
     # on `a` for the join.
     und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .repartition("a")
-        .dropDuplicates(["a", "b"])
-        .cache()
+        _undirected(edges).repartition("a").dropDuplicates(["a", "b"]).cache()
     )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(und)
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("x"))
     db = deg.select(F.col("node").alias("b"), F.col("d").alias("y"))
     de = und.join(da, "a").join(db, "b").select("x", "y")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import merge
+from metadata_wrangler_spark.operators.lineage import checkpoint
 from metadata_wrangler_spark.plans import register
 from metadata_wrangler_spark.sources import http_cache, xmlsrc
 
@@ -111,10 +112,10 @@ def pipe_provider_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the orders window + anti-join run once, not three times
     # (neutral at bench scale where `needs` is cheap; load-bearing at
     # real scale where the window is the expensive subtree).
-    needs = (
+    needs = checkpoint(
         c.join(covered, c.c_custkey == covered.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-        .localCheckpoint(eager=False)
+        .select("c_custkey", "c_name"),
+        "pipe_provider_end_to_end needs",
     )
 
     # 2. cached fetch: cache rows exist (fresh) for custkey%4==0
@@ -575,22 +576,11 @@ def _search_oracle_sql() -> str:
         _NORM,
         _PLANES,
         _QUERY_PRED,
+        _bucket_expr_sql,
+        _r6,
     )
 
-    plane_lits = [
-        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
-        for row in _PLANES
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN {_DOT.format(a='embedding', b=p)} >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(plane_lits)
-    )
-
-    def r6(x: str) -> str:
-        return (f"((CASE WHEN {x} < 0 THEN -1.0 ELSE 1.0 END)"
-                f" * CAST(floor(abs({x}) * 1000000 + 0.5) AS BIGINT)"
-                f" / 1000000.0)")
+    bucket = _bucket_expr_sql("embedding", _PLANES)
 
     cos_qc = (f"{_DOT.format(a='q.qvec', b='c.embedding')}"
               f" / ({_NORM.format(a='q.qvec')}"
@@ -607,9 +597,9 @@ def _search_oracle_sql() -> str:
     ), cand AS (
         SELECT query_id, corpus_id, vec, cosine, rank FROM (
             SELECT q.query_id, c.vec_id AS corpus_id,
-                   c.embedding AS vec, {r6(cos_qc)} AS cosine,
+                   c.embedding AS vec, {_r6(cos_qc)} AS cosine,
                    ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                      ORDER BY {r6(cos_qc)} DESC,
+                                      ORDER BY {_r6(cos_qc)} DESC,
                                                c.vec_id ASC) AS rank
             FROM b c JOIN q ON q.bucket = c.bucket
                            AND q.query_id <> c.vec_id
@@ -618,7 +608,7 @@ def _search_oracle_sql() -> str:
         SELECT DISTINCT b.query_id, b.corpus_id
         FROM cand a JOIN cand b
           ON a.query_id = b.query_id AND a.rank < b.rank
-        WHERE {r6(cos_ab)} > {_SEARCH_THETA}
+        WHERE {_r6(cos_ab)} > {_SEARCH_THETA}
     ), final AS (
         SELECT query_id, corpus_id, cosine, div_rank FROM (
             SELECT c.query_id, c.corpus_id, c.cosine,

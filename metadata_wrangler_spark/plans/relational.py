@@ -18,6 +18,7 @@ from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import dedup as dedup_ops
 from metadata_wrangler_spark.operators import pagination
 from metadata_wrangler_spark.plans import register
+from metadata_wrangler_spark.session import empty_frame
 
 
 def dsum(col: F.Column) -> F.Column:
@@ -508,7 +509,7 @@ def a_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (|c_acctbal| < 2.1e7) — two scans total.
     sel = grouped_select(q, "qb", pct_ranks, domain_bits=31)
     if not sel:
-        return spark.createDataFrame([], "p double, value double")
+        return empty_frame(spark, "p double, value double")
     picked = {str(p): sel[0][str(p)] for p in (0.25, 0.50, 0.75, 0.90)}
     # recover the exact source doubles (quantization is injective on
     # 2-decimal currency): one probe filtered to the four quanta —

@@ -119,24 +119,32 @@ def _fixed_planes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
 _PLANES = _fixed_planes(n_planes=6, dim=64, seed=42)
 
 
+def _r6(x: str) -> str:
+    """DuckDB: ``x`` rounded half away from zero to 1e-6."""
+    return (f"((CASE WHEN {x} < 0 THEN -1.0 ELSE 1.0 END)"
+            f" * CAST(floor(abs({x}) * 1000000 + 0.5) AS BIGINT)"
+            f" / 1000000.0)")
+
+
+def _bucket_expr_sql(vec: str, planes: list[list[float]]) -> str:
+    plane_lits = [
+        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
+        for row in planes
+    ]
+    return " + ".join(
+        f"(CASE WHEN {_DOT.format(a=vec, b=p)} >= 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(plane_lits)
+    )
+
+
 def _lsh_oracle_sql() -> str:
     """DuckDB twin of the hyperplane bucketing: the plane constants
     are embedded as DOUBLE[] literals (repr round-trips the exact
     bits), so both engines compute identical sign-pattern buckets."""
-    plane_lits = [
-        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
-        for row in _PLANES
-    ]
-    def bucket_expr(vec: str) -> str:
-        return " + ".join(
-            f"(CASE WHEN {_DOT.format(a=vec, b=p)} >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(plane_lits)
-        )
     return f"""
     WITH b AS (
         SELECT vec_id, embedding,
-               {bucket_expr('embedding')} AS bucket
+               {_bucket_expr_sql('embedding', _PLANES)} AS bucket
         FROM embeddings
     ), q AS (
         SELECT vec_id AS query_id, embedding AS qvec, bucket
@@ -180,15 +188,7 @@ def _lsh_probe_oracle_sql() -> str:
     6 buckets at Hamming distance 1 from its own (p=0 keeps the home
     bucket; p=1..6 flips bit p-1). A corpus vector holds exactly one
     bucket, so probe hits are already distinct pairs."""
-    plane_lits = [
-        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
-        for row in _PLANES
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN {_DOT.format(a='embedding', b=p)} >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(plane_lits)
-    )
+    bucket = _bucket_expr_sql("embedding", _PLANES)
     n = len(_PLANES)
     return f"""
     WITH b AS (
@@ -242,17 +242,6 @@ _TABLES = [
     _fixed_planes(n_planes=_TABLE_BITS, dim=64, seed=1000 + t)
     for t in range(_N_TABLES)
 ]
-
-
-def _bucket_expr_sql(vec: str, planes: list[list[float]]) -> str:
-    plane_lits = [
-        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
-        for row in planes
-    ]
-    return " + ".join(
-        f"(CASE WHEN {_DOT.format(a=vec, b=p)} >= 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(plane_lits)
-    )
 
 
 def _multitable_oracle_sql() -> str:
@@ -397,15 +386,7 @@ _DUP_THRESHOLD = 0.35  # tuned to the synthetic corpus (top-pair ~0.42)
 
 
 def _cosine_pairs_oracle_sql() -> str:
-    plane_lits = [
-        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
-        for row in _PLANES
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN {_DOT.format(a='embedding', b=p)} >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(plane_lits)
-    )
+    bucket = _bucket_expr_sql("embedding", _PLANES)
     return f"""
     WITH b AS (
         SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
@@ -1022,11 +1003,6 @@ def _rp_oracle_sql() -> str:
     cos = (f"{_DOT.format(a='q.qvec', b='c.embedding')}"
            f" / ({_NORM.format(a='q.qvec')} * {_NORM.format(a='c.embedding')})")
 
-    def r6(x: str) -> str:
-        return (f"((CASE WHEN {x} < 0 THEN -1.0 ELSE 1.0 END)"
-                f" * CAST(floor(abs({x}) * 1000000 + 0.5) AS BIGINT)"
-                f" / 1000000.0)")
-
     return f"""
     WITH p AS (
         SELECT vec_id, embedding, {proj} AS proj FROM embeddings
@@ -1039,12 +1015,12 @@ def _rp_oracle_sql() -> str:
                    q.qvec, c.embedding AS cvec,
                    ROW_NUMBER() OVER (
                        PARTITION BY q.query_id
-                       ORDER BY {r6(pcos)} DESC, c.vec_id ASC) AS prank
+                       ORDER BY {_r6(pcos)} DESC, c.vec_id ASC) AS prank
             FROM p c JOIN q ON q.query_id <> c.vec_id
         ) t WHERE prank <= {_RP_C}
     ), scored AS (
         SELECT query_id, corpus_id,
-               {r6(f"{_DOT.format(a='qvec', b='cvec')}"
+               {_r6(f"{_DOT.format(a='qvec', b='cvec')}"
                    f" / ({_NORM.format(a='qvec')} * {_NORM.format(a='cvec')})")}
                    AS cosine
         FROM cand
@@ -1137,11 +1113,6 @@ _DIV_THETA = 0.4  # diversity radius: drop the lower-ranked of any pair
 
 
 def _div_oracle_sql() -> str:
-    def r6(x: str) -> str:
-        return (f"((CASE WHEN {x} < 0 THEN -1.0 ELSE 1.0 END)"
-                f" * CAST(floor(abs({x}) * 1000000 + 0.5) AS BIGINT)"
-                f" / 1000000.0)")
-
     cos_qc = (f"{_DOT.format(a='q.qvec', b='c.embedding')}"
               f" / ({_NORM.format(a='q.qvec')}"
               f" * {_NORM.format(a='c.embedding')})")
@@ -1154,9 +1125,9 @@ def _div_oracle_sql() -> str:
     ), cand AS (
         SELECT query_id, corpus_id, vec, cosine, rank FROM (
             SELECT q.query_id, c.vec_id AS corpus_id, c.embedding AS vec,
-                   {r6(cos_qc)} AS cosine,
+                   {_r6(cos_qc)} AS cosine,
                    ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                      ORDER BY {r6(cos_qc)} DESC,
+                                      ORDER BY {_r6(cos_qc)} DESC,
                                                c.vec_id ASC) AS rank
             FROM embeddings c JOIN q ON q.query_id <> c.vec_id
         ) t WHERE rank <= {_DIV_C}
@@ -1164,7 +1135,7 @@ def _div_oracle_sql() -> str:
         SELECT DISTINCT b.query_id, b.corpus_id
         FROM cand a JOIN cand b
           ON a.query_id = b.query_id AND a.rank < b.rank
-        WHERE {r6(cos_ab)} > {_DIV_THETA}
+        WHERE {_r6(cos_ab)} > {_DIV_THETA}
     )
     SELECT query_id, corpus_id, cosine, div_rank FROM (
         SELECT c.query_id, c.corpus_id, c.cosine,
@@ -1257,11 +1228,6 @@ _CENT_Q = 10_000_000  # 1e-7 fixed-point for centroid component sums
 
 
 def _centroid_oracle_sql() -> str:
-    def r6(x: str) -> str:
-        return (f"((CASE WHEN {x} < 0 THEN -1.0 ELSE 1.0 END)"
-                f" * CAST(floor(abs({x}) * 1000000 + 0.5) AS BIGINT)"
-                f" / 1000000.0)")
-
     vc = (f"{_DOT.format(a='e.embedding', b='c.cent')}"
           f" / ({_NORM.format(a='e.embedding')} * {_NORM.format(a='c.cent')})")
     cc = (f"{_DOT.format(a='a.cent', b='b.cent')}"
@@ -1289,11 +1255,11 @@ def _centroid_oracle_sql() -> str:
     ),
     inter AS (
         SELECT a.label, b.label AS nearest_label,
-               CAST(floor({r6(cc)} * 1000000 + 0.5) AS BIGINT)
+               CAST(floor({_r6(cc)} * 1000000 + 0.5) AS BIGINT)
                    AS inter_cos_ppm,
                ROW_NUMBER() OVER (
                    PARTITION BY a.label
-                   ORDER BY {r6(cc)} DESC, b.label ASC) AS rn
+                   ORDER BY {_r6(cc)} DESC, b.label ASC) AS rn
         FROM cents a JOIN cents b ON a.label <> b.label
     )
     SELECT i.label, i.n_vectors, i.intra_cos_ppm,
@@ -1469,15 +1435,7 @@ _KNN_K = 3
 
 
 def _knn_graph_oracle_sql() -> str:
-    plane_lits = [
-        "[" + ", ".join(repr(x) for x in row) + "]::DOUBLE[]"
-        for row in _PLANES
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN {_DOT.format(a='embedding', b=p)} >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(plane_lits)
-    )
+    bucket = _bucket_expr_sql("embedding", _PLANES)
     cos = (
         f"((CASE WHEN {_DOT.format(a='a.embedding', b='c.embedding')}"
         f" / ({_NORM.format(a='a.embedding')} * {_NORM.format(a='c.embedding')})"

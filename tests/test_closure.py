@@ -4,6 +4,7 @@ semantics, and connected components."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators import closure
@@ -87,10 +88,25 @@ def test_connected_components_long_path_converges_logarithmically(
     n = 4096
     e = _edges(spark, [(i, i + 1, 1.0) for i in range(n - 1)])
     monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
-    out = connected_components(e, max_iterations=30, pointer_jump_after=5)
+    monkeypatch.setattr(closure, "COMPONENTS_MAX_ROUNDS", 30)
+    monkeypatch.setattr(closure, "POINTER_JUMP_AFTER", 5)
+    out = connected_components(e)
     got = rows(out)
     assert len(got) == n
     assert all(component == 0 for _, component in got)
+
+
+def test_connected_components_raises_past_its_round_cap(spark, monkeypatch):
+    # A 64-node chain needs ~63 rounds of plain propagation; with
+    # pointer jumping held off, a 4-round cap cannot reach the
+    # fixpoint, and the loop must say so instead of returning
+    # non-fixpoint labels.
+    e = _edges(spark, [(i, i + 1, 1.0) for i in range(63)])
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
+    monkeypatch.setattr(closure, "COMPONENTS_MAX_ROUNDS", 4)
+    monkeypatch.setattr(closure, "POINTER_JUMP_AFTER", 100)
+    with pytest.raises(RuntimeError, match=r"closure_cc: no fixpoint after 4"):
+        connected_components(e)
 
 
 def test_local_and_distributed_tiers_agree(spark, monkeypatch):
@@ -290,3 +306,32 @@ def test_shortest_path_tiers_agree_on_random_graphs(spark, monkeypatch):
             m.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
             dist = bounded_shortest_paths(e, nodes, sources, hops=hops)
         assert rows(local) == rows(dist), (trial, srcs, hops)
+
+
+def test_fixpoint_logs_name_round_and_probe_value(spark, monkeypatch, caplog):
+    """Each round of a ported loop logs its name, round and probe
+    value, and the caller's job description survives the loop."""
+    import logging
+
+    from metadata_wrangler_spark.operators import lineage
+
+    e = _edges(spark, [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)])
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
+    sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    try:
+        with caplog.at_level(logging.INFO, logger=lineage.__name__):
+            out = equivalent_ids(e, _seeds(spark, [1]), levels=2)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows(out) == [(1, 0), (2, 1), (3, 2)]
+    assert [
+        r.getMessage() for r in caplog.records if r.name == lineage.__name__
+    ] == [
+        "pin closure_ids edges: 3",
+        "pin closure_ids round 0: 1",
+        "pin closure_ids round 1: 1",
+        "pin closure_ids round 2: 1",
+        "closure_ids: stopped at its cap of 2 rounds",
+    ]

@@ -1,6 +1,7 @@
 """The bounded driver fetch primitive: exact cap semantics, the probe
 log line, and a source guard that keeps it the only module pairing
-``limit`` with a driver action."""
+``limit`` with a driver action — beside the guard that keeps
+``operators/lineage.py`` the only module that checkpoints."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ _PKG = pathlib.Path(driver_fetch.__file__).resolve().parents[1]
 _LIMIT_ACTION = re.compile(
     r"\.limit\([^)]*\)\s*\.(collect|toArrow|toPandas|count)\("
 )
+_CHECKPOINT = re.compile(r"localCheckpoint\(|free_checkpoint")
 
 
 def test_fetch_at_most_returns_table_at_cap_and_none_past_it(spark):
@@ -64,4 +66,20 @@ def test_only_driver_fetch_pairs_limit_with_a_driver_action():
     assert hits == [], (
         "limit(...) + driver action outside operators/driver_fetch.py "
         f"(use fetch_at_most / count_at_most): {hits}"
+    )
+
+
+def test_only_lineage_checkpoints_or_frees():
+    lineage = _PKG / "operators" / "lineage.py"
+    hits = []
+    for path in sorted(_PKG.rglob("*.py")):
+        if path == lineage:
+            continue
+        text = path.read_text()
+        for m in _CHECKPOINT.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            hits.append(f"{path.relative_to(_PKG.parent)}:{line}")
+    assert hits == [], (
+        "localCheckpoint / free_checkpoint outside operators/lineage.py "
+        f"(use checkpoint / materialize / fixpoint): {hits}"
     )

@@ -837,6 +837,38 @@ def test_iterative_operators_release_checkpoints_synchronously(
     assert delta <= 24
 
 
+def test_matview_frees_its_slice_when_the_merge_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A CommitConflict out of the table merge propagates, and the
+    slice materialized for it is freed on the way out: refresh and
+    merge_batch leave no cached partition behind."""
+    from metadata_wrangler_spark.catalog import load
+    from metadata_wrangler_spark.operators.matview import (
+        MaterializedDailyRollup,
+    )
+    from metadata_wrangler_spark.operators.merge import (
+        CommitConflict,
+        VersionedParquetTable,
+    )
+
+    ev = load(spark, SF, "events")
+    mv = MaterializedDailyRollup(spark, str(tmp_path / "mv"))
+    mv.init(ev.where(F.col("ts") <= F.lit("2024-01-15").cast("timestamp")))
+
+    def conflict(self, fn, *args, **kwargs):
+        raise CommitConflict("injected")
+
+    monkeypatch.setattr(VersionedParquetTable, "merge", conflict)
+    # <= 0, not == 0: a shared session's ContextCleaner may reclaim
+    # another test's blocks meanwhile (see the contract test below).
+    for call in (lambda: mv.refresh(ev), lambda: mv.merge_batch(ev, 7)):
+        before = _cached_partitions(spark)
+        with pytest.raises(CommitConflict):
+            call()
+        assert _cached_partitions(spark) - before <= 0
+
+
 def test_free_checkpoint_contract(spark):
     """free_checkpoint: True + blocks gone for a localCheckpoint
     product; False (no-op) for an ordinary DataFrame."""
