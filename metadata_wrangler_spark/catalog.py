@@ -27,22 +27,14 @@ TABLES = (
 # every query invocation. Keyed weakly on the live session object
 # (not id(spark) — CPython reuses ids after GC, which could serve a
 # plan bound to a dead session) so entries die with the session.
-# Caveat: a cached plan pins the scan's file listing; for a table
-# directory rewritten in place under the SAME session, call
-# ``invalidate(sf_dir)`` to drop the stale listing.
+# Caveat: a cached plan pins the scan's file listing, so a table
+# directory rewritten in place under the SAME session keeps being
+# read through the stale listing until the session ends.
 import weakref
 
 _LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
-
-
-def invalidate(sf_dir: str | None = None) -> None:
-    """Drop cached plans (for ``sf_dir``, or all) — needed when a
-    table directory is rewritten in place mid-session."""
-    for per_session in _LOAD_CACHE.values():
-        for key in [k for k in per_session if sf_dir is None or k[0] == sf_dir]:
-            del per_session[key]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

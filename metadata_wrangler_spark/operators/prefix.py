@@ -22,9 +22,10 @@ SKEW-PROOF spelling both of those approximate:
      PARTITIONED by ``spark_partition_id()`` — P parallel tasks,
      each sorting ~n/P rows.
   3. Per-partition totals (one tiny P-row aggregate) turned into
-     starting offsets by a broadcast triangular join over the
-     bucket ids (P² pairs; P is a config constant, never a function
-     of data size).
+     starting offsets by ``bucket_offsets``: one grouped aggregate
+     that collects each group's ≤ P bucket totals into an array and
+     prefix-sums it, broadcast back (P is a config constant, never a
+     function of data size).
   4. global rank = offset_count + local rank;
      global cum  = offset_sum  + local cum.
 
@@ -141,19 +142,14 @@ def global_order_stats(
     for c in cum_cols:
         loc = loc.withColumn(f"cum_{c}", F.sum(c).over(wcum))
 
-    aggs = [F.count(F.lit(1)).alias("__gos_n")] + [
-        F.sum(c).alias(f"__gos_s_{c}") for c in cum_cols
-    ]
-    totals = b.groupBy(_B, *gcols).agg(*aggs)
-    # The totals table holds ≤ npart × |groups| rows. Two tiers:
-    # when it fits a bounded driver collect (grouped mode is
-    # documented for LOW-cardinality keys, so it almost always
-    # does), the running offsets are a trivial driver-side cumsum —
-    # one job instead of the triangular-join spelling's chain of
-    # broadcast builds (measured 28 jobs for a two-pass MAD plan,
-    # most of them offset plumbing). High-cardinality groups fall
-    # back to the distributed triangular join unchanged.
-    #
+    gkeys = [f"__gos_g_{g}" for g in gcols]
+    sums = ["__gos_n"] + [f"__gos_s_{c}" for c in cum_cols]
+    totals = b.groupBy(
+        _B, *[F.col(g).alias(k) for g, k in zip(gcols, gkeys)]
+    ).agg(
+        F.count(F.lit(1)).alias(sums[0]),
+        *[F.sum(c).alias(s) for c, s in zip(cum_cols, sums[1:])],
+    )
     # Round-11 rejected probes, measured sf1 interleaved A/Bs
     # (medians of 5, rows identical both times): (1) annotating
     # rank/cums in ONE Arrow kernel over the checkpointed buckets
@@ -167,41 +163,100 @@ def global_order_stats(
     # w_percent_rank_cume 1.01→1.17). Aggregate-only consumers that
     # never need per-row ranks should use grouped_rank_value_sums
     # below instead of this operator.
-    ttbl = fetch_at_most(totals, _DRIVER_TOTALS_MAX, "prefix_order_totals")
-    if ttbl is not None:
-        offsets = _driver_offsets(
-            df.sparkSession, totals.schema, ttbl.to_pylist(), gcols,
-            cum_cols, total_col,
-        )
-    else:
-        offsets = _triangular_offsets(totals, gcols, cum_cols, total_col)
-    # Keep offsets' group columns under their __gos_g_ aliases and
-    # join null-safely — a using-join on the group names would drop
-    # every NULL-keyed row (same trap as the triangular join the
-    # distributed tier uses).
+    offsets = bucket_offsets(totals, _B, gkeys, sums)
+    # Group columns stay under their __gos_g_ aliases and join
+    # null-safely: Window.partitionBy (the spelling this replaces)
+    # treats NULL as a normal partition, and plain `=` or a
+    # using-join on the group names would drop every NULL-keyed row.
     jcond = loc[_B] == offsets[_B]
-    for g in gcols:
-        jcond = jcond & loc[g].eqNullSafe(offsets[f"__gos_g_{g}"])
-    out = loc.join(F.broadcast(offsets), jcond).drop(offsets[_B])
-    for g in gcols:
-        out = out.drop(offsets[f"__gos_g_{g}"])
+    for g, k in zip(gcols, gkeys):
+        jcond = jcond & loc[g].eqNullSafe(offsets[k])
+    out = loc.join(F.broadcast(offsets), jcond)
+
+    def shifted(local: str, s: str) -> Column:
+        # SUM semantics on both sides: a NULL side adds nothing.
+        off = offsets[f"{s}_off"]
+        return F.coalesce(loc[local] + off, loc[local], off).alias(local)
+
+    shift = {f"cum_{c}": s for c, s in zip(cum_cols, sums[1:])}
     if rank_col is not None:
-        out = out.withColumn(
-            rank_col, F.col("__gos_off_n") + F.col(rank_col)
-        )
-    for c in cum_cols:
-        out = out.withColumn(
-            f"cum_{c}", F.col(f"__gos_off_{c}") + F.col(f"cum_{c}")
-        )
-    drop = [_B, "__gos_off_n"] + [f"__gos_off_{c}" for c in cum_cols]
-    return out.drop(*drop)
+        shift[rank_col] = sums[0]
+    cols = [
+        shifted(c, shift[c]) if c in shift else loc[c]
+        for c in loc.columns if c != _B
+    ]
+    if total_col is not None:
+        cols.append(offsets[f"{sums[0]}_tot"].alias(total_col))
+        cols += [
+            offsets[f"{s}_tot"].alias(f"tot_{c}")
+            for c, s in zip(cum_cols, sums[1:])
+        ]
+    return out.select(*cols)
 
 
-# Above this many (bucket, group) total rows the offsets fall back to
-# the distributed triangular join. 64k rows on the driver is a few MB;
-# with npart≈shuffle.partitions this admits ~2k groups at P=32 —
-# far past "low-cardinality", the grouped mode's documented domain.
-# It also caps grouped_rank_value_sums' partials (raising past it).
+def bucket_offsets(
+    totals: DataFrame,
+    bucket_col: str,
+    group_cols: Sequence[str],
+    sum_cols: Sequence[str],
+) -> DataFrame:
+    """Running offsets of ordered buckets. ``totals`` holds one row
+    per (group, bucket) with that bucket's totals in ``sum_cols``;
+    the result keeps ``bucket_col`` and ``group_cols`` and adds, per
+    ``s`` in ``sum_cols``, ``<s>_off`` — the SUM of ``s`` over the
+    EARLIER buckets of the group — and ``<s>_tot``, the SUM over the
+    whole group. Both follow SQL SUM: NULLs are skipped, and no
+    value at all (the first bucket) gives NULL.
+
+    A grouped aggregate, never a window: each group's (bucket, sums)
+    structs are collected, sorted by bucket, prefix-summed with
+    ``transform``/``aggregate`` and ``inline``d back. An array holds
+    one struct per bucket, so it is bounded by the bucket count,
+    never by the data; each offset sums its slice of the array, so a
+    group costs O(buckets²) additions. A window over the totals would
+    put an ``Exchange SinglePartition`` under it when there are no
+    groups.
+    """
+    types = {f.name: f.dataType for f in totals.schema.fields}
+    arr = F.col("__bo_arr")
+
+    def total(structs: Column, s: str) -> Column:
+        # Cast back each step: decimal addition widens the
+        # accumulator's type, and aggregate() needs it fixed.
+        t = types[s]
+        return F.aggregate(
+            structs,
+            F.lit(None).cast(t),
+            lambda acc, y: F.coalesce(acc + y[s], acc, y[s]).cast(t),
+        )
+
+    per_group = totals.groupBy(*group_cols).agg(
+        F.array_sort(
+            F.collect_list(F.struct(bucket_col, *sum_cols))
+        ).alias("__bo_arr")
+    )
+    return per_group.select(
+        *group_cols,
+        *[total(arr, s).alias(f"{s}_tot") for s in sum_cols],
+        F.inline(
+            F.transform(
+                arr,
+                lambda x, i: F.struct(
+                    x[bucket_col].alias(bucket_col),
+                    *[
+                        total(F.slice(arr, 1, i), s).alias(f"{s}_off")
+                        for s in sum_cols
+                    ],
+                ),
+            )
+        ),
+    )
+
+
+# Cap on the bounded driver fetches that compose on the driver:
+# grouped_rank_value_sums' (bucket, group) partials (raising past it)
+# and g_degree_distribution's histogram (falling back to
+# global_order_stats past it). 64k rows on the driver is a few MB.
 _DRIVER_TOTALS_MAX = 65536
 
 #: per-chunk row bound inside the rank-moment kernel: with values
@@ -371,144 +426,3 @@ def grouped_rank_value_sums(
         rec["n"], rec["sx"], rec["srx"] = n_tot, sx_tot, srx_tot
         out.append(rec)
     return out
-
-
-def _null_last_key(row, gcols):
-    """Sort key over group values + bucket id, NULL-safe: None sorts
-    before any value (matching F.asc's nulls-first), bucket id last."""
-    parts = []
-    for g in gcols:
-        v = row[g]
-        parts.append((0, "") if v is None else (1, v))
-    parts.append(row[_B])
-    return tuple(parts)
-
-
-def _driver_offsets(spark, totals_schema, trows, gcols, cum_cols,
-                    total_col):
-    """Offsets as a driver-side running sum over the collected
-    per-(bucket, group) totals — bit-identical to the triangular
-    join (integer counts; cum sums add in bucket order, a fixed
-    order the distributed spelling does not even promise)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    by_type = {f.name: f.dataType for f in totals_schema.fields}
-    fields = [StructField(_B, by_type[_B], False)]
-    fields += [
-        StructField(f"__gos_g_{g}", by_type[g], True) for g in gcols
-    ]
-    fields.append(StructField("__gos_off_n", LongType(), False))
-    fields += [
-        StructField(f"__gos_off_{c}", by_type[f"__gos_s_{c}"], True)
-        for c in cum_cols
-    ]
-    if total_col is not None:
-        fields.append(StructField(total_col, LongType(), False))
-        fields += [
-            StructField(f"tot_{c}", by_type[f"__gos_s_{c}"], True)
-            for c in cum_cols
-        ]
-    import decimal
-
-    from pyspark.sql.types import DecimalType, DoubleType, FloatType
-
-    def _coerce(v, dt):
-        # createDataFrame type verification wants exact Python types:
-        # a plain int 0 offset must become Decimal/float for
-        # DECIMAL/DOUBLE sum columns.
-        if isinstance(dt, DecimalType) and not isinstance(
-            v, decimal.Decimal
-        ):
-            return decimal.Decimal(v)
-        if isinstance(dt, (DoubleType, FloatType)):
-            return float(v)
-        return v
-
-    sum_types = {c: by_type[f"__gos_s_{c}"] for c in cum_cols}
-    rows = sorted(trows, key=lambda r: _null_last_key(r, gcols))
-    out, group_of = [], {}
-    cur_key, run_n, run_s = object(), 0, {}
-    for r in rows:
-        key = tuple(r[g] for g in gcols)
-        if key != cur_key:
-            cur_key, run_n = key, 0
-            run_s = {c: 0 for c in cum_cols}
-        rec = [r[_B]] + [r[g] for g in gcols] + [run_n]
-        rec += [_coerce(run_s[c], sum_types[c]) for c in cum_cols]
-        out.append(rec)
-        group_of[len(out) - 1] = key
-        run_n += r["__gos_n"]
-        for c in cum_cols:
-            s = r[f"__gos_s_{c}"]
-            if s is not None:
-                run_s[c] += s
-    if total_col is not None:
-        gtot, gsum = {}, {}
-        for r in rows:
-            key = tuple(r[g] for g in gcols)
-            gtot[key] = gtot.get(key, 0) + r["__gos_n"]
-            sums = gsum.setdefault(key, {c: 0 for c in cum_cols})
-            for c in cum_cols:
-                s = r[f"__gos_s_{c}"]
-                if s is not None:
-                    sums[c] += s
-        for i, rec in enumerate(out):
-            key = group_of[i]
-            rec.append(gtot[key])
-            rec += [
-                _coerce(gsum[key][c], sum_types[c]) for c in cum_cols
-            ]
-    return spark.createDataFrame(out, StructType(fields))
-
-
-def _triangular_offsets(totals, gcols, cum_cols, total_col):
-    """Distributed offsets: broadcast triangular join over bucket
-    ids — the at-scale tier for high-cardinality groups. P² pairs;
-    P is a config constant, never a function of data size."""
-    t1 = totals.select(
-        F.col(_B).alias("__gos_a"),
-        *[F.col(g).alias(f"__gos_g_{g}") for g in gcols],
-    ).distinct()
-    t2 = totals.withColumnRenamed(_B, "__gos_b")
-    cond = F.col("__gos_b") < F.col("__gos_a")
-    for g in gcols:
-        # eqNullSafe: Window.partitionBy (the spelling this
-        # replaces) treats NULL as a normal partition; plain `=`
-        # would silently drop NULL-keyed groups.
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__gos_g_{g}"))
-    offsets = (
-        t1.join(F.broadcast(t2), cond, "left")
-        .groupBy("__gos_a", *[f"__gos_g_{g}" for g in gcols])
-        .agg(
-            F.coalesce(F.sum("__gos_n"), F.lit(0)).alias("__gos_off_n"),
-            *[
-                F.coalesce(F.sum(f"__gos_s_{c}"), F.lit(0)).alias(
-                    f"__gos_off_{c}"
-                )
-                for c in cum_cols
-            ],
-        )
-        .withColumnRenamed("__gos_a", _B)
-    )
-    if total_col is not None:
-        gt = totals.groupBy(
-            *[F.col(g).alias(f"__gos_t_{g}") for g in gcols]
-        ).agg(
-            F.sum("__gos_n").alias(total_col),
-            *[
-                F.sum(f"__gos_s_{c}").alias(f"tot_{c}")
-                for c in cum_cols
-            ],
-        )
-        if gcols:
-            tc = F.lit(True)
-            for g in gcols:
-                tc = tc & F.col(f"__gos_g_{g}").eqNullSafe(
-                    F.col(f"__gos_t_{g}")
-                )
-            offsets = offsets.join(F.broadcast(gt), tc).drop(
-                *[f"__gos_t_{g}" for g in gcols]
-            )
-        else:
-            offsets = offsets.crossJoin(F.broadcast(gt))
-    return offsets

@@ -662,9 +662,11 @@ def ev_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     `coverage_provider.py:132-134`.
     """
     import os
+    import shutil
     import tempfile
     import uuid
 
+    from metadata_wrangler_spark.operators.lineage import materialize
     from metadata_wrangler_spark.operators.matview import (
         MaterializedDailyRollup,
     )
@@ -672,18 +674,23 @@ def ev_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     # Per-invocation path: a fixed name raced with any concurrent
     # run of the same query (one rmtree'ing mid-refresh of another).
-    # The small state dir is left for the OS tempdir to reap — the
-    # returned DataFrame reads it lazily, so it must outlive this
-    # function.
     path = os.path.join(
         tempfile.gettempdir(), f"mw_matview_{uuid.uuid4().hex[:12]}"
     )
-    mv = MaterializedDailyRollup(spark, path)
-    mv.init(ev.where(F.col("ts") <= F.lit(_WATERMARK).cast("timestamp")))
-    mv.refresh(ev)
-    if mv.refresh(ev) != 0:  # not assert: -O must not skip the check
-        raise AssertionError("second refresh consumed events")
-    return mv.read()
+    try:
+        mv = MaterializedDailyRollup(spark, path)
+        mv.init(
+            ev.where(F.col("ts") <= F.lit(_WATERMARK).cast("timestamp"))
+        )
+        mv.refresh(ev)
+        if mv.refresh(ev) != 0:  # not assert: -O must not skip it
+            raise AssertionError("second refresh consumed events")
+        # The view (≤ days × event types rows) is pinned so the
+        # returned plan no longer reads the state dir.
+        view, _ = materialize(mv.read(), "ev_matview_refresh view")
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+    return view
 
 
 @register(
@@ -1558,14 +1565,18 @@ def ev_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTRIBUTED PREFIX SUM instead: (1) running sums WITHIN each hour
     bucket (window partitioned by hour — parallel), (2) per-hour
     bucket totals (tiny aggregate), (3) each bucket's starting offset
-    via a broadcast triangular self-join over the bucket totals
-    (hours × hours, thousands at most — never row-cardinality), and
-    (4) offset + within-bucket sum. No stage serializes the full
-    boundary stream; the oracle's flat window is the semantic spec.
+    from ``operators.prefix.bucket_offsets`` — one aggregate over the
+    hour totals (thousands at most, never row-cardinality), joined
+    back by broadcast — and (4) offset + within-bucket sum. Hours
+    are fixed buckets, not sampled ranges, so no pin is needed. No
+    stage serializes the full boundary stream; the oracle's flat
+    window is the semantic spec.
     Per-row concurrency values inside equal-(t,delta) tie groups are
     permutation-dependent, so the query emits only per-hour MAX and
     counts — which are tie-invariant.
     """
+    from metadata_wrangler_spark.operators.prefix import bucket_offsets
+
     ev = load(spark, sf_dir, "events")
     epoch = F.floor(F.unix_timestamp("ts")).cast("bigint")
     b = ev.select(
@@ -1587,17 +1598,10 @@ def ev_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).rowsBetween(W.unboundedPreceding, 0)
     local = b.withColumn("run_local", F.sum("delta").over(within))
 
-    totals = b.groupBy("hour").agg(F.sum("delta").alias("h_total"))
-    t1 = totals.select(F.col("hour").alias("h_a"))
-    t2 = totals.select(F.col("hour").alias("h_b"), "h_total")
-    offsets = (
-        t1.join(F.broadcast(t2), F.col("h_b") < F.col("h_a"), "left")
-        .groupBy("h_a")
-        .agg(F.coalesce(F.sum("h_total"), F.lit(0)).alias("offset"))
-        .select(F.col("h_a").alias("hour"), "offset")
-    )
+    totals = b.groupBy("hour").agg(F.sum("delta").alias("h"))
+    offsets = bucket_offsets(totals, "hour", (), ["h"])
     swept = local.join(F.broadcast(offsets), "hour").withColumn(
-        "conc", F.col("run_local") + F.col("offset")
+        "conc", F.coalesce(F.col("run_local") + F.col("h_off"), "run_local")
     )
     return swept.groupBy(F.col("hour").alias("hour_epoch")).agg(
         F.max("conc").cast("long").alias("max_concurrency"),

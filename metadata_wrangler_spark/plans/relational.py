@@ -2060,7 +2060,7 @@ def a_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-bucketed running sums (balanced partitions by sampled
     boundaries — immune to the magnitude skew a bit-length bucket
     key suffers when most revenues cluster in one decade), bucket
-    offsets via a broadcast triangular join, offset + local sum.
+    offsets from one prefix-summing aggregate, offset + local sum.
     The oracle's flat global window is the semantic spec.
     """
     from metadata_wrangler_spark.operators.prefix import global_order_stats

@@ -176,9 +176,10 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
 
 def empty_frame(spark: SparkSession, schema: str | StructType) -> DataFrame:
     """A zero-row frame of ``schema`` (DDL or StructType) that the
-    optimizer folds to an empty ``LocalRelation``. ``createDataFrame([],
-    schema)`` plans a Python RDD instead, whose first action runs a task
-    per parallelism slot (8 tasks, 3.0 s cold, on a 4-core host)."""
+    optimizer folds to an empty ``LocalRelation``. ``createDataFrame``
+    over an empty list plans a Python RDD instead, whose first action
+    runs a task per parallelism slot (8 tasks, 3.0 s cold, on a 4-core
+    host)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     return spark.range(1).select(

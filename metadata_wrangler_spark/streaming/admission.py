@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.dedup import normalize_text
+from metadata_wrangler_spark.session import empty_frame
 from metadata_wrangler_spark.streaming._sweep import available_now
 
 DOCS_SCHEMA = ("doc_id BIGINT, text STRING, lang STRING, "
@@ -51,9 +52,7 @@ def admit_batch(state_path: str, batch: DataFrame) -> DataFrame:
         # OTHER read failure must propagate — treating it as an empty
         # corpus would re-admit the whole batch and append duplicate
         # fingerprints.
-        state = spark.createDataFrame(
-            [], "doc_id BIGINT, fingerprint STRING"
-        )
+        state = empty_frame(spark, "doc_id BIGINT, fingerprint STRING")
     admitted = batch_fp.join(
         state.select("fingerprint"), "fingerprint", "left_anti"
     ).select("doc_id", "fingerprint")

@@ -1,7 +1,8 @@
 """The bounded driver fetch primitive: exact cap semantics, the probe
 log line, and a source guard that keeps it the only module pairing
-``limit`` with a driver action — beside the guard that keeps
-``operators/lineage.py`` the only module that checkpoints."""
+``limit`` with a driver action — beside the guards that keep
+``operators/lineage.py`` the only module that checkpoints and
+``session.empty_frame`` the only zero-row frame."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ _LIMIT_ACTION = re.compile(
     r"\.limit\([^)]*\)\s*\.(collect|toArrow|toPandas|count)\("
 )
 _CHECKPOINT = re.compile(r"localCheckpoint\(|free_checkpoint")
+_EMPTY_CREATE = re.compile(r"createDataFrame\(\s*\[\s*\]")
 
 
 def test_fetch_at_most_returns_table_at_cap_and_none_past_it(spark):
@@ -82,4 +84,21 @@ def test_only_lineage_checkpoints_or_frees():
     assert hits == [], (
         "localCheckpoint / free_checkpoint outside operators/lineage.py "
         f"(use checkpoint / materialize / fixpoint): {hits}"
+    )
+
+
+def test_no_create_data_frame_of_an_empty_list():
+    """``createDataFrame`` over ``[]`` plans a Python RDD whose first
+    action runs a task per parallelism slot; ``session.empty_frame``
+    is the zero-row frame. Multiline, so a call split after its
+    parenthesis is caught too."""
+    hits = []
+    for path in sorted(_PKG.rglob("*.py")):
+        text = path.read_text()
+        for m in _EMPTY_CREATE.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            hits.append(f"{path.relative_to(_PKG.parent)}:{line}")
+    assert hits == [], (
+        "createDataFrame([], ...) in the package (use "
+        f"session.empty_frame): {hits}"
     )

@@ -147,11 +147,22 @@ def test_concurrency_sweep_matches_python_sweep_line(spark):
 def test_concurrency_sweep_plan_has_no_global_window(spark):
     """The scale claim, asserted mechanically: the physical plan's
     only Window partitions by the hour bucket — no SinglePartition
-    exchange feeds a Window (the distributed-prefix-sum point)."""
+    exchange feeds a Window (the distributed-prefix-sum point). The
+    one SinglePartition exchange gathers the per-hour totals (one row
+    per hour, never per event) into the bucket-offsets aggregate."""
     df = plans.QUERIES["ev_concurrency_sweep"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    windows = [l for l in plan.splitlines() if "windowspecdefinition" in l]
+    lines = plan.splitlines()
+    windows = [l for l in lines if "windowspecdefinition" in l]
     assert windows, "expected the within-bucket running-sum window"
     for line in windows:
         assert "windowspecdefinition(hour#" in line, line
-    assert "Exchange SinglePartition" not in plan
+    single = [
+        i for i, l in enumerate(lines) if "Exchange SinglePartition" in l
+    ]
+    assert len(single) == 1, single
+    # its consumer, the line above it: the scalar collect_list gather
+    # of the per-hour partial aggregate feeding it from below
+    assert "ObjectHashAggregate(keys=[]" in lines[single[0] - 1]
+    assert "collect_list(" in lines[single[0] - 1]
+    assert "partial_collect_list(" in lines[single[0] + 1]

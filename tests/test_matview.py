@@ -218,3 +218,41 @@ def test_streaming_view_merges_late_event_time_files(spark, tmp_path):
     rows = {(str(r["day"]), r["n_events"]) for r in got.collect()}
     # BOTH days present: the late file's event was not dropped
     assert rows == {("2024-01-05", 1), ("2024-01-02", 1)}
+
+
+def test_matview_refresh_query_leaves_no_state_dir(spark):
+    """ev_matview_refresh pins its view and removes its state dir
+    before returning: three calls leave no new ``mw_matview_*`` entry
+    in the temp dir, and each result still hash-matches the oracle."""
+    import os
+    import sys
+    import tempfile
+
+    sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools",
+        ),
+    )
+    from check_oracle import check_one, oracle_connection
+
+    from metadata_wrangler_spark import plans
+
+    plans.load_all_plans()
+    tmp = tempfile.gettempdir()
+
+    def state_dirs():
+        return {e for e in os.listdir(tmp) if e.startswith("mw_matview_")}
+
+    before = state_dirs()
+    con = oracle_connection(SF_DIR)
+    try:
+        for _ in range(3):
+            assert not check_one(
+                spark, con, plans.QUERIES["ev_matview_refresh"],
+                plans.ORACLES["ev_matview_refresh"], SF_DIR,
+            )
+    finally:
+        con.close()
+    assert state_dirs() - before == set()

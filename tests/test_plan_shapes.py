@@ -187,6 +187,15 @@ def test_abc_pareto_has_no_single_partition_window(spark, queries):
     )
 
 
+def test_concurrency_sweep_offsets_need_no_nested_loop_join(spark, queries):
+    """ev_concurrency_sweep's hour offsets come from the bucket-offsets
+    aggregate, not a `h_b < h_a` self-join (a BroadcastNestedLoopJoin
+    over hours × hours)."""
+    plan = _executed_plan(queries["ev_concurrency_sweep"](spark, SF))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_single_partition_window_detector_fires_on_flat_window(spark):
     """POSITIVE control: the detector must FLAG a known-bad plan.
     The round-4 detector's failure mode was a vacuous pass (its

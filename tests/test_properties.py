@@ -331,11 +331,12 @@ def test_global_order_stats_property(spark):
     run()
 
 
-def test_global_order_stats_property_random_groups(spark, monkeypatch):
+def test_global_order_stats_property_random_groups(spark):
     """Randomized grouped prefix-stat parity: for arbitrary
     (group, value) data — duplicate values, NULL group keys, single-
-    row groups — both offset tiers of global_order_stats reproduce
-    the flat Window.partitionBy exactly (rank + running sum)."""
+    row groups — global_order_stats reproduces the flat
+    Window.partitionBy exactly (rank, running sum, group count and
+    group sum)."""
     from pyspark.sql import Window as W
 
     from metadata_wrangler_spark.operators import prefix
@@ -359,26 +360,27 @@ def test_global_order_stats_property_random_groups(spark, monkeypatch):
         ]
         df = spark.createDataFrame(rows, "id long, g string, v long")
         flat = W.partitionBy("g").orderBy("v", "id")
+        whole = W.partitionBy("g")
         want = {
-            r["id"]: (r["rn"], r["cum_v"])
+            r["id"]: tuple(r)[1:]
             for r in df.select(
                 "id",
                 F.row_number().over(flat).cast("bigint").alias("rn"),
                 F.sum("v").over(
                     flat.rowsBetween(W.unboundedPreceding, W.currentRow)
                 ).alias("cum_v"),
+                F.count(F.lit(1)).over(whole).alias("n_total"),
+                F.sum("v").over(whole).alias("tot_v"),
             ).collect()
         }
-        for tier_max in (prefix._DRIVER_TOTALS_MAX, 1):
-            with monkeypatch.context() as m:
-                m.setattr(prefix, "_DRIVER_TOTALS_MAX", tier_max)
-                got = {
-                    r["id"]: (r["rn"], r["cum_v"])
-                    for r in prefix.global_order_stats(
-                        df, [F.asc("v"), F.asc("id")],
-                        group_cols=["g"], cum_cols=["v"], npart=5,
-                    ).collect()
-                }
-            assert got == want
+        got = {
+            r["id"]: (r["rn"], r["cum_v"], r["n_total"], r["tot_v"])
+            for r in prefix.global_order_stats(
+                df, [F.asc("v"), F.asc("id")],
+                group_cols=["g"], cum_cols=["v"], npart=5,
+                total_col="n_total",
+            ).collect()
+        }
+        assert got == want
 
     run()

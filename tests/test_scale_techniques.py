@@ -420,39 +420,113 @@ def test_global_order_stats_grouped_null_keys_match_flat_window(spark):
     assert got == want
 
 
-def test_global_order_stats_distributed_tier_matches_driver_tier(
-    spark, monkeypatch
-):
-    """The triangular-join offsets tier (taken when the totals table
-    exceeds the driver bound) must produce the same output as the
-    driver-side cumsum tier that small runs take — including NULL
-    group keys and running sums. Forces the fallback by shrinking
-    the bound."""
-    from metadata_wrangler_spark.operators import prefix
+def _flat_grouped_stats(df, order, cum):
+    """The spec global_order_stats replaces: Window.partitionBy(g)
+    rank and running sum, plus the group's row count and total."""
+    from pyspark.sql import Window as W
+
+    flat = W.partitionBy("g").orderBy(*order)
+    whole = W.partitionBy("g")
+    return {
+        r["id"]: tuple(r)[1:]
+        for r in df.select(
+            "id",
+            F.row_number().over(flat).cast("bigint").alias("rn"),
+            F.sum(cum).over(
+                flat.rowsBetween(W.unboundedPreceding, W.currentRow)
+            ).alias(f"cum_{cum}"),
+            F.count(F.lit(1)).over(whole).alias("n_total"),
+            F.sum(cum).over(whole).alias(f"tot_{cum}"),
+        ).collect()
+    }
+
+
+def test_global_order_stats_grouped_totals_match_flat_window(spark):
+    """Grouped rank, running sum, total_col and tot_<c> equal the
+    flat Window.partitionBy spec: NULL group keys, a DECIMAL cum
+    column, and NULL cum values after non-NULL ones: scattered, and
+    an all-NULL second half of every group, which bucket boundaries
+    fall into (the offset then carries the earlier buckets' sum
+    through a NULL local running sum)."""
+    from metadata_wrangler_spark.operators.prefix import global_order_stats
 
     df = spark.range(0, 600).select(
         F.col("id"),
         F.when(F.col("id") % 4 == 0, F.lit(None).cast("string"))
         .otherwise((F.col("id") % 4).cast("string")).alias("g"),
-        ((F.col("id") * 13) % 41).alias("v"),
+        F.when((F.col("id") % 7 == 0) | (F.col("id") >= 300), F.lit(None))
+        .otherwise((F.col("id") * 13) % 41)
+        .cast("decimal(20,0)").alias("v"),
     )
-    kw = dict(group_cols=["g"], cum_cols=["v"], npart=5,
-              total_col="n_total")
-    small = {
-        r["id"]: (r["rn"], r["cum_v"], r["n_total"])
-        for r in prefix.global_order_stats(
-            df, [F.asc("v"), F.asc("id")], **kw
-        ).collect()
+    order = [F.asc("id")]
+    out = global_order_stats(
+        df, order, group_cols=["g"], cum_cols=["v"], npart=5,
+        total_col="n_total",
+    )
+    got = {
+        r["id"]: (r["rn"], r["cum_v"], r["n_total"], r["tot_v"])
+        for r in out.collect()
     }
-    monkeypatch.setattr(prefix, "_DRIVER_TOTALS_MAX", 1)  # 5×4=20 rows > 1
-    big = {
-        r["id"]: (r["rn"], r["cum_v"], r["n_total"])
-        for r in prefix.global_order_stats(
-            df, [F.asc("v"), F.asc("id")], **kw
-        ).collect()
+    assert len(got) == 600
+    assert got == _flat_grouped_stats(df, order, "v")
+
+
+def test_global_order_stats_many_bucket_group_totals_match_flat_window(
+    spark,
+):
+    """More (bucket, group) totals than the 65,536 rows a driver
+    collect of them would admit: every group holds at least one
+    totals row, so 70,000 two-row groups make over 70,000, and the
+    result still equals the flat Window.partitionBy spec."""
+    from metadata_wrangler_spark.operators.prefix import global_order_stats
+
+    df = spark.range(0, 140_000).select(
+        F.col("id"),
+        (F.col("id") % 70_000).cast("string").alias("g"),
+        (F.col("id") % 5).alias("v"),
+    )
+    order = [F.asc("id")]
+    out = global_order_stats(
+        df, order, group_cols=["g"], cum_cols=["v"], npart=3,
+        total_col="n_total",
+    )
+    got = {
+        r["id"]: (r["rn"], r["cum_v"], r["n_total"], r["tot_v"])
+        for r in out.collect()
     }
-    assert len(small) == 600
-    assert small == big
+    assert got == _flat_grouped_stats(df, order, "v")
+
+
+def test_global_order_stats_offsets_stay_in_the_plan(spark, monkeypatch):
+    """The offsets are part of the lazy plan: no driver fetch, and no
+    Python-built RDD scan carries offset columns. The only RDD scans
+    left are the range pin's, whose columns are the input's plus the
+    bucket id."""
+    import re
+
+    from metadata_wrangler_spark.operators import prefix
+
+    def no_fetch(*a, **k):
+        raise AssertionError("global_order_stats fetched to the driver")
+
+    monkeypatch.setattr(prefix, "fetch_at_most", no_fetch)
+    df = spark.range(0, 400).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("string").alias("g"),
+        (F.col("id") % 11).alias("v"),
+    )
+    for group_cols in ([], ["g"]):
+        out = prefix.global_order_stats(
+            df, [F.asc("v"), F.asc("id")], group_cols=group_cols,
+            cum_cols=["v"], npart=4, total_col="n_total",
+        )
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)
+        assert scans
+        for cols in scans:
+            names = {c.split("#")[0] for c in cols.split(",")}
+            assert names == {"id", "g", "v", "__gos_bucket"}, cols
 
 
 def test_global_order_stats_total_col_matches_group_counts(spark):
