@@ -107,10 +107,13 @@ def equivalent_ids(
     # the old spelling paid 3.3 s of dedup+checkpoint plus a 3.0 s
     # row-collect before any BFS work.
     probe = fetch_at_most(filtered, LOCAL_SOLVE_MAX_EDGES, "closure_ids_edges")
-    if probe is not None:
+    seed_vals = None if probe is None else _seed_values(
+        seeds, "closure_ids_seeds"
+    )
+    if seed_vals is not None:
         # Driver-local tier: the numpy CSR walk of bfs_levels_pdf (a
         # per-edge Python dict build measured ~1 s/M edges).
-        out = bfs_levels_pdf(probe.to_pandas(), _seed_values(seeds), levels)
+        out = bfs_levels_pdf(probe.to_pandas(), seed_vals, levels)
         return spark.createDataFrame(out, "node bigint, level int")
     # Distributed tier: materialize the deduped edge set ONCE. Every
     # level joins against it; without the pin each level re-runs the
@@ -140,7 +143,7 @@ def equivalent_ids(
             seeds.select(
                 F.col(seed_col).cast("bigint").alias("node"),
                 F.lit(0).alias("level"),
-            ).dropDuplicates(["node"]),
+            ).where(F.col("node").isNotNull()).dropDuplicates(["node"]),
             expand,
             cap=levels,
             probe=row_count,
@@ -219,14 +222,18 @@ def bfs_levels_pdf(edge_pdf, seed_vals, levels: int):
     )
 
 
-def _seed_values(seeds: DataFrame) -> list[int]:
-    """The distinct non-NULL ids in ``seeds``' first column."""
-    col = seeds.columns[0]
-    return [
-        int(r[0])
-        for r in seeds.select(col).dropDuplicates().collect()
-        if r[0] is not None
-    ]
+def _seed_values(seeds: DataFrame, name: str) -> list[int] | None:
+    """The distinct non-NULL ids in ``seeds``' first column, or None
+    past the local tier's cap (``LOCAL_SOLVE_MAX_EDGES``): the caller
+    then takes the distributed tier, which joins the seeds instead of
+    shipping them to the driver."""
+    distinct = (
+        seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("node"))
+        .where(F.col("node").isNotNull())
+        .dropDuplicates()
+    )
+    tbl = fetch_at_most(distinct, LOCAL_SOLVE_MAX_EDGES, name)
+    return None if tbl is None else tbl.column("node").to_pylist()
 
 
 def connected_components(
@@ -508,13 +515,15 @@ def bounded_shortest_paths(
         raise ValueError("bounded_shortest_paths needs even hops >= 2")
     spark = edges.sparkSession
     node_col, src_col = nodes.columns[0], sources.columns[0]
-    tbl = None
+    tbl = source_vals = None
     if edge_count_hint is None:
         tbl = fetch_at_most(edges, LOCAL_SOLVE_MAX_EDGES, "closure_sp_edges")
     elif edge_count_hint <= LOCAL_SOLVE_MAX_EDGES:
         tbl = edges.toArrow()
     if tbl is not None:
-        out = bounded_min_plus_pdf(tbl.to_pandas(), _seed_values(sources), hops)
+        source_vals = _seed_values(sources, "closure_sp_sources")
+    if source_vals is not None:
+        out = bounded_min_plus_pdf(tbl.to_pandas(), source_vals, hops)
         return spark.createDataFrame(out, "node bigint, code bigint")
 
     # Distributed tier: min-plus doubling (see g_shortest_path's

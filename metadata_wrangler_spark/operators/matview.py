@@ -188,10 +188,10 @@ class MaterializedDailyRollup:
         NOT filtered by event time — a late-arriving file whose
         events predate the stored watermark still merges (the
         event-time guard in ``refresh`` would silently drop it; the
-        first streaming driver did exactly that). foreachBatch is
-        at-least-once on failure recovery, so the batch id commits as
-        ``last_batch_id`` in the same snapshot claim and the table's
-        merge skips a replayed id. Returns rows merged."""
+        first streaming driver did exactly that). The sweep re-runs
+        a batch that never got its commit marker, so the batch id
+        commits as ``last_batch_id`` in the same snapshot claim and
+        the table's merge skips a replayed id. Returns rows merged."""
         merged_count = 0
         with materialize(batch_df, f"matview batch {batch_id}") as (batch, _):
 

@@ -156,6 +156,35 @@ class CommitConflict(Exception):
     """Another writer claimed the target version first."""
 
 
+def _claim_json(path: str, body: dict) -> bool:
+    """Create ``path`` holding ``body`` as JSON, only if it does not
+    exist yet. Returns False when another writer claimed it first.
+
+    The body goes to a private temp file first, then ``path`` is
+    claimed with an atomic link(2): the claim either fully succeeds
+    (the file appears complete in one step — a concurrent reader can
+    never observe a half-written JSON) or fails with FileExistsError
+    because another writer got there first. A crash before the link
+    leaves only a ``.tmp`` file, never an empty or truncated ``path``.
+    """
+    import json
+    import os
+    import uuid
+
+    tmp = path + f".{uuid.uuid4().hex[:12]}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
 class VersionedParquetTable:
     """ACID MERGE target on plain parquet: optimistic concurrency via
     atomic manifest claims — the protocol essence of a Delta/Iceberg
@@ -281,7 +310,6 @@ class VersionedParquetTable:
         writer — carries the prior map forward instead of resetting
         it, so an exactly-once consumer's ``last_batch_id`` survives
         writers that know nothing about it."""
-        import json
         import os
         import uuid
 
@@ -294,33 +322,10 @@ class VersionedParquetTable:
         )
         post_state.write.mode("overwrite").parquet(data_dir)
         manifest = os.path.join(self._versions_dir, f"v{target}.json")
-        # Write the manifest body to a private temp file first, then
-        # claim the version with an atomic link(2). The claim either
-        # fully succeeds (manifest appears complete in one step — a
-        # concurrent reader can never observe a half-written JSON) or
-        # fails with FileExistsError because another writer got there
-        # first. A crash before the link leaves only a .tmp file and
-        # an unreferenced data dir, both vacuumable; it can never
-        # leave v{N}.json empty/truncated.
-        tmp = manifest + f".{uuid.uuid4().hex[:12]}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": target,
-                    "data_dir": data_dir,
-                    "meta": meta or {},
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, manifest)
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-        return True
+        return _claim_json(
+            manifest,
+            {"version": target, "data_dir": data_dir, "meta": meta or {}},
+        )
 
     def merge(
         self, fn, max_retries: int = 10, meta: dict | None = None
@@ -401,7 +406,7 @@ class VersionedParquetTable:
         identical to the current snapshot but rewritten into
         ``target_files`` balanced files.
 
-        Streaming ingestion through merge()/foreachBatch accretes one
+        Streaming ingestion through one merge() per batch accretes one
         file per batch-partition; thousands of tiny files degrade
         scans (footer reads dominate, splits shrink below row-group
         size — the inverse of the sf1 row-group lesson in

@@ -18,8 +18,8 @@ A queue row is (identifier_id, data_source, operation, status, ts,
 exception). Statuses: registered | success | transient failure |
 persistent failure. All transitions are joins/unions — no
 driver-side loops — so draining scales with executor count, and the
-same functions run unchanged inside a Structured Streaming
-foreachBatch (streaming.queue_drain).
+same functions run unchanged on each swept batch of new items
+(streaming.queue_drain).
 """
 
 from __future__ import annotations

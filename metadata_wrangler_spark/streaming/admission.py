@@ -13,8 +13,10 @@ Design notes for 100 TB/day:
   * within-batch duplicates are collapsed first (min doc_id wins,
     same rule as the batch tier), so a batch containing the same
     content twice admits one row;
-  * exactness across restarts comes from the checkpointed source
-    offsets; the state append is idempotent per admitted fingerprint.
+  * exactness across restarts comes from the sweep's batch log
+    (``_sweep.drain``): each file joins one batch, and a batch that
+    never committed is re-run with the same files — harmless, since
+    the anti-join admits nothing already appended.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.dedup import normalize_text
 from metadata_wrangler_spark.session import empty_frame
-from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming._sweep import drain
 
 DOCS_SCHEMA = ("doc_id BIGINT, text STRING, lang STRING, "
                "source STRING, n_chars BIGINT")
@@ -66,12 +68,9 @@ def run_admission_stream(
     state_path: str,
     checkpoint_dir: str,
 ) -> DataFrame:
-    """One AvailableNow pass over whatever document files exist:
-    fingerprint → anti-join vs corpus state → append admitted.
-    Returns the post-run state table."""
-    available_now(
-        spark.readStream.schema(DOCS_SCHEMA).parquet(source_dir),
-        checkpoint_dir,
-        foreach_batch=lambda b, _id: admit_batch(state_path, b) and None,
-    )
+    """One sweep over the document files not yet swept: fingerprint →
+    anti-join vs corpus state → append admitted. Returns the post-run
+    state table."""
+    drain(spark, source_dir, DOCS_SCHEMA, checkpoint_dir,
+          lambda batch, _id: admit_batch(state_path, batch))
     return spark.read.parquet(state_path)

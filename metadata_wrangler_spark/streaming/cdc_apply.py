@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.merge import VersionedParquetTable
 from metadata_wrangler_spark.session import empty_frame
-from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming._sweep import drain
 
 CHANGES_SCHEMA = "key BIGINT, version BIGINT, op STRING, qv BIGINT"
 
@@ -83,19 +83,21 @@ def run_cdc_stream(
     table: VersionedParquetTable,
     checkpoint_dir: str,
 ) -> None:
-    """AvailableNow drain of a parquet change feed through
-    foreachBatch into the state table, EXACTLY-ONCE in every field
-    including ``n_changes``: each micro-batch is one ``table.merge``
-    with the batch id riding in the manifest's ``meta`` (the Delta
-    ``txn`` pattern), so state + progress linearize in one claim. A
-    replayed batch (crash after the state commit, before the
-    source-offset commit) finds its id in the pinned base's
-    ``last_batch_id`` and commits nothing — also when a competing
-    writer commits it mid-merge — and a crash mid-commit loses
-    nothing (the previous snapshot stays current until the new
-    manifest appears). Interleaved writers that supply no meta
-    (compaction, a second stream) carry ``last_batch_id`` forward:
-    ``try_commit`` merges meta key-wise over the base version's map."""
+    """One sweep (``_sweep.drain``) of a parquet change feed into the
+    state table, EXACTLY-ONCE in every field including ``n_changes``.
+    The sweep claims a write-ahead entry (batch id + files) before the
+    batch runs; each batch is then one ``table.merge`` with the batch
+    id riding in the manifest's ``meta`` (the Delta ``txn`` pattern),
+    so state + progress linearize in one manifest claim. A batch whose
+    entry has no commit marker (crash after the state commit, before
+    the marker) is re-run with the same id and files, finds its id in
+    the pinned base's ``last_batch_id`` and commits nothing — also
+    when a competing writer commits it mid-merge — and a crash
+    mid-commit loses nothing (the previous snapshot stays current
+    until the new manifest appears). Interleaved writers that supply
+    no meta (compaction, a second stream) carry ``last_batch_id``
+    forward: ``try_commit`` merges meta key-wise over the base
+    version's map."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         table.merge(
@@ -103,7 +105,4 @@ def run_cdc_stream(
             meta={"last_batch_id": batch_id},
         )
 
-    available_now(
-        spark.readStream.schema(CHANGES_SCHEMA).parquet(changes_dir),
-        checkpoint_dir, foreach_batch=handle,
-    )
+    drain(spark, changes_dir, CHANGES_SCHEMA, checkpoint_dir, handle)

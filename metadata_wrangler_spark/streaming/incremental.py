@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from metadata_wrangler_spark.streaming._sweep import available_now
 
 
-def _events_schema(spark: SparkSession, source_dir: str) -> tuple[str, bool]:
+def events_schema(spark: SparkSession, source_dir: str) -> tuple[str, bool]:
     """Detect the physical type of ``ts`` from one batch footer read
     (mirrors catalog.load's detect-then-convert) and return
     ``(stream_schema_ddl, needs_nanos_conversion)``.
@@ -49,18 +49,21 @@ def read_events_stream(
 ) -> DataFrame:
     """The events parquet directory as a stream, at most
     ``max_files_per_trigger`` files per micro-batch when set."""
-    schema, is_nanos = _events_schema(spark, source_dir)
+    schema, is_nanos = events_schema(spark, source_dir)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option(
             "maxFilesPerTrigger", str(max_files_per_trigger)
         )
     raw = reader.parquet(source_dir)
-    if is_nanos:
-        # nanos-as-long → real microsecond timestamp (integer div:
-        # nano epochs exceed 2^53, float division would corrupt).
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return raw
+    return ts_from_nanos(raw) if is_nanos else raw
+
+
+def ts_from_nanos(raw: DataFrame) -> DataFrame:
+    """``raw`` with its nanos-as-long ``ts`` turned into a microsecond
+    timestamp (integer div: nano epochs exceed 2^53, float division
+    would corrupt)."""
+    return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
 
 
 def watermarked(events: DataFrame, delay: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""foreachBatch queue drain — the CoverageRecord-provider twin.
+"""Swept queue drain — the CoverageRecord-provider twin.
 
 Reference: the cron entries draining `registered` records
 (`/root/reference/docker/services/simplified_crontab:13-27`,
@@ -10,8 +10,9 @@ SAME set-oriented queue transitions as the batch path
 (operators.queue) inside one optimistic merge of a
 VersionedParquetTable — register the new items, process the eligible
 set, apply outcomes, commit. A drain racing a registrar serializes
-instead of losing updates; exactness comes from the checkpointed
-source offsets.
+instead of losing updates; the sweep's batch log (``_sweep.drain``)
+hands each items file to one batch, re-run with the same files if
+it never committed.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators import queue
 from metadata_wrangler_spark.operators.merge import VersionedParquetTable
-from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming._sweep import drain
 
 ITEMS_SCHEMA = "identifier_id BIGINT"
 
@@ -70,7 +71,7 @@ def drain_batch(
     backoff_seconds: int = 0,
 ) -> None:
     """One drain step, committed as one optimistic merge (shared by
-    the streaming foreachBatch and any batch cron)."""
+    the swept stream and any batch cron)."""
     def fn(records: DataFrame, _meta: dict) -> DataFrame:
         return _transition(records, items, data_source, operation,
                            now, processor, backoff_seconds)
@@ -88,13 +89,11 @@ def run_drain_stream(
     now: str = "2024-01-15 00:00:00",
     processor: Callable[[DataFrame], DataFrame] = default_processor,
 ) -> None:
-    """AvailableNow drain of the items stream through foreachBatch."""
+    """One sweep of the items files: each new batch is one
+    ``drain_batch``."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         drain_batch(table, batch_df, data_source, operation, now,
                     processor)
 
-    available_now(
-        spark.readStream.schema(ITEMS_SCHEMA).parquet(items_dir),
-        checkpoint_dir, foreach_batch=handle,
-    )
+    drain(spark, items_dir, ITEMS_SCHEMA, checkpoint_dir, handle)

@@ -335,3 +335,44 @@ def test_fixpoint_logs_name_round_and_probe_value(spark, monkeypatch, caplog):
         "pin closure_ids round 2: 1",
         "closure_ids: stopped at its cap of 2 rounds",
     ]
+
+
+def test_seeds_past_the_local_cap_take_the_distributed_tier(
+    spark, monkeypatch, caplog
+):
+    """Both local tiers fetch their distinct seeds through
+    ``fetch_at_most`` with the local tier's cap. Edges within the cap
+    but more distinct seeds than it: the seed fetch logs ``over`` and
+    the distributed tier answers, with the local tier's rows."""
+    import logging
+
+    from metadata_wrangler_spark.operators import driver_fetch
+    from metadata_wrangler_spark.operators.closure import (
+        bounded_shortest_paths,
+    )
+
+    # 3 edges; 5 distinct non-NULL seeds (a duplicate and a NULL too)
+    e = _edges(spark, [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0)])
+    seeds = _seeds(spark, [1, 1, None, 5, 6, 7, 8])
+    we = _wedges(spark, [(1, 2, 1001), (2, 3, 1001), (3, 4, 1001)])
+    nodes = _seeds(spark, range(1, 9))
+    local_eq = rows(equivalent_ids(e, seeds, levels=3))
+    assert local_eq == [(1, 0), (2, 1), (3, 2), (4, 3),
+                        (5, 0), (6, 0), (7, 0), (8, 0)]
+    local_sp = rows(bounded_shortest_paths(we, nodes, seeds, hops=4))
+
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 4)
+    with caplog.at_level(logging.INFO, logger=driver_fetch.__name__):
+        assert rows(equivalent_ids(e, seeds, levels=3)) == local_eq
+        assert rows(
+            bounded_shortest_paths(we, nodes, seeds, hops=4)
+        ) == local_sp
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == driver_fetch.__name__
+    ] == [
+        "driver fetch closure_ids_edges: cap=4 seen=3 -> within",
+        "driver fetch closure_ids_seeds: cap=4 seen=5 -> over",
+        "driver fetch closure_sp_edges: cap=4 seen=3 -> within",
+        "driver fetch closure_sp_sources: cap=4 seen=5 -> over",
+    ]

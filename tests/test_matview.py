@@ -163,7 +163,7 @@ def test_streaming_view_maintenance_equals_full_recompute(spark, tmp_path):
 
     got = view_maintenance.run_view_maintenance_stream(
         spark, str(src), str(tmp_path / "mv"), str(tmp_path / "cp"),
-        query_name="t_vm", max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     exp = sorted(tuple(r) for r in _full_rollup(ev).collect())
     assert sorted(tuple(r) for r in got.collect()) == exp
@@ -171,7 +171,6 @@ def test_streaming_view_maintenance_equals_full_recompute(spark, tmp_path):
     # re-run with nothing new: checkpoint skips the file, view unchanged
     again = view_maintenance.run_view_maintenance_stream(
         spark, str(src), str(tmp_path / "mv"), str(tmp_path / "cp"),
-        query_name="t_vm2",
     )
     assert sorted(tuple(r) for r in again.collect()) == exp
 
@@ -213,7 +212,7 @@ def test_streaming_view_merges_late_event_time_files(spark, tmp_path):
     mv.init(load(spark, SF_DIR, "events").where(F.lit(False)))
     got = view_maintenance.run_view_maintenance_stream(
         spark, str(src), str(tmp_path / "mv"), str(tmp_path / "cp"),
-        query_name="t_late", max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     rows = {(str(r["day"]), r["n_events"]) for r in got.collect()}
     # BOTH days present: the late file's event was not dropped

@@ -580,3 +580,367 @@ def test_cdc_apply_replay_race_applies_batch_once(spark, tmp_path):
     got = {r["key"]: r["n_changes"] for r in table.read().collect()}
     assert got == {1: 1, 2: 1}
     assert table.meta() == {"last_batch_id": 0}
+
+
+# -- the drain: new files in checkpointed batches, no StreamingQuery -------
+
+
+def _changes_file(path, changes, mtime=None):
+    """One CDC change file written with pyarrow (no Spark job)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key, version, op, qv = zip(*changes)
+    pq.write_table(pa.table({
+        "key": pa.array(key, pa.int64()),
+        "version": pa.array(version, pa.int64()),
+        "op": pa.array(op, pa.string()),
+        "qv": pa.array(qv, pa.int64()),
+    }), str(path))
+    if mtime is not None:
+        os.utime(path, (mtime, mtime))
+
+
+def _recorder():
+    """A drain handler that records (batch_id, file names) per call."""
+    import os
+
+    calls = []
+
+    def handle(batch, batch_id):
+        calls.append(
+            (batch_id, sorted(os.path.basename(p) for p in batch.inputFiles()))
+        )
+
+    return calls, handle
+
+
+def _sweep_changes(spark, source, checkpoint_dir, handle, **kw):
+    from metadata_wrangler_spark.streaming import _sweep, cdc_apply
+
+    _sweep.drain(
+        spark, source, cdc_apply.CHANGES_SCHEMA, checkpoint_dir, handle, **kw
+    )
+
+
+def test_drain_reruns_an_unmarked_batch_with_its_files_and_id(spark, tmp_path):
+    """A batch that was planned but never got its commit marker (its
+    handler raised, or the process died after the state commit) is
+    re-run first on the next sweep, with the same id and the same
+    files; files that arrived since follow under the next id. Through
+    run_cdc_stream the re-run finds its id in the manifest and
+    commits nothing, so n_changes stays exact."""
+    import pytest
+
+    from metadata_wrangler_spark.streaming import cdc_apply
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _changes_file(src / "a.parquet", [(1, 1, "U", 100), (2, 2, "U", 200)])
+    cp = str(tmp_path / "cp")
+
+    def crash(_batch, _batch_id):
+        raise RuntimeError("handler crashed")
+
+    with pytest.raises(RuntimeError, match="handler crashed"):
+        _sweep_changes(spark, str(src), cp, crash)
+    _changes_file(src / "b.parquet", [(1, 3, "U", 300)])
+    calls, record = _recorder()
+    _sweep_changes(spark, str(src), cp, record)
+    assert calls == [(0, ["a.parquet"]), (1, ["b.parquet"])]
+
+    # the CDC sink: batch 0's state commit lands, then the sweep dies
+    # before its commit marker
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    shutil.copy(src / "a.parquet", feed / "a.parquet")
+    table = VersionedParquetTable(spark, str(tmp_path / "cdc_state"))
+    table.init(cdc_apply.empty_state(spark))
+    claim = table.try_commit
+
+    def commit_then_die(base_version, post_state, meta=None):
+        assert claim(base_version, post_state, meta=meta)
+        table.try_commit = claim
+        raise RuntimeError("died after the state commit")
+
+    table.try_commit = commit_then_die
+    cdc_cp = str(tmp_path / "cdc_cp")
+    with pytest.raises(RuntimeError, match="died after the state commit"):
+        cdc_apply.run_cdc_stream(spark, str(feed), table, cdc_cp)
+    shutil.copy(src / "b.parquet", feed / "b.parquet")
+    cdc_apply.run_cdc_stream(spark, str(feed), table, cdc_cp)
+    assert table.current_version() == 2  # init, batch 0, batch 1
+    assert table.meta() == {"last_batch_id": 1}
+    got = {r["key"]: (r["n_changes"], r["last_version"])
+           for r in table.read().collect()}
+    assert got == {1: (2, 3), 2: (1, 2)}  # not doubled
+
+
+def test_drain_with_nothing_new_fires_no_job_and_writes_nothing(
+    spark, tmp_path
+):
+    """A sweep that finds no new file runs no Spark job (counted by
+    job group) and changes no file or directory under the source,
+    the checkpoint or the table."""
+    import os
+
+    from metadata_wrangler_spark.streaming import cdc_apply
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _changes_file(src / "a.parquet", [(1, 1, "U", 100)])
+    table = VersionedParquetTable(spark, str(tmp_path / "state"))
+    table.init(cdc_apply.empty_state(spark))
+    cp = str(tmp_path / "cp")
+    sc = spark.sparkContext
+
+    def jobs_of(group):
+        sc.setJobGroup(group, group)
+        try:
+            cdc_apply.run_cdc_stream(spark, str(src), table, cp)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc._jsc.clearJobGroup()
+
+    def tree():
+        out = {}
+        for dirpath, _dirs, files in os.walk(tmp_path):
+            for p in [dirpath, *(os.path.join(dirpath, f) for f in files)]:
+                st = os.stat(p)
+                out[p] = (st.st_size, st.st_mtime_ns)
+        return out
+
+    assert jobs_of("test-drain-first") != []  # the count sees jobs
+    before = tree()
+    assert jobs_of("test-drain-idle") == []
+    assert tree() == before
+
+
+def test_drain_skips_hidden_names_and_takes_a_glob(spark, tmp_path):
+    """Names starting with ``_`` or ``.`` are never read (a Spark
+    write's ``_SUCCESS`` and ``.crc`` files, a ``_staging`` directory,
+    a dot file), whether the source is a glob of batch directories or
+    their parent directory."""
+    import glob
+    import os
+
+    from metadata_wrangler_spark.streaming import cdc_apply
+
+    src = tmp_path / "src"
+    src.mkdir()
+    spark.createDataFrame(
+        [(1, 1, "U", 100)], cdc_apply.CHANGES_SCHEMA
+    ).coalesce(1).write.parquet(str(src / "b0.parquet"))
+    names = set(os.listdir(src / "b0.parquet"))
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    (part,) = [os.path.basename(p)
+               for p in glob.glob(str(src / "b0.parquet" / "part-*"))]
+    (src / "_staging").mkdir()
+    _changes_file(src / "_staging" / "x.parquet", [(2, 2, "U", 200)])
+    _changes_file(src / ".inflight.parquet", [(3, 3, "U", 300)])
+
+    for i, source in enumerate((str(src) + "/*", str(src))):
+        calls, record = _recorder()
+        _sweep_changes(spark, source, str(tmp_path / f"cp{i}"), record)
+        assert calls == [(0, [part])], source
+
+
+def test_drain_max_files_takes_oldest_first_then_path(spark, tmp_path):
+    """With ``max_files=1`` each file is its own batch, taken oldest
+    first by modification time and, at equal times, by path — the
+    order of Spark's file source."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _changes_file(src / "c.parquet", [(1, 1, "U", 1)], mtime=1_700_000_100)
+    _changes_file(src / "a.parquet", [(1, 2, "U", 2)], mtime=1_700_000_300)
+    _changes_file(src / "b.parquet", [(1, 3, "U", 3)], mtime=1_700_000_100)
+    calls, record = _recorder()
+    _sweep_changes(spark, str(src), str(tmp_path / "cp"), record, max_files=1)
+    assert calls == [(0, ["b.parquet"]), (1, ["c.parquet"]),
+                     (2, ["a.parquet"])]
+
+
+def test_two_sweeps_claiming_one_batch_id_one_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Two sweeps over one checkpoint that plan the same batch id: the
+    write-ahead claim lets one win; the other raises CommitConflict
+    before its handler runs."""
+    import pytest
+
+    from metadata_wrangler_spark.operators.merge import CommitConflict
+    from metadata_wrangler_spark.streaming import _sweep
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _changes_file(src / "a.parquet", [(1, 1, "U", 100)])
+    cp = str(tmp_path / "cp")
+    claim = _sweep._claim_json
+    rival_calls, rival = _recorder()
+    raced = []
+
+    def racing_claim(path, body):
+        if not raced:  # the rival sweep plans and runs batch 0 first
+            raced.append(path)
+            _sweep_changes(spark, str(src), cp, rival)
+        return claim(path, body)
+
+    monkeypatch.setattr(_sweep, "_claim_json", racing_claim)
+    calls, record = _recorder()
+    with pytest.raises(CommitConflict, match="batch 0 was planned"):
+        _sweep_changes(spark, str(src), cp, record)
+    assert rival_calls == [(0, ["a.parquet"])]
+    assert calls == []
+
+
+def test_drain_refuses_a_structured_streaming_checkpoint(spark, tmp_path):
+    """A checkpoint a Structured Streaming query wrote (it has
+    ``offsets/``) is refused: the sweep cannot read that query's
+    progress, and re-applying its files would double n_changes."""
+    import pytest
+
+    from metadata_wrangler_spark.streaming import cdc_apply
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _changes_file(src / "a.parquet", [(1, 1, "U", 100)])
+    table = VersionedParquetTable(spark, str(tmp_path / "state"))
+    table.init(cdc_apply.empty_state(spark))
+    cp = str(tmp_path / "cp")
+
+    def handle(batch, batch_id):
+        table.merge(lambda cur, _meta: cdc_apply.apply_changes(cur, batch),
+                    meta={"last_batch_id": batch_id})
+
+    (
+        spark.readStream.schema(cdc_apply.CHANGES_SCHEMA).parquet(str(src))
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert (tmp_path / "cp" / "offsets").is_dir()
+    with pytest.raises(ValueError, match="Structured Streaming checkpoint"):
+        cdc_apply.run_cdc_stream(spark, str(src), table, cp)
+    assert table.current_version() == 1
+    assert [r["n_changes"] for r in table.read().collect()] == [1]
+
+
+def test_drain_reads_a_bounded_number_of_checkpoint_entries(
+    spark, tmp_path, monkeypatch
+):
+    """Every COMPACT_INTERVAL-th write-ahead entry carries the files
+    seen before it and retires the older entries, as Spark's
+    file-source log compacts: after 23 batches a sweep opens at most
+    COMPACT_INTERVAL entries, and no swept file is handed out again."""
+    import builtins
+    import os
+
+    from metadata_wrangler_spark.streaming import _sweep
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(23):
+        _changes_file(src / f"f{i:02d}.parquet", [(i, i, "U", i)],
+                      mtime=1_700_000_000 + i)
+    cp = tmp_path / "cp"
+    calls, record = _recorder()
+    _sweep_changes(spark, str(src), str(cp), record, max_files=1)
+    assert [c[0] for c in calls] == list(range(23))
+    assert sorted(os.listdir(cp / "batches")) == [
+        "20.done", "20.json", "21.done", "21.json", "22.done", "22.json",
+    ]
+
+    opened = []
+
+    def counting_open(path, *args, **kw):
+        opened.append(path)
+        return builtins.open(path, *args, **kw)
+
+    monkeypatch.setattr(_sweep, "open", counting_open, raising=False)
+    _changes_file(src / "f23.parquet", [(23, 23, "U", 23)],
+                  mtime=1_700_000_023)
+    calls, record = _recorder()
+    _sweep_changes(spark, str(src), str(cp), record)
+    assert calls == [(23, ["f23.parquet"])]
+    reads = [p for p in opened if str(p).endswith(".json")]
+    assert 0 < len(reads) <= _sweep.COMPACT_INTERVAL
+
+
+def test_no_foreach_batch_sink_starts_a_streaming_query(
+    spark, tmp_path, monkeypatch
+):
+    """The four foreach-batch feeds run on ``_sweep.drain``: the
+    package never calls ``foreachBatch(``, and each drain completes
+    with ``DataStreamWriter.start``/``toTable`` made to raise."""
+    import pathlib
+    import re
+
+    import metadata_wrangler_spark
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from metadata_wrangler_spark.operators.matview import (
+        MaterializedDailyRollup,
+    )
+    from metadata_wrangler_spark.session import empty_frame
+    from metadata_wrangler_spark.streaming import (
+        admission,
+        cdc_apply,
+        view_maintenance,
+    )
+
+    pkg = pathlib.Path(metadata_wrangler_spark.__file__).parent
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        for m in re.finditer(r"foreachBatch\(", text):
+            line = text.count("\n", 0, m.start()) + 1
+            hits.append(f"{path.relative_to(pkg.parent)}:{line}")
+    assert hits == [], f"foreachBatch( in the package (use _sweep.drain): {hits}"
+
+    def refuse(*_args, **_kw):
+        raise AssertionError("a drain started a StreamingQuery")
+
+    monkeypatch.setattr(DataStreamWriter, "start", refuse)
+    monkeypatch.setattr(DataStreamWriter, "toTable", refuse)
+
+    changes = tmp_path / "changes"
+    changes.mkdir()
+    _changes_file(changes / "a.parquet", [(1, 1, "U", 100)])
+    cdc = VersionedParquetTable(spark, str(tmp_path / "cdc"))
+    cdc.init(cdc_apply.empty_state(spark))
+    cdc_apply.run_cdc_stream(spark, str(changes), cdc, str(tmp_path / "cp1"))
+    assert cdc.current_version() == 1
+
+    items = str(tmp_path / "items")
+    spark.createDataFrame([(4,)], queue_drain.ITEMS_SCHEMA).write.parquet(items)
+    records = VersionedParquetTable(spark, str(tmp_path / "queue"))
+    records.init(empty_frame(
+        spark, "identifier_id bigint, data_source string, operation string,"
+        " status string, ts timestamp, exception string"))
+    queue_drain.run_drain_stream(spark, items, records, str(tmp_path / "cp2"))
+    assert [r["status"] for r in records.read().collect()] == [queue.SUCCESS]
+
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", docs / "drop-001.parquet")
+    corpus = admission.run_admission_stream(
+        spark, str(docs), str(tmp_path / "corpus"), str(tmp_path / "cp3")
+    )
+    assert corpus.count() > 0
+
+    events = tmp_path / "events"
+    events.mkdir()
+    shutil.copy(f"{SF_DIR}/events.parquet", events / "part-000.parquet")
+    view = str(tmp_path / "mv")
+    MaterializedDailyRollup(spark, view).init(
+        load(spark, SF_DIR, "events").where(F.lit(False))
+    )
+    rollup = view_maintenance.run_view_maintenance_stream(
+        spark, str(events), view, str(tmp_path / "cp4")
+    )
+    assert rollup.count() > 0
