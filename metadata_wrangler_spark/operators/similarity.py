@@ -1,22 +1,30 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two tiers:
+Every ANN operator has ONE scoring path: its query side is fetched to
+the driver as a bounded matrix (``ANN_QUERY_CAP``), and one Arrow
+pass over the corpus scores each batch locally and keeps a per-query
+batch top-k — no candidate set is shuffled, and a corpus vector
+never leaves its scan task.
 
-  cosine_topk      brute-force exact top-k for a bounded query set —
-                   broadcast the queries, one pass over the corpus,
-                   per-query top-k via window. Linear in corpus size,
-                   embarrassingly parallel; the correctness baseline.
-  lsh_cosine_topk  random-hyperplane LSH bucketing: corpus and
-                   queries hash to sign-pattern buckets, candidates
-                   come from an equi-join on bucket key, exact score
-                   re-ranks. The 100 TB path — cost scales with
-                   bucket occupancy, not corpus size.
-  ivf_cosine_topk  inverted-file (IVF) partitioning: every corpus
-                   vector is assigned to its nearest coarse
-                   centroid; queries probe their nprobe closest
-                   cells only. Candidate generation is an equi-join
-                   on cell id — same shape as LSH, but the
-                   partition follows the data's own geometry.
+  cosine_topk_arrow  brute-force exact top-k: every batch against
+                     every query. The correctness baseline
+                     (``cosine_topk`` is its expression spelling).
+  lsh_cosine_topk    random-hyperplane LSH: a batch's rows key to
+                     sign-pattern buckets and each bucket block is
+                     scored only against the queries probing it.
+                     Cost scales with bucket occupancy, not corpus
+                     size.
+  ivf_cosine_topk    inverted file: the blocks are argmax-centroid
+                     cells and each query probes its nprobe best
+                     cells — same shape as LSH, but the partition
+                     follows the data's own geometry.
+  lsh_cosine_topk_multitable, int8_dot_topk_arrow, pq_adc_topk_arrow
+                     multi-table LSH and the int8 / PQ compression
+                     tiers, same scan shape.
+
+Past ``ANN_QUERY_CAP`` queries, LSH and IVF warn and fall back to an
+equi-join on bucket / cell id, which never ships a query matrix; the
+other operators raise.
 
 Dot products use `zip_with` + `aggregate` (higher-order functions,
 JVM-side, sequential left fold => deterministic and portable to the
@@ -35,9 +43,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
-from metadata_wrangler_spark.operators.driver_fetch import (
-    count_at_most, fetch_at_most,
-)
+from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 from metadata_wrangler_spark.session import empty_frame
 
 # (query_id, corpus_id, cosine) rows a scorer emits, before / after
@@ -268,20 +274,16 @@ def lsh_cosine_topk(
     the probe set grows on the (small) query side only, never the
     corpus side.
 
-    Adaptive two-tier (round 10, the multitable/IVF fused-scan
-    economics — see ``FUSED_PAIR_BUDGET``): within the pair budget,
-    candidate generation needs no join — the probed-bucket →
+    Candidate generation needs no join: the probed-bucket →
     query-list map is computed driver-side from the bounded query
-    matrix, and one Arrow-stage corpus pass computes each
-    batch's bucket codes (the same left-fold sign chain as
-    ``_bucket_sql``) and scores each bucket block against its
-    probing queries in numpy; the per-candidate-pair interpreted
-    HOF dot of the join tier disappears. Past the budget: the
-    original bucket equi-join — at scale, bucket the corpus ONCE
-    (write bucketed parquet / cluster by bucket) and it becomes a
-    bucket-pruned scan per query batch instead of a full pass.
-    Tiers are row-identical; zero-norm (NaN-cosine) rows drop in
-    BOTH tiers (ADVICE round-9 rule).
+    matrix, and ``_block_scan`` computes each corpus batch's bucket
+    codes (the same left-fold sign chain as ``_bucket_sql``) and
+    scores each bucket block against its probing queries in numpy.
+    Past ``ANN_QUERY_CAP`` queries it warns and runs the bucket
+    equi-join instead — at scale, bucket the corpus ONCE (write
+    bucketed parquet / cluster by bucket) and it becomes a
+    bucket-pruned scan per query batch. Both are row-identical;
+    zero-norm (NaN-cosine) rows drop in both.
     """
     if probe_hamming > 2:
         raise ValueError(
@@ -307,7 +309,7 @@ def lsh_cosine_topk(
     )
     if q is not None and not len(q[0]):
         return empty_frame(corpus.sparkSession, _TOPK)
-    if q is not None and _fused_fits(corpus, id_col, len(q[0])):
+    if q is not None:
         q_ids, qm = q
         P = np.asarray(planes, dtype=np.float64)
         code_q = _plane_codes(qm, P)
@@ -328,7 +330,7 @@ def lsh_cosine_topk(
             partial(_plane_codes, planes=P), qidx_by_code,
         )
 
-    # ---- bucket-join tier ----
+    # ---- bucket-join tier (over ANN_QUERY_CAP) ----
     cb = hyperplane_buckets(corpus, planes, id_col, vec_col).withColumnsRenamed(
         {id_col: "corpus_id", vec_col: "cvec"}
     )
@@ -361,8 +363,8 @@ def lsh_cosine_topk(
         .where(F.col("query_id") != F.col("corpus_id"))
         .select("query_id", "corpus_id", sim_r.alias("cosine"))
         # Zero-norm vectors (0/0 → NaN cosine) are dropped exactly as
-        # the fused tier's isfinite keep-mask drops them (ADVICE
-        # round-9 rule: the tier probe never changes results).
+        # the block scan's isfinite keep-mask drops them: the cap
+        # picks an implementation, never a result.
         .where(~F.isnan(F.col("cosine")))
     )
     return _rank_topk(scored, k)
@@ -397,36 +399,16 @@ def ivf_assign(
     )
 
 
-# Tier budget for the fused corpus-scan ANN spellings (multi-table
-# LSH collision scan, and since round 10 the IVF cell scan), in
-# (query x corpus) PAIRS — the unit both tiers' dominant
-# cost scales in. Measured economics (sf10 ladder, 200k vectors x
-# 1980 queries = 4x10^8 pairs, local[32]): the fused scan runs the
-# whole corpus in ~27 s (6.8x10^-8 s/pair — dim+L fused
-# multiply-adds at numpy speed), while the bucket-join spelling took
-# 130 s on the SAME data because this corpus' collision selectivity
-# (~0.65) makes candidate pruning recover almost nothing while its
-# shuffle + per-corpus-row candidate grouping constants stay. Below
-# the budget (<= ~70 s of scan work) the fused tier therefore wins
-# at ANY selectivity: scoring the full pair matrix costs at most
-# (dim+L)/(selectivity*dim) times the candidates-only work, and the
-# bucket tier's join machinery costs more than that slack. Past the
-# budget the bucket join is the right plan — at warehouse scale the
-# corpus bucket table is written once as parquet BUCKETED BY
-# (table_no, bucket), so candidate generation is storage-pruned and
-# never rescans the corpus per query batch.
-FUSED_PAIR_BUDGET = 1_000_000_000
-
-# Hard cap on the driver-collected query matrix of the fused ANN
-# tiers (round-11, VERDICT item: the "bounded by contract" query side
+# Hard cap on the driver-collected query matrix of the ANN scans
+# (round-11, VERDICT item: the "bounded by contract" query side
 # — every plan call site filters `id % 101 == 0` over a
 # broadcast-sized set — becomes an ENFORCED bound instead of an
 # assumption). 2^17 rows x 64 dims x 8 B = 64 MB of float64 on the
 # driver and in each task's closure — the outer edge of §3's
 # "broadcast the small side" economics. An over-contract query set
 # costs one bounded fetch (``_query_matrix``), never an unbounded
-# driver materialization; operators with a driver-free join tier then
-# fall back LOUDLY to it, the others raise.
+# driver materialization; LSH and IVF then fall back LOUDLY to their
+# driver-free join, the others raise.
 ANN_QUERY_CAP = 131_072
 
 
@@ -454,8 +436,8 @@ def _query_matrix(
                 "batch, or use lsh_cosine_topk's bucket-join tier"
             )
         warnings.warn(
-            msg + f"falling back to the {fallback} tier (the fused "
-            "tier requires a driver-bounded query matrix)",
+            msg + f"falling back to the {fallback} tier (the block "
+            "scan requires a driver-bounded query matrix)",
             stacklevel=3,
         )
         return None
@@ -465,27 +447,18 @@ def _query_matrix(
     return ids, qm.reshape(len(ids), len(qm) // max(len(ids), 1))
 
 
-def _fused_fits(corpus, id_col: str, nq: int) -> bool:
-    """Tier probe (FUSED_PAIR_BUDGET economics): do |Q|·|C| pairs fit
-    the fused budget? An id-only early-stopping count that reads at
-    most budget/|Q| + 1 rows of one column, never the vectors."""
-    cap = max(FUSED_PAIR_BUDGET // nq, 1)
-    n_corpus = count_at_most(corpus.select(id_col), cap, "sim_fused_tier")
-    return n_corpus * nq <= FUSED_PAIR_BUDGET
-
-
 def _block_scan(
     corpus, name, id_col, vec_col, q_ids, qm, k, block_of, queries_of
 ) -> DataFrame:
-    """Fused ANN scan tier shared by LSH and IVF: one Arrow pass over
-    the corpus keys each batch's rows to blocks (``block_of(matrix)``
-    — bucket codes or cells, the same fold as the join tier's key),
-    scores every block only against the queries probing it
+    """The LSH and IVF scoring path: one Arrow pass over the corpus
+    keys each batch's rows to blocks (``block_of(matrix)`` — bucket
+    codes or cells, the same fold as the join fallback's key), scores
+    every block only against the queries probing it
     (``queries_of[key]`` → query indices), drops self-matches and
-    emits per-query batch top-k; the global rank window follows. The
-    per-candidate-pair interpreted HOF dot of the join tier becomes
-    numpy multiply-adds and the corpus vector never leaves its scan
-    task."""
+    emits per-query batch top-k; the global rank window follows. It
+    does the join's candidate work without a candidate shuffle: at
+    sf10 (200k vectors x 1980 queries) the multitable scan of this
+    shape took 29.3 s where its bucket join took 130 s (SCALE.md)."""
     qn = _norms(qm)
 
     def scan(pdf):
@@ -579,29 +552,18 @@ def ivf_cosine_topk(
     argmax-centroid cell; each query probes its ``nprobe`` best
     cells. Exact cosine re-ranks the candidates.
 
-    Adaptive two-tier (round 10 — the multitable-LSH fused-scan
-    economics applied to IVF; see ``FUSED_PAIR_BUDGET``):
-
-    * **Fused cell-scan tier** (|Q|·|C| within budget): the probed
-      cells of every (bounded, driver-collected) query are a
-      function of the CELL alone, so candidate generation needs no
-      join at all — one Arrow stage over the corpus assigns each
-      batch's cells (the same left-fold argmax as ``ivf_assign``),
-      scores each cell block against the queries probing that cell,
-      and emits per-query batch top-k. The per-candidate-pair
-      interpreted HOF dot of the join tier — the dominant sf10 cost
-      — becomes numpy multiply-adds; the corpus vector never leaves
-      its scan task.
-    * **Cell-join tier** (past budget): the original equi-join on
-      cell id with broadcast probe rows. At cluster scale the cell
-      assignment is written once as cell-partitioned parquet and a
-      query batch reads only its probed cells (partition pruning —
-      the IVF "inverted lists").
-
-    Tiers are row-identical (same fold order, same argmax/probe tie
-    rules, same window); zero-norm vectors (0/0 → NaN cosine) are
-    dropped in BOTH tiers so the probe never changes results on
-    degenerate input (the ADVICE round-9 rule).
+    The probed cells of every (bounded, driver-fetched) query are a
+    function of the CELL alone, so candidate generation needs no
+    join: ``_block_scan`` assigns each corpus batch's cells (the same
+    left-fold argmax as ``ivf_assign``), scores each cell block
+    against the queries probing that cell, and emits per-query batch
+    top-k. Past ``ANN_QUERY_CAP`` queries it warns and runs the
+    equi-join on cell id with broadcast probe rows instead; at
+    cluster scale the cell assignment is written once as
+    cell-partitioned parquet and a query batch reads only its probed
+    cells (partition pruning — the IVF "inverted lists"). Both are
+    row-identical (same fold order, same argmax/probe tie rules,
+    same window); zero-norm vectors (0/0 → NaN cosine) drop in both.
     """
     n_cells = len(centroids)
 
@@ -612,7 +574,7 @@ def ivf_cosine_topk(
     )
     if q is not None and not len(q[0]):
         return empty_frame(corpus.sparkSession, _TOPK)
-    if q is not None and _fused_fits(corpus, id_col, len(q[0])):
+    if q is not None:
         q_ids, qm = q
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
         # probe cells: ORDER BY score DESC, cell ASC — a stable
@@ -628,7 +590,7 @@ def ivf_cosine_topk(
             partial(_cells, centroids=C), qidx_by_cell,
         )
 
-    # ---- cell-join tier ----
+    # ---- cell-join tier (over ANN_QUERY_CAP) ----
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
     if query_pred is not None:
         # corpus-side cells AND the query slice read `assigned`;
@@ -677,49 +639,10 @@ def ivf_cosine_topk(
         # a corpus vector sits in exactly one cell, so (query, corpus)
         # pairs are already distinct — no dedup shuffle needed.
         # Zero-norm vectors (0/0 → NaN cosine) are dropped exactly as
-        # the fused tier's isfinite keep-mask drops them (ADVICE
-        # round-9 rule: the tier probe never changes results).
+        # the block scan's isfinite keep-mask drops them.
         .where(~F.isnan(F.col("cosine")))
     )
     return _rank_topk(scored, k)
-
-
-def multitable_bucket_pass(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_id: str = "vec_id",
-) -> DataFrame:
-    """(``out_id``, table_no, bucket) rows for every non-NULL vector of
-    ``df`` and every table, from ONE Arrow pass: the vectors cross
-    into Python once and only id-sized rows come back (the expression
-    spelling costs L×b interpreted folds per vector: 3.9 s for 8×3
-    planes over 20k vectors at sf1, vs vectorized microseconds).
-    Each plane dot accumulates over the vector DIMENSION (the same
-    left-associated IEEE chain as _dot_plane_sql's fold), so the
-    sign pattern — and therefore every bucket — is bit-identical to
-    the expression spelling and the DuckDB oracle."""
-    mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
-    n_tables = len(mats)
-
-    def buckets(pdf):
-        cm = _stack(pdf[vec_col])
-        return {
-            out_id: np.tile(pdf[id_col].to_numpy(dtype=np.int64), n_tables),
-            "table_no": np.repeat(
-                np.arange(n_tables, dtype=np.int32), len(cm)
-            ),
-            "bucket": np.concatenate(
-                [_plane_codes(cm, P) for P in mats]
-            ).astype(np.int32),
-        }
-
-    return arrow_stage(
-        df, "sim_multitable_buckets",
-        f"{out_id} long, table_no int, bucket int", buckets,
-        not_null=vec_col,
-    )
 
 
 def lsh_cosine_topk_multitable(
@@ -736,39 +659,20 @@ def lsh_cosine_topk_multitable(
     when neighbours sit at wide angles (catch probability
     1-(1-p^b)^L vs p^b for one table).
 
-    Adaptive two-tier (round 9 — the closure family's probe
-    economics applied to ANN; see ``FUSED_PAIR_BUDGET``):
-
-    * **Fused collision-scan tier** (|Q|·|C| within budget): one
-      Arrow stage over the corpus computes each batch's bucket
-      codes AND its cosine matrix against the broadcast query set,
-      masks non-colliding pairs, and emits per-query batch top-k.
-      No candidate shuffle, no pair materialization — the collision
-      test is L integer compares per pair next to dim fused
-      multiply-adds it already pays. Row-identical to the join tier
-      (same candidate semantics, same fold order).
-    * **Bucket-join tier** (past budget): one equi-join on
-      (table_no, bucket) over ID-ONLY bucket rows, candidates
-      grouped per corpus vector, scored against the broadcast query
-      matrix. At warehouse scale the corpus bucket table is written
-      once as parquet bucketed by (table_no, bucket) and candidate
-      generation is storage-pruned.
-
-    The tier probe is an id-only early-stopping count bounded by
-    budget/|Q|; ``FUSED_PAIR_BUDGET`` and ``ANN_QUERY_CAP`` are read
-    at call time. Scoring never ships vectors per pair in either tier:
-    the corpus vector crosses the Arrow boundary ONCE and the
-    bounded query matrix is broadcast — the same dimension-ordered
-    accumulation as ``dot()``'s fold, so cosines stay bit-identical
-    to the expression spelling and the oracle.
+    One Arrow stage over the corpus computes each batch's bucket
+    codes AND its cosine matrix against the broadcast query matrix,
+    masks non-colliding pairs, and emits per-query batch top-k. No
+    candidate shuffle, no pair materialization — the collision test
+    is L integer compares per pair next to the dim fused
+    multiply-adds it already pays, and the accumulation follows
+    ``dot()``'s dimension-ordered fold, so cosines stay bit-identical
+    to the expression spelling and the oracle. The query matrix is
+    required: past ``ANN_QUERY_CAP`` queries the operator raises.
     """
-    # Bounded query matrix — the broadcast side by contract. It is
-    # collected ANYWAY for the scoring kernel, so the query-side
-    # bucket codes are computed here on the driver with the SAME
-    # fold (_plane_codes — identical buckets) instead of a second
-    # Spark branch; the old spelling cached the corpus bucket table
-    # just so the query slice could reuse it, paying a cache
-    # materialization plus an extra broadcast-build job every run.
+    # Bounded query matrix — the broadcast side by contract. The
+    # query-side bucket codes are computed from it on the driver with
+    # the SAME fold (_plane_codes — identical buckets), not in a
+    # second Spark branch.
     q_ids, qm = _query_matrix(
         "lsh_cosine_topk_multitable", corpus, queries, query_pred,
         id_col, vec_col,
@@ -781,103 +685,25 @@ def lsh_cosine_topk_multitable(
     mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
     qcodes = np.stack([_plane_codes(qm, P) for P in mats], axis=1)  # (nq, L)
 
-    if _fused_fits(corpus, id_col, nq):
-        # Fused collision-scan tier.
-        def fused(pdf):
-            cm = _stack(pdf[vec_col])
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            # one table at a time, so the collide mask never
-            # materializes an (nb, nq, L) temp
-            collide = np.zeros((len(cm), nq), dtype=bool)
-            for t, P in enumerate(mats):
-                collide |= _plane_codes(cm, P)[:, None] == qcodes[None, :, t]
-            cos = _cosines(cm, qm, qn)
-            cos[~collide] = -np.inf
-            cos[c_ids[:, None] == q_ids[None, :]] = -np.inf
-            out = {"query_id": [], "corpus_id": [], "cosine": []}
-            return _emit_topk(out, q_ids, c_ids, cos, k)
-
-        return _rank_topk(
-            arrow_stage(
-                corpus, "sim_multitable_collision_scan", _SCORED, fused,
-                not_null=vec_col,
-            ),
-            k,
-        )
-
-    # ---- bucket-join tier ----
-    cb = multitable_bucket_pass(corpus, tables, id_col, vec_col, "corpus_id")
-    qb = corpus.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": np.tile(q_ids, len(mats)),
-                "table_no": np.repeat(
-                    np.arange(len(mats), dtype=np.int32), nq
-                ),
-                "bucket": qcodes.T.reshape(-1).astype(np.int32),
-            }
-        ),
-        schema="query_id long, table_no int, bucket int",
-    )
-    # collect_set fuses pair-dedup into the per-corpus grouping:
-    # one shuffle on corpus_id with map-side partial sets, instead
-    # of dropDuplicates' extra exchange on the pair key followed by
-    # a second shuffle for collect_list. Set order is irrelevant —
-    # every (query, corpus) pair scores independently downstream.
-    per_corpus = (
-        cb.join(F.broadcast(qb), ["table_no", "bucket"])
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .groupBy("corpus_id")
-        .agg(F.collect_set("query_id").alias("qids"))
-    )
-    corpus_vecs = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
-    )
-    withvec = per_corpus.join(corpus_vecs, "corpus_id")
-
-    # Sorted-id lookup for candidate query ids: searchsorted maps the
-    # whole batch's id lists in two vectorized passes. (The dict
-    # comprehension it replaces walked every candidate pair in the
-    # Python interpreter — measured as the DOMINANT cost of this tier
-    # at the sf10 ladder: ~260M pairs through a per-element dict
-    # lookup.)
-    q_sorter = np.argsort(q_ids)
-    q_sorted = q_ids[q_sorter]
-
-    def score(pdf):
-        counts = pdf["qids"].map(len).to_numpy(dtype=np.int64)
-        if not counts.sum():
-            return None
-        cm = _stack(pdf["cvec"])
-        cn = _norms(cm)
-        c_idx = np.repeat(np.arange(len(pdf)), counts)
-        all_q = np.concatenate(
-            [np.asarray(lst, dtype=np.int64) for lst in pdf["qids"]]
-        )
-        q_idx = q_sorter[np.searchsorted(q_sorted, all_q)]
-        # the dot fold per candidate pair, gathered one dimension at
-        # a time (never an (n_pairs, dim) temp)
-        acc = np.zeros(len(c_idx))
-        for i in range(qm.shape[1]):
-            acc += qm[q_idx, i] * cm[c_idx, i]
-        cos = _round6(acc / (qn[q_idx] * cn[c_idx]))
-        # Zero-norm vectors (0/0 → NaN cosine) are dropped in
-        # BOTH tiers: the fused tier's isfinite keep-mask already
-        # excludes them, and without this mask Spark's descending
-        # sort would rank the NaN rows above every real cosine —
-        # the tier probe must only pick an implementation, never
-        # a result (ADVICE round 9).
-        fin = np.isfinite(cos)
-        if not fin.all():
-            cos, q_idx, c_idx = cos[fin], q_idx[fin], c_idx[fin]
-        return {
-            "query_id": q_ids[q_idx],
-            "corpus_id": pdf["corpus_id"].to_numpy(dtype=np.int64)[c_idx],
-            "cosine": cos,
-        }
+    def scan(pdf):
+        cm = _stack(pdf[vec_col])
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        # one table at a time, so the collide mask never
+        # materializes an (nb, nq, L) temp
+        collide = np.zeros((len(cm), nq), dtype=bool)
+        for t, P in enumerate(mats):
+            collide |= _plane_codes(cm, P)[:, None] == qcodes[None, :, t]
+        cos = _cosines(cm, qm, qn)
+        cos[~collide] = -np.inf
+        cos[c_ids[:, None] == q_ids[None, :]] = -np.inf
+        out = {"query_id": [], "corpus_id": [], "cosine": []}
+        return _emit_topk(out, q_ids, c_ids, cos, k)
 
     return _rank_topk(
-        arrow_stage(withvec, "sim_multitable_candidate_score", _SCORED, score),
+        arrow_stage(
+            corpus, "sim_multitable_collision_scan", _SCORED, scan,
+            not_null=vec_col,
+        ),
         k,
     )
 
@@ -1100,21 +926,17 @@ def int8_dot_topk_arrow(
     Exactness: quantized components are integers |q| <= 128, so every
     product (<= 16,384) and every 64-term partial sum (< 2^21) is an
     exactly-representable float64 integer — the GEMM result IS the
-    int64 fold the expression spelling computes, bit for bit.
-    Quantization uses the identical float64 expression order as the
-    JVM tier (floor(v*127.0/scale + 0.5)).
+    int64 fold of the oracle's list_sum, bit for bit. Quantization
+    uses the oracle's float64 expression order
+    (floor(v*127.0/scale + 0.5)).
 
-    Scale story (why this tier exists): the join spelling scores
-    |Q|x|C| pairs through an interpreted per-pair HOF fold — the pair
-    count grows with corpus^2/101 and measured unbounded at the 100x
-    ladder. The kernel's pair work is one BLAS GEMM per batch with
+    Scale story: the kernel's pair work is one BLAS GEMM per batch with
     the corpus crossing Arrow once; at warehouse scale the int8
     column is the scan (4x less bytes), queries are the broadcast
     side by contract.
 
     Emits (query_id, corpus_id, qdot) batch top-k rows — callers
-    apply the global rank window and exact-cosine rerank, shared
-    with the join tier so both tiers are row-identical.
+    apply the global rank window and the exact-cosine rerank.
     """
     # NULL vectors are excluded on both sides, the same rule as every
     # similarity entry point (cosine_topk_arrow's convention)
@@ -1160,26 +982,21 @@ def pq_adc_topk_arrow(
     batch top-k of the exact quantized asymmetric distance.
 
     ``centroids`` is a list of (cid, vector) rows sorted by cid —
-    the same sample-initialized codebook the join tier derives
-    (lowest-id corpus vectors). Exactness: subspace squared-L2 uses
-    the identical sequential per-dimension float64 fold as the
-    aggregate/zip_with spelling and DuckDB's list_sum; LUT entries
+    the sample-initialized codebook (lowest-id corpus vectors). Exactness: subspace squared-L2 uses
+    the identical sequential per-dimension float64 fold as DuckDB's
+    list_sum; LUT entries
     quantize with the same floor(x*1e6+0.5); the ADC sum is an int64
     add of m_sub quantized entries — order-free, bit-identical.
-    argmin ties break to the lowest cid in both spellings (np.argmin
+    argmin ties break to the lowest cid, as in the oracle (np.argmin
     returns the first minimum; the centroid axis is cid-sorted).
 
-    Scale story: the join spelling materializes |pairs| x m_sub rows
-    through a hash aggregate — measured unbounded at the 100x ladder
-    (>25 min where the kernel runs the same pairs in seconds). Here
-    a corpus vector crosses Arrow once, is encoded once, and the
+    Scale story: a corpus vector crosses Arrow once, is encoded once, and the
     only per-pair work is m_sub table lookups — the ADC contract.
     At warehouse scale the encode runs once and persists the 8-byte
     code column; the scan then touches codes, not vectors.
 
     Emits (query_id, corpus_id, adist) batch top-k rows — callers
-    apply the global rank window and exact-cosine rerank shared with
-    the join tier.
+    apply the global rank window and the exact-cosine rerank.
     """
 
     out_schema = "query_id long, corpus_id long, adist long"

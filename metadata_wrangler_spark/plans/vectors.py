@@ -10,47 +10,23 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import similarity
-from metadata_wrangler_spark.operators.driver_fetch import count_at_most
+from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 from metadata_wrangler_spark.plans import register
+from metadata_wrangler_spark.session import empty_frame
 
 # Query set: a deterministic slice of the corpus.
 _QUERY_PRED = "vec_id % 101 = 0"
 _K = 5
 
-# Tier probe for the compression tiers (int8 / PQ): the expression /
-# join spellings score |Q|·|C| pairs through interpreted per-pair
-# work (HOF fold, resp. join-row materialization x M subspaces) and
-# |Q| here grows with the corpus (every 101st vector), so their cost
-# is quadratic-in-corpus. The fused Arrow kernels take over past
-# this pair budget — at the 100x ladder (sf10: 4e8 pairs) the PQ
-# join spelling was killed after 25 minutes while the kernel runs
-# the same pairs in seconds. Tiers are row-identical by test (exact
-# integer scores, same ties).
-#
-# Budget 30k (kernel from |C| ≈ 1.7k): the r10 interleaved tier A/B
-# re-measured both queries at sf0.001 / sf0.1 / sf1 and the kernel
-# won or tied at EVERY scale (sim_pq_topk 1.56->0.97 / 1.80->0.99 /
-# 5.03->1.74 s medians; sim_quantized_topk tie / 1.41->1.21 /
-# 5.77->1.57 s) — the kernel's fixed Arrow/worker cost is amortized
-# by ~2k vectors, and the earlier "join tier ~2x faster at sf1"
-# reading did not reproduce once the tiers were interleaved in one
-# session. The join tier remains the sub-2k path (degenerate and
-# ladder-mirror corpora), where pure Catalyst avoids Python worker
-# spin-up on near-empty input.
-_ANN_EXPR_PAIR_BUDGET = 30_000
 
+def _fetch_capped(df: DataFrame, cap: int, name: str):
+    """``df``'s rows as an Arrow table through the bounded driver
+    fetch ``name``; past ``cap`` rows it raises and names the cap."""
+    tbl = fetch_at_most(df, cap, name)
+    if tbl is None:
+        raise ValueError(f"driver fetch {name} exceeds its cap of {cap} rows")
+    return tbl
 
-def _past_pair_budget(emb) -> bool:
-    """Bounded tier probe: with |Q| = |C|/101 + 1, the pair count
-    crosses _ANN_EXPR_PAIR_BUDGET at |C| ≈ sqrt(101·budget). An
-    id-only limit-count reads at most that many rows of one column
-    at ANY corpus size — a full count() would scan the corpus just
-    to pick a tier (measured as one extra ~0.3 s job per call at
-    sf0.1, the extended-series floor class)."""
-    n_kernel = int((101 * _ANN_EXPR_PAIR_BUDGET) ** 0.5)  # ~31.8k
-    n_kernel = min(n_kernel, 2**31 - 1)  # limit() takes a Java int
-    ids = emb.select("vec_id")
-    return count_at_most(ids, n_kernel - 1, "sim_expr_tier") >= n_kernel
 
 # DuckDB spelling of the deterministic sequential-fold dot product /
 # norm used by operators.similarity (both engines fold doubles left
@@ -361,14 +337,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every corpus vector is assigned to its nearest coarse centroid
     (argmax dot over {_N_CENTROIDS} cells); each query probes its
-    2 best cells. Candidate generation is adaptive (round 10, the
-    multitable fused-scan economics): within the pair budget one
-    Arrow pass assigns cells AND scores each cell block against the
-    queries probing it — no candidate join, no per-pair interpreted
-    HOF dot; past the budget it is the original equi-join on cell
-    id, where at cluster scale the cell assignment is written once
-    as cell-partitioned parquet and a query batch reads only its
-    probed cells (partition pruning = the IVF inverted lists).
+    2 best cells. One Arrow pass assigns cells AND scores each cell
+    block against the queries probing it — no candidate join, no
+    per-pair interpreted HOF dot. At cluster scale the cell
+    assignment is written once as cell-partitioned parquet and a
+    query batch reads only its probed cells (partition pruning = the
+    IVF inverted lists).
     Complements the LSH tiers: same shape, but the partition follows
     the corpus's own geometry rather than random hyperplanes.
     """
@@ -600,6 +574,43 @@ _COS_RAW = (f"{_DOT.format(a='q.qvec', b='c.v')} "
             f"/ ({_NORM.format(a='q.qvec')} * {_NORM.format(a='c.v')})")
 
 
+def _rank_and_rerank(emb: DataFrame, scored: DataFrame, order) -> DataFrame:
+    """The compression tiers' finish: the global per-query top-_K of
+    a kernel's (query_id, corpus_id, score) batch top-k rows
+    (``order``, then corpus id), each winner with the exact cosine of
+    its raw vectors. The |Q|·k winners broadcast back against the
+    raw-vector projection."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("corpus_id"))
+    winners = (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= _K)
+    )
+    vv = emb.select(
+        "vec_id",
+        F.transform("embedding", lambda v: v.cast("double")).alias("v"),
+    )
+    rer = vv.withColumnRenamed("vec_id", "corpus_id").join(
+        F.broadcast(winners.join(
+            F.broadcast(vv.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("v").alias("qvec"),
+            )),
+            "query_id",
+        )),
+        "corpus_id",
+    )
+    return rer.select(
+        "query_id", "corpus_id", scored.columns[2],
+        similarity.round6(
+            similarity.dot(F.col("qvec"), F.col("v"))
+            / (similarity.norm(F.col("qvec")) * similarity.norm(F.col("v")))
+        ).alias("cosine"),
+        "rank",
+    )
+
+
 @register(
     "sim_quantized_topk",
     oracle=f"""
@@ -644,26 +655,19 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores are integers the tier is bit-reproducible cross-engine
     (the one ANN tier with NO float-compare hazard at all).
 
-    Scale story (round-10 two-tier rewrite — the closure/LSH probe
-    economics applied to the compression tiers): the quantization
-    scalar is one MAX aggregate; the EXPRESSION tier scores pairs
-    through a broadcast join with an interpreted per-pair HOF fold —
-    fastest at small pair counts (zero Python workers, pure
-    Catalyst), but its work is |Q|·|C|·dim interpreted lambda
-    invocations and |Q| grows with the corpus, so past
-    ``_ANN_EXPR_PAIR_BUDGET`` pairs the plan switches to the fused
-    Arrow KERNEL tier (operators/similarity.py::int8_dot_topk_arrow):
-    one corpus scan, float64 GEMM per batch (exact — every integer
-    partial sum < 2^21), per-batch top-k. The 100x ladder measured
-    the expression tier unbounded at sf10 (4·10^8 pairs) while the
-    kernel finishes in seconds; both tiers are row-identical by
-    test. On a cluster the int8 corpus is ~16 GB/billion×64d instead
-    of 64 GB, usually the difference between in-memory and spilling.
+    One scoring path: the quantization scalar is one MAX aggregate,
+    read through the bounded fetch ``sim_int8_scale``; then the fused
+    Arrow kernel (operators/similarity.py::int8_dot_topk_arrow) scans
+    the corpus once, scores each batch with a float64 GEMM (exact —
+    every integer partial sum < 2^21) and keeps its per-query top-k.
+    No broadcast-join spelling: it pays |Q|·|C|·dim interpreted
+    lambda calls with |Q| growing with the corpus, ran unbounded at
+    sf10 and never beat the kernel at a measured scale (SCALE.md, "ANN
+    scoring paths"). An empty or all-NULL corpus has no scale and
+    returns no rows. On a cluster the int8 corpus is
+    ~16 GB/billion×64d instead of 64 GB, usually the difference
+    between in-memory and spilling.
     """
-    from metadata_wrangler_spark.operators import similarity
-    from metadata_wrangler_spark.operators.similarity import (
-        dot, norm, round6,
-    )
     emb = load(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()  # NULL-payload rule
     )
@@ -672,91 +676,14 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_max(F.transform("embedding", lambda v: F.abs(v.cast("double"))))
         ).alias("m")
     )
-    if _past_pair_budget(emb):
-        # ---- fused-kernel tier (see docstring) ----
-        scale = mx.collect()[0]["m"]
-        qdf = emb.where(F.expr(_QUERY_PRED))
-        iscored = similarity.int8_dot_topk_arrow(
-            emb, qdf, float(scale), k=_K
-        )
-        from pyspark.sql import Window
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("qdot"), F.asc("corpus_id")
-        )
-        winners = (
-            iscored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= _K)
-        )
-        vv = emb.select(
-            "vec_id",
-            F.transform("embedding", lambda v: v.cast("double")).alias("v"),
-        )
-        rer = vv.withColumnRenamed("vec_id", "corpus_id").join(
-            F.broadcast(winners.join(
-                F.broadcast(vv.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qvec"),
-                )),
-                "query_id",
-            )),
-            "corpus_id",
-        )
-        return rer.select(
-            "query_id", "corpus_id", "qdot",
-            round6(dot(F.col("qvec"), F.col("v"))
-                   / (norm(F.col("qvec")) * norm(F.col("v")))).alias("cosine"),
-            "rank",
-        )
-    qz = emb.crossJoin(F.broadcast(mx)).select(
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias("v"),
-        F.transform(
-            "embedding",
-            lambda v: F.floor((v.cast("double") * 127.0) / F.col("m") + 0.5)
-            .cast("long"),
-        ).alias("qv"),
-    )
-    q = qz.where(F.expr(_QUERY_PRED)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qvec"),
-        F.col("qv").alias("qq"),
-    )
-    # Stage 1 — integer-only scan: the corpus pass touches ONLY the
-    # quantized vectors (the 4×-smaller column at scale); the raw
-    # doubles never enter this join.
-    iscored = qz.drop("v").join(
-        F.broadcast(q.drop("qvec")), F.col("query_id") != F.col("vec_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("corpus_id"),
-        F.aggregate(
-            F.zip_with(F.col("qq"), F.col("qv"), lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("qdot"),
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qdot"), F.asc("corpus_id")
-    )
-    winners = (
-        iscored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= _K)
-    )
-    # Stage 2 — exact rerank on the |Q|·k winners only: the tiny
-    # winner set broadcasts back against the raw-vector projection.
-    rer = qz.select(F.col("vec_id").alias("corpus_id"), "v").join(
-        F.broadcast(winners.join(F.broadcast(q.select("query_id", "qvec")),
-                                 "query_id")),
-        "corpus_id",
-    )
-    return rer.select(
-        "query_id",
-        "corpus_id",
-        "qdot",
-        round6(dot(F.col("qvec"), F.col("v"))
-               / (norm(F.col("qvec")) * norm(F.col("v")))).alias("cosine"),
-        "rank",
+    scale = _fetch_capped(mx, 1, "sim_int8_scale").column("m")[0].as_py()
+    if scale is None:  # empty or all-NULL corpus
+        return empty_frame(spark, "query_id long, corpus_id long, "
+                           "qdot long, cosine double, rank long")
+    qdf = emb.where(F.expr(_QUERY_PRED))
+    return _rank_and_rerank(
+        emb, similarity.int8_dot_topk_arrow(emb, qdf, float(scale), k=_K),
+        F.desc("qdot"),
     )
 
 
@@ -838,138 +765,39 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent and bit-identical cross-engine; winners get the
     exact-cosine rerank column like every other ANN tier here.
 
-    Scale story (round-10 two-tier rewrite): codebooks are
-    8 x 16 x 8 doubles — always broadcast. The JOIN tier encodes via
-    explode + broadcast-centroid join + per-(vector, subspace)
-    argmin, then scores by joining the broadcast query LUTs on
-    (m, code) — but that join MATERIALIZES |Q|·|C|·M rows through a
-    hash aggregate, and |Q| grows with the corpus: at the 100x
-    ladder (sf10, 4e8 pairs -> 3.2e9 join rows) it was killed after
-    25 minutes. Past ``_ANN_EXPR_PAIR_BUDGET`` pairs the plan
-    switches to the fused Arrow kernel
-    (operators/similarity.py::pq_adc_topk_arrow): one corpus scan
-    encodes each batch and scores it with M int64 LUT gathers —
-    the actual ADC contract (per-pair work = M table lookups, zero
-    pair materialization). Tiers are row-identical by test. At
-    warehouse scale the encode persists the 8-byte code column and
-    the scan touches codes, not vectors (8x memory-bandwidth drop vs
-    the int8 tier). Recall at this codebook size is bounded by the
+    One scoring path: the codebook (8 x 16 x 8 doubles, read through
+    the bounded fetch ``sim_pq_codebook``) is broadcast, and the
+    fused Arrow kernel (operators/similarity.py::pq_adc_topk_arrow)
+    scans the corpus once, encodes each batch and scores it with M
+    int64 LUT gathers — the ADC contract (per-pair work = M table
+    lookups, zero pair materialization). No join spelling: it
+    materializes |Q|·|C|·M rows through a hash aggregate, was killed
+    after 25 minutes at sf10 and never beat the kernel at a measured
+    scale (SCALE.md, "ANN scoring paths"). At warehouse
+    scale the encode persists the 8-byte code column and the scan
+    touches codes, not vectors (8x memory-bandwidth drop vs the int8
+    tier). Recall at this codebook size is bounded by the
     sample-initialized codebooks; ivf_train's Lloyd iterations
     (operators/similarity.py::ivf_train) apply verbatim per subspace
     to close the gap — same train step, subvector inputs.
     """
-    M, D, KC = _PQ_M, _PQ_D, _PQ_KC
     emb = load(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()  # NULL-payload rule (this
-        # tier is pure expressions, so it filters where the Arrow
-        # tiers' operator entry would)
+        F.col("embedding").isNotNull()  # NULL-payload rule
     )
-    dbl = F.transform("embedding", lambda v: v.cast("double"))
-    if _past_pair_budget(emb):
-        # ---- fused ADC kernel tier (see docstring) ----
-        from metadata_wrangler_spark.operators import similarity
-        cents = sorted(
-            (r["vec_id"], [float(x) for x in r["v"]])
-            for r in emb.where(F.col("vec_id") < KC)
-            .select("vec_id", dbl.alias("v")).collect()
-        )
-        qdf = emb.where(F.expr(_QUERY_PRED))
-        scored = similarity.pq_adc_topk_arrow(
-            emb, qdf, cents, M, D, k=_K
-        )
-        from pyspark.sql import Window
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("adist"), F.asc("corpus_id")
-        )
-        topk = (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= _K)
-        )
-        from metadata_wrangler_spark.operators.similarity import (
-            dot, norm, round6,
-        )
-        vv = emb.select("vec_id", dbl.alias("v"))
-        rer = vv.withColumnRenamed("vec_id", "corpus_id").join(
-            F.broadcast(topk.join(
-                F.broadcast(vv.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qvec"),
-                )),
-                "query_id",
-            )),
-            "corpus_id",
-        )
-        return rer.select(
-            "query_id", "corpus_id", "adist",
-            round6(dot(F.col("qvec"), F.col("v"))
-                   / (norm(F.col("qvec")) * norm(F.col("v")))).alias("cosine"),
-            "rank",
-        )
-    sub = emb.select(
-        "vec_id", dbl.alias("v"),
-        F.explode(F.sequence(F.lit(0), F.lit(M - 1))).alias("m"),
-    ).select(
-        "vec_id", "m", F.expr(f"slice(v, m * {D} + 1, {D})").alias("sv")
-    )
-    cents = sub.where(F.col("vec_id") < KC).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
-    )
-    sqdist = F.aggregate(
-        F.zip_with("sv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    dists = sub.join(F.broadcast(cents), "m").select(
-        "vec_id", "m", "cid", sqdist.alias("dist")
-    )
-    # per-(vector, subspace) argmin over 16 centroids: min of the
-    # (dist, cid) struct is the lexicographic argmin with the cid
-    # tiebreak — one partial-aggregable agg, no window
-    codes = dists.groupBy("vec_id", "m").agg(
-        F.min(F.struct("dist", "cid")).alias("best")
-    ).select("vec_id", "m", F.col("best.cid").alias("code"))
-    lut = dists.where(F.expr(_QUERY_PRED)).select(
-        F.col("vec_id").alias("query_id"), F.col("m").alias("qm"), "cid",
-        F.floor(F.col("dist") * 1000000 + 0.5).cast("long").alias("lutq"),
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("m") == F.col("qm")) & (F.col("code") == F.col("cid"))
-            & (F.col("query_id") != F.col("vec_id")),
-        )
-        .groupBy("query_id", F.col("vec_id").alias("corpus_id"))
-        .agg(F.sum("lutq").cast("bigint").alias("adist"))
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("corpus_id")
-    )
-    topk = (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= _K)
-    )
-    from metadata_wrangler_spark.operators.similarity import dot, norm, round6
-    vv = emb.select("vec_id", dbl.alias("v"))
-    rer = vv.withColumnRenamed("vec_id", "corpus_id").join(
-        F.broadcast(
-            topk.join(
-                F.broadcast(
-                    vv.select(
-                        F.col("vec_id").alias("query_id"),
-                        F.col("v").alias("qvec"),
-                    )
-                ),
-                "query_id",
-            )
+    book = _fetch_capped(
+        emb.where(F.col("vec_id") < _PQ_KC).select(
+            "vec_id",
+            F.transform("embedding", lambda v: v.cast("double")).alias("v"),
         ),
-        "corpus_id",
+        _PQ_KC, "sim_pq_codebook",
     )
-    return rer.select(
-        "query_id", "corpus_id", "adist",
-        round6(dot(F.col("qvec"), F.col("v"))
-               / (norm(F.col("qvec")) * norm(F.col("v")))).alias("cosine"),
-        "rank",
+    cents = sorted(zip(book.column("vec_id").to_pylist(),
+                       book.column("v").to_pylist()))
+    qdf = emb.where(F.expr(_QUERY_PRED))
+    return _rank_and_rerank(
+        emb,
+        similarity.pq_adc_topk_arrow(emb, qdf, cents, _PQ_M, _PQ_D, k=_K),
+        F.asc("adist"),
     )
 
 

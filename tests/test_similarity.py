@@ -208,81 +208,54 @@ def test_ivf_train_refines_codebook(spark):
     assert cents != [list(map(float, c)) for c in _CENTROIDS]
 
 
-def test_multitable_arrow_buckets_match_expression_spelling(spark):
-    """The PRODUCTION Arrow bucket kernel (multitable_bucket_pass —
-    the one lsh_cosine_topk_multitable ships) must produce the SAME
-    (id, table_no, bucket) rows as the _bucket_sql expression
-    spelling the oracle is generated from — the sign of every plane
-    dot must match bit-for-bit."""
-    from pyspark.sql import functions as F
-
-    from metadata_wrangler_spark.operators import similarity as sim
-    from metadata_wrangler_spark.plans.vectors import _TABLES
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    entries = ", ".join(
-        f"named_struct('table_no', {t}, "
-        f"'bucket', CAST({sim._bucket_sql('embedding', planes)} AS INT))"
-        for t, planes in enumerate(_TABLES)
-    )
-    expr = emb.select(
-        F.col("vec_id"),
-        F.explode(F.expr(f"array({entries})")).alias("tb"),
-    ).select("vec_id", "tb.table_no", "tb.bucket")
-
-    arrow = sim.multitable_bucket_pass(emb, _TABLES)
-    sgot = sorted(tuple(r) for r in arrow.collect())
-    sexp = sorted(tuple(r) for r in expr.collect())
-    assert sgot == sexp
-
 @pytest.mark.parametrize("probe_hamming", [0, 1, 2])
 def test_lsh_topk_tiers_row_identical(spark, monkeypatch, probe_hamming):
-    """The single-table LSH tier probe must only pick an
-    implementation, never a result: the fused bucket-scan kernel
-    (budget default) and the bucket-join tier (budget forced to 0)
-    return identical rows at every probe_hamming level — same
-    bucket codes, same probe sets, same rounded cosines, same rank
+    """ANN_QUERY_CAP must only pick an implementation, never a
+    result: the bucket block scan (in-cap query set) and the
+    bucket-join fallback (cap forced below |Q|, with its warning)
+    return identical rows at every probe_hamming level — same bucket
+    codes, same probe sets, same rounded cosines, same rank
     tie-breaks."""
     from metadata_wrangler_spark.catalog import load
     from metadata_wrangler_spark.plans.vectors import _PLANES
 
     emb = load(spark, "/root/testdata/sf0.01", "embeddings")
     pred = lambda c: c % 101 == 0  # noqa: E731
-    fused = similarity.lsh_cosine_topk(
+    scan = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
         query_pred=pred,
     )
-    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
-    join = similarity.lsh_cosine_topk(
-        emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
-        query_pred=pred,
-    )
-    assert sorted(map(tuple, fused.collect())) == sorted(
-        map(tuple, join.collect())
-    )
+    monkeypatch.setattr(similarity, "ANN_QUERY_CAP", 1)
+    with pytest.warns(UserWarning, match="ANN_QUERY_CAP"):
+        join = similarity.lsh_cosine_topk(
+            emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
+            query_pred=pred,
+        )
+    rows = sorted(map(tuple, scan.collect()))
+    assert rows and rows == sorted(map(tuple, join.collect()))
 
 
 def test_ivf_topk_tiers_row_identical(spark, monkeypatch):
-    """The IVF tier probe must only pick an implementation, never a
-    result: the fused cell-scan kernel (budget default) and the
-    cell-join tier (budget forced to 0) return identical rows —
-    same probed cells, same candidates, same rounded cosines, same
-    rank tie-breaks."""
+    """ANN_QUERY_CAP must only pick an implementation, never a
+    result: the cell block scan (in-cap query set) and the cell-join
+    fallback (cap forced below |Q|, with its warning) return
+    identical rows — same probed cells, same candidates, same
+    rounded cosines, same rank tie-breaks."""
     from metadata_wrangler_spark.catalog import load
     from metadata_wrangler_spark.plans.vectors import _CENTROIDS
 
     emb = load(spark, "/root/testdata/sf0.01", "embeddings")
     pred = lambda c: c % 101 == 0  # noqa: E731
-    fused = similarity.ivf_cosine_topk(
+    scan = similarity.ivf_cosine_topk(
         emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
     )
-    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
-    join = similarity.ivf_cosine_topk(
-        emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
-    )
-    assert sorted(map(tuple, fused.collect())) == sorted(
-        map(tuple, join.collect())
-    )
+    monkeypatch.setattr(similarity, "ANN_QUERY_CAP", 1)
+    with pytest.warns(UserWarning, match="ANN_QUERY_CAP"):
+        join = similarity.ivf_cosine_topk(
+            emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
+        )
+    rows = sorted(map(tuple, scan.collect()))
+    assert rows and rows == sorted(map(tuple, join.collect()))
 
 
 def test_ivf_partial_moments_match_posexplode_spelling(spark):
@@ -365,38 +338,14 @@ def test_knn_graph_edges_subset_of_bucket_pairs(spark, sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001"])
-def test_multitable_tiers_row_identical(spark, monkeypatch, sf_dir):
-    """The fused collision-scan tier and the bucket-join tier of
-    lsh_cosine_topk_multitable must produce IDENTICAL rows — same
-    candidate semantics (collide in ANY table), same fold order,
-    same rounding, same tie-breaks. The probe only picks an
-    implementation, never a result."""
-    from metadata_wrangler_spark.catalog import load
-    from metadata_wrangler_spark.plans.vectors import _TABLES
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(F.expr("vec_id % 101 = 0"))
-    fused = similarity.lsh_cosine_topk_multitable(
-        emb, queries, _TABLES, k=5
-    )
-    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
-    joined = similarity.lsh_cosine_topk_multitable(
-        emb, queries, _TABLES, k=5
-    )
-    rows_f = sorted(tuple(r) for r in fused.collect())
-    rows_j = sorted(tuple(r) for r in joined.collect())
-    assert rows_f and rows_f == rows_j
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001"])
 def test_multitable_tiers_row_identical_with_zero_norm_vectors(
-    spark, monkeypatch, sf_dir
+    spark, sf_dir
 ):
     """Degenerate inputs: zero-norm vectors produce 0/0 = NaN
-    cosines. Both tiers must DROP those pairs — round 9's bucket-join
-    tier emitted them and Spark's descending sort ranked NaN above
-    every real cosine, so the tiers diverged on exactly the inputs a
-    probe flip would silently change results on (ADVICE round 9)."""
+    cosines, which the collision scan must DROP — Spark's descending
+    sort would rank a NaN above every real cosine. Adding two
+    zero-norm corpus vectors (one of them also a query) must change
+    no row of the result."""
     from metadata_wrangler_spark.catalog import load
     from metadata_wrangler_spark.plans.vectors import _TABLES
 
@@ -411,21 +360,19 @@ def test_multitable_tiers_row_identical_with_zero_norm_vectors(
     queries = corpus.where(
         F.expr("vec_id % 101 = 0 OR vec_id = 10000001")
     )
-    fused = similarity.lsh_cosine_topk_multitable(
+    base = similarity.lsh_cosine_topk_multitable(
+        emb, emb.where(F.expr("vec_id % 101 = 0")), _TABLES, k=5
+    )
+    padded = similarity.lsh_cosine_topk_multitable(
         corpus, queries, _TABLES, k=5
     )
-    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
-    joined = similarity.lsh_cosine_topk_multitable(
-        corpus, queries, _TABLES, k=5
-    )
-    rows_f = sorted(tuple(r) for r in fused.collect())
-    rows_j = sorted(tuple(r) for r in joined.collect())
-    assert rows_f and rows_f == rows_j
+    rows = sorted(tuple(r) for r in padded.collect())
+    assert rows and rows == sorted(tuple(r) for r in base.collect())
     # no NaN cosine survives, and the zero-norm ids never appear
     import math
-    assert all(math.isfinite(r[2]) for r in rows_f)
-    assert all(r[1] < 10_000_001 for r in rows_f)
-    assert all(r[0] != 10_000_001 for r in rows_f)
+    assert all(math.isfinite(r[2]) for r in rows)
+    assert all(r[1] < 10_000_001 for r in rows)
+    assert all(r[0] != 10_000_001 for r in rows)
 
 
 def test_ann_query_cap_lsh_and_ivf_fall_back_to_join_tier(
@@ -481,10 +428,10 @@ def test_ann_query_cap_lsh_and_ivf_fall_back_to_join_tier(
 def test_ann_query_cap_raises_without_driver_free_tier(
     spark, monkeypatch, op, args
 ):
-    """Multitable LSH scores against the driver matrix in BOTH tiers,
-    and the Arrow scorers (exact cosine, int8, PQ) have only the
-    driver-matrix tier, so an over-cap query set must raise with the
-    contract spelled out instead of building an unbounded matrix."""
+    """Multitable LSH and the Arrow scorers (exact cosine, int8, PQ)
+    score only against the driver query matrix, so an over-cap query
+    set must raise with the contract spelled out instead of building
+    an unbounded matrix."""
     corpus = _vecs(
         spark,
         [(i, [1.0 + 0.01 * i, 0.5 - 0.02 * i]) for i in range(8)],
@@ -493,3 +440,90 @@ def test_ann_query_cap_raises_without_driver_free_tier(
     monkeypatch.setattr(similarity, "ANN_QUERY_CAP", 1)
     with pytest.raises(ValueError, match="ANN_QUERY_CAP"):
         getattr(similarity, op)(corpus, queries, *args, k=3)
+
+
+_ANN_FETCHES = {
+    "sim_quantized_topk": ["int8_dot_topk_arrow_query_matrix",
+                           "sim_int8_scale"],
+    "sim_pq_topk": ["pq_adc_topk_arrow_query_matrix", "sim_pq_codebook"],
+    "sim_lsh_topk": ["lsh_cosine_topk_query_matrix"],
+    "sim_lsh_probe_topk": ["lsh_cosine_topk_query_matrix"],
+    "sim_lsh_multitable_topk": ["lsh_cosine_topk_multitable_query_matrix"],
+    "sim_ivf_topk": ["ivf_cosine_topk_query_matrix"],
+    "sim_recall_eval": ["cosine_topk_arrow_query_matrix",
+                        "lsh_cosine_topk_query_matrix"],
+    "pipe_semantic_search": ["lsh_cosine_topk_query_matrix"],
+}
+
+
+def test_ann_queries_make_only_their_named_driver_fetches(spark, caplog):
+    """Each ANN query has one scoring path: building it fetches its
+    bounded query matrix (plus the int8 scale or the PQ codebook) and
+    nothing else — no tier probe picks between spellings."""
+    import logging
+
+    from metadata_wrangler_spark import plans
+    from metadata_wrangler_spark.operators import driver_fetch
+
+    plans.load_all_plans()
+    got = {}
+    for name in _ANN_FETCHES:
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=driver_fetch.__name__):
+            plans.QUERIES[name](spark, "/root/testdata/sf0.001")
+        got[name] = sorted(
+            r.getMessage().split(":")[0].removeprefix("driver fetch ")
+            for r in caplog.records if r.name == driver_fetch.__name__
+        )
+    assert got == _ANN_FETCHES
+
+
+def _write_embeddings(path, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                "embedding": pa.array(
+                    [v for _, v in rows], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0] * len(rows), pa.int32()),
+            }
+        ),
+        path / "embeddings.parquet",
+    )
+    return str(path)
+
+
+def test_compression_tiers_return_no_rows_on_all_null_corpus(
+    spark, tmp_path
+):
+    """An all-NULL corpus has no int8 scale and no PQ codebook: both
+    plans return an empty result, not a crash (the empty ladder
+    covers a zero-row corpus)."""
+    from metadata_wrangler_spark import plans
+
+    plans.load_all_plans()
+    sf = _write_embeddings(tmp_path / "nulls", [(0, None), (101, None)])
+    for name in ("sim_quantized_topk", "sim_pq_topk"):
+        assert plans.QUERIES[name](spark, sf).collect() == [], name
+
+
+def test_pq_codebook_fetch_raises_past_its_cap(spark, tmp_path):
+    """The PQ codebook is the corpus rows with vec_id < _PQ_KC, read
+    through the bounded fetch ``sim_pq_codebook``. More rows than
+    codebook entries (a duplicated id) raise and name the cap rather
+    than collecting them."""
+    from metadata_wrangler_spark import plans
+    from metadata_wrangler_spark.plans.vectors import _PQ_KC
+
+    plans.load_all_plans()
+    vec = [1.0] * 64
+    sf = _write_embeddings(
+        tmp_path / "dup", [(i, vec) for i in range(_PQ_KC)] + [(0, vec)]
+    )
+    with pytest.raises(ValueError, match="sim_pq_codebook"):
+        plans.QUERIES["sim_pq_topk"](spark, sf)

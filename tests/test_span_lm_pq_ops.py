@@ -192,27 +192,6 @@ def test_pq_recall_floor_vs_exact_cosine(spark):
     assert recall >= 0.2, recall
 
 
-def test_compression_tier_probe_rows_identical(spark, monkeypatch):
-    """The int8 and PQ compression tiers each have an expression/join
-    spelling (small pair counts) and a fused Arrow kernel (past
-    _ANN_EXPR_PAIR_BUDGET, where the join spelling's |Q|x|C| pair
-    materialization measured unbounded at the 100x ladder). The probe
-    must only pick an implementation, never a result: forcing the
-    kernel at a scale where the join tier runs must produce IDENTICAL
-    rows — same exact integer scores, same ties, same rerank."""
-    from metadata_wrangler_spark.plans import vectors
-
-    sf = "/root/testdata/sf0.01"
-    for name in ("sim_quantized_topk", "sim_pq_topk"):
-        fn = plans.QUERIES[name]
-        monkeypatch.setattr(vectors, "_ANN_EXPR_PAIR_BUDGET", 10**18)
-        join_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
-        monkeypatch.setattr(vectors, "_ANN_EXPR_PAIR_BUDGET", 0)
-        kernel_rows = sorted(tuple(r) for r in fn(spark, sf).collect())
-        assert join_rows, name
-        assert join_rows == kernel_rows, name
-
-
 def test_pq_adc_kernel_odd_subspaces_and_int64_fallback(spark):
     """Direct kernel contract: (a) an ODD subspace count exercises the
     unpaired tail gather; (b) LUT entries big enough that
