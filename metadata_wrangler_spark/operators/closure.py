@@ -50,6 +50,7 @@ from metadata_wrangler_spark.operators.lineage import (
     materialize,
     row_count,
 )
+from metadata_wrangler_spark.session import local_frame
 
 # Above this many RAW (pre-dedup) edges the driver-local tier is
 # skipped and the distributed loop runs. The budget is set by the
@@ -114,7 +115,7 @@ def equivalent_ids(
         # Driver-local tier: the numpy CSR walk of bfs_levels_pdf (a
         # per-edge Python dict build measured ~1 s/M edges).
         out = bfs_levels_pdf(probe.to_pandas(), seed_vals, levels)
-        return spark.createDataFrame(out, "node bigint, level int")
+        return local_frame(spark, out, "node bigint, level int")
     # Distributed tier: materialize the deduped edge set ONCE. Every
     # level joins against it; without the pin each level re-runs the
     # upstream scan + filter + dedup (at 100 TB: levels × full-table
@@ -282,7 +283,8 @@ def connected_components(
     # pays the dedup+checkpoint it needs anyway.
     probe = fetch_at_most(directed, LOCAL_SOLVE_MAX_EDGES, "closure_cc_edges")
     if probe is not None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             min_label_components_pdf(probe.to_pandas()),
             "node bigint, component bigint",
         )
@@ -498,9 +500,11 @@ def bounded_shortest_paths(
         with a fully parallel ``toArrow`` — the ``limit`` probe's
         CollectLimit funnels every row through one partition, which
         measured 2.3 s of the 5.6 s sf10 wall on a 3M-edge graph
-        that the parallel fetch moves in 0.3 s warm. Without a hint
-        the early-stopping probe runs (the right call against a
-        100 TB table of unknown size).
+        that the parallel fetch moves in 0.3 s warm. A hint that
+        undercounts raises ``ValueError`` once the fetch returns more
+        than ``LOCAL_SOLVE_MAX_EDGES`` rows. Without a hint the
+        early-stopping probe runs (the right call against a 100 TB
+        table of unknown size).
 
     Adaptive two-tier, same probe economics as ``equivalent_ids``:
     the distributed min-plus-doubling tier costs a fixed number of
@@ -520,11 +524,14 @@ def bounded_shortest_paths(
         tbl = fetch_at_most(edges, LOCAL_SOLVE_MAX_EDGES, "closure_sp_edges")
     elif edge_count_hint <= LOCAL_SOLVE_MAX_EDGES:
         tbl = edges.toArrow()
+        if tbl.num_rows > LOCAL_SOLVE_MAX_EDGES:
+            raise ValueError(f"edge_count_hint={edge_count_hint} undercounts"
+                             f" {tbl.num_rows} edges")
     if tbl is not None:
         source_vals = _seed_values(sources, "closure_sp_sources")
     if source_vals is not None:
         out = bounded_min_plus_pdf(tbl.to_pandas(), source_vals, hops)
-        return spark.createDataFrame(out, "node bigint, code bigint")
+        return local_frame(spark, out, "node bigint, code bigint")
 
     # Distributed tier: min-plus doubling (see g_shortest_path's
     # docstring for the full derivation and broadcast contracts).

@@ -386,7 +386,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    max_doc_freq: int | None = None,
+    max_doc_freq: int | Column | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard near-duplicate pairs.
 
@@ -401,7 +401,8 @@ def ngram_jaccard_pairs(
 
     Scale note: a ubiquitous stop-shingle is quadratic in its bucket
     occupancy (true of any shared-token candidate scheme). At web
-    scale pass ``max_doc_freq``: shingles appearing in more than
+    scale pass ``max_doc_freq`` (an int, or a scalar Column the plan
+    evaluates): shingles appearing in more than
     that many documents are dropped from CANDIDATE GENERATION (one
     extra aggregate on the already-cached shingle table), bounding
     every bucket's join cost at max_doc_freq². The Jaccard score

@@ -7,7 +7,9 @@ limited plan runs as one job where a row ``collect`` scales up
 partition by partition over several. Each call logs one INFO line
 with the probe name, the cap, the rows seen and the decision. Callers
 keep their own cap constant and over-cap policy (fall back, warn and
-fall back, or raise).
+fall back, or raise). The one door out of a plan, as
+``session.local_frame`` is the one door in (guard and allowlist:
+``tests/test_driver_fetch.py``).
 """
 
 from __future__ import annotations
@@ -33,8 +35,10 @@ def fetch_at_most(df: DataFrame, cap: int, name: str) -> pa.Table | None:
     return tbl if _within(name, cap, tbl.num_rows) else None
 
 
-def count_at_most(df: DataFrame, cap: int, name: str) -> int:
-    """``min(df.count(), cap + 1)``, reading at most ``cap + 1`` rows."""
-    n = df.limit(cap + 1).count()
-    _within(name, cap, n)
-    return n
+def fetch_capped(df: DataFrame, cap: int, name: str) -> pa.Table:
+    """``fetch_at_most`` for a read with no fallback: past ``cap`` rows
+    it raises and names the cap."""
+    tbl = fetch_at_most(df, cap, name)
+    if tbl is None:
+        raise ValueError(f"driver fetch {name} exceeds its cap of {cap} rows")
+    return tbl

@@ -28,10 +28,13 @@ plan above it is unchanged.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.operators.driver_fetch import count_at_most
+from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
 
 
 def get_one_or_create(
@@ -545,13 +548,9 @@ def audit_no_nulls(cols: tuple[str, ...]):
     """Audit: the named columns contain no NULLs in the candidate."""
 
     def check(current: DataFrame, post: DataFrame) -> bool:
-        from pyspark.sql import functions as F
-
-        pred = None
-        for c in cols:
-            p = F.col(c).isNull()
-            pred = p if pred is None else (pred | p)
-        return count_at_most(post.where(pred), 0, "merge_audit_nulls") == 0
+        nulls = post.where(reduce(or_, [F.col(c).isNull() for c in cols]))
+        # cap 0: one NULL row is already over it
+        return fetch_at_most(nulls, 0, "merge_audit_nulls") is not None
 
     check.__name__ = f"audit_no_nulls{cols}"
     return check

@@ -43,8 +43,11 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
-from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
-from metadata_wrangler_spark.session import empty_frame
+from metadata_wrangler_spark.operators.driver_fetch import (
+    fetch_at_most,
+    fetch_capped,
+)
+from metadata_wrangler_spark.session import local_frame
 
 # (query_id, corpus_id, cosine) rows a scorer emits, before / after
 # the global per-query rank window.
@@ -308,7 +311,7 @@ def lsh_cosine_topk(
         fallback="bucket-join",
     )
     if q is not None and not len(q[0]):
-        return empty_frame(corpus.sparkSession, _TOPK)
+        return local_frame(corpus.sparkSession, [], _TOPK)
     if q is not None:
         q_ids, qm = q
         P = np.asarray(planes, dtype=np.float64)
@@ -546,7 +549,6 @@ def ivf_cosine_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_pred=None,
 ) -> DataFrame:
     """IVF approximate cosine top-k: corpus vectors live in their
     argmax-centroid cell; each query probes its ``nprobe`` best
@@ -569,11 +571,11 @@ def ivf_cosine_topk(
 
     # Bounded query matrix, as in lsh_cosine_topk.
     q = _query_matrix(
-        "ivf_cosine_topk", corpus, queries, query_pred, id_col, vec_col,
+        "ivf_cosine_topk", corpus, queries, None, id_col, vec_col,
         fallback="cell-join",
     )
     if q is not None and not len(q[0]):
-        return empty_frame(corpus.sparkSession, _TOPK)
+        return local_frame(corpus.sparkSession, [], _TOPK)
     if q is not None:
         q_ids, qm = q
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
@@ -592,23 +594,13 @@ def ivf_cosine_topk(
 
     # ---- cell-join tier (over ANN_QUERY_CAP) ----
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    if query_pred is not None:
-        # corpus-side cells AND the query slice read `assigned`;
-        # cache so the centroid-score array computes once.
-        assigned = assigned.cache()
     cb = assigned.select(
         F.col(id_col).alias("corpus_id"),
         F.col(vec_col).alias("cvec"),
         norm(F.col(vec_col)).alias("cn"),
         "cell",
     )
-    # query_pred: the query batch is a slice of the corpus — reuse
-    # the centroid-score projection rather than analyzing it twice.
-    qs = (
-        assigned.where(query_pred(F.col(id_col)))
-        if query_pred is not None
-        else ivf_assign(queries, centroids, id_col, vec_col)
-    )
+    qs = ivf_assign(queries, centroids, id_col, vec_col)
     # Probe-cell selection as a pure array expression (sort the
     # (score, cell) structs with an ORDER BY cell_score DESC, cell
     # ASC comparator, keep the first nprobe): map-side only. The
@@ -652,7 +644,6 @@ def lsh_cosine_topk_multitable(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_pred=None,
 ) -> DataFrame:
     """Multi-table LSH: L independent hyperplane tables; a candidate
     pair needs to collide in ANY table. The standard recall lever
@@ -674,12 +665,12 @@ def lsh_cosine_topk_multitable(
     # the SAME fold (_plane_codes — identical buckets), not in a
     # second Spark branch.
     q_ids, qm = _query_matrix(
-        "lsh_cosine_topk_multitable", corpus, queries, query_pred,
+        "lsh_cosine_topk_multitable", corpus, queries, None,
         id_col, vec_col,
     )
     if not len(q_ids):
         # empty query set: a valid empty result, not a crash
-        return empty_frame(corpus.sparkSession, _TOPK)
+        return local_frame(corpus.sparkSession, [], _TOPK)
     nq = len(q_ids)
     qn = _norms(qm)
     mats = [np.asarray(planes, dtype=np.float64) for planes in tables]
@@ -744,7 +735,7 @@ def cosine_topk_arrow(
     )
     if not len(q_ids):
         # empty query set: a valid empty result, not a crash
-        return empty_frame(corpus.sparkSession, _TOPK)
+        return local_frame(corpus.sparkSession, [], _TOPK)
     qn = _norms(qm)
 
     def score(pdf):
@@ -840,11 +831,12 @@ def ivf_train(
         return [x / n for x in c]
 
     cents = [_unit(list(map(float, c))) for c in centroids]
+    cap = len(cents) * len(cents[0])  # one row per (cell, position)
     coherences: list[float] = []
     for _ in range(iters):
         assigned = ivf_assign(df, cents, id_col, vec_col)
         val = F.col("v").cast("double")
-        rows = (
+        step = (
             assigned.select(
                 "cell",
                 F.array_max("cell_scores").alias("best"),
@@ -864,8 +856,8 @@ def ivf_train(
                 F.sum(F.col("best")).alias("coh"),
                 F.count(F.lit(1)).alias("n"),
             )
-            .collect()
         )
+        rows = fetch_capped(step, cap, "sim_ivf_train_step").to_pylist()
         means = [list(c) for c in cents]
         coh_total = 0.0
         n_total = 0
@@ -945,7 +937,7 @@ def int8_dot_topk_arrow(
     )
     out_schema = "query_id long, corpus_id long, qdot long"
     if not len(q_ids):
-        return empty_frame(corpus.sparkSession, out_schema)
+        return local_frame(corpus.sparkSession, [], out_schema)
     qq = np.floor((qm * 127.0) / scale + 0.5)  # already-exact ints
 
     def score(pdf):
@@ -1004,7 +996,7 @@ def pq_adc_topk_arrow(
         "pq_adc_topk_arrow", corpus, queries, None, id_col, vec_col
     )
     if not len(q_ids) or not centroids:
-        return empty_frame(corpus.sparkSession, out_schema)
+        return local_frame(corpus.sparkSession, [], out_schema)
     nq = len(q_ids)
     kc = len(centroids)
     cents = np.array([list(v) for _, v in centroids], dtype=np.float64)

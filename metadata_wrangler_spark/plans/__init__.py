@@ -67,73 +67,49 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver's correctness gate hash-checks the FIRST 50 entries of
-# `queries()` each round (dict iteration order). Rounds 1-3 verified
-# every registered query EXCEPT the 13 that landed behind the window
-# in round 3 (as-of/range joins, native session_window, LSH
-# probe/multitable tiers, sequence packing, boilerplate, n-gram
-# profile, KMV sketch, and four string-function twins). Round 4
-# promotes all 13 into the leading window — plus every query added
-# during round 4 itself (the leading block below: recursive-CTE
-# twin through PageRank) — so zero never-verified
-# queries remain, and keeps one previously-green representative of
-# every SURVEY.md §2 family (so_/f_/a_/j_/w_/mm_/ev_/txt_/d_/g_/
-# pipe_/s_/p_/sim_/dd_) green each round. The rotated-out stalwarts
-# (r2- and r3-green string functions and source parsers) are still
-# covered by pytest's all-queries oracle sweep
-# (tests/test_all_oracles.py, every registered query at sf0.001).
-# Size of the driver's per-round correctness window (first N of
-# ordered_queries()); VERIFICATION_PRIORITY is curated to exactly N.
+# The driver's correctness gate hash-checks the FIRST
+# VERIFICATION_WINDOW entries of `queries()` each round (dict
+# iteration order); VERIFICATION_PRIORITY is curated to exactly that
+# many. Every registered query is also covered by pytest's
+# all-queries oracle sweep (tests/test_all_oracles.py, sf0.001).
 VERIFICATION_WINDOW = 50
 
-# WINDOW POLICY (round 5 onward): any NEW query lands at the FRONT
-# of VERIFICATION_PRIORITY in the same session that registers it, so
-# the never-driver-verified gap of rounds 3 (13 queries) and 4 (49)
-# cannot recur. When the never-verified set is smaller than the
-# window, remaining slots go to the previously-green queries whose
-# last driver verification is OLDEST (stalest-first rotation), with
-# every SURVEY.md §2 family keeping at least one representative.
+# WINDOW POLICY: a new or rewritten query lands at the FRONT of
+# VERIFICATION_PRIORITY in the change that makes it, so no query
+# goes unverified by the driver. Remaining slots go to the
+# previously-green queries whose last driver verification is OLDEST
+# (stalest-first rotation), with every SURVEY.md §2 family keeping
+# at least one representative.
 VERIFICATION_PRIORITY: tuple[str, ...] = (
-    # --- round-11 window: REWRITES FIRST, THEN THE ENTIRE r6-STALE
-    # BLOCK. Construction stays frozen at 221 queries; after this
-    # round no registered query's last driver check predates r7.
-    #
-    # Block 1 — the four queries round 10 displaced (r10 verdict
-    # item 8: the r11 window MUST contain them) plus every plan
-    # rewritten or operator-touched during round 11 (window policy:
-    # a rewritten plan re-certifies the same round). Four low-risk
-    # round-11 touches are displaced to pytest all-oracle coverage
-    # for slot pressure — g_triangle_count / ev_gap_percentiles
-    # (cache-placement tiers only; result identity is definitional
-    # and both were oracle-checked at sf0.1 this round),
-    # sim_lsh_topk / sim_ivf_topk / dd_cluster_keep (ANN cap
-    # enforcement is a no-op on in-contract query sets, tier
-    # row-identity tests green; dd_cluster_keep and sim_ivf_topk
-    # are r10-driver-checked and consume equivalence-tested
-    # operators). The int8 and PQ plans lost their join spellings
-    # and always run their fused kernel, so they re-certify here;
-    # for their slots dd_ngram_containment and dd_minhash_clusters
-    # (r11-green, each sharing its kernel with a windowed sibling)
-    # move to pytest all-oracle coverage.
+    # Block 1 — plans whose rows come from code changed since their
+    # last driver check (window policy: a rewritten plan re-certifies
+    # in the window), led by the carry-over g_triangle_count.
+    "g_triangle_count",         # carry-over; logged size tier
+    "ev_gap_percentiles",       # carry-over; local_frame, size tier
+    "a_percentile_disc",        # lazy join against local_frame picks
+    "a_mad_robust",             # local_frame result
+    "a_weighted_median",        # local_frame result
+    "txt_contamination_frac",   # capped eval-shingle fetch
+    "sim_ivf_topk",             # query rows from the scan
+    "g_shortest_path",          # local tier via local_frame
+    "g_transitive_closure",     # local tier via local_frame
+    "g_connected_components",   # local tier via local_frame
     "sim_quantized_topk",       # kernel is the only scoring path
     "sim_pq_topk",              # kernel is the only scoring path
     "g_pagerank",               # displaced r10; r11 lazy result plan
     "ev_matview_refresh",       # displaced r10; r11 bootstrap fold
     "s_cached_fetch",           # displaced r10 (drain fix)
     "sim_lsh_multitable_topk",  # displaced r10; r11 ANN cap raise
-    "a_gini_coefficient",       # r11: rank-moment partial kernel
-    "ev_time_to_convert",       # r11: selection operator rewrite
+    "a_gini_coefficient",       # r11 rank-moment kernel; local_frame
+    "ev_time_to_convert",       # r11 selection rewrite; local_frame
     "dd_ngram_jaccard",         # r11: shingle kernel + sized pairs
-    "dd_ngram_jaccard_pruned",  # r11: shingle kernel (shared helper)
+    "dd_ngram_jaccard_pruned",  # r11 shingle kernel; lazy cutoff
     "dd_minhash_lsh",           # r11: Arrow signature fold
     "f_title_token_jaccard",    # r11: block-local pair kernel
     "pipe_corpus_curation",     # r11: Arrow signature fold (via LSH)
-    # Block 2 — the ENTIRE remaining r6-stale block (37 queries):
-    # last driver-verified in round 6, covered since by the pytest
-    # all-oracle sweep and the three mirror ladders. Two of the r6
-    # block (txt_bpe_merge_step: r11 fused pair-count kernel;
-    # a_moments_skew_kurt: r11 int64 row-level powers) are also
-    # round-11 rewrites re-certifying here.
+    # Block 2 — the r6-stale block, covered since round 6 by the
+    # pytest all-oracle sweep and the mirror ladders. Ten of it made
+    # room for Block 1 (reasons in CHANGES.md).
     "a_ks_drift",
     "a_moments_skew_kurt",
     "a_mutual_info",
@@ -144,32 +120,22 @@ VERIFICATION_PRIORITY: tuple[str, ...] = (
     "ev_attribution_credit",
     "ev_burstiness",
     "ev_seasonal_anomaly",
-    "ev_unpivot_long",
     "f_binary_prefix",
-    "g_degree_distribution",
+    "g_degree_distribution",    # also: local_frame result
     "j_anti_join_queue",
     "j_asof_nearest",
     "j_band_join",
     "j_bloom_prune",
-    "j_dim_3way_broadcast",
-    "j_fk_inner_join",
     "j_left_outer_null_split",
-    "j_semi_join",
-    "mm_frame_sample",
     "mm_image_features",
     "p_projection_filter",
     "s_compaction_plan",
     "sim_cosine_topk",
-    "sim_knn_graph",
     "sim_label_outliers",
     "so_except_intersect",
-    "so_schema_evolution",
     "txt_bpe_merge_step",
-    "txt_language_id",
     "txt_pii_scrub",
     "txt_repetition_filter",
-    "txt_tokenizer_fertility",
-    "w_ntile",
     "w_topk_per_group",
 )
 

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from metadata_wrangler_spark.catalog import load, widen
 from metadata_wrangler_spark.operators import dedup, textstats
 from metadata_wrangler_spark.operators.arrow_stage import arrow_stage
+from metadata_wrangler_spark.operators.driver_fetch import fetch_capped
 from metadata_wrangler_spark.plans import register
 
 # --- shared SQL fragments (DuckDB dialect) ---------------------------------
@@ -198,11 +199,13 @@ def dd_ngram_jaccard_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents are dropped from CANDIDATE GENERATION (bounding every
     bucket's join at df²) while the score still uses full shingle
     sets — exact Jaccard for every surviving pair. The cutoff is
-    corpus-relative (one metadata-cheap count; see _STOP_DF's
-    rationale): an absolute cutoff prunes EVERYTHING once the corpus
-    outgrows it, which the 100x ladder demonstrated."""
+    corpus-relative (one count, a scalar subquery of the plan; see
+    _STOP_DF's rationale): an absolute cutoff prunes EVERYTHING once
+    the corpus outgrows it, which the 100x ladder demonstrated."""
     docs = load(spark, sf_dir, "documents")
-    cutoff = max(_STOP_DF, docs.count() // _STOP_PER_DOCS)
+    cutoff = docs.select(
+        F.expr(f"greatest({_STOP_DF}, count(1) DIV {_STOP_PER_DOCS})")
+    ).scalar()
     return dedup.ngram_jaccard_pairs(
         docs, threshold=0.12, max_doc_freq=cutoff,
     )
@@ -424,6 +427,10 @@ def txt_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DECON_N = 5            # n-gram width for the collision test
 _DECON_EVAL_PRED = "doc_id % 13 = 7"   # deterministic benchmark slice
+# Cap on the distinct eval shingles txt_contamination_frac reads to
+# the driver for its kernel, which holds them in every worker as one
+# hash set; past it the read raises. sf0.1 holds 18,947, sf1 185,511.
+_DECON_EVAL_SHINGLES_MAX = 4_000_000
 
 
 def _decontaminate_oracle_sql() -> str:
@@ -2492,8 +2499,9 @@ def _contamination_frac(
         .distinct()
     )
     if arrow_kernel:
+        sh = fetch_capped(evs, _DECON_EVAL_SHINGLES_MAX, "txt_decon_eval")
         return dedup.contamination_counts(
-            tr_docs, evs.toArrow().column("sh"), n=_DECON_N
+            tr_docs, sh.column("sh"), n=_DECON_N
         ).select(
             "doc_id", "n_windows", "n_hits",
             F.expr("(1000000 * n_hits) DIV n_windows")

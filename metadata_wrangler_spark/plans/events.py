@@ -11,9 +11,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.catalog import load, table_bytes
+from metadata_wrangler_spark.catalog import GAP_CACHE_MIN_BYTES, is_small, load
 from metadata_wrangler_spark.plans import register
 from metadata_wrangler_spark.plans.relational import dsum
+from metadata_wrangler_spark.session import local_frame
 
 _WATERMARK = "2024-01-20 00:00:00"
 
@@ -2388,13 +2389,10 @@ def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     problem (round-11, guide §2.4): it rides the histogram-refinement
     selection operator (operators/selection.py) — n/min/max fall out
     of the stats pass and both percentile targets resolve from the
-    same bounded histograms. The round-10 spelling range-shuffled,
-    checkpointed and rank-annotated every delta row through the
-    prefix operator only to discard all but two ranks; selection
-    scans the cached 2-column delta frame twice and shuffles a few
-    thousand counters. Value-at-rank is tie-break invariant (ties
-    share a value), so the oracle's ROW_NUMBER spelling selects the
-    same values.
+    same bounded histograms: two scans of the cached 2-column delta
+    frame, a few thousand counters shuffled. Value-at-rank is
+    tie-break invariant (ties share a value), so the oracle's
+    ROW_NUMBER spelling selects the same values.
     """
     import math
 
@@ -2440,7 +2438,8 @@ def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no converting user: the oracle's flat aggregate still
         # returns one all-NULL row.
         row = [(None, None, None, None, None)]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         row,
         "n_converted bigint, min_s bigint, median_s bigint,"
         " p90_s bigint, max_s bigint",
@@ -3022,14 +3021,11 @@ def ev_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gaps is a DERIVED frame (full per-user window) — the
     # cache_input case at scale: materialize once, let both
     # histogram rounds read the 2-column cache instead of re-running
-    # the window. SCALE-TIERED (round 11): under ~8 MB of event
-    # source the cache build costs more than the second window run
-    # it saves (honest A/B at sf0.1: cached 1.76 s vs uncached
-    # 1.52 s; sf10: cached 3.05 vs uncached 3.41 — rows identical
-    # both ways). Zero-job driver-side probe of the source file
-    # size; unknown sizes default to cached, the at-scale-safe side.
-    _bytes = table_bytes(sf_dir, "events")
-    _small = _bytes is not None and _bytes < (8 << 20)
+    # the window. SCALE-TIERED (round 11): under GAP_CACHE_MIN_BYTES
+    # of event source the cache build costs more than the second
+    # window run it saves (A/B numbers beside the constant).
+    small = is_small(sf_dir, "events", GAP_CACHE_MIN_BYTES,
+                     "ev_gap_percentiles gap cache")
     sel = grouped_select(
         gaps, "gap",
         lambda st: {
@@ -3037,14 +3033,15 @@ def ev_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p90": int(math.floor((st.n - 1) * 0.9)) + 1,
         },
         group_cols=["event_type"],
-        cache_input=not _small,
+        cache_input=not small,
         # a second-granularity gap between two in-range event
         # timestamps is < 2^31 (68 years) by construction — round 0
         # narrows to ≤2^15-wide windows and ONE refinement round
         # finishes: two scans of the cached gap frame, not three.
         domain_bits=31,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["event_type"], m["n"], m["p50"], m["p90"]) for m in sel],
         "event_type string, n_gaps bigint, p50_gap_s bigint,"
         " p90_gap_s bigint",

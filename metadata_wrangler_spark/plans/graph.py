@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from metadata_wrangler_spark.catalog import load, table_bytes
+from metadata_wrangler_spark.catalog import (
+    TRIANGLE_CACHE_MIN_BYTES,
+    is_small,
+    load,
+)
 from metadata_wrangler_spark.operators.closure import (
     bounded_shortest_paths,
     connected_components,
@@ -27,6 +31,7 @@ from metadata_wrangler_spark.operators.lineage import (
     materialize,
 )
 from metadata_wrangler_spark.plans import register
+from metadata_wrangler_spark.session import local_frame
 
 # Shared edge definition (SQL fragment used verbatim by the DuckDB
 # oracle; the Spark side mirrors it with Column arithmetic).
@@ -429,19 +434,13 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # und feeds deg AND both endpoint joins; ord_e feeds the two
     # wedge sides AND the closing probe. ord_e is always cached
     # (recomputing its two joins per branch never wins). und's cache
-    # is SCALE-TIERED (round 11): under ~1 MB of edge source the
-    # InMemoryRelation build barrier costs more than exchange reuse
-    # saves (honest per-query A/B at sf0.1: cached 2.57 s vs
-    # uncached 1.54 s, rows identical), while at sf10 recomputing
-    # the distinct for both consumers loses (8.6 vs 9.9 s) — so the
-    # cache follows a zero-job driver-side probe of the edge
-    # source's file size (sf1, in between, ties: 3.94/4.07/3.88
-    # across cache-both / no-cache / ord_e-only). Unknown sizes
-    # (remote storage) default to cached — the at-scale-safe side.
-    _bytes = table_bytes(sf_dir, "customer")
-    _small = _bytes is not None and _bytes < (1 << 20)
+    # is SCALE-TIERED (round 11): under TRIANGLE_CACHE_MIN_BYTES of
+    # edge source the InMemoryRelation build barrier costs more than
+    # exchange reuse saves, while at sf10 recomputing the distinct
+    # for both consumers loses (A/B numbers beside the constant).
     und = _undirected(edges).distinct()
-    if not _small:
+    if not is_small(sf_dir, "customer", TRIANGLE_CACHE_MIN_BYTES,
+                    "g_triangle_count und cache"):
         und = und.cache()
     deg = _degrees(und)
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
@@ -1189,9 +1188,9 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct degree count — when it fits a bounded driver
     # collect, the cumulative share is a driver cumsum (one job); the
     # sqrt(2m)-degrees pathological case falls back to the
-    # distributed prefix operator. Finishing on global_order_stats
-    # alone measured -0.13 to +0.16 s per run against this (sf0.01
-    # and sf0.1, 4 cores): no clear win, so the driver tier stays.
+    # distributed prefix operator. The driver tier wins at sf0.01 and
+    # sf0.1: build+exec medians 0.93 vs 1.49 s and 1.24 vs 1.64 s
+    # against global_order_stats alone (4 cores, 8 runs per side).
     tbl = fetch_at_most(hist, prefix._DRIVER_TOTALS_MAX, "graph_degree_hist")
     if tbl is not None:
         rows = sorted(tbl.to_pylist(), key=lambda r: r["degree"])
@@ -1202,8 +1201,8 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append(
                 (r["degree"], r["n_nodes"], (1000000 * run) // total)
             )
-        return spark.createDataFrame(
-            out, "degree bigint, n_nodes bigint, cum_nodes_ppm bigint"
+        return local_frame(
+            spark, out, "degree bigint, n_nodes bigint, cum_nodes_ppm bigint"
         )
     cum = prefix.global_order_stats(
         hist, [F.asc("degree")], cum_cols=["n_nodes"], rank_col=None,

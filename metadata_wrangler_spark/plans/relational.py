@@ -18,7 +18,7 @@ from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import dedup as dedup_ops
 from metadata_wrangler_spark.operators import pagination
 from metadata_wrangler_spark.plans import register
-from metadata_wrangler_spark.session import empty_frame
+from metadata_wrangler_spark.session import local_frame
 
 
 def dsum(col: F.Column) -> F.Column:
@@ -481,11 +481,9 @@ def a_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram-refinement operator (operators/selection.py) over the
     exact 1e-2 quantization of the 2-decimal currency (injective,
     so the quantized rank order IS the value order): one coarse
-    bounds histogram + one endgame round, raw rows never shuffled —
-    the previous distinct-value prefix-cumsum spelling shuffled
-    |distinct values| rows, which scales WITH the data on a
-    near-continuous column. The original doubles come back from one
-    pushdown-filtered probe on the four selected quanta.
+    bounds histogram + one endgame round, raw rows never shuffled.
+    The original doubles come back lazily, from one pushdown-filtered
+    probe on the four selected quanta joined to them.
     `a_percentile_cont` is the single-pass aggregate variant.
     """
     import math
@@ -508,24 +506,17 @@ def a_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # domain contract: 1e-2-quantized account balances span < 2^31
     # (|c_acctbal| < 2.1e7) — two scans total.
     sel = grouped_select(q, "qb", pct_ranks, domain_bits=31)
-    if not sel:
-        return empty_frame(spark, "p double, value double")
-    picked = {str(p): sel[0][str(p)] for p in (0.25, 0.50, 0.75, 0.90)}
+    picked = [(p, m[str(p)]) for m in sel for p in (0.25, 0.50, 0.75, 0.90)]
     # recover the exact source doubles (quantization is injective on
-    # 2-decimal currency): one probe filtered to the four quanta —
-    # a pushed-down IN over a derived column, ≤4 result rows.
-    vals = {
-        r["qb"]: r["value"]
-        for r in q.where(
-            F.col("qb").isin(*{int(v) for v in picked.values()})
-        )
-        .groupBy("qb")
+    # 2-decimal currency): the rows of the picked quanta — a
+    # pushed-down IN over a derived column — join the broadcast picks
+    # lazily, one value per percentile.
+    picks = local_frame(spark, picked, "p double, qb bigint")
+    return (
+        q.where(F.col("qb").isin(*{qb for _, qb in picked}))
+        .join(F.broadcast(picks), "qb")
+        .groupBy("p")
         .agg(F.min("c_acctbal").alias("value"))
-        .collect()
-    }
-    return spark.createDataFrame(
-        [(float(p), vals[picked[str(p)]]) for p in (0.25, 0.50, 0.75, 0.90)],
-        "p double, value double",
     )
 
 
@@ -2289,7 +2280,8 @@ def a_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
         known_stats=dev_stats,
     )
     med_by_type = {m["event_type"]: m["med"] for m in med}
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (m["event_type"],
              med_by_type[m["event_type"]] / 10000.0,
@@ -2350,15 +2342,11 @@ def a_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments (n, Σqv, Σ rank·qv), so it rides the rank-moment partial
     operator (operators/prefix.py grouped_rank_value_sums): one
     range shuffle of (priority, qv), one Arrow fold to ≤ P×|groups|
-    integer partials, driver-side exact composition. The round-10
-    spelling annotated every order row with its rank through the
-    grouped prefix operator (range shuffle + localCheckpoint + a
-    second hash exchange for the window + broadcast offsets join)
-    and then aggregated the full rank-annotated stream away. Ranks
-    over ties are summed, never reported, so Σ rank·qv is tie-order
-    invariant and no tiebreak column is shuffled; all arithmetic is
-    exact arbitrary-precision integers, matching the oracle's
-    HUGEINT chain bit for bit.
+    integer partials, driver-side exact composition, handed back
+    through ``local_frame``. Ranks over ties are summed, never
+    reported, so Σ rank·qv is tie-order invariant and no tiebreak
+    column is shuffled; all arithmetic is exact arbitrary-precision
+    integers, matching the oracle's HUGEINT chain bit for bit.
     """
     from metadata_wrangler_spark.operators.prefix import (
         grouped_rank_value_sums,
@@ -2383,7 +2371,8 @@ def a_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (m["o_orderpriority"], n, float(sx) / 10000.0, gini_ppm)
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "priority string, n_orders bigint, total_value double,"
         " gini_ppm bigint",
@@ -2460,7 +2449,8 @@ def a_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (l_extendedprice = qty × part price < 2.1e5).
         domain_bits=31,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (m["flag"], m["n"], m["total_weight"], m["wmed"] / 10000.0)
             for m in sel

@@ -10,22 +10,13 @@ from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.catalog import load
 from metadata_wrangler_spark.operators import similarity
-from metadata_wrangler_spark.operators.driver_fetch import fetch_at_most
+from metadata_wrangler_spark.operators.driver_fetch import fetch_capped
 from metadata_wrangler_spark.plans import register
-from metadata_wrangler_spark.session import empty_frame
+from metadata_wrangler_spark.session import local_frame
 
 # Query set: a deterministic slice of the corpus.
 _QUERY_PRED = "vec_id % 101 = 0"
 _K = 5
-
-
-def _fetch_capped(df: DataFrame, cap: int, name: str):
-    """``df``'s rows as an Arrow table through the bounded driver
-    fetch ``name``; past ``cap`` rows it raises and names the cap."""
-    tbl = fetch_at_most(df, cap, name)
-    if tbl is None:
-        raise ValueError(f"driver fetch {name} exceeds its cap of {cap} rows")
-    return tbl
 
 
 # DuckDB spelling of the deterministic sequential-fold dot product /
@@ -347,10 +338,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus's own geometry rather than random hyperplanes.
     """
     emb = load(spark, sf_dir, "embeddings")
+    # queries off the scan: a slice of the repartitioned corpus would
+    # shuffle it all for the build-time query fetch (2 jobs, not 1)
+    queries = emb.where(F.expr(_QUERY_PRED))
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
     return similarity.ivf_cosine_topk(
-        corpus, None, _CENTROIDS, k=_K, nprobe=_NPROBE,
-        query_pred=lambda c: c % 101 == 0,
+        corpus, queries, _CENTROIDS, k=_K, nprobe=_NPROBE
     )
 
 
@@ -676,9 +669,9 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_max(F.transform("embedding", lambda v: F.abs(v.cast("double"))))
         ).alias("m")
     )
-    scale = _fetch_capped(mx, 1, "sim_int8_scale").column("m")[0].as_py()
+    scale = fetch_capped(mx, 1, "sim_int8_scale").column("m")[0].as_py()
     if scale is None:  # empty or all-NULL corpus
-        return empty_frame(spark, "query_id long, corpus_id long, "
+        return local_frame(spark, [], "query_id long, corpus_id long, "
                            "qdot long, cosine double, rank long")
     qdf = emb.where(F.expr(_QUERY_PRED))
     return _rank_and_rerank(
@@ -784,7 +777,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()  # NULL-payload rule
     )
-    book = _fetch_capped(
+    book = fetch_capped(
         emb.where(F.col("vec_id") < _PQ_KC).select(
             "vec_id",
             F.transform("embedding", lambda v: v.cast("double")).alias("v"),

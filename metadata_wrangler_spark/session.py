@@ -16,8 +16,9 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 _log = logging.getLogger(__name__)
@@ -174,14 +175,23 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
     return spark
 
 
-def empty_frame(spark: SparkSession, schema: str | StructType) -> DataFrame:
-    """A zero-row frame of ``schema`` (DDL or StructType) that the
-    optimizer folds to an empty ``LocalRelation``. ``createDataFrame``
-    over an empty list plans a Python RDD instead, whose first action
-    runs a task per parallelism slot (8 tasks, 3.0 s cold, on a 4-core
-    host)."""
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """``rows`` (tuples in schema order, or a pandas frame) as a JVM
+    ``LocalRelation`` of ``schema`` (DDL or StructType), shipped once
+    as an Arrow table of the schema's types. The package's only
+    ``createDataFrame``: over a Python list it plans a ``LogicalRDD``
+    over a Python RDD, a Python-worker stage at execution (an empty
+    one ran a task per parallelism slot, 3.0 s cold on 4 cores)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    return spark.range(1).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
-    ).limit(0)
+    arrow_schema = to_arrow_schema(schema)
+    if hasattr(rows, "iloc"):  # a pandas frame
+        table = pa.Table.from_pandas(rows, schema=arrow_schema,
+                                     preserve_index=False)
+    else:
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
+        )
+    return spark.createDataFrame(table, schema)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.dedup import normalize_text
-from metadata_wrangler_spark.session import empty_frame
+from metadata_wrangler_spark.session import local_frame
 from metadata_wrangler_spark.streaming._sweep import drain
 
 DOCS_SCHEMA = ("doc_id BIGINT, text STRING, lang STRING, "
@@ -54,7 +54,7 @@ def admit_batch(state_path: str, batch: DataFrame) -> DataFrame:
         # OTHER read failure must propagate — treating it as an empty
         # corpus would re-admit the whole batch and append duplicate
         # fingerprints.
-        state = empty_frame(spark, "doc_id BIGINT, fingerprint STRING")
+        state = local_frame(spark, [], "doc_id BIGINT, fingerprint STRING")
     admitted = batch_fp.join(
         state.select("fingerprint"), "fingerprint", "left_anti"
     ).select("doc_id", "fingerprint")

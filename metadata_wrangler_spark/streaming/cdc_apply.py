@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_wrangler_spark.operators.merge import VersionedParquetTable
-from metadata_wrangler_spark.session import empty_frame
+from metadata_wrangler_spark.session import local_frame
 from metadata_wrangler_spark.streaming._sweep import drain
 
 CHANGES_SCHEMA = "key BIGINT, version BIGINT, op STRING, qv BIGINT"
@@ -70,8 +70,8 @@ def current_view(state: DataFrame) -> DataFrame:
 
 
 def empty_state(spark: SparkSession) -> DataFrame:
-    return empty_frame(
-        spark,
+    return local_frame(
+        spark, [],
         "key BIGINT, n_changes BIGINT, last_version BIGINT,"
         " last_op STRING, last_qv BIGINT",
     )

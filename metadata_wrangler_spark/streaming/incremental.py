@@ -12,34 +12,41 @@ valid check of the streaming semantics.
 
 from __future__ import annotations
 
+import json
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.streaming._sweep import available_now
+from metadata_wrangler_spark.streaming._sweep import _leaf_files, available_now
 
 
 def events_schema(spark: SparkSession, source_dir: str) -> tuple[str, bool]:
-    """Detect the physical type of ``ts`` from one batch footer read
-    (mirrors catalog.load's detect-then-convert) and return
-    ``(stream_schema_ddl, needs_nanos_conversion)``.
-
-    TIMESTAMP(MICROS) parquet reads natively (``timestamp_ntz`` when
-    isAdjustedToUTC=false, else ``timestamp``); TIMESTAMP(NANOS)
-    only reads as BIGINT under the nanosAsLong conf and needs an
-    explicit div-1000. Hard-coding either assumption corrupts the
-    other layout — this probe costs one footer read at stream start.
-    """
+    """``(stream schema DDL, needs nanos conversion)`` for the events
+    under ``source_dir``, from ``ts``'s type in one parquet footer read
+    with pyarrow (no Spark job), mapped as Spark's reader maps it:
+    INT96 or UTC-adjusted INT64 TIMESTAMP(MICROS/MILLIS) is
+    ``TIMESTAMP``, unadjusted ``TIMESTAMP_NTZ``; TIMESTAMP(NANOS) reads
+    only as BIGINT under the nanosAsLong conf (set here) and needs an
+    explicit div-1000."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_kind = dict(spark.read.parquet(source_dir).dtypes).get("ts", "bigint")
-    ts_ddl = {
-        "bigint": "BIGINT",
-        "timestamp_ntz": "TIMESTAMP_NTZ",
-    }.get(ts_kind, "TIMESTAMP")
+    files = _leaf_files(source_dir)
+    if not files:
+        raise FileNotFoundError(f"{source_dir} holds no events file")
+    footer = pq.read_metadata(min(files)).schema
+    ts = footer.column(footer.names.index("ts"))
+    kind = json.loads(ts.logical_type.to_json())
+    if ts.physical_type == "INT96":
+        ts_ddl = "TIMESTAMP"
+    elif kind.get("Type") != "Timestamp" or kind["timeUnit"] == "nanoseconds":
+        ts_ddl = "BIGINT"  # NANOS, or a plain long
+    else:
+        ts_ddl = "TIMESTAMP" if kind["isAdjustedToUTC"] else "TIMESTAMP_NTZ"
     schema = (
         f"event_id BIGINT, ts {ts_ddl}, user_id BIGINT, "
         "event_type STRING, value DOUBLE"
     )
-    return schema, ts_kind == "bigint"
+    return schema, ts_ddl == "BIGINT"
 
 
 def read_events_stream(

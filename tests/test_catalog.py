@@ -1,8 +1,10 @@
 """catalog.table_bytes: the one zero-job size probe behind the
-scale-tiered caches (g_triangle_count, ev_gap_percentiles)."""
+scale-tiered caches (g_triangle_count, ev_gap_percentiles), and
+catalog.is_small, the one size-tier decision over it."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 from metadata_wrangler_spark import catalog
@@ -41,3 +43,20 @@ def test_table_bytes_unknown_is_none(tmp_path, monkeypatch):
 
     monkeypatch.setattr(os.path, "getsize", denied)
     assert catalog.table_bytes(str(tmp_path), "events") is None
+
+
+def test_is_small_logs_each_decision_and_unknown_counts_as_large(
+    tmp_path, caplog
+):
+    _write(tmp_path / "customer.parquet", 100)
+    _write(tmp_path / "events.parquet", 300)
+    with caplog.at_level(logging.INFO, logger=catalog.__name__):
+        assert catalog.is_small(str(tmp_path), "customer", 200, "t_small")
+        assert not catalog.is_small(str(tmp_path), "events", 300, "t_at")
+        assert not catalog.is_small(str(tmp_path), "orders", 300, "t_none")
+    assert [r.getMessage() for r in caplog.records
+            if r.name == catalog.__name__] == [
+        "size tier t_small: bytes=100 threshold=200 -> small",
+        "size tier t_at: bytes=300 threshold=300 -> large",
+        "size tier t_none: bytes=None threshold=300 -> large",
+    ]

@@ -89,20 +89,3 @@ def test_every_query_runs_with_null_content(spark, nulls_dir):
         except Exception as e:  # noqa: BLE001 - we report them all
             failures[name] = f"{type(e).__name__}: {str(e)[:140]}"
     assert not failures, f"{len(failures)} queries crash on nulls: {failures}"
-
-
-def test_empty_frame_is_a_jvm_relation_of_the_schema(spark):
-    """session.empty_frame: the schema createDataFrame([], ddl) gives,
-    zero rows, and no LogicalRDD over a Python RDD in the plan."""
-    from metadata_wrangler_spark.session import empty_frame
-
-    ddl = "key BIGINT, op STRING, qv DOUBLE, d DATE, rank INT"
-    df = empty_frame(spark, ddl)
-    assert df.schema == spark.createDataFrame([], ddl).schema
-    assert df.count() == 0
-    analyzed = df._jdf.queryExecution().analyzed()
-    assert "LogicalRDD" not in analyzed.toString()
-    assert (
-        df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
-        == "LocalRelation"
-    )

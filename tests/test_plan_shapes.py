@@ -489,3 +489,17 @@ def test_call_site_pin_keeps_ansi_errors_loud(spark):
     with pytest.raises(ArithmeticException) as exc:
         spark.range(1).select(F.lit(1) / F.lit(0)).collect()
     assert exc.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+@pytest.mark.parametrize("name", [
+    "a_percentile_disc", "a_mad_robust", "a_gini_coefficient",
+    "a_weighted_median", "g_degree_distribution", "ev_time_to_convert",
+    "ev_gap_percentiles",
+])
+def test_driver_built_results_plan_no_python_rdd(spark, queries, name):
+    """The queries that finish on the driver hand their rows back
+    through session.local_frame: a JVM LocalRelation, never a
+    LogicalRDD over a Python RDD, which would run a Python-worker
+    stage at execution that python_plan_violations cannot see."""
+    analyzed = queries[name](spark, SF)._jdf.queryExecution().analyzed()
+    assert "LogicalRDD" not in analyzed.toString()

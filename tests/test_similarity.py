@@ -245,14 +245,12 @@ def test_ivf_topk_tiers_row_identical(spark, monkeypatch):
     from metadata_wrangler_spark.plans.vectors import _CENTROIDS
 
     emb = load(spark, "/root/testdata/sf0.01", "embeddings")
-    pred = lambda c: c % 101 == 0  # noqa: E731
-    scan = similarity.ivf_cosine_topk(
-        emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
-    )
+    queries = emb.where("vec_id % 101 = 0")
+    scan = similarity.ivf_cosine_topk(emb, queries, _CENTROIDS, k=5, nprobe=2)
     monkeypatch.setattr(similarity, "ANN_QUERY_CAP", 1)
     with pytest.warns(UserWarning, match="ANN_QUERY_CAP"):
         join = similarity.ivf_cosine_topk(
-            emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
+            emb, queries, _CENTROIDS, k=5, nprobe=2
         )
     rows = sorted(map(tuple, scan.collect()))
     assert rows and rows == sorted(map(tuple, join.collect()))

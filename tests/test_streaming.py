@@ -719,6 +719,78 @@ def test_drain_with_nothing_new_fires_no_job_and_writes_nothing(
     assert tree() == before
 
 
+def test_idle_view_maintenance_rerun_fires_no_job(spark, tmp_path):
+    """events_schema reads ``ts``'s type from a parquet footer with
+    pyarrow, so a view-maintenance sweep that finds no new file runs
+    no Spark job (counted by job group)."""
+    from metadata_wrangler_spark.operators.matview import (
+        MaterializedDailyRollup,
+    )
+    from metadata_wrangler_spark.streaming import view_maintenance
+
+    src = tmp_path / "events_src"
+    src.mkdir()
+    shutil.copy(f"{SF_DIR}/events.parquet", src / "part-000.parquet")
+    view = str(tmp_path / "mv")
+    MaterializedDailyRollup(spark, view).init(
+        load(spark, SF_DIR, "events").where(F.lit(False))
+    )
+    sc = spark.sparkContext
+
+    def jobs_of(group):
+        sc.setJobGroup(group, group)
+        try:
+            view_maintenance.run_view_maintenance_stream(
+                spark, str(src), view, str(tmp_path / "cp")
+            )
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc._jsc.clearJobGroup()
+
+    assert jobs_of("test-view-first") != []  # the count sees jobs
+    assert jobs_of("test-view-idle") == []
+
+
+def test_events_schema_matches_spark_for_each_timestamp_layout(
+    spark, tmp_path
+):
+    """The footer-derived DDL equals what Spark's own reader infers,
+    for micros with and without isAdjustedToUTC, nanos (BIGINT under
+    nanosAsLong, so the stream converts it) and legacy INT96."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import StructType
+
+    layouts = {
+        "micros_utc": (pa.timestamp("us", tz="UTC"), {}, False),
+        "micros_ntz": (pa.timestamp("us"), {}, False),
+        "nanos": (pa.timestamp("ns"), {"version": "2.6"}, True),
+        "int96": (
+            pa.timestamp("ns"), {"use_deprecated_int96_timestamps": True},
+            False,
+        ),
+    }
+    for name, (ts_type, opts, nanos) in layouts.items():
+        src = tmp_path / name
+        src.mkdir()
+        f = str(src / "part-000.parquet")
+        pq.write_table(pa.table({
+            "event_id": pa.array([1], pa.int64()),
+            "ts": pa.array([1_700_000_000_123_456_000], pa.int64())
+            .cast(pa.timestamp("ns")).cast(ts_type),
+            "user_id": pa.array([7], pa.int64()),
+            "event_type": pa.array(["view"]),
+            "value": pa.array([1.5]),
+        }), f, **opts)
+        ddl, needs_nanos = incremental.events_schema(spark, str(src))
+        want = spark.read.parquet(f).dtypes
+        got = [(c.name, c.dataType.simpleString())
+               for c in StructType.fromDDL(ddl)]
+        assert (name, got, needs_nanos) == (name, want, nanos)
+
+
 def test_drain_skips_hidden_names_and_takes_a_glob(spark, tmp_path):
     """Names starting with ``_`` or ``.`` are never read (a Spark
     write's ``_SUCCESS`` and ``.crc`` files, a ``_staging`` directory,
@@ -886,7 +958,7 @@ def test_no_foreach_batch_sink_starts_a_streaming_query(
     from metadata_wrangler_spark.operators.matview import (
         MaterializedDailyRollup,
     )
-    from metadata_wrangler_spark.session import empty_frame
+    from metadata_wrangler_spark.session import local_frame
     from metadata_wrangler_spark.streaming import (
         admission,
         cdc_apply,
@@ -919,8 +991,8 @@ def test_no_foreach_batch_sink_starts_a_streaming_query(
     items = str(tmp_path / "items")
     spark.createDataFrame([(4,)], queue_drain.ITEMS_SCHEMA).write.parquet(items)
     records = VersionedParquetTable(spark, str(tmp_path / "queue"))
-    records.init(empty_frame(
-        spark, "identifier_id bigint, data_source string, operation string,"
+    records.init(local_frame(
+        spark, [], "identifier_id bigint, data_source string, operation string,"
         " status string, ts timestamp, exception string"))
     queue_drain.run_drain_stream(spark, items, records, str(tmp_path / "cp2"))
     assert [r["status"] for r in records.read().collect()] == [queue.SUCCESS]
