@@ -9,23 +9,24 @@ Reference semantics being re-expressed (see SURVEY.md §2.3 J4):
     `/root/reference/oclc/linked_data.py:820-830` (`strength <= 0.7`
     edges are not followed).
 
-Spark design — adaptive two-tier:
+Spark design — adaptive two-tier, one walk core plus one gate:
 
   * **Distributed tier** (the 100 TB path): breadth-first frontier
     expansion with one equi-join per level (closure) / min-label
-    propagation with pointer-jump acceleration (components). The
-    visited set is accumulated and each new frontier is anti-joined
-    against it, so a node is expanded exactly once (min-level
-    semantics, cycle-safe). Each level is one ``lineage.fixpoint``
-    round.
-  * **Local tier**: iterative jobs cost ~0.3-0.5 s each in scheduling
-    alone, so when the raw edge set is small enough to hold on the
-    driver (``LOCAL_SOLVE_MAX_EDGES``, read at call time — see the
-    constant's rationale) the closure is solved in-process
-    on the already-materialized edges — the same trick every
-    production graph system uses (a recursive-CTE engine IS the
-    local tier). Both tiers produce identical rows; tests assert
-    the equivalence.
+    propagation with pointer-jump acceleration (components) /
+    min-plus doubling (shortest paths). The visited set is
+    accumulated and each new frontier is anti-joined against it, so
+    a node is expanded exactly once (min-level semantics,
+    cycle-safe). Each level is one ``lineage.fixpoint`` round.
+  * **Local tier**: one gate, ``_local_tier``, for all three
+    operators: below ``LOCAL_SOLVE_MAX_EDGES`` raw edges it solves
+    in-process on the driver (see the gate for the economics). Two
+    numpy cores stand behind it: ``_min_plus_arrays``, the one
+    bounded min-plus walk — BFS levels are that walk with every edge
+    code 1, shortest paths pass packed codes — and
+    ``_min_label_arrays``, min-label components (a different
+    semiring). Both tiers produce identical rows; tests assert the
+    equivalence.
 
 Scale notes:
   * The frontier is usually far smaller than the edge table, which is
@@ -41,6 +42,8 @@ from __future__ import annotations
 
 import functools
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,17 +56,15 @@ from metadata_wrangler_spark.operators.lineage import (
 from metadata_wrangler_spark.session import local_frame
 
 # Above this many RAW (pre-dedup) edges the driver-local tier is
-# skipped and the distributed loop runs. The budget is set by the
-# economics of the two tiers, not by driver-heap fear: the local
-# tier costs one Arrow transfer plus a numpy pass (~1-2 s per 10^7
-# edges measured; 4x10^6 (src,dst) longs ≈ 64 MB, trivial against
-# any sane driver heap), while the distributed tier costs
-# rounds x per-round scheduling floor (6 levels ≈ 5-8 s on an idle
-# local[32] REGARDLESS of size — measured at the 100x ladder, whose
-# 3x10^6-edge graph sat just past the old 10^6 budget and paid 7 s
-# distributed for a 2 s local problem). At 100 TB edge tables are
-# billions of rows and the probe early-stops into the distributed
-# path after reading at most this many rows (driver_fetch logs the
+# skipped and the distributed loop runs (read at call time; the
+# economics are at ``_local_tier``). It counts the return trip:
+# solve + result ``local_frame`` + one downstream aggregate, local
+# vs distributed tier, medians of 3 on random parquet graphs (ids
+# in [0, m/2)), 4 cores, at 1M / 2M / 4M edges: equivalent_ids
+# (15k seeds) 2.2/6.5, 3.5/9.5, 5.4/14.9 s; connected_components
+# 2.9/32, 5.9/64, 13.5/113 s. The local tier wins at the cap; 4x10^6
+# (src,dst) longs ≈ 64 MB of driver heap. Past it the probe
+# early-stops into the distributed path (driver_fetch logs the
 # count it saw).
 LOCAL_SOLVE_MAX_EDGES = 4_000_000
 
@@ -71,6 +72,87 @@ LOCAL_SOLVE_MAX_EDGES = 4_000_000
 # on pointer jumping (see its docstring).
 COMPONENTS_MAX_ROUNDS = 50
 POINTER_JUMP_AFTER = 10
+
+
+def _local_tier(
+    edges: DataFrame,
+    name: str,
+    solve,
+    schema: str,
+    seeds: DataFrame | None = None,
+    seeds_name: str | None = None,
+    edge_count_hint: int | None = None,
+) -> DataFrame | None:
+    """The local tier of every closure operator: ``solve`` on the
+    driver as a ``local_frame`` of ``schema``, or None when the
+    distributed tier must answer.
+
+    ``solve(*columns[, seed_vals])`` gets ``edges``' columns as int64
+    numpy arrays, NULL rows dropped in Arrow, and with ``seeds`` the
+    distinct non-NULL seed ids; it returns a dict of result columns.
+
+    Economics: iterative jobs cost ~0.3-0.5 s each in scheduling
+    alone, so the distributed tiers pay rounds × that floor
+    REGARDLESS of size (6 levels ≈ 5-8 s on an idle local[32]; the
+    shortest-path doubling a flat 5.2 s at sf10 where the oracle ran
+    0.46 s), while the local tier is one Arrow transfer plus a numpy
+    pass (~1-2 s per 10^7 edges) — the same trick every production
+    graph system uses (a recursive-CTE engine IS the local tier).
+
+    The probe runs BEFORE any shuffle: a bare scan + CollectLimit
+    (``fetch_at_most``, named ``name``) early-stops once the budget
+    is exceeded, and moves rows over Arrow ~2x faster than
+    row-pickling collect. It therefore bounds RAW edges, not deduped
+    ones — a graph whose duplicates push it over the line takes the
+    distributed tier, which is merely conservative — and the local
+    tier skips the dedup shuffle entirely. With ``edge_count_hint``
+    (a known edge-row count) the decision is free and the admit path
+    is a fully parallel ``toArrow``: the probe's CollectLimit
+    funnels every row through one partition, which measured 2.3 s of
+    the 5.6 s sf10 wall on a 3M-edge graph the parallel fetch moves
+    in 0.3 s warm. A hint that undercounts raises ``ValueError``
+    once the fetch returns more than ``LOCAL_SOLVE_MAX_EDGES`` rows.
+    The seeds are fetched under the same cap (named ``seeds_name``);
+    past it the distributed tier joins them instead."""
+    if edge_count_hint is None:
+        tbl = fetch_at_most(edges, LOCAL_SOLVE_MAX_EDGES, name)
+    elif edge_count_hint <= LOCAL_SOLVE_MAX_EDGES:
+        tbl = edges.toArrow()
+        if tbl.num_rows > LOCAL_SOLVE_MAX_EDGES:
+            raise ValueError(f"edge_count_hint={edge_count_hint} undercounts"
+                             f" {tbl.num_rows} edges")
+    else:
+        tbl = None
+    if tbl is None:
+        return None
+    args = _edge_arrays(tbl)
+    if seeds is not None:
+        seed_vals = _seed_values(seeds, seeds_name)
+        if seed_vals is None:
+            return None
+        args.append(seed_vals)
+    return local_frame(edges.sparkSession, solve(*args), schema)
+
+
+def _edge_arrays(tbl) -> list:
+    """``tbl``'s columns as int64 numpy arrays, rows holding a NULL
+    dropped — straight from Arrow, no pandas frame in between."""
+    return [
+        c.to_numpy().astype(np.int64, copy=False)
+        for c in tbl.drop_null().columns
+    ]
+
+
+def _seed_values(seeds: DataFrame, name: str):
+    """The distinct non-NULL ids in ``seeds``' first column as an
+    int64 array, or None past ``LOCAL_SOLVE_MAX_EDGES``."""
+    distinct = (
+        seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("node"))
+        .where(F.col("node").isNotNull())
+        .dropDuplicates()
+    )
+    tbl = fetch_at_most(distinct, LOCAL_SOLVE_MAX_EDGES, name)
+    return None if tbl is None else tbl.column("node").to_numpy()
 
 
 def equivalent_ids(
@@ -91,31 +173,22 @@ def equivalent_ids(
     seeds : DataFrame whose first column holds seed node ids
     Returns DataFrame(node BIGINT, level INT) — min hop distance.
     """
-    spark = edges.sparkSession
     seed_col = seeds.columns[0]
     filtered = edges.where(F.col(strength) > F.lit(threshold)).select(
         F.col(src).cast("bigint").alias("_src"),
         F.col(dst).cast("bigint").alias("_dst"),
     )
-    # Tier probe BEFORE any shuffle: a bare scan + CollectLimit
-    # early-stops as soon as the budget is exceeded, and the Arrow
-    # fetch moves the rows ~2x faster than row-pickling collect.
-    # The budget therefore bounds RAW filtered edges, not deduped
-    # ones — a graph whose duplicates push it over the line takes the
-    # distributed tier, which is merely conservative. The small case
-    # (local tier) then skips the dropDuplicates SHUFFLE entirely
-    # (pandas dedups in-process); measured at 3x-scaled bench data
-    # the old spelling paid 3.3 s of dedup+checkpoint plus a 3.0 s
-    # row-collect before any BFS work.
-    probe = fetch_at_most(filtered, LOCAL_SOLVE_MAX_EDGES, "closure_ids_edges")
-    seed_vals = None if probe is None else _seed_values(
-        seeds, "closure_ids_seeds"
-    )
-    if seed_vals is not None:
-        # Driver-local tier: the numpy CSR walk of bfs_levels_pdf (a
-        # per-edge Python dict build measured ~1 s/M edges).
-        out = bfs_levels_pdf(probe.to_pandas(), seed_vals, levels)
-        return local_frame(spark, out, "node bigint, level int")
+
+    def levels_walk(s, d, seed_vals):
+        # BFS levels are the min-plus walk with every edge code 1.
+        nodes, level = _min_plus_arrays(s, d, np.ones_like(s), seed_vals,
+                                        levels)
+        return {"node": nodes, "level": level}
+
+    local = _local_tier(filtered, "closure_ids_edges", levels_walk,
+                        "node bigint, level int", seeds, "closure_ids_seeds")
+    if local is not None:
+        return local
     # Distributed tier: materialize the deduped edge set ONCE. Every
     # level joins against it; without the pin each level re-runs the
     # upstream scan + filter + dedup (at 100 TB: levels × full-table
@@ -158,85 +231,6 @@ def _union(frames: list[DataFrame]) -> DataFrame:
     return functools.reduce(DataFrame.unionByName, frames)
 
 
-def bfs_levels_pdf(edge_pdf, seed_vals, levels: int):
-    """Pure numpy/pandas BFS core of the local tier: min hop level
-    per reachable node, seeds at level 0 (off-graph seeds included).
-    Row-identical to the distributed loop; fuzz-tested against a
-    per-edge reference in tests/test_closure_local_cores.py.
-
-    ``edge_pdf`` has columns ``_src``/``_dst`` (may contain NULLs and
-    duplicates — dropped here); returns a pandas DataFrame
-    (node int64, level int32)."""
-    import numpy as np
-    import pandas as pd
-
-    edge_pdf = edge_pdf.dropna().drop_duplicates()
-    s = edge_pdf["_src"].to_numpy(np.int64, copy=False)
-    d = edge_pdf["_dst"].to_numpy(np.int64, copy=False)
-    # Factorize both endpoints into one dense code space, then build
-    # a CSR adjacency by stable-sorting edges on the source code.
-    codes, uniq = pd.factorize(np.concatenate([s, d]))
-    scode, dcode = codes[: len(s)], codes[len(s):]
-    order = np.argsort(scode, kind="stable")
-    ss, dd = scode[order], dcode[order]
-    n = len(uniq)
-    starts = np.searchsorted(ss, np.arange(n))
-    ends = np.searchsorted(ss, np.arange(n) + 1)
-
-    seed_vals = sorted(set(seed_vals))
-    idx = pd.Index(uniq)
-    seed_codes = (
-        idx.get_indexer(np.asarray(seed_vals, np.int64))
-        if seed_vals
-        else np.empty(0, np.int64)
-    )
-    # Seeds absent from the edge table still get a level-0 row (they
-    # have no code in the adjacency, so they ride a side list).
-    off_graph = [v for v, c in zip(seed_vals, seed_codes) if c < 0]
-    level = np.full(n, -1, np.int64)
-    frontier = np.unique(seed_codes[seed_codes >= 0])
-    level[frontier] = 0
-    for lvl in range(1, levels + 1):
-        cnt = ends[frontier] - starts[frontier]
-        total = int(cnt.sum())
-        if total == 0:
-            break
-        # Gather all frontier adjacency ranges in one shot.
-        rep = np.repeat(starts[frontier], cnt)
-        offs = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-        cand = np.unique(dd[rep + offs])
-        new = cand[level[cand] < 0]
-        if new.size == 0:
-            break
-        level[new] = lvl
-        frontier = new
-    mask = level >= 0
-    return pd.DataFrame(
-        {
-            "node": np.concatenate(
-                [uniq[mask], np.asarray(off_graph, np.int64)]
-            ),
-            "level": np.concatenate(
-                [level[mask], np.zeros(len(off_graph), np.int64)]
-            ).astype(np.int32),
-        }
-    )
-
-
-def _seed_values(seeds: DataFrame, name: str) -> list[int] | None:
-    """The distinct non-NULL ids in ``seeds``' first column, or None
-    past the local tier's cap (``LOCAL_SOLVE_MAX_EDGES``): the caller
-    then takes the distributed tier, which joins the seeds instead of
-    shipping them to the driver."""
-    distinct = (
-        seeds.select(F.col(seeds.columns[0]).cast("bigint").alias("node"))
-        .where(F.col("node").isNotNull())
-        .dropDuplicates()
-    )
-    tbl = fetch_at_most(distinct, LOCAL_SOLVE_MAX_EDGES, name)
-    return None if tbl is None else tbl.column("node").to_pylist()
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -263,31 +257,25 @@ def connected_components(
     in O(log diameter) additional rounds. Shallow graphs never pay
     for the self-join; deep graphs finish ~10 + log2(diameter)
     rounds instead of diameter. Small graphs (``LOCAL_SOLVE_MAX_EDGES``)
-    are solved driver-local by union-find on the materialized edge
-    set — identical rows, none of the per-round scheduling cost.
+    are solved driver-local by ``_min_label_arrays`` — identical
+    rows, none of the per-round scheduling cost.
     Labels that still change after ``COMPONENTS_MAX_ROUNDS`` rounds
     raise instead of returning a non-fixpoint.
     """
-    spark = edges.sparkSession
     directed = edges.select(
         F.col(src).cast("bigint").alias("a"),
         F.col(dst).cast("bigint").alias("b"),
     )
-    # Tier probe BEFORE the dedup shuffle (see equivalent_ids): a
-    # scan + CollectLimit over Arrow, budget counted on RAW DIRECTED
-    # rows — union-find is direction-blind, so the local tier needs
-    # no symmetrization and the probe moves half the rows the old
-    # symmetrized probe did (the same budget then admits graphs
-    # twice as large, consistently with equivalent_ids' raw-edge
-    # semantics). The distributed tier symmetrizes below, where it
-    # pays the dedup+checkpoint it needs anyway.
-    probe = fetch_at_most(directed, LOCAL_SOLVE_MAX_EDGES, "closure_cc_edges")
-    if probe is not None:
-        return local_frame(
-            spark,
-            min_label_components_pdf(probe.to_pandas()),
-            "node bigint, component bigint",
-        )
+    # The budget counts RAW DIRECTED rows: the local core is
+    # direction-blind, so only the distributed tier symmetrizes
+    # below, where it pays the dedup+checkpoint it needs anyway.
+    local = _local_tier(
+        directed, "closure_cc_edges",
+        lambda a, b: dict(zip(("node", "component"), _min_label_arrays(a, b))),
+        "node bigint, component bigint",
+    )
+    if local is not None:
+        return local
     sym_raw = directed.unionByName(
         directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -343,15 +331,27 @@ def connected_components(
 
 
 def _min_plus_arrays(u, v, w, source_vals, hops: int):
-    """Array core of the bounded min-plus walk (see
-    ``bounded_min_plus_pdf`` for semantics). ``u``/``v``/``w`` are
-    int64 numpy arrays (already NULL-free). Vectorization choices,
-    each measured at the sf10 ladder (3M edges):
+    """The one bounded min-plus walk of the local tier: min code over
+    walks of ≤ ``hops`` edges from any source, each edge ``u`` → ``v``
+    costing its code ``w``. Sources get a code-0 row (walk of zero
+    edges, off-graph sources included); positive codes mean cycles
+    never undercut it. With every code 1 this is BFS's min hop level
+    (``equivalent_ids``); with the packed code 1000·dist + hop-count,
+    additive over path concatenation, it is the bounded shortest path
+    (``bounded_shortest_paths``). Duplicate and parallel edges just
+    relax redundantly. Row-identical to the distributed tiers;
+    fuzz-tested against per-edge references in
+    tests/test_closure_local_cores.py.
+
+    ``u``/``v``/``w`` are NULL-free int64 numpy arrays. Vectorization
+    choices, each measured at the sf10 ladder (3M edges):
 
     * CSR by SOURCE + frontier-driven relaxation (bounded SPFA):
       each round gathers only the out-edges of nodes whose code
       improved last round and relaxes them with one
-      ``np.minimum.at`` over that gathered slice. Single-source
+      ``np.minimum.at`` over that gathered slice — the exact
+      per-round DP, since relaxing FROM last round's improved set
+      reaches precisely the walks of one more edge. Single-source
       bounded walks touch a tiny reachable set (127 nodes on the
       3M-edge sf10 graph), so per-round work is the frontier's
       out-degree, not the full edge list — the whole-array
@@ -359,10 +359,9 @@ def _min_plus_arrays(u, v, w, source_vals, hops: int):
       over a destination-sorted copy) pays the full 3M-edge pass
       x ``hops`` regardless of how little actually changes, and
       lost to SPFA at sf10 (1.91 s end-to-end vs the 5.59 s
-      whole-array round-8 tier). ``minimum.at``'s unbuffered-ufunc
-      cost is proportional to the gathered slice here, which is
-      why it is acceptable per-frontier when it was not per-full-
-      edge-list;
+      whole-array round-8 tier). The worst case (every node
+      improving every round) degrades to one full-edge pass per
+      round, the same bound;
     * frontier shrink by comparing ``cur`` before/after on the
       unique destinations — no re-sort per round;
     * DENSE id fast path: when the id range is no wider than
@@ -374,15 +373,14 @@ def _min_plus_arrays(u, v, w, source_vals, hops: int):
 
     Returns (nodes int64 array, codes int64 array).
     """
-    import numpy as np
-    import pandas as pd
-
-    srcs = np.asarray(sorted(set(source_vals)), np.int64)
+    srcs = np.unique(np.asarray(source_vals, np.int64))
     m = len(u)
     if m == 0:
         return srcs, np.zeros(len(srcs), np.int64)
-    lo = min(int(u.min()), int(v.min()), int(srcs.min()) if srcs.size else 0)
-    hi = max(int(u.max()), int(v.max()), int(srcs.max()) if srcs.size else 0)
+    ends = np.concatenate(
+        [[u.min(), u.max(), v.min(), v.max()], srcs[:1], srcs[-1:]]
+    )
+    lo, hi = int(ends.min()), int(ends.max())
     span = hi - lo + 1
     dense = 0 <= span <= max(4 * m, 1_000_000)
     if dense:
@@ -394,15 +392,6 @@ def _min_plus_arrays(u, v, w, source_vals, hops: int):
         vc = codes[m: 2 * m]
         sc = codes[2 * m:]
         n = len(uniq)
-    # CSR by SOURCE + frontier-driven relaxation (bounded SPFA):
-    # each round relaxes only the out-edges of nodes whose code
-    # improved last round. Single-source bounded walks touch a tiny
-    # reachable set (127 nodes on the 3M-edge sf10 graph), so the
-    # walk itself is microseconds; the worst case (every node
-    # improving every round) degrades to one full-edge pass per
-    # round, the same bound as whole-array relaxation. This is the
-    # exact per-round DP — relaxing FROM last round's improved set
-    # reaches precisely the walks of one more edge.
     order = np.argsort(uc)
     us, vs, ws = uc[order], vc[order], w[order]
     bounds = np.searchsorted(us, np.arange(n + 1))
@@ -411,12 +400,9 @@ def _min_plus_arrays(u, v, w, source_vals, hops: int):
     # which min() caps back at INF).
     INF = np.int64(2**62)
     cur = np.full(n, INF, np.int64)
-    frontier = np.unique(sc) if sc.size else sc
-    if sc.size:
-        cur[frontier] = 0
+    frontier = np.unique(sc)
+    cur[frontier] = 0
     for _ in range(hops):
-        if frontier.size == 0:
-            break
         cnt = bounds[frontier + 1] - bounds[frontier]
         total = int(cnt.sum())
         if total == 0:
@@ -437,34 +423,6 @@ def _min_plus_arrays(u, v, w, source_vals, hops: int):
     else:
         nodes_out = uniq[mask].astype(np.int64)
     return nodes_out, codes_out
-
-
-def bounded_min_plus_pdf(edge_pdf, source_vals, hops: int):
-    """Pure numpy bounded Bellman-Ford core of the shortest-path
-    local tier: min packed code (1000·dist + hop-count — additive
-    over path concatenation, so min over walks is a min-plus fold)
-    over walks of ≤ ``hops`` edges from any source. Sources get a
-    code-0 row (walk of zero edges); positive edge codes mean cycles
-    never undercut it. Row-identical to the distributed min-plus
-    doubling; fuzz-tested against a per-edge reference in
-    tests/test_closure_local_cores.py.
-
-    ``edge_pdf`` has columns ``u``/``v``/``code`` (NULL rows dropped
-    here; duplicate and parallel edges just relax redundantly).
-    Returns a pandas DataFrame (node int64, code int64).
-    """
-    import numpy as np
-    import pandas as pd
-
-    edge_pdf = edge_pdf.dropna()
-    nodes, codes = _min_plus_arrays(
-        edge_pdf["u"].to_numpy(np.int64),
-        edge_pdf["v"].to_numpy(np.int64),
-        edge_pdf["code"].to_numpy(np.int64),
-        source_vals,
-        hops,
-    )
-    return pd.DataFrame({"node": nodes, "code": codes})
 
 
 def bounded_shortest_paths(
@@ -496,42 +454,29 @@ def bounded_shortest_paths(
     edge_count_hint : known edge-row count (catalog/ANALYZE
         statistics, or derivable by construction — the caller's
         equivalent of a cost-based optimizer's stats lookup). When
-        given, the tier decision is FREE and the admit path fetches
-        with a fully parallel ``toArrow`` — the ``limit`` probe's
-        CollectLimit funnels every row through one partition, which
-        measured 2.3 s of the 5.6 s sf10 wall on a 3M-edge graph
-        that the parallel fetch moves in 0.3 s warm. A hint that
-        undercounts raises ``ValueError`` once the fetch returns more
-        than ``LOCAL_SOLVE_MAX_EDGES`` rows. Without a hint the
-        early-stopping probe runs (the right call against a 100 TB
-        table of unknown size).
+        given, the tier decision is free and the local tier fetches
+        in parallel (see ``_local_tier``); a hint that undercounts
+        raises ``ValueError``. Without a hint the early-stopping
+        probe runs (the right call against a 100 TB table of
+        unknown size).
 
-    Adaptive two-tier, same probe economics as ``equivalent_ids``:
-    the distributed min-plus-doubling tier costs a fixed number of
-    exchanges REGARDLESS of data size (measured flat 5.2 s at sf10
-    where the oracle ran 0.46 s — all scheduling floor), while the
-    local tier is one Arrow transfer + hops·O(E) numpy relaxations.
-    Below the raw-edge budget the local tier wins at every measured
-    SF; a 100 TB edge table early-stops the probe (or skips it via
-    the hint) and takes the distributed tier.
+    Local tier: ``_min_plus_arrays`` on the packed codes. Distributed
+    tier: min-plus doubling, a fixed number of exchanges regardless
+    of data size.
     """
     if hops < 2 or hops % 2:
         raise ValueError("bounded_shortest_paths needs even hops >= 2")
-    spark = edges.sparkSession
     node_col, src_col = nodes.columns[0], sources.columns[0]
-    tbl = source_vals = None
-    if edge_count_hint is None:
-        tbl = fetch_at_most(edges, LOCAL_SOLVE_MAX_EDGES, "closure_sp_edges")
-    elif edge_count_hint <= LOCAL_SOLVE_MAX_EDGES:
-        tbl = edges.toArrow()
-        if tbl.num_rows > LOCAL_SOLVE_MAX_EDGES:
-            raise ValueError(f"edge_count_hint={edge_count_hint} undercounts"
-                             f" {tbl.num_rows} edges")
-    if tbl is not None:
-        source_vals = _seed_values(sources, "closure_sp_sources")
-    if source_vals is not None:
-        out = bounded_min_plus_pdf(tbl.to_pandas(), source_vals, hops)
-        return local_frame(spark, out, "node bigint, code bigint")
+
+    def walk(u, v, code, source_vals):
+        return dict(zip(("node", "code"),
+                        _min_plus_arrays(u, v, code, source_vals, hops)))
+
+    local = _local_tier(edges, "closure_sp_edges", walk,
+                        "node bigint, code bigint", sources,
+                        "closure_sp_sources", edge_count_hint)
+    if local is not None:
+        return local
 
     # Distributed tier: min-plus doubling (see g_shortest_path's
     # docstring for the full derivation and broadcast contracts).
@@ -583,34 +528,28 @@ def bounded_shortest_paths(
     return state
 
 
-def min_label_components_pdf(edge_pdf):
-    """Pure numpy/pandas connected-components core of the local tier
-    (component = min node id in the component). Vectorized min-label
-    propagation with full pointer-jump compression each round: the
-    min id travels at least one hop per outer round and every
-    compression pass halves pointer chains, so outer rounds are
-    O(log diameter) — all numpy, no per-edge Python (the union-find
-    dict spelling measured ~2 s/M edges). Fuzz-tested against
-    union-find in tests/test_closure_local_cores.py.
+def _min_label_arrays(a, b):
+    """Connected-components core of the local tier (component = min
+    node id in the component) over NULL-free int64 edge arrays in
+    EITHER orientation — the relaxation symmetrizes internally, so
+    the caller ships raw directed rows; duplicates relax
+    redundantly. Vectorized min-label propagation with full
+    pointer-jump compression each round: the min id travels at least
+    one hop per outer round and every compression pass halves
+    pointer chains, so outer rounds are O(log diameter) — all numpy,
+    no per-edge Python (the union-find dict spelling measured ~2 s/M
+    edges). Fuzz-tested against union-find in
+    tests/test_closure_local_cores.py.
 
-    ``edge_pdf`` has columns ``a``/``b`` in EITHER orientation —
-    the relaxation below symmetrizes internally (idempotent for
-    already-symmetric input), so the caller's tier probe can ship
-    the raw directed rows (NULLs and duplicates dropped here);
-    returns a pandas DataFrame (node int64, component int64)."""
-    import numpy as np
-    import pandas as pd
-
-    edge_pdf = edge_pdf.dropna().drop_duplicates()
-    a = edge_pdf["a"].to_numpy(np.int64, copy=False)
-    b = edge_pdf["b"].to_numpy(np.int64, copy=False)
+    Returns (nodes int64 array, components int64 array)."""
     codes, uniq = pd.factorize(np.concatenate([a, b]))
     ac, bc = codes[: len(a)], codes[len(a):]
     # Symmetrize the relaxation: components are direction-blind.
     ac, bc = np.concatenate([ac, bc]), np.concatenate([bc, ac])
     # Labels are node VALUES (uniq order is first-appearance, not
     # sorted, so comparing codes would not be comparing ids).
-    label = uniq.astype(np.int64).copy()
+    nodes = uniq.astype(np.int64)
+    label = nodes.copy()
     pos = pd.Index(uniq)  # value -> code lookup for the jump step
     while True:
         prev = label
@@ -627,5 +566,4 @@ def min_label_components_pdf(edge_pdf):
         if np.array_equal(cur, prev):
             break
         label = cur
-    return pd.DataFrame({"node": uniq.astype(np.int64), "component": label})
-
+    return nodes, label

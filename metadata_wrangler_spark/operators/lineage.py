@@ -77,7 +77,11 @@ def free_checkpoint(df: DataFrame | None, blocking: bool = True) -> bool:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRDD":
             return False
-        plan.rdd().unpersist(blocking)
+        # What RDD.unpersist does, minus its WARN that a local
+        # checkpoint's lineage is gone once unpersisted: here that is
+        # the intent, and one such line per free buried real warnings.
+        rdd = plan.rdd()
+        rdd.context().unpersistRDD(rdd.id(), blocking)
         return True
     except Exception:
         return False

@@ -72,7 +72,6 @@ operators/prefix.py does, on the selection (not ranking) axis.
 
 from __future__ import annotations
 
-import decimal
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
@@ -89,12 +88,6 @@ BITS = 16
 #: — the collect is bounded by min(window width, rows in window),
 #: a few hundred k integer rows at the absolute worst.
 FINAL_BITS = 17
-
-
-def _to_int(v) -> int:
-    if isinstance(v, decimal.Decimal):
-        return int(v)
-    return int(v)
 
 
 class GroupStats:
@@ -160,7 +153,6 @@ def grouped_select(
     raises after the stats pass (loud, not silently quadratic).
     """
     gcols = list(group_cols)
-    spark = df.sparkSession
     v = F.col(value_col).cast("bigint")
     # weights are STORED as bigint (cheap cache, codegen arithmetic);
     # only aggregation buffers go through DECIMAL(38,0) — and only
@@ -264,7 +256,7 @@ def grouped_select(
                 by_key.setdefault(
                     tuple(r[g] for g in gcols), []
                 ).append(
-                    (int(r["__sel_cb"]), _to_int(r["bw"]),
+                    (int(r["__sel_cb"]), int(r["bw"]),
                      int(r["br"]), int(r["lo"]), int(r["hi"]))
                 )
             stats, coarse_hists = [], {}
@@ -441,7 +433,7 @@ def _refine(base, gcols, targets, stats, coarse_hists=None) -> list[dict]:
                 hist["__sel_l"], hist["__sel_b"], hist["bw"], hist["br"]
             ):
                 hist_by_label[int(lab)].append(
-                    (int(b), _to_int(bw), int(br))
+                    (int(b), int(bw), int(br))
                 )
         for lab in hist_by_label:
             hist_by_label[lab].sort()

@@ -107,9 +107,11 @@ VERIFICATION_PRIORITY: tuple[str, ...] = (
     "dd_minhash_lsh",           # r11: Arrow signature fold
     "f_title_token_jaccard",    # r11: block-local pair kernel
     "pipe_corpus_curation",     # r11: Arrow signature fold (via LSH)
+    "dd_minhash_clusters",      # connected_components local tier gate
+    "dd_cluster_keep",          # connected_components local tier gate
     # Block 2 — the r6-stale block, covered since round 6 by the
-    # pytest all-oracle sweep and the mirror ladders. Ten of it made
-    # room for Block 1 (reasons in CHANGES.md).
+    # pytest all-oracle sweep and the mirror ladders. Twelve of it
+    # made room for Block 1 (reasons in CHANGES.md).
     "a_ks_drift",
     "a_moments_skew_kurt",
     "a_mutual_info",
@@ -118,7 +120,6 @@ VERIFICATION_PRIORITY: tuple[str, ...] = (
     "dd_est_vs_exact",
     "ev_activity_streaks",
     "ev_attribution_credit",
-    "ev_burstiness",
     "ev_seasonal_anomaly",
     "f_binary_prefix",
     "g_degree_distribution",    # also: local_frame result
@@ -126,7 +127,6 @@ VERIFICATION_PRIORITY: tuple[str, ...] = (
     "j_asof_nearest",
     "j_band_join",
     "j_bloom_prune",
-    "j_left_outer_null_split",
     "mm_image_features",
     "p_projection_filter",
     "s_compaction_plan",

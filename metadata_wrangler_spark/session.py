@@ -178,18 +178,18 @@ def get_spark(app_name: str = "metadata_wrangler_spark",
 def local_frame(
     spark: SparkSession, rows, schema: str | StructType
 ) -> DataFrame:
-    """``rows`` (tuples in schema order, or a pandas frame) as a JVM
-    ``LocalRelation`` of ``schema`` (DDL or StructType), shipped once
-    as an Arrow table of the schema's types. The package's only
-    ``createDataFrame``: over a Python list it plans a ``LogicalRDD``
-    over a Python RDD, a Python-worker stage at execution (an empty
-    one ran a task per parallelism slot, 3.0 s cold on 4 cores)."""
+    """``rows`` (tuples in schema order, or columns by name: a dict of
+    arrays or a pandas frame) as a JVM ``LocalRelation`` of ``schema``
+    (DDL or StructType), shipped once as an Arrow table of its types.
+    The package's only ``createDataFrame``: over a Python list it
+    plans a ``LogicalRDD`` over a Python RDD, a Python-worker stage
+    at execution (an empty one ran a task per parallelism slot, 3.0 s
+    cold on 4 cores)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    if hasattr(rows, "iloc"):  # a pandas frame
-        table = pa.Table.from_pandas(rows, schema=arrow_schema,
-                                     preserve_index=False)
+    if hasattr(rows, "keys"):  # columns by name: a dict or pandas frame
+        table = pa.Table.from_pydict(rows, schema=arrow_schema)
     else:
         table = pa.Table.from_pylist(
             [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema

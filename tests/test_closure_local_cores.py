@@ -2,12 +2,13 @@
 reference implementations — no Spark session needed, so hundreds of
 random graphs run in seconds.
 
-The local tiers (operators/closure.py round-8 rewrite) must be
-ROW-IDENTICAL to the distributed loops; tests/test_closure.py pins
-the cross-tier equivalence on a handful of graphs, this file pins
-the numpy cores themselves on randomized ones: chains (worst case
-for label propagation), self-loops, duplicate and NULL edges,
-off-graph seeds, zero-level walks, empty edge sets.
+The local tiers (operators/closure.py) must be ROW-IDENTICAL to the
+distributed loops; tests/test_closure.py pins the cross-tier
+equivalence on a handful of graphs, this file pins the array cores
+themselves on randomized ones: chains (worst case for label
+propagation), self-loops, duplicate and NULL edges, off-graph seeds,
+zero-level walks, empty edge sets, and ids spread too sparsely for
+the walk's dense-index path (so it factorizes).
 """
 
 from __future__ import annotations
@@ -15,12 +16,43 @@ from __future__ import annotations
 import random
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from metadata_wrangler_spark.operators.closure import (
-    bfs_levels_pdf,
-    min_label_components_pdf,
+    _edge_arrays,
+    _min_label_arrays,
+    _min_plus_arrays,
 )
+
+
+def _sparse_ids(rng, ids):
+    """A random injection of ``ids`` into ±2^40: the id span then
+    exceeds the walk's dense-index bound max(4m, 1M)."""
+    out: dict[int, int] = {}
+    taken = set()
+    for i in sorted(set(ids)):
+        while (x := rng.randint(-(2**40), 2**40)) in taken:
+            pass
+        taken.add(x)
+        out[i] = x
+    return out
+
+
+def _walk(edges, sources, hops, codes=None):
+    """``_min_plus_arrays`` over edge tuples as a {node: code} dict;
+    every code 1 (BFS levels) unless ``codes`` is given."""
+    u = np.array([e[0] for e in edges], np.int64)
+    v = np.array([e[1] for e in edges], np.int64)
+    w = np.ones_like(u) if codes is None else np.array(codes, np.int64)
+    nodes, out = _min_plus_arrays(u, v, w, sources, hops)
+    return dict(zip(nodes.tolist(), out.tolist()))
+
+
+def _components(edges):
+    a = np.array([u for u, _ in edges], np.int64)
+    b = np.array([v for _, v in edges], np.int64)
+    nodes, comp = _min_label_arrays(a, b)
+    return dict(zip(nodes.tolist(), comp.tolist()))
 
 
 def _ref_bfs(edges, seeds, levels):
@@ -66,6 +98,8 @@ def _ref_components(edges, nodes):
 
 
 def test_bfs_core_fuzz():
+    """BFS levels are the min-plus walk with every edge code 1, on
+    dense ids and on the same graphs with sparse ids."""
     rng = random.Random(3)
     for trial in range(300):
         m = rng.randint(0, 80)
@@ -74,34 +108,33 @@ def test_bfs_core_fuzz():
         )
         seeds = [rng.randint(0, 60) for _ in range(rng.randint(1, 4))]
         levels = rng.randint(0, 8)
-        pdf = pd.DataFrame(
-            {
-                "_src": np.array([u for u, _ in edges], np.int64),
-                "_dst": np.array([v for _, v in edges], np.int64),
-            }
-        )
-        got = dict(
-            zip(
-                bfs_levels_pdf(pdf, seeds, levels)["node"].tolist(),
-                bfs_levels_pdf(pdf, seeds, levels)["level"].tolist(),
-            )
-        )
-        assert got == _ref_bfs(edges, seeds, levels), trial
+        assert _walk(edges, seeds, levels) == _ref_bfs(
+            edges, seeds, levels
+        ), trial
+        ids = _sparse_ids(rng, [x for e in edges for x in e] + seeds)
+        sp_edges = [(ids[u], ids[v]) for u, v in edges]
+        sp_seeds = [ids[x] for x in seeds]
+        assert _walk(sp_edges, sp_seeds, levels) == _ref_bfs(
+            sp_edges, sp_seeds, levels
+        ), trial
 
 
 def test_bfs_core_nulls_dups_empty():
-    pdf = pd.DataFrame(
+    tbl = pa.table(
         {
-            "_src": [1.0, 1.0, None, 2.0],
-            "_dst": [2.0, 2.0, 3.0, None],
+            "_src": pa.array([1, 1, None, 2], pa.int64()),
+            "_dst": pa.array([2, 2, 3, None], pa.int64()),
         }
     )
-    got = bfs_levels_pdf(pdf, [1, 99], 6)
-    assert dict(zip(got["node"], got["level"])) == {1: 0, 2: 1, 99: 0}
-    empty = pd.DataFrame({"_src": pd.Series([], dtype="int64"),
-                          "_dst": pd.Series([], dtype="int64")})
-    got = bfs_levels_pdf(empty, [7], 6)
-    assert dict(zip(got["node"], got["level"])) == {7: 0}
+    s, d = _edge_arrays(tbl)
+    assert s.dtype == d.dtype == np.int64
+    nodes, level = _min_plus_arrays(s, d, np.ones_like(s), [1, 99], 6)
+    assert dict(zip(nodes.tolist(), level.tolist())) == {1: 0, 2: 1, 99: 0}
+    empty = pa.table({"_src": pa.array([], pa.int64()),
+                      "_dst": pa.array([], pa.int64())})
+    s, d = _edge_arrays(empty)
+    nodes, level = _min_plus_arrays(s, d, np.ones_like(s), [7], 6)
+    assert dict(zip(nodes.tolist(), level.tolist())) == {7: 0}
 
 
 def test_components_core_fuzz():
@@ -116,30 +149,15 @@ def test_components_core_fuzz():
         base = rng.randint(0, 100)
         edges += [(base + i, base + i + 1) for i in range(n)]  # chain
         sym = edges + [(v, u) for u, v in edges]
-        pdf = pd.DataFrame(
-            {
-                "a": np.array([u for u, _ in sym], np.int64),
-                "b": np.array([v for _, v in sym], np.int64),
-            }
-        )
-        out = min_label_components_pdf(pdf)
-        got = dict(zip(out["node"].tolist(), out["component"].tolist()))
         nodes = {u for e in sym for u in e}
-        assert got == _ref_components(sym, nodes), trial
+        assert _components(sym) == _ref_components(sym, nodes), trial
 
 
 def test_components_long_chain_converges_fast():
     # 10^4-node chain: O(log diameter) outer rounds, sub-second.
     chain = [(i, i + 1) for i in range(10_000)]
     sym = chain + [(v, u) for u, v in chain]
-    pdf = pd.DataFrame(
-        {
-            "a": np.array([u for u, _ in sym], np.int64),
-            "b": np.array([v for _, v in sym], np.int64),
-        }
-    )
-    out = min_label_components_pdf(pdf)
-    assert (out["component"] == 0).all()
+    assert set(_components(sym).values()) == {0}
 
 
 def test_components_core_fuzz_directed_input():
@@ -160,16 +178,8 @@ def test_components_core_fuzz_directed_input():
         # directed chain pointing DOWN toward base: min label is the
         # sink, so a direction-sensitive relaxation would stall.
         edges += [(base + i + 1, base + i) for i in range(n)]
-        pdf = pd.DataFrame(
-            {
-                "a": np.array([u for u, _ in edges], np.int64),
-                "b": np.array([v for _, v in edges], np.int64),
-            }
-        )
-        out = min_label_components_pdf(pdf)
-        got = dict(zip(out["node"].tolist(), out["component"].tolist()))
         nodes = {u for e in edges for u in e}
-        assert got == _ref_components(edges, nodes), trial
+        assert _components(edges) == _ref_components(edges, nodes), trial
 
 
 def _ref_min_plus(edges, sources, hops):
@@ -192,10 +202,8 @@ def _ref_min_plus(edges, sources, hops):
 
 
 def test_min_plus_core_fuzz():
-    from metadata_wrangler_spark.operators.closure import (
-        bounded_min_plus_pdf,
-    )
-
+    """Packed codes, on dense ids and on the same graphs with sparse
+    ids."""
     rng = random.Random(11)
     for trial in range(300):
         m = rng.randint(0, 80)
@@ -208,40 +216,32 @@ def test_min_plus_core_fuzz():
         )
         sources = [rng.randint(0, 50) for _ in range(rng.randint(1, 3))]
         hops = rng.choice([2, 4, 6, 8])
-        pdf = pd.DataFrame(
-            {
-                "u": np.array([e[0] for e in edges], np.int64),
-                "v": np.array([e[1] for e in edges], np.int64),
-                "code": np.array([e[2] for e in edges], np.int64),
-            }
-        )
-        out = bounded_min_plus_pdf(pdf, sources, hops)
-        got = dict(zip(out["node"].tolist(), out["code"].tolist()))
-        assert got == _ref_min_plus(edges, sources, hops), trial
+        codes = [e[2] for e in edges]
+        assert _walk(edges, sources, hops, codes) == _ref_min_plus(
+            edges, sources, hops
+        ), trial
+        ids = _sparse_ids(rng, [x for e in edges for x in e[:2]] + sources)
+        sp_edges = [(ids[u], ids[v], c) for u, v, c in edges]
+        sp_sources = [ids[x] for x in sources]
+        assert _walk(sp_edges, sp_sources, hops, codes) == _ref_min_plus(
+            sp_edges, sp_sources, hops
+        ), trial
 
 
 def test_min_plus_core_nulls_dups_empty():
-    from metadata_wrangler_spark.operators.closure import (
-        bounded_min_plus_pdf,
-    )
-
-    pdf = pd.DataFrame(
+    tbl = pa.table(
         {
-            "u": [1.0, 1.0, None, 2.0],
-            "v": [2.0, 2.0, 3.0, None],
-            "code": [1001.0, 1001.0, 2001.0, 3001.0],
+            "u": pa.array([1, 1, None, 2, 2], pa.int64()),
+            "v": pa.array([2, 2, 3, None, 4], pa.int64()),
+            "code": pa.array([1001, 1001, 2001, 3001, None], pa.int64()),
         }
     )
-    out = bounded_min_plus_pdf(pdf, [1], 6)
-    assert dict(zip(out["node"], out["code"])) == {1: 0, 2: 1001}
-    empty = pd.DataFrame(
-        {
-            "u": pd.Series([], dtype="int64"),
-            "v": pd.Series([], dtype="int64"),
-            "code": pd.Series([], dtype="int64"),
-        }
-    )
-    out = bounded_min_plus_pdf(empty, [7], 6)
-    assert dict(zip(out["node"], out["code"])) == {7: 0}
-    out = bounded_min_plus_pdf(empty, [], 6)
-    assert len(out) == 0
+    u, v, code = _edge_arrays(tbl)
+    nodes, out = _min_plus_arrays(u, v, code, [1], 6)
+    assert dict(zip(nodes.tolist(), out.tolist())) == {1: 0, 2: 1001}
+    empty = pa.table({c: pa.array([], pa.int64()) for c in ("u", "v", "code")})
+    u, v, code = _edge_arrays(empty)
+    nodes, out = _min_plus_arrays(u, v, code, [7], 6)
+    assert dict(zip(nodes.tolist(), out.tolist())) == {7: 0}
+    nodes, out = _min_plus_arrays(u, v, code, [], 6)
+    assert len(nodes) == len(out) == 0

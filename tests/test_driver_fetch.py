@@ -56,7 +56,7 @@ _WRITE_PATH = (
 )
 _ALLOWED = {
     ("plans/graph.py", "g_shortest_path", "count"): _SP_HINT,
-    ("operators/closure.py", "bounded_shortest_paths", "toArrow"): _SP_HINT,
+    ("operators/closure.py", "_local_tier", "toArrow"): _SP_HINT,
     ("operators/selection.py", "grouped_select._coarse", "toArrow"):
         _SELECTION,
     ("operators/selection.py", "_refine", "toPandas"): _SELECTION,
